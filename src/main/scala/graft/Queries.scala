@@ -528,36 +528,29 @@ object Queries {
       // disjoint inputs — build them concurrently (§2.6), like the
       // audits below; each chain stays internally sequential (its
       // delete mutates its own just-built artifact)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fComposed = Future {
-        IvfPq.build(e, "vec_id", "embedding", s"$work/ivfpq",
-          IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4)))
-        IvfPq.delete(spark, s"$work/ivfpq", "vec_id",
-          e.filter(pmod(col("vec_id"), lit(10)) === 0).select("vec_id"))
-      }
-      val docs = Tables.parallelize(Tables(spark, dir, "documents"))
-      LexicalSearch.buildIndex(docs, "doc_id", "text", s"$work/lex")
-      LexicalSearch.deleteFromIndex(spark, s"$work/lex", "doc_id",
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0).select("doc_id"))
-      Await.result(fComposed, scala.concurrent.duration.Duration.Inf)
+      graft.util.Par.both(spark, "q121.build")(
+        {
+          IvfPq.build(e, "vec_id", "embedding", s"$work/ivfpq",
+            IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4)))
+          IvfPq.delete(spark, s"$work/ivfpq", "vec_id",
+            e.filter(pmod(col("vec_id"), lit(10)) === 0).select("vec_id"))
+        },
+        {
+          val docs = Tables.parallelize(Tables(spark, dir, "documents"))
+          LexicalSearch.buildIndex(docs, "doc_id", "text", s"$work/lex")
+          LexicalSearch.deleteFromIndex(spark, s"$work/lex", "doc_id",
+            docs.filter(pmod(col("doc_id"), lit(10)) === 0).select("doc_id"))
+        })
     }
     // the two audits are independent eager job chains over disjoint
     // artifacts — overlap them (§2.6); the final sort owns row order
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fIvf = Future(
-        graft.query.IndexCheck.checkIvf(spark, s"$work/ivfpq", "vec_id", "embedding")
-          .select(lit("ivfpq").as("source"), col("check"), col("ok")))
-      val fLex = Future(
-        graft.query.IndexCheck.checkLexical(spark, s"$work/lex", "doc_id")
+    graft.util.Par.all(spark, "q121.check")(
+        () => graft.query.IndexCheck.checkIvf(spark, s"$work/ivfpq", "vec_id", "embedding")
+          .select(lit("ivfpq").as("source"), col("check"), col("ok")),
+        () => graft.query.IndexCheck.checkLexical(spark, s"$work/lex", "doc_id")
           .select(lit("lex").as("source"), col("check"), col("ok")))
-      val inf = scala.concurrent.duration.Duration.Inf
-      Await.result(fIvf, inf)
-        .unionByName(Await.result(fLex, inf))
-        .orderBy("source", "check")
-    }
+      .reduce(_ unionByName _)
+      .orderBy("source", "check")
   }
 
   /** Q122: SHARDED retrieval ([[graft.query.ShardedIvf]] — horizontal

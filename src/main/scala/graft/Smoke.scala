@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry and
   * asserts rows > 0, mirroring how the driver invokes the contract.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.configure(
-      SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(8)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

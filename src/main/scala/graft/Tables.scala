@@ -119,4 +119,17 @@ object Tables {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ", "false")
       .config("spark.sql.warehouse.dir", warehouseDir)
+
+  /** The session every main runs on: [[configure]]d, `local[cpus]`,
+    * one shuffle partition per core, no UI, WARN logging.
+    */
+  def localSession(cpus: Int): SparkSession = {
+    val spark = configure(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

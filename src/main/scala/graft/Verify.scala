@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Tables.configure is the one source of session-config truth — an
-    // inline copy here once missed the warehouse-dir setting and q51's
-    // managed tables landed (and collided) in ./spark-warehouse.
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Pre-clean: a query failing BEFORE its overwrite starts would
     // otherwise leave a stale result from a previous run in place, and
     // the downstream compare would pass falsely on old data.

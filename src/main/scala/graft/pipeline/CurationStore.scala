@@ -77,59 +77,52 @@ object CurationStore {
       dir: String,
       workDir: String,
       threshold: Double = 0.5): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration.Inf
     val docsAll = Tables.parallelize(Tables(spark, dir, "documents"))
       .select(col("doc_id"), col("text"), col("source"))
 
-    val nearDupChain = Future {
+    def nearDupChain(): Unit =
       // the probe index needs only the session signature cache (its
       // first toucher materializes it — ConcurrentHashMap.computeIfAbsent
       // plus Spark's persist locks make the concurrent first touch
       // safe), not the cluster labels: fork it alongside the pair
       // verification + connected components chain
-      val probe = Future(
-        writeProbeIndex(docsAll.select("doc_id", "text"), spark, dir, workDir))
-      docsAll.select("doc_id", "source")
-        .write.mode("overwrite").parquet(s"$workDir/docs")
-      Dedup.connectedComponents(
-          Dedup.verifiedNearDupPairs(spark, dir, threshold).select("d1", "d2"))
-        .write.mode("overwrite").parquet(s"$workDir/clusters")
-      Await.result(probe, Inf)
+      graft.util.Par.both(spark, "CurationStore.nearDup")(
+        writeProbeIndex(docsAll.select("doc_id", "text"), spark, dir, workDir),
+        {
+          docsAll.select("doc_id", "source")
+            .write.mode("overwrite").parquet(s"$workDir/docs")
+          Dedup.connectedComponents(
+              Dedup.verifiedNearDupPairs(spark, dir, threshold).select("d1", "d2"))
+            .write.mode("overwrite").parquet(s"$workDir/clusters")
+        })
+
+    def lmChain(): Unit = {
+      // frozen model from ONE cached tokenization pass (the regex
+      // tokenizer dominates these aggregations; uncached, each of the
+      // three model writes re-tokenized the corpus)
+      val toks = TextAnalysis.lmToks(docsAll)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val trans = TextAnalysis.lmTrans(toks)
+        graft.util.Par.all(spark, "CurationStore.model")(
+          () => trans.groupBy("w1").agg(count(lit(1)).as("c1"))
+            .write.mode("overwrite").parquet(s"$workDir/model/unigrams"),
+          () => trans.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+            .write.mode("overwrite").parquet(s"$workDir/model/bigrams"),
+          () => toks.select(explode(col("t")).as("w"))
+            .agg(count_distinct(col("w")).as("vsz"))
+            .write.mode("overwrite").parquet(s"$workDir/model/vocab"))
+
+        // corpus scores UNDER the just-persisted frozen model — the same
+        // code path `append` scores with, and exact-equal to the per-run
+        // q94 recompute because every corpus transition is in the model
+        // (the left joins' unseen-coalesce branches never fire)
+        scoreUnderModel(spark, toks, workDir)
+          .write.mode("overwrite").parquet(s"$workDir/scores")
+      } finally { toks.unpersist(); () }
     }
 
-    // frozen model from ONE cached tokenization pass (the regex
-    // tokenizer dominates these aggregations; uncached, each of the
-    // three model writes re-tokenized the corpus)
-    val toks = TextAnalysis.lmToks(docsAll)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val trans = TextAnalysis.lmTrans(toks)
-      Await.result(Future.sequence(Seq(
-        Future {
-          trans.groupBy("w1").agg(count(lit(1)).as("c1"))
-            .write.mode("overwrite").parquet(s"$workDir/model/unigrams")
-        },
-        Future {
-          trans.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-            .write.mode("overwrite").parquet(s"$workDir/model/bigrams")
-        },
-        Future {
-          toks.select(explode(col("t")).as("w"))
-            .agg(count_distinct(col("w")).as("vsz"))
-            .write.mode("overwrite").parquet(s"$workDir/model/vocab")
-        })), Inf)
-
-      // corpus scores UNDER the just-persisted frozen model — the same
-      // code path `append` scores with, and exact-equal to the per-run
-      // q94 recompute because every corpus transition is in the model
-      // (the left joins' unseen-coalesce branches never fire)
-      scoreUnderModel(spark, toks, workDir)
-        .write.mode("overwrite").parquet(s"$workDir/scores")
-    } finally { toks.unpersist(); () }
-
-    Await.result(nearDupChain, Inf)
+    graft.util.Par.both(spark, "CurationStore.build")(nearDupChain(), lmChain())
   }
 
   /** Score tokenized documents under the PERSISTED frozen model (left

@@ -759,19 +759,15 @@ object Dedup {
     // overlaps the (corpus-pass-sized) candidate materialization below
     // as a concurrent job (§2.6) instead of barriering ahead of it; the
     // warning still fires before any result row is produced.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val overF =
-      Future(hashStats.filter(col("__occ") > maxDocsPerWindow).count())
     val multiDoc = hashStats.filter(col("__occ") <= maxDocsPerWindow).select("h")
     // candidates = only repeated-in-≥2-docs windows — proportional to
     // actually-repeated text, NOT the corpus. Checkpointed: the self-
     // join below consumes it twice, and without this each side re-runs
     // the full corpus windowing pass (tokenize + k-gram explode + two
     // aggregations), doubling the query's dominant cost
-    val cand = perDoc.join(multiDoc, "h").localCheckpoint()
-    val over = Await.result(overF, Duration.Inf)
+    val (over, cand) = graft.util.Par.both(spark, "q92.candidates")(
+      hashStats.filter(col("__occ") > maxDocsPerWindow).count(),
+      perDoc.join(multiDoc, "h").localCheckpoint())
     if (over > 0)
       org.slf4j.LoggerFactory.getLogger("graft.BucketGuard").warn(
         s"q92 repeated-passage window: excluding $over window hash(es) over " +
@@ -875,16 +871,12 @@ object Dedup {
     // cap count overlapped with the candidate materialization — the
     // q92 rationale (§2.6): answer-sized count vs corpus-pass-sized
     // checkpoint, warning still precedes any result row
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val overF =
-      Future(hashStats.filter(col("__occ") > maxOccurrencesPerWindow).count())
     val multiDoc = hashStats.filter(col("__occ") <= maxOccurrencesPerWindow).select("h")
     // one row per (window, doc) into the self-join — positions ride
     // along as a list and re-expand after the join (doc above)
-    val cand = perDoc.join(multiDoc, "h").localCheckpoint()
-    val over = Await.result(overF, Duration.Inf)
+    val (over, cand) = graft.util.Par.both(spark, "q101.candidates")(
+      hashStats.filter(col("__occ") > maxOccurrencesPerWindow).count(),
+      perDoc.join(multiDoc, "h").localCheckpoint())
     if (over > 0)
       org.slf4j.LoggerFactory.getLogger("graft.BucketGuard").warn(
         s"q101 repeated-span window: excluding $over window hash(es) over " +

@@ -64,10 +64,6 @@ object GraphRank {
     // fuse into ONE checkpointed pass over (nodes ⋈ dst-set ⋈ src-set),
     // and that pass, the node count and the edge-degree materialization
     // run as concurrent jobs.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fN = Future(nodes.count())
     // out-degree folded onto each edge once; persisted because every
     // iteration re-reads it (internal frame, internal lifecycle)
     val ed = edges
@@ -78,7 +74,6 @@ object GraphRank {
     // session's shuffle width and defeats AQE's small-exchange
     // coalescing (measured 5.96 → 7.31 s), the exact local[32]-shaped
     // tuning §2.2 warns against.
-    val fEd = Future(ed.count())
     //
     // Nodes that receive NO contribution — absent from the edge dst
     // set — are a FIXED set across iterations: ranks covers every node,
@@ -104,7 +99,7 @@ object GraphRank {
     // checkpointed — on the k-NN graph and most real topologies that is
     // a near-empty frame, where checkpointing all-nodes-with-flags
     // would pin a node-count-sized block set in executor memory (§5)
-    val fMarks = Future {
+    def anomalies(): (DataFrame, Boolean) = {
       val m = nodes
         .join(edges.select(col("dst").as("id")).distinct()
             .withColumn("__in", lit(true)),
@@ -119,15 +114,16 @@ object GraphRank {
         .localCheckpoint()
       (m, !m.filter(!col("__hasOut")).isEmpty)
     }
-    val n = Await.result(fN, Duration.Inf)
-    require(n > 0, "pageRank over an empty node set")
-    val base = Scale / n
-    val teleport = (Scale * 15L) / (100L * n)
-    val (marks, hasDangling) = Await.result(fMarks, Duration.Inf)
-    val zeroIn = marks.filter(!col("__hasIn")).select(col("id"))
-    val dangIds = marks.filter(!col("__hasOut")).select(col("id").as("__did"))
+    val spark = nodes.sparkSession
     try {
-      Await.result(fEd, Duration.Inf)
+      val ((n, _), (marks, hasDangling)) = graft.util.Par.both(spark, "pageRank.prelude")(
+        graft.util.Par.both(spark, "pageRank.counts")(nodes.count(), ed.count()),
+        anomalies())
+      require(n > 0, "pageRank over an empty node set")
+      val base = Scale / n
+      val teleport = (Scale * 15L) / (100L * n)
+      val zeroIn = marks.filter(!col("__hasIn")).select(col("id"))
+      val dangIds = marks.filter(!col("__hasOut")).select(col("id").as("__did"))
       var ranks = nodes.select(col("id"), lit(base).as("r"))
       for (it <- 1 to iters) {
         val contrib = ed

@@ -85,12 +85,9 @@ object Profiler {
     // concurrent jobs (§2.6, the fsck-audit pattern) so one table's
     // Expand scan back-fills the other's barrier tail instead of
     // waiting behind it.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Q90Targets.map { case (table, cols) =>
-      Future(profile(Tables.parallelize(Tables(spark, dir, table)), table, cols))
-    }.map(Await.result(_, Duration.Inf))
+    graft.util.Par.all(spark, "q90.profile")(Q90Targets.map { case (table, cols) =>
+        () => profile(Tables.parallelize(Tables(spark, dir, table)), table, cols)
+      }: _*)
       .reduce(_ unionByName _)
       .orderBy("tbl", "col_name")
   }

@@ -66,20 +66,18 @@ object IndexCheck {
       fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$t"))
     val hasCodes = exists("cell_codes")
     // the checks are INDEPENDENT single-pass audits over different
-    // tables — submit them as concurrent jobs (guide §2.6: a sequential
-    // loop of barriered counts leaves the cluster idle in every tail)
-    // and assemble the report when all land; the output order comes
-    // from the final sort, so concurrency cannot move a row
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val checks = scala.collection.mutable.ArrayBuffer[Future[(String, Boolean, Long)]]()
+    // tables — run them concurrently (guide §2.6: a sequential loop of
+    // barriered counts leaves the cluster idle in every tail); the
+    // output order comes from the final sort, so concurrency cannot
+    // move a row
+    val checks = scala.collection.mutable.ArrayBuffer[() => (String, Boolean, Long)]()
 
     // -------------------------------------------------- radius_coverage
     // over LIVE rows: the exactness proofs only ever bound servable
     // rows (a tombstoned member is masked before any bound is used,
     // and compaction re-tightens radii to the survivors)
     val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
-    checks += Future {
+    checks += (() => {
       val assigned = Tombstones.liveOnly(
         IvfIndex.normalizedAssigned(spark, indexPath, idCol, embCol),
         spark, indexPath, idCol)
@@ -91,27 +89,27 @@ object IndexCheck {
         .filter(col("__d") > col("radius") + lit(1e-6))
         .count()
       ("radius_coverage", uncovered == 0L, uncovered)
-    }
+    })
 
     // -------------------------------------------------- meta_matches_dirs
-    checks += Future {
+    checks += (() => {
       val metaIds = cellMeta.select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSet
       val dirIds = IvfIndex.cellDirIds(spark, indexPath).toSet
       val mismatched = (metaIds -- dirIds).size + (dirIds -- metaIds).size
       ("meta_matches_dirs", mismatched == 0, mismatched.toLong)
-    }
+    })
 
     // -------------------------------------------------- unique_ids
-    checks += Future {
+    checks += (() => {
       val dupIds = spark.read.parquet(s"$indexPath/cells")
         .groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
         .filter(col("__n") > 1).count()
       ("unique_ids", dupIds == 0L, dupIds)
-    }
+    })
 
     // -------------------------------------------------- codes_align
-    if (hasCodes) checks += Future {
+    if (hasCodes) checks += (() => {
       val cells = spark.read.parquet(s"$indexPath/cells")
         .select(col(idCol), col("centroid_id").cast("long").as("__cc"))
       val codes = spark.read.parquet(s"$indexPath/cell_codes")
@@ -125,10 +123,10 @@ object IndexCheck {
           col("__cc") =!= col("__kc"))
         .count()
       ("codes_align", misaligned == 0L, misaligned)
-    }
+    })
 
     // -------------------------------------------------- enc_refs
-    if (hasCodes && IvfPq.isResidual(spark, indexPath)) checks += Future {
+    if (hasCodes && IvfPq.isResidual(spark, indexPath)) checks += (() => {
       val encIds = spark.read.parquet(s"$indexPath/enc_centers")
         .select(col("enc_id"))
       val dangling = spark.read.parquet(s"$indexPath/cell_codes")
@@ -140,10 +138,10 @@ object IndexCheck {
       val unmapped = IvfIndex.codesDirIds(spark, indexPath)
         .count(!currentCells(_)).toLong
       ("enc_refs", dangling == 0L && unmapped == 0L, dangling + unmapped)
-    }
+    })
 
     // -------------------------------------------------- label_meta_fresh
-    checks += Future {
+    checks += (() => {
       val arts = IvfIndex.labelMetaArtifacts(spark, indexPath)
       val rawRows = if (arts.isEmpty) 0L
         else spark.read.parquet(s"$indexPath/cells").count()
@@ -152,16 +150,14 @@ object IndexCheck {
           snapCells != IvfIndex.cellDirIds(spark, indexPath).sorted
       }
       ("label_meta_fresh", true, stale.toLong) // stale is safe; count reported
-    }
+    })
 
     // -------------------------------------------------- pending state
     val markers =
       Seq(IvfIndex.splitPendingPath(indexPath),
           IvfIndex.reclusterPendingPath(indexPath))
         .count(p => fs.exists(new org.apache.hadoop.fs.Path(p))).toLong
-    val rows = Await.result(
-        Future.sequence(checks),
-        scala.concurrent.duration.Duration.Inf) ++
+    val rows = graft.util.Par.all(spark, "IndexCheck.checkIvf")(checks.toSeq: _*) ++
       Seq(("pending_markers", true, markers),
         ("pending_tombstones", true, Tombstones.pendingCount(spark, indexPath)))
 

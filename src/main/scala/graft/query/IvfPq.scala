@@ -98,12 +98,10 @@ object IvfPq {
       // iteration jobs that leaves most cores idle). The codebooks
       // TABLE is written only after the IVF build returns: its artifact
       // pre-clean deletes any codebooks it finds at this path.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val pqFit = Future(PqIndex.fitCodebooksSampled(df, idCol, embCol, params.pq))
-      IvfIndex.build(df, idCol, embCol, outPath, params.ivf)
-      PqIndex.writeCodebooks(spark,
-        Await.result(pqFit, scala.concurrent.duration.Duration.Inf), outPath)
+      val (_, codebooks) = graft.util.Par.both(spark, "IvfPq.build")(
+        IvfIndex.build(df, idCol, embCol, outPath, params.ivf),
+        PqIndex.fitCodebooksSampled(df, idCol, embCol, params.pq))
+      PqIndex.writeCodebooks(spark, codebooks, outPath)
       // encode every vector and co-partition the codes WITH their cell:
       // the cell-level bound then prunes code directories before a
       // single code is read
@@ -136,18 +134,10 @@ object IvfPq {
             (a, b) => (a - b).cast("float")))
         .select(col(idCol), col("centroid_id"), col("__res"))
       val assigned = IvfIndex.normalizedAssigned(spark, outPath, idCol, embCol)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val pqFit = Future {
-        val fitBase = if (params.pq.fitSampleMod > 1)
-          assigned.filter(
-            pmod(hash(col(idCol)), lit(params.pq.fitSampleMod)) === 0)
-        else assigned
-        PqIndex.fitCodebooks(
-          PqIndex.subspaceRowsOf(residualsOf(fitBase), idCol, "__res",
-            params.pq, Nil),
-          idCol, params.pq)
-      }
+      val fitBase = if (params.pq.fitSampleMod > 1)
+        assigned.filter(
+          pmod(hash(col(idCol)), lit(params.pq.fitSampleMod)) === 0)
+      else assigned
       // the residual frame is CORPUS-sized and feeds the encode: spill
       // it to a parquet temp table under the index path instead of
       // localCheckpoint — checkpoint blocks are executor-resident and
@@ -156,12 +146,15 @@ object IvfPq {
       // table reader from ever listing it, and the finally deletes it
       // win or lose
       val tmpResiduals = s"$outPath/_tmp_residuals"
-      residualsOf(assigned)
-        .write.mode("overwrite").parquet(tmpResiduals)
       try {
+        val (codebooks, _) = graft.util.Par.both(spark, "IvfPq.build.residual")(
+          PqIndex.fitCodebooks(
+            PqIndex.subspaceRowsOf(residualsOf(fitBase), idCol, "__res",
+              params.pq, Nil),
+            idCol, params.pq),
+          residualsOf(assigned).write.mode("overwrite").parquet(tmpResiduals))
         val residuals = spark.read.parquet(tmpResiduals)
-        PqIndex.writeCodebooks(spark,
-          Await.result(pqFit, scala.concurrent.duration.Duration.Inf), outPath)
+        PqIndex.writeCodebooks(spark, codebooks, outPath)
         // enc tables FIRST (append-only; codes reference them) — the
         // residual-mode marker is the enc_centers table itself
         meta.select(col("centroid_id").cast("long").as("enc_id"), col("center"))

@@ -236,17 +236,15 @@ object PqIndex {
     // the codebook fits and the vectors-table write are independent
     // job chains — overlap them (§2.6: the fit alone is numSub
     // barriered KMeans iteration loops that leave most cores idle)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val pqFit = Future(fitCodebooksSampled(df, idCol, embCol, params))
-    AnnIndex.prepared(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
-      .select(col(idCol), col(embCol))
-      .withColumn("__vbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
-      .transform(graft.util.PartitionedWrite.spread(
-        _, IndexBuckets, col("__vbucket"), col(idCol)))
-      .write.mode("overwrite").partitionBy("__vbucket").parquet(s"$outPath/vectors")
-    writeCodebooks(spark,
-      Await.result(pqFit, scala.concurrent.duration.Duration.Inf), outPath)
+    val (codebooks, _) = graft.util.Par.both(spark, "PqIndex.build")(
+      fitCodebooksSampled(df, idCol, embCol, params),
+      AnnIndex.prepared(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
+        .select(col(idCol), col(embCol))
+        .withColumn("__vbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
+        .transform(graft.util.PartitionedWrite.spread(
+          _, IndexBuckets, col("__vbucket"), col(idCol)))
+        .write.mode("overwrite").partitionBy("__vbucket").parquet(s"$outPath/vectors"))
+    writeCodebooks(spark, codebooks, outPath)
     encode(df, idCol, embCol, codebooksDf(spark, outPath), params)
       .withColumn("__cbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
       .transform(graft.util.PartitionedWrite.spread(
@@ -322,10 +320,8 @@ object PqIndex {
       // order cannot move a codebook); sequentially this is
       // numSub × maxIter scheduler round-trips of tiny jobs, the
       // dominant build cost
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val codebooks: Seq[(Int, Seq[Seq[Float]])] = Await.result(
-        Future.sequence((0 until params.numSub).map { m => Future {
+      graft.util.Par.all(subRows.sparkSession, "PqIndex.fitCodebooks")(
+        (0 until params.numSub).map { m => () =>
           val model = new KMeans()
             .setK(kEff)
             .setMaxIter(params.maxIter)
@@ -337,9 +333,7 @@ object PqIndex {
             .fit(subRows.filter(col("sub") === m)
               .withColumn("__f", array_to_vector(col("__subvec").cast("array<double>"))))
           (m, model.clusterCenters.toSeq.map(_.toArray.toSeq.map(_.toFloat)))
-        }}),
-        scala.concurrent.duration.Duration.Inf)
-      codebooks
+        }: _*)
     } finally { subRows.unpersist(); () }
   }
 

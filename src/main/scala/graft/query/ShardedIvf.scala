@@ -76,20 +76,13 @@ object ShardedIvf {
     // back-fills that idle time. Each build is deterministic in
     // isolation (fixed seed, pinned fit layout), so completion order
     // cannot move a byte of any shard.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(n, 4))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(
-        Future.sequence((0 until n).map { i => Future {
-          val part = df.filter(shardOf(idCol, n) === i)
-          if (composed)
-            IvfPq.build(part, idCol, embCol, shardPath(root, i),
-              IvfPq.Params(ivf = params, pq = pqParams))
-          else { IvfIndex.build(part, idCol, embCol, shardPath(root, i), params); () }
-        }}),
-        scala.concurrent.duration.Duration.Inf)
-    } finally { pool.shutdown() }
+    graft.util.Par.all(spark, "ShardedIvf.build")((0 until n).map { i => () =>
+      val part = df.filter(shardOf(idCol, n) === i)
+      if (composed)
+        IvfPq.build(part, idCol, embCol, shardPath(root, i),
+          IvfPq.Params(ivf = params, pq = pqParams))
+      else { IvfIndex.build(part, idCol, embCol, shardPath(root, i), params); () }
+    }: _*)
     // manifest LAST: its presence says every shard directory exists
     Seq(n).toDF("n_shards").repartition(1)
       .write.mode("overwrite").parquet(manifestPath(root))
@@ -203,21 +196,12 @@ object ShardedIvf {
     // shards probe CONCURRENTLY: the per-shard machinery runs its jobs
     // at construction (selection checkpoints, probed-id collects,
     // pass-1 materialization), so a sequential loop would serialize n
-    // independent probe pipelines behind one driver thread. Spark's
-    // scheduler accepts concurrent job submission; a bounded pool keeps
-    // a wide shard set from flooding it. Determinism is untouched —
-    // results are ordered by the final global re-rank, and per-shard
-    // answers are exact regardless of completion order.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(n, 8))
-    val perShard =
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence((0 until n).map(i => Future(shardHits(i)))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally { pool.shutdown() }
-    perShard.reduce(_ unionByName _)
+    // independent probe pipelines behind one driver thread. Determinism
+    // is untouched — results are ordered by the final global re-rank,
+    // and per-shard answers are exact regardless of completion order.
+    graft.util.Par.all(spark, "ShardedIvf.queryTopK")(
+        (0 until n).map(i => () => shardHits(i)): _*)
+      .reduce(_ unionByName _)
       .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
   }
 
@@ -236,19 +220,11 @@ object ShardedIvf {
       labelCol: String): Unit = {
     // independent per-shard artifacts into disjoint paths — overlap
     // them like [[build]] (§2.6)
-    val n = nShards(spark, root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(n, 4))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(
-        Future.sequence((0 until n).map { i => Future {
-          IvfIndex.buildLabelMeta(spark, shardPath(root, i), idCol, embCol,
-            labels, labelCol)
-          ()
-        }}),
-        scala.concurrent.duration.Duration.Inf)
-    } finally { pool.shutdown() }
+    graft.util.Par.all(spark, "ShardedIvf.buildLabelMeta")(
+      (0 until nShards(spark, root)).map { i => () =>
+        IvfIndex.buildLabelMeta(spark, shardPath(root, i), idCol, embCol,
+          labels, labelCol)
+      }: _*)
   }
 
   /** FILTERED batch top-k across the shard set — the [[queryTopK]]
@@ -296,16 +272,9 @@ object ShardedIvf {
             probeWidth, maxLabelFanout)
       hits.select(col(queryIdCol), col(idCol), col("sim"))
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(n, 8))
-    val perShard =
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence((0 until n).map(i => Future(shardHits(i)))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally { pool.shutdown() }
-    perShard.reduce(_ unionByName _)
+    graft.util.Par.all(spark, "ShardedIvf.queryTopKFiltered")(
+        (0 until n).map(i => () => shardHits(i)): _*)
+      .reduce(_ unionByName _)
       .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
   }
 

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.query.{IvfIndex, IvfPq, PqIndex, Tombstones}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling evidence for the DELETION lifecycle (the round-19
@@ -33,16 +32,11 @@ import org.apache.spark.sql.functions._
 object DeletionCurve {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sizes = sys.env.getOrElse("SPARK_GRAFT_SCALING_SIZES", "20000,200000,2000000")
       .split(",").map(_.trim.toLong).toSeq
     val dim = 16
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.range(1000000).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 

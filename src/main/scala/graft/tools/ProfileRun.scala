@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{SparkEntry, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling harness for the optimization rounds (guide §1:
   * measure first). Runs each named declared query through the noop sink
@@ -34,14 +33,9 @@ object ProfileRun {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     require(names.nonEmpty, "set SPARK_GRAFT_PROFILE_Q=q..,q..")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val planOut = sys.env.get("SPARK_GRAFT_PLAN_OUT")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // JVM/codegen warmup (the Bench discipline)
     spark.range(1000000).selectExpr("sum(id)")

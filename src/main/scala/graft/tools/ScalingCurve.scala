@@ -61,7 +61,6 @@ object ScalingCurve {
         col("label"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // default sizes exercise a 10× and 100× blow-up over the smallest;
     // SPARK_GRAFT_SCALING_SIZES overrides (comma-separated)
     val sizes = sys.env.getOrElse("SPARK_GRAFT_SCALING_SIZES", "20000,200000,2000000")
@@ -72,12 +71,8 @@ object ScalingCurve {
         "clustered,isotropic")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val dim = 16
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.range(1000000).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 
 /** Whole-suite duplicated-scan audit (guide §1.2 / §2.4): for every
   * declared query, counts how many times the PLANNED physical tree
@@ -24,13 +23,8 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val excluded = Set("q14_ngram_jaccard", "q20_cosine_neardup",
       "q69_zorder_layout")
     val only = sys.env.get("SPARK_GRAFT_AUDIT_Q")

@@ -151,9 +151,11 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
     // the static pruning contract: the probed cell ids were collected
     // (bounded by nCentroids) and pushed at plan time, so only the
     // probed centroid_id= directories are read — DPP never needs to fire
-    def pruned(df: org.apache.spark.sql.DataFrame): Boolean =
+    def prunedPlan(plan: String): Boolean =
       "PartitionFilters: \\[centroid_id[^\\]]{0,200}? IN".r
-        .findFirstIn(df.queryExecution.executedPlan.toString).isDefined
+        .findFirstIn(plan).isDefined
+    def pruned(df: org.apache.spark.sql.DataFrame): Boolean =
+      prunedPlan(df.queryExecution.executedPlan.toString)
 
     val queries = e.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
       .select(org.apache.spark.sql.functions.col("vec_id").as("query_id"),
@@ -163,8 +165,25 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
       "q39-shape probe scan not statically pruned")
     assert(pruned(graft.query.IvfIndex.selfKnnGraph(spark, dir, "vec_id", "embedding", 5)),
       "q77-shape pass-2 scan not statically pruned")
-    assert(pruned(graft.query.IvfIndex.contrastivePairs(spark, dir, "vec_id", "embedding",
-        e.select("vec_id", "label"), "label")),
+    // q82's pass-2 scan sits below the argmax checkpoint, so the result
+    // plan no longer shows it: assert on the plans the eager cuts
+    // executed (a checkpoint runs as a listened-to action)
+    val cutPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        cutPlans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.query.IvfIndex.contrastivePairs(spark, dir, "vec_id", "embedding",
+        e.select("vec_id", "label"), "label")
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(cutPlans.asScala.exists(prunedPlan),
       "q82-shape pass-2 scan not statically pruned")
   }
 
