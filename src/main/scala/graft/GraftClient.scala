@@ -163,11 +163,11 @@ final class GraftClient(
       .parquet(s"$annPath/payload")
   }
 
-  /** Route batch retrieval by the index's own layout: the composed
-    * ([[graft.query.IvfPq]]) scan when a `cell_codes` table exists,
-    * plain [[graft.query.IvfIndex]] otherwise. Both are exact and
-    * return the shared (queryIdCol, row_id, sim, rn) shape, so the
-    * serve faces above them are mode-blind.
+  /** Route batch retrieval by the index's own layout
+    * ([[graft.query.IvfLayout.of]]): the composed ([[graft.query.IvfPq]])
+    * scan or plain [[graft.query.IvfIndex]]. Both are exact and return
+    * the shared (queryIdCol, row_id, sim, rn) shape, so the serve faces
+    * above them are mode-blind.
     */
   private def topKHits(
       annPath: String,
@@ -175,17 +175,27 @@ final class GraftClient(
       queryIdCol: String,
       vecCol: String,
       threshold: Double,
-      count: Int): DataFrame = {
-    val codes = new org.apache.hadoop.fs.Path(s"$annPath/ivf/cell_codes")
-    val composed = codes.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(codes)
-    if (composed)
-      graft.query.IvfPq.queryTopK(spark, s"$annPath/ivf",
-        "row_id", "embedding", queries, queryIdCol, vecCol, count, threshold,
-        params = pqParams)
-    else
-      graft.query.IvfIndex.queryTopK(spark, s"$annPath/ivf",
-        "row_id", "embedding", queries, queryIdCol, vecCol, count, threshold)
+      count: Int): DataFrame =
+    graft.query.IvfLayout.of(spark, s"$annPath/ivf").queryTopK(spark,
+      s"$annPath/ivf", "row_id", "embedding", queries, queryIdCol, vecCol,
+      count, threshold)
+
+  /** Attach content and metadata to answer-sized hits (any frame with a
+    * `row_id` column): the hits are checkpointed once — they feed the
+    * bucket collection AND the join — and the payload read is pruned to
+    * the hit rows' partition directories by their bucket ids (≤
+    * [[GraftClient.PayloadBuckets]] values reach the driver, never the
+    * hits themselves, whose count grows with the batch).
+    */
+  private def withPayload(annPath: String, hits: DataFrame): DataFrame = {
+    val hitsM = hits.localCheckpoint()
+    val buckets = hitsM
+      .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val payload = spark.read.parquet(s"$annPath/payload")
+      .filter(col("__rbucket").isin(buckets: _*))
+      .select(col("row_id"), col("content"), col("metadata"))
+    hitsM.join(payload, "row_id")
   }
 
   /** [[query]] routed through the [[buildQueryIndex]] artifacts: same
@@ -247,16 +257,8 @@ final class GraftClient(
       vecCol: String,
       threshold: Double,
       count: Int): DataFrame = {
-    val hits = topKHits(annPath, queries, queryIdCol, vecCol, count = count,
-        threshold = threshold)
-      .localCheckpoint()
-    val buckets = hits
-      .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val payload = spark.read.parquet(s"$annPath/payload")
-      .filter(col("__rbucket").isin(buckets: _*))
-      .select(col("row_id"), col("content"), col("metadata"))
-    hits.join(payload, "row_id")
+    withPayload(annPath,
+        topKHits(annPath, queries, queryIdCol, vecCol, threshold, count))
       .select(col(queryIdCol), col("content"), col("metadata"),
         col("sim"), col("rn"))
   }
@@ -309,26 +311,12 @@ final class GraftClient(
       labels: DataFrame,
       threshold: Double,
       count: Int): DataFrame = {
-    val codes = new org.apache.hadoop.fs.Path(s"$annPath/ivf/cell_codes")
-    val composed = codes.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(codes)
-    val q = queries.select(col(queryIdCol), col(vecCol), col("label"))
-    val labs = labels.select(col("row_id"), col("label"))
-    val hits = (if (composed)
-      graft.query.IvfPq.queryTopKFiltered(spark, s"$annPath/ivf",
-        "row_id", "embedding", q, queryIdCol, vecCol, labs, "label",
-        count, threshold, params = pqParams)
-    else
-      graft.query.IvfIndex.queryTopKFiltered(spark, s"$annPath/ivf",
-        "row_id", "embedding", q, queryIdCol, vecCol, labs, "label",
-        count, threshold)).localCheckpoint()
-    val buckets = hits
-      .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val payload = spark.read.parquet(s"$annPath/payload")
-      .filter(col("__rbucket").isin(buckets: _*))
-      .select(col("row_id"), col("content"), col("metadata"))
-    hits.join(payload, "row_id")
+    val hits = graft.query.IvfLayout.of(spark, s"$annPath/ivf")
+      .queryTopKFiltered(spark, s"$annPath/ivf", "row_id", "embedding",
+        queries.select(col(queryIdCol), col(vecCol), col("label")),
+        queryIdCol, vecCol, labels.select(col("row_id"), col("label")), "label",
+        count, threshold)
+    withPayload(annPath, hits)
       .select(col(queryIdCol), col("content"), col("metadata"),
         col("sim"), col("rn"))
   }
@@ -543,18 +531,8 @@ final class GraftClient(
     val lex = graft.query.LexicalSearch.queryIndex(spark, s"$annPath/lex",
         "row_id", qTerms, queryIdCol, "__term", k = channelK)
       .select(col(queryIdCol), col("row_id"), col("rank"))
-    // fused top-count is answer-sized: checkpoint once — it feeds the
-    // bucket collection AND the payload join
-    val fused = graft.query.LexicalSearch.rrfFuse(vec, lex, queryIdCol,
-        "row_id", "rank", k = count)
-      .localCheckpoint()
-    val buckets = fused
-      .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val payload = spark.read.parquet(s"$annPath/payload")
-      .filter(col("__rbucket").isin(buckets: _*))
-      .select(col("row_id"), col("content"), col("metadata"))
-    fused.join(payload, "row_id")
+    withPayload(annPath, graft.query.LexicalSearch.rrfFuse(vec, lex,
+        queryIdCol, "row_id", "rank", k = count))
       .select(col(queryIdCol), col("rank"), col("content"), col("metadata"),
         col("rrf_micro"),
         col("a_rank").as("vec_rank"), col("b_rank").as("lex_rank"))

@@ -340,7 +340,7 @@ object Queries {
         occupancyCap = e.count() / 6)
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
-        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0, params = params)
+        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
       .orderBy("query_id", "rn")
   }
@@ -379,7 +379,7 @@ object Queries {
         e.filter(pmod(col("vec_id"), lit(10)) === 1), params)
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
-        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0, params = params)
+        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
       .orderBy("query_id", "rn")
   }
@@ -500,8 +500,7 @@ object Queries {
         e.filter(pmod(col("vec_id"), lit(11)) === 5).select("vec_id"))
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
-        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0,
-        params = params)
+        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
       .orderBy("query_id", "rn")
   }
@@ -677,7 +676,7 @@ object Queries {
       IvfPq.recluster(spark, work, "vec_id", "embedding", fresh)
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
-        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0, params = fresh)
+        queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
       .orderBy("query_id", "rn")
   }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * directories at the source, which is the property LSH bucketing cannot
   * give a columnar store.
   */
-object IvfIndex {
+object IvfIndex extends IvfLayout {
 
   /** maxIter=10: the coarse quantizer does not need tight convergence —
     * centroid quality only moves the probe count (the query bound is
@@ -63,7 +63,7 @@ object IvfIndex {
     * heaps and hit frames grow toward corpus size, while the equijoin
     * alternative stays one flat labels pass.
     */
-  private val RefillCap = 65536L
+  private[query] val RefillCap = 65536L
 
   /** Conservative serialized bytes per refill-loop hit row (query id +
     * id + sim + rn, all 8-byte, plus row overhead) — the a-priori size
@@ -204,7 +204,7 @@ object IvfIndex {
       params: Params = Params()): Unit = {
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/cell_codes")),
+    require(!IvfPq.isComposed(spark, indexPath),
       "IvfIndex.recluster: this index carries a cell_codes table (a composed " +
         "IvfPq index) — its codes are priced against build-time structures; " +
         "re-cluster with IvfPq.build")
@@ -407,9 +407,7 @@ object IvfIndex {
     // a COMPOSED index must append through [[IvfPq.upsert]]: a
     // cells-only append would leave the new vectors with no code
     // rows, and the composed scan would silently never surface them
-    val codesPath = new org.apache.hadoop.fs.Path(s"$indexPath/cell_codes")
-    require(!codesPath.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(codesPath),
+    require(!IvfPq.isComposed(spark, indexPath),
       "IvfIndex.upsert: this index carries a cell_codes table (a composed " +
         "IvfPq index) — append through IvfPq.upsert so the codes land " +
         "with their cells")
@@ -711,10 +709,7 @@ object IvfIndex {
       case None => return DeleteCompactionReport(Nil, 0L, Nil)
       case Some(t) => t.distinct().localCheckpoint()
     }
-    val hasCodes = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexPath/cell_codes")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
+    val hasCodes = IvfPq.isComposed(spark, indexPath)
     val tombIds = tombs.select(col(Tombstones.IdColumn).as(idCol))
     val cells = spark.read.parquet(s"$indexPath/cells")
     // which cells hold a tombstoned row: one semi-join per table, ≤
@@ -1148,9 +1143,7 @@ object IvfIndex {
     // (codes are encoded against global codebooks, so a split changes
     // only the partition key, never a code), under the
     // [[splitPendingPath]] marker + [[repairPendingCodes]] crash story
-    val codesPath = new org.apache.hadoop.fs.Path(s"$indexPath/cell_codes")
-    val hasCodes = codesPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(codesPath)
+    val hasCodes = IvfPq.isComposed(spark, indexPath)
     // crash hygiene FIRST: reconcile a crashed composed split's codes
     // with the committed cells, then adopt any meta-less directory a
     // crashed split left behind, so every vector is visible (and every
@@ -1377,6 +1370,27 @@ object IvfIndex {
       .groupBy(col("centroid_id"), col(labelCol))
       .agg(max(col("__d")).as("__rl"))
 
+  /** [[cellLabelRadii]] over the index's LIVE assigned rows — radii
+    * need to bound only what can be served (an artifact built
+    * pre-delete stays valid the other way around, over a superset; see
+    * [[Tombstones]]). The one derivation behind both the persisted
+    * [[buildLabelMeta]] artifact and the filtered path's per-call
+    * fallback.
+    */
+  private[graft] def labelRadii(
+      spark: SparkSession,
+      indexPath: String,
+      idCol: String,
+      embCol: String,
+      labels: DataFrame,
+      labelCol: String): DataFrame =
+    cellLabelRadii(
+      Tombstones.liveOnly(
+          normalizedAssigned(spark, indexPath, idCol, embCol),
+          spark, indexPath, idCol)
+        .join(labels.select(col(idCol), col(labelCol)), Seq(idCol)),
+      broadcast(spark.read.parquet(s"$indexPath/cells_meta")), labelCol)
+
   private def labelMetaPath(indexPath: String, labelCol: String): String =
     s"$indexPath/label_meta_${labelCol.replaceAll("[^A-Za-z0-9_-]", "_")}"
 
@@ -1421,15 +1435,10 @@ object IvfIndex {
     // snapshot FIRST (see the staleness note above)
     val snap = (spark.read.parquet(s"$indexPath/cells").count(),
       cellDirIds(spark, indexPath).sorted)
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
-    // live rows only — the artifact bounds what queries can serve; the
-    // freshness fingerprint above still counts RAW rows, so a later
-    // compaction (which changes that count) stales it automatically
-    val assigned = Tombstones.liveOnly(
-        normalizedAssigned(spark, indexPath, idCol, embCol),
-        spark, indexPath, idCol)
-      .join(labels.select(col(idCol), col(labelCol)), Seq(idCol))
-    cellLabelRadii(assigned, cellMeta, labelCol)
+    // live rows only (see [[labelRadii]]); the freshness fingerprint
+    // above still counts RAW rows, so a later compaction (which changes
+    // that count) stales it automatically
+    labelRadii(spark, indexPath, idCol, embCol, labels, labelCol)
       .write.mode("overwrite").parquet(s"$base/radii")
     // label_col rides the snapshot so [[upsertCells]] can fold a
     // label-carrying batch into this artifact without guessing the
@@ -1482,278 +1491,10 @@ object IvfIndex {
         .foreach { s => fs.delete(s.getPath, true); () }
   }
 
-  /** FILTERED batch top-k: per-query top-k restricted to corpus rows
-    * whose `labelCol` equals the query's — the attribute-constrained
-    * ("filtered ANN") retrieval every production vector store serves,
-    * here EXACT by the per-(cell, label) radius bound. A query probes
-    * only cells that actually CONTAIN its label (rare labels probe
-    * almost nowhere regardless of geometry), seeds a floor from the
-    * `probeWidth` nearest such cells, and extends to exactly the
-    * label-holding cells whose label-radius bound can still beat it.
-    * Candidates are label-filtered before ranking, so the exact kernel
-    * prices only qualifying rows.
-    *
-    * 100 TB shape: the label metadata is the persisted
-    * [[buildLabelMeta]] artifact (build once, query many — a fresh
-    * call reads the tiny radii frame after a metadata-only freshness
-    * proof, no vector payloads; absent or stale it is derived per
-    * call, one nCells × nLabels aggregation over the index); probes
-    * read only label-holding cell directories via the same static
-    * `isin` pruning as [[queryTopK]]. For high-cardinality predicates
-    * the radii frame grows toward corpus size — past `maxLabelFanout`
-    * the call AUTOMATICALLY branches to [[queryTopK]] overfetch +
-    * post-filter + refill ([[filteredViaOverfetch]]): same exact
-    * answers, and the only corpus-proportional artifact anywhere is
-    * the index scan the unfiltered bound already prices.
-    *
-    * @param queries (queryIdCol, queryVecCol, labelCol) — the wanted
-    *                label rides the query row
-    * @param labels  (idCol, labelCol) corpus label source
-    * @param maxLabelFanout the largest per-(cell, label) radii frame
-    *                this call may build/broadcast — measured as the
-    *                persisted artifact's row count when one is fresh,
-    *                else estimated as `approx_count_distinct(label)`
-    *                (a lower bound on the pairs frame). Past it the
-    *                overfetch fallback runs instead.
-    * @param refillCap the fallback's per-query overfetch ceiling
-    *                before a still-deficient query escalates to the
-    *                direct label-equijoin ranking (cost knob only —
-    *                every path is exact)
-    * @return (queryIdCol, idCol, sim, rn), rn 1..k by sim desc, ties
-    *         ascending id — only label-matching rows appear
-    */
-  def queryTopKFiltered(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      refillCap: Long = RefillCap): DataFrame =
-    queryTopKFilteredWithPath(spark, indexPath, idCol, embCol, queries,
-      queryIdCol, queryVecCol, labels, labelCol, k, threshold, probeWidth,
-      maxLabelFanout, refillCap)._1
-
-  /** [[queryTopKFiltered]] plus which path ran (`true` = the
-    * high-cardinality overfetch fallback) — the branch decision,
-    * spec-checkable.
-    */
-  private[graft] def queryTopKFilteredWithPath(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      refillCap: Long = RefillCap): (DataFrame, Boolean) = {
-    ensureGeneration(spark, indexPath)
-    // branch on the size of the radii frame this call would otherwise
-    // build AND broadcast: the fresh artifact's row count when present
-    // (parquet-metadata-only), else approx_count_distinct over the
-    // labels frame — one narrow partial-aggregated scan, vastly cheaper
-    // than the nCells × nLabels derivation it guards
-    val cached = cachedLabelRadii(spark, indexPath, labelCol)
-    val fanout = cached.map(_.count()).getOrElse(
-      labels.agg(approx_count_distinct(col(labelCol))).head.getLong(0))
-    if (fanout > maxLabelFanout)
-      (filteredViaOverfetch(spark, indexPath, idCol, embCol, queries,
-        queryIdCol, queryVecCol, labels, labelCol, k, threshold, probeWidth,
-        refillCap), true)
-    else
-      (filteredViaLabelRadii(spark, indexPath, idCol, embCol, queries,
-        queryIdCol, queryVecCol, labels, labelCol, k, threshold, probeWidth,
-        cached)._1, false)
-  }
-
-  /** MULTI-LABEL (disjunctive) filtered batch top-k: per-query top-k
-    * restricted to corpus rows whose label is IN the query's label
-    * SET — the `WHERE label IN (...)` retrieval production stores
-    * serve next to the equality filter. Exact by containment: a
-    * corpus row carries ONE label, so the true top-k over a label
-    * set's mates is contained in the union of the per-label top-ks,
-    * and each per-label retrieval is the exact [[queryTopKFiltered]]
-    * machinery verbatim (label-radius path or high-cardinality
-    * fallback, branch per call) — one synthetic (query, label)
-    * retrieval unit per set member, deduplicated, then one final
-    * answer-sized global re-rank. No row can double-surface (one
-    * label per corpus row ⇒ at most one unit yields it).
-    *
-    * @param queries (queryIdCol, queryVecCol, labelSetCol) — the
-    *                wanted labels ride each query row as an ARRAY
-    * @return (queryIdCol, idCol, sim, rn), rn 1..k by sim desc, ties
-    *         ascending id — only rows whose label is in the query's
-    *         set appear; an empty or all-absent set yields no rows
-    */
-  def queryTopKFilteredAny(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labelSetCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      refillCap: Long = RefillCap): DataFrame =
-    filteredAnyVia(queries, queryIdCol, queryVecCol, labelSetCol, labelCol,
-      idCol, k,
-      ex => queryTopKFiltered(spark, indexPath, idCol, embCol, ex,
-        "__fq", queryVecCol, labels, labelCol, k, threshold, probeWidth,
-        maxLabelFanout, refillCap))
-
-  /** The shared multi-label reduction ([[queryTopKFilteredAny]] /
-    * [[IvfPq.queryTopKFilteredAny]]): explode each query's label set
-    * into deduplicated (query, label) retrieval units keyed by a
-    * composite struct id, run the single-label engine once over the
-    * whole unit batch, strip the composite, and take the global
-    * per-query top-k over the union — answer-sized (≤ |set| × k rows
-    * per query reach the final `topk_by`).
-    */
-  private[query] def filteredAnyVia(
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labelSetCol: String,
-      labelCol: String,
-      idCol: String,
-      k: Int,
-      engine: DataFrame => DataFrame): DataFrame = {
-    val ex = queries
-      .select(col(queryIdCol), col(queryVecCol),
-        explode(col(labelSetCol)).as(labelCol))
-      // duplicate labels in one set must not double the unit (and with
-      // it the row's presence in the union); the distinct is
-      // query-batch-sized
-      .distinct()
-      .select(
-        struct(col(queryIdCol).as("q"), col(labelCol).as("l")).as("__fq"),
-        col(queryVecCol), col(labelCol))
-    engine(ex)
-      .select(col("__fq").getField("q").as(queryIdCol), col(idCol), col("sim"))
-      .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
-  }
-
-  /** The label-radius path of [[queryTopKFiltered]] — exact by the
-    * per-(cell, label) triangle bound; `cached` is the already-probed
-    * [[cachedLabelRadii]] result (None → per-call derivation). Returns
-    * the result plus a LAZY diagnostic frame of the (query, cell)
-    * pairs actually probed (the label-driven restriction, read by the
-    * scaling-curve report; never evaluated in production).
-    */
-  private[graft] def filteredViaLabelRadii(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int,
-      cached: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
-    // per-(cell, label) radii: the persisted [[buildLabelMeta]]
-    // artifact when present and provably fresh (a parquet-metadata
-    // count + directory listing, no vector reads), else derived per call
-    // from the assigned rows — a cost fallback, never a correctness
-    // one (a stale artifact is detected, not served)
-    val cellLabel = cached.getOrElse {
-      // live rows only: radii need to bound only what can be SERVED
-      // (a persisted artifact built pre-delete stays valid the other
-      // way around — over a superset — see [[Tombstones]])
-      val assigned = Tombstones.liveOnly(
-          normalizedAssigned(spark, indexPath, idCol, embCol),
-          spark, indexPath, idCol)
-        .join(labels.select(col(idCol), col(labelCol)), Seq(idCol))
-      cellLabelRadii(assigned, cellMeta, labelCol).localCheckpoint()
-    }
-
-    val qNorm = AnnIndex.prepared(
-        queries.select(col(queryIdCol), col(queryVecCol).as("__qv"), col(labelCol)),
-        queryIdCol, "__qv")
-      .join(queries.select(col(queryIdCol), col(labelCol)), Seq(queryIdCol))
-      .select(col(queryIdCol), col("__qv").as(queryVecCol), col(labelCol),
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__qnorm"))
-
-    // per (query, label-holding cell): probe order + label-radius bound
-    val wCent = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val qCells = qNorm
-      .join(broadcast(cellLabel), Seq(labelCol))
-      .join(cellMeta.select(col("centroid_id"), col("center")), Seq("centroid_id"))
-      .withColumn("cdist",
-        sqrt(graft.functions.l2_dist_sq(col("__qnorm"), col("center"))))
-      .withColumn("ub_sim",
-        lit(1.0) - pow(
-          greatest(lit(0.0), col("cdist") - col("__rl") - lit(RadiusPad)), 2) / 2)
-      .withColumn("crank", row_number().over(wCent))
-      .select(col(queryIdCol), col(queryVecCol), col(labelCol),
-        col("centroid_id"), col("ub_sim"), col("crank"))
-
-    def probe(sel: DataFrame): DataFrame = {
-      val (selM, probed) = localizedSelection(spark,
-        sel.select(col(queryIdCol), col(queryVecCol), col(labelCol),
-          col("centroid_id")))
-      // fresh pruned read (the selfKnnGraph pass-2 idiom): the static
-      // isin filter reaches the parquet scan directly, labels attached
-      // to just the probed rows; tombstones mask before the floor
-      Tombstones.liveOnly(
-          spark.read.parquet(s"$indexPath/cells")
-            .filter(col("centroid_id").isin(probed: _*)),
-          spark, indexPath, idCol)
-        .select(col(idCol), col(embCol), col("centroid_id"))
-        .join(labels.select(col(idCol), col(labelCol).as("__clabel")), Seq(idCol))
-        .join(broadcast(selM), "centroid_id")
-        .filter(col("__clabel") === col(labelCol))
-        .withColumn("sim", cosine_sim(col(embCol), col(queryVecCol)))
-        .filter(col("sim") > threshold)
-        .select(col(queryIdCol), col(idCol), col("sim"))
-    }
-
-    val pass1 = probe(qCells.filter(col("crank") <= probeWidth)).localCheckpoint()
-    val floor = SimilaritySearch.kthBestScore(
-      pass1, queryIdCol, idCol, "sim", k, "floor_sim")
-    val sel2 = qCells.filter(col("crank") > probeWidth)
-      .join(floor, Seq(queryIdCol), "left")
-      .filter(col("ub_sim") > threshold &&
-        col("ub_sim") >= coalesce(col("floor_sim"), lit(threshold)))
-    val pass2 = probe(sel2)
-
-    (pass1.unionByName(pass2)
-      .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k)),
-      qCells.filter(col("crank") <= probeWidth)
-        .select(col(queryIdCol), col("centroid_id"))
-        .unionByName(sel2.select(col(queryIdCol), col("centroid_id")))
-        .distinct())
-  }
-
-  /** The HIGH-CARDINALITY path of [[queryTopKFiltered]]: when the
-    * per-(cell, label) radii frame would approach corpus size (a
+  /** The HIGH-CARDINALITY path of [[IvfLayout.queryTopKFiltered]]: when
+    * the per-(cell, label) radii frame would approach corpus size (a
     * near-unique label column), restricting probes per label buys
-    * nothing — so run the UNFILTERED [[queryTopK]] with an overfetch,
+    * nothing — so run the layout's UNSCOPED body with an overfetch,
     * post-filter to label-mates, and REFILL any query whose matches
     * came up short.
     *
@@ -1766,7 +1507,7 @@ object IvfIndex {
     * `kk = corpus` (same). A query can therefore never finish with a
     * label-mate missing from its collected matches.
     *
-    * Cost shape: each round is one [[queryTopK]] over only the still-
+    * Cost shape: each round is one unscoped retrieval over only the still-
     * deficient queries at 4× the previous overfetch — ≤ log₄(cap/k)
     * rounds, each answer-sized on the wire; the only driver-side
     * values are per-round COUNTS (no row collects). With a sane
@@ -1796,20 +1537,14 @@ object IvfIndex {
       labelCol: String,
       k: Int,
       threshold: Double,
-      probeWidth: Int,
-      refillCap: Long = RefillCap,
-      // the unfiltered top-k engine each refill round runs —
-      // (still-deficient queries, kk) => hits. Defaults to this
-      // index's [[queryTopK]]; [[IvfPq]] passes its composed engine so
-      // the high-cardinality branch rides the memory-bound layout (the
-      // escalation equijoin below reads the shared `cells/` payloads
-      // either way). Any EXACT engine preserves the branch's
-      // exactness argument verbatim — the proof only uses "the global
-      // top-kk is the true top-kk".
-      topKFn: Option[(DataFrame, Int) => DataFrame] = None): DataFrame = {
-    val runTopK = topKFn.getOrElse((pending: DataFrame, kk: Int) =>
-      queryTopK(spark, indexPath, idCol, embCol, pending,
-        queryIdCol, queryVecCol, kk, threshold, probeWidth))
+      refillCap: Long,
+      // the layout's retrieval body; each refill round runs it UNSCOPED
+      // over the still-deficient queries at overfetch kk, so every read
+      // is pruned by that layout's bounds (the escalation equijoin below
+      // reads the shared `cells/` payloads either way). Any EXACT body
+      // preserves the branch's exactness argument verbatim — the proof
+      // only uses "the global top-kk is the true top-kk".
+      body: (DataFrame, Int, Option[IvfLayout.LabelScope]) => IvfLayout.Retrieval): DataFrame = {
     // parquet-metadata-only row count: the overfetch ceiling
     val corpusN = math.min(
       spark.read.parquet(s"$indexPath/cells").count(),
@@ -1842,7 +1577,7 @@ object IvfIndex {
       val atCap = kk >= hardCap
       // materialized once: the hit list feeds the label join AND the
       // truncation tally below
-      val hits = runTopK(pending, kk.toInt).localCheckpoint()
+      val hits = body(pending, kk.toInt, None).topK.localCheckpoint()
       // label every hit and compare against the query's wanted label;
       // LEFT join — an id the labels frame does not cover can never
       // match (same as the radii path's inner label join) but must
@@ -1929,75 +1664,52 @@ object IvfIndex {
           .withColumn("rn", lit(null).cast("long")))
   }
 
-  /** Batch top-k against a built IVF index, exact by the cell-radius
-    * bound. `probeWidth` is a cost knob, not a recall knob: the first
-    * pass probes the `probeWidth` nearest cells to seed the k-th-best
-    * floor (wider = tighter floor = fewer second-pass probes for dense
-    * query batches); the second pass probes exactly the cells whose
-    * bound still reaches that floor. Output: (queryIdCol, idCol, sim,
-    * rn) — rn 1..k by descending exact sim, ties broken by ascending id.
-    *
-    * Probe ranking uses the assignment metric (Euclidean distance of
-    * the NORMALIZED query to the centroid): centroids are means of unit
-    * vectors with varying norms, so cosine ranking would probe
-    * different cells than assignment used.
+  /** The plain layout's one exact retrieval body ([[IvfLayout
+    * .retrieve]]): every probed corpus row is ranked by the exact
+    * cosine kernel, and whole cells are skipped by the cell-radius
+    * bound (scoped: the per-(cell, label) radius bound, label-mates
+    * only).
     */
-  def queryTopK(
+  private[graft] def retrieve(
       spark: SparkSession,
       indexPath: String,
       idCol: String,
       embCol: String,
-      queries: DataFrame,
       queryIdCol: String,
       queryVecCol: String,
-      k: Int,
       threshold: Double,
-      probeWidth: Int = 1): DataFrame =
-    queryTopKWithProbes(spark, indexPath, idCol, embCol, queries,
-      queryIdCol, queryVecCol, k, threshold, probeWidth)._1
-
-  /** [[queryTopK]] plus two LAZY diagnostic frames: the (query, cell)
-    * pairs actually probed across both passes, and the exact-ranked
-    * candidate rows — the pruning evidence the scaling-curve report
-    * and the plan-shape specs read. The production path never
-    * evaluates them.
-    */
-  private[graft] def queryTopKWithProbes(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
+      probeWidth: Int)(
       queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
       k: Int,
-      threshold: Double,
-      probeWidth: Int = 1): (DataFrame, DataFrame, DataFrame) = {
+      scope: Option[IvfLayout.LabelScope]): IvfLayout.Retrieval = {
     // one fs.exists when healthy: completes a crashed recluster swap
     // so no reader ever sees a torn generation pair
     ensureGeneration(spark, indexPath)
     // (centroid_id, center, radius) — only populated cells have a row,
     // and only populated cells can produce candidates
     val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
+    val labelCols = scope.map(s => col(s.labelCol)).toSeq
 
-    val qNorm = AnnIndex.prepared(
-        queries.select(col(queryIdCol), col(queryVecCol).as("__qv")), queryIdCol, "__qv")
-      .select(col(queryIdCol), col("__qv").as(queryVecCol),
+    val qNorm = IvfLayout.withQueryLabel(AnnIndex.prepared(
+        queries.select(col(queryIdCol), col(queryVecCol).as("__qv")), queryIdCol, "__qv"),
+        queries, queryIdCol, scope)
+      .select((Seq(col(queryIdCol), col("__qv").as(queryVecCol)) ++ labelCols :+
         org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__qnorm"))
+          .cast("array<float>").as("__qnorm")): _*)
 
     // per (query, cell): probe-order distance + completeness bound
     val wCent = Window.partitionBy(col(queryIdCol))
       .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val qCells = qNorm.crossJoin(cellMeta)
+    val (inScope, radius) = IvfLayout.cellsInScope(qNorm, cellMeta, scope)
+    val qCells = inScope
       .withColumn("cdist",
         sqrt(graft.functions.l2_dist_sq(col("__qnorm"), col("center"))))
       .withColumn("ub_sim",
         lit(1.0) - pow(
-          greatest(lit(0.0), col("cdist") - col("radius") - lit(RadiusPad)), 2) / 2)
+          greatest(lit(0.0), col("cdist") - radius - lit(RadiusPad)), 2) / 2)
       .withColumn("crank", row_number().over(wCent))
-      .select(col(queryIdCol), col(queryVecCol), col("centroid_id"),
-        col("ub_sim"), col("crank"))
+      .select((Seq(col(queryIdCol), col(queryVecCol)) ++ labelCols ++
+        Seq(col("centroid_id"), col("ub_sim"), col("crank"))): _*)
 
     val cells = spark.read.parquet(s"$indexPath/cells")
     // probe: candidates of the selected (query, cell) rows, exact-ranked.
@@ -2009,14 +1721,16 @@ object IvfIndex {
     // instead of reading the whole index and relying on DPP to fire.
     def probe(sel: DataFrame): DataFrame = {
       val (selM, probed) = localizedSelection(spark,
-        sel.select(col(queryIdCol), col(queryVecCol), col("centroid_id")))
+        sel.select((Seq(col(queryIdCol), col(queryVecCol)) ++ labelCols :+
+          col("centroid_id")): _*))
       // deleted rows mask out HERE — before the floor this pass seeds:
       // a tombstoned candidate allowed into the k-th-best floor could
       // certify a cutoff above a live row's true rank (Tombstones doc)
-      Tombstones.liveOnly(
-          cells.filter(col("centroid_id").isin(probed: _*)),
-          spark, indexPath, idCol)
-        .join(broadcast(selM), "centroid_id")
+      IvfLayout.rowsInScope(
+          Tombstones.liveOnly(
+            cells.filter(col("centroid_id").isin(probed: _*)),
+            spark, indexPath, idCol),
+          broadcast(selM), idCol, scope)
         .withColumn("sim", cosine_sim(col(embCol), col(queryVecCol)))
         .filter(col("sim") > threshold)
         .select(col(queryIdCol), col(idCol), col("sim"))
@@ -2042,45 +1756,15 @@ object IvfIndex {
     val pass2 = probe(sel2)
 
     val cand = pass1.unionByName(pass2)
-    (cand.transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k)),
+    IvfLayout.Retrieval(
+      cand.transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k)),
       qCells.filter(col("crank") <= probeWidth)
         .select(col(queryIdCol), col("centroid_id"))
         .unionByName(sel2.select(col(queryIdCol), col("centroid_id")))
         .distinct(),
-      cand)
+      cand.select(col(queryIdCol), col(idCol)))
   }
 
-  /** Exact k-NN GRAPH over the indexed corpus: every vector's k nearest
-    * neighbors (self excluded) by exact cosine — the dense-batch
-    * retrieval pattern that semantic dedup (SemDeDup, Abbas et al.
-    * 2023), graph-based clustering, and neighbor-graph embeddings all
-    * start from.
-    *
-    * [[queryTopK]] broadcasts its query batch, which is right for point
-    * lookups and wrong when the corpus IS the query batch; here nothing
-    * broadcasts but the per-cell metadata (nCentroids rows):
-    *
-    *  - pass 1 ranks each vector against its OWN cell (an equi-self-join
-    *    on the `centroid_id` partition column — co-located, quadratic
-    *    only within a cell, which is exactly the cost profile
-    *    cluster-then-compare dedup accepts on purpose);
-    *  - the k-th best own-cell similarity seeds a per-vector floor;
-    *  - pass 2 probes only foreign cells whose triangle bound
-    *    (`sim <= 1 - max(0, d(q,c) - radius_c)^2 / 2`, unit vectors)
-    *    can still beat that floor, via a shuffle equi-join on the probe
-    *    cell id — each cell is read once per probing vector partition,
-    *    never per vector.
-    *
-    * On a clustered corpus the floor is tight after pass 1 and foreign
-    * probes are rare; on an isotropic one this degrades toward the full
-    * self-join rather than silently dropping true neighbors (the same
-    * exactness contract as [[queryTopK]]). Vectors alone in their cell
-    * get floor = -1 and probe every cell — correctness never depends on
-    * the layout.
-    *
-    * @return (query_id, idCol, sim, rn) — rn 1..k by exact sim desc,
-    *         ties broken by ascending neighbor id
-    */
   /** Corpus-side salted equi-join of a cell-pruned scan with a
     * per-(query, cell) probe-selection frame — the pass-2 shape shared
     * by [[selfKnnGraph]] and [[contrastivePairs]]. Joining on the bare
@@ -2136,6 +1820,37 @@ object IvfIndex {
     (local, rows.iterator.map(_.get(ci)).toSeq.distinct)
   }
 
+  /** Exact k-NN GRAPH over the indexed corpus: every vector's k nearest
+    * neighbors (self excluded) by exact cosine — the dense-batch
+    * retrieval pattern that semantic dedup (SemDeDup, Abbas et al.
+    * 2023), graph-based clustering, and neighbor-graph embeddings all
+    * start from.
+    *
+    * [[queryTopK]] broadcasts its query batch, which is right for point
+    * lookups and wrong when the corpus IS the query batch; here nothing
+    * broadcasts but the per-cell metadata (nCentroids rows):
+    *
+    *  - pass 1 ranks each vector against its OWN cell (an equi-self-join
+    *    on the `centroid_id` partition column — co-located, quadratic
+    *    only within a cell, which is exactly the cost profile
+    *    cluster-then-compare dedup accepts on purpose);
+    *  - the k-th best own-cell similarity seeds a per-vector floor;
+    *  - pass 2 probes only foreign cells whose triangle bound
+    *    (`sim <= 1 - max(0, d(q,c) - radius_c)^2 / 2`, unit vectors)
+    *    can still beat that floor, via a shuffle equi-join on the probe
+    *    cell id — each cell is read once per probing vector partition,
+    *    never per vector.
+    *
+    * On a clustered corpus the floor is tight after pass 1 and foreign
+    * probes are rare; on an isotropic one this degrades toward the full
+    * self-join rather than silently dropping true neighbors (the same
+    * exactness contract as [[queryTopK]]). Vectors alone in their cell
+    * get floor = -1 and probe every cell — correctness never depends on
+    * the layout.
+    *
+    * @return (query_id, idCol, sim, rn) — rn 1..k by exact sim desc,
+    *         ties broken by ascending neighbor id
+    */
   def selfKnnGraph(
       spark: SparkSession,
       indexPath: String,

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * rows between partitions without re-encoding anything in either
   * mode.
   */
-object IvfPq {
+object IvfPq extends IvfLayout {
 
   /** `residual = true` selects per-cell RESIDUAL encoding — classic
     * IVFADC: codebooks are fit on (vector − cell centroid) residuals,
@@ -73,8 +73,18 @@ object IvfPq {
     * table — query and maintenance read the mode from the index, so a
     * caller cannot mismatch it.
     */
-  private[graft] def isResidual(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/enc_centers")
+  private[graft] def isResidual(spark: SparkSession, indexPath: String): Boolean =
+    hasTable(spark, indexPath, "enc_centers")
+
+  /** A composed index is recognized on disk by its `cell_codes` table —
+    * every layout-routed face (serve, shard routing, maintenance) reads
+    * the layout from the index through this one predicate.
+    */
+  private[graft] def isComposed(spark: SparkSession, indexPath: String): Boolean =
+    hasTable(spark, indexPath, "cell_codes")
+
+  private def hasTable(spark: SparkSession, indexPath: String, table: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$table")
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
@@ -339,7 +349,7 @@ object IvfPq {
       params: Params = Params()): Unit = {
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/cell_codes")),
+    require(isComposed(spark, indexPath),
       "IvfPq.recluster: no cell_codes table — a plain IVF index " +
         "re-clusters through IvfIndex.recluster")
     IvfIndex.ensureGeneration(spark, indexPath)
@@ -590,61 +600,48 @@ object IvfPq {
     drifted
   }
 
-  /** Batch top-k, exact by the stacked bounds. Output:
-    * (queryIdCol, idCol, sim, rn) — the shared retrieval shape.
+  /** The composed layout's one exact retrieval body ([[IvfLayout
+    * .retrieve]]), exact by the stacked bounds: the cell bound
+    * (scoped: the per-(cell, label) radius bound — the plain layout's
+    * label metadata, shared verbatim) picks the (query, cell) pairs
+    * whose codes are scanned, the code bound certifies `sim ∈ [lb, ub]`
+    * per scanned row (scoped: label-mates only), and only code-bound
+    * survivors fetch their full payload for the exact re-rank — which
+    * needs no label re-check, candidates are mates by construction.
     */
-  def queryTopK(
+  private[graft] def retrieve(
       spark: SparkSession,
       indexPath: String,
       idCol: String,
       embCol: String,
-      queries: DataFrame,
       queryIdCol: String,
       queryVecCol: String,
-      k: Int,
       threshold: Double,
-      probeWidth: Int = 1,
-      params: Params = Params()): DataFrame =
-    queryTopKWithDiag(spark, indexPath, idCol, embCol, queries,
-      queryIdCol, queryVecCol, k, threshold, probeWidth, params)._1
-
-  /** [[queryTopK]] plus two LAZY diagnostic frames: the (query, cell)
-    * pairs whose codes were scanned, and the (query, id) candidates
-    * that survived to the exact fetch — the two pruning levels,
-    * spec-checkable independently.
-    */
-  private[graft] def queryTopKWithDiag(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
+      probeWidth: Int)(
       queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
       k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      params: Params = Params()): (DataFrame, DataFrame, DataFrame) = {
+      scope: Option[IvfLayout.LabelScope]): IvfLayout.Retrieval = {
     // one fs.exists when healthy: completes a crashed recluster swap
     IvfIndex.ensureGeneration(spark, indexPath)
-    val pad = lit(1e-6)
+    val pad = lit(IvfIndex.RadiusPad)
     val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
     val residualMode = isResidual(spark, indexPath)
-    val qNorm = AnnIndex.prepared(
+    val labelCols = scope.map(s => col(s.labelCol)).toSeq
+    val qNorm = IvfLayout.withQueryLabel(AnnIndex.prepared(
         queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
-        queryIdCol, "__qv")
-      .select(col(queryIdCol), col("__qv"),
+        queryIdCol, "__qv"), queries, queryIdCol, scope)
+      .select((Seq(col(queryIdCol), col("__qv")) ++ labelCols :+
         org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__qnorm"))
+          .cast("array<float>").as("__qnorm")): _*)
     // the ADC lookup tables: global mode prices every code against one
     // LUT per query; residual mode prices a code against the LUT of
     // ITS encoding generation — one LUT per (query, enc_id), built
     // from q − enc_center over the append-only enc_centers table
     // (queries × nEnc rows, broadcast-sized by the point-lookup
-    // contract)
+    // contract). The PQ geometry comes from the stored codebooks.
     val lutq =
       if (!residualMode)
-        PqIndex.queryLut(spark, indexPath, queries, queryIdCol, queryVecCol, params.pq)
+        PqIndex.queryLut(spark, indexPath, queries, queryIdCol, queryVecCol)
       else
         PqIndex.lutOf(
           qNorm.crossJoin(broadcast(spark.read.parquet(s"$indexPath/enc_centers")))
@@ -652,20 +649,22 @@ object IvfPq {
               zip_with(col("__qnorm"), col("center"),
                 (a, b) => (a - b).cast("float"))),
           Seq(queryIdCol, "enc_id"), "__qdiff",
-          PqIndex.codebooksDf(spark, indexPath), params.pq)
+          PqIndex.codebooksDf(spark, indexPath))
     val lutKeys = if (!residualMode) Seq(queryIdCol) else Seq(queryIdCol, "enc_id")
 
     // per (query, cell): probe order + the cell-level bound
     val wCent = Window.partitionBy(col(queryIdCol))
       .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val qCells = qNorm.crossJoin(cellMeta)
+    val (inScope, radius) = IvfLayout.cellsInScope(qNorm, cellMeta, scope)
+    val qCells = inScope
       .withColumn("cdist",
         sqrt(graft.functions.l2_dist_sq(col("__qnorm"), col("center"))))
       .withColumn("cell_ub",
         lit(1.0) - pow(
-          greatest(lit(0.0), col("cdist") - col("radius") - pad), 2) / 2)
+          greatest(lit(0.0), col("cdist") - radius - pad), 2) / 2)
       .withColumn("crank", row_number().over(wCent))
-      .select(col(queryIdCol), col("centroid_id"), col("cell_ub"), col("crank"))
+      .select((col(queryIdCol) +: labelCols) ++
+        Seq(col("centroid_id"), col("cell_ub"), col("crank")): _*)
 
     val codes = spark.read.parquet(s"$indexPath/cell_codes")
     // ADC-scan the codes of the selected (query, cell) pairs — the
@@ -675,15 +674,16 @@ object IvfPq {
     // ([[IvfIndex.localizedSelection]])
     def scan(sel: DataFrame): DataFrame = {
       val (selM, probed) = IvfIndex.localizedSelection(spark,
-        sel.select(col(queryIdCol), col("centroid_id")))
+        sel.select((col(queryIdCol) +: labelCols) :+ col("centroid_id"): _*))
       // tombstones mask at the CODE scan — before the lb floors this
       // pass seeds (a deleted row's lb could certify a cutoff above a
       // live row's true rank; see [[Tombstones]]), and before any LUT
       // work is spent on a row that cannot be served
-      Tombstones.liveOnly(
-          codes.filter(col("centroid_id").isin(probed: _*)),
-          spark, indexPath, idCol)
-        .join(broadcast(selM), Seq("centroid_id"))
+      IvfLayout.rowsInScope(
+          Tombstones.liveOnly(
+            codes.filter(col("centroid_id").isin(probed: _*)),
+            spark, indexPath, idCol),
+          broadcast(selM), idCol, scope)
         .join(broadcast(lutq), lutKeys)
         .withColumn("__adc", sqrt(graft.functions.pq_adc(col("codes"), col("__lut"))))
         .withColumn("__lb",
@@ -747,279 +747,8 @@ object IvfPq {
       .filter(col("sim") > threshold)
       .select(col(queryIdCol), col(idCol), col("sim"))
       .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
-    (result,
+    IvfLayout.Retrieval(result,
       scanned.select(col(queryIdCol), col("centroid_id")).distinct(),
       candM.select(col(queryIdCol), col(idCol)).distinct())
-  }
-
-  /** FILTERED batch top-k over the COMPOSED index — the
-    * [[IvfIndex.queryTopKFiltered]] semantics (per-query top-k among
-    * only the corpus rows carrying the query's label) served from the
-    * memory-bound IVF+PQ layout, exact by the label-radius bound
-    * STACKED with the code bound:
-    *
-    *  - cell level: a query probes only cells that actually CONTAIN
-    *    its label, and only those whose per-(cell, label) radius bound
-    *    (`sim ≤ 1 − max(0, d(q,c) − r(c,L))²/2`) can still reach the
-    *    certified floor — the same metadata as the plain filtered
-    *    path, shared verbatim: the persisted
-    *    [[IvfIndex.buildLabelMeta]] artifact (the composed layout
-    *    keeps `cells/` + `cells_meta` at the same paths, so freshness
-    *    proofs, upsert folds and build invalidation all apply
-    *    unchanged), else the per-call derivation;
-    *  - code level: within a probed cell the ADC scan prices ONLY
-    *    label-mates (corpus labels attached to the pruned code rows
-    *    before any LUT work), certifying `sim ∈ [lb, ub]` per mate;
-    *    the floor is the k-th best certified lb among mates, and only
-    *    bound-survivors fetch their full payload for the exact
-    *    re-rank — which needs no label re-check, candidates are
-    *    mates by construction.
-    *
-    * High-cardinality labels branch to the shared overfetch fallback
-    * ([[IvfIndex.filteredViaOverfetch]]) with THIS index's
-    * [[queryTopK]] as the refill engine, so every read in the fallback
-    * is code-bound-pruned too; the escalation equijoin reads the
-    * shared payload table. Exact on every path — the branch is a cost
-    * knob, never a semantics one (the q108/q113/q114 contract).
-    *
-    * @return (queryIdCol, idCol, sim, rn), rn 1..k by sim desc, ties
-    *         ascending id — only label-matching rows appear
-    */
-  def queryTopKFiltered(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      refillCap: Long = 65536L,
-      params: Params = Params()): DataFrame =
-    queryTopKFilteredWithPath(spark, indexPath, idCol, embCol, queries,
-      queryIdCol, queryVecCol, labels, labelCol, k, threshold, probeWidth,
-      maxLabelFanout, refillCap, params)._1
-
-  /** MULTI-LABEL (disjunctive) filtered top-k over the COMPOSED index
-    * — [[IvfIndex.queryTopKFilteredAny]]'s `label IN (...)` semantics
-    * served from the memory-bound layout: the same containment
-    * reduction (per-label exact retrievals unioned, one global
-    * re-rank) over THIS index's [[queryTopKFiltered]] engine, so the
-    * code-bound pruning and the fallback branch apply per unit.
-    */
-  def queryTopKFilteredAny(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labelSetCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      refillCap: Long = 65536L,
-      params: Params = Params()): DataFrame =
-    IvfIndex.filteredAnyVia(queries, queryIdCol, queryVecCol, labelSetCol,
-      labelCol, idCol, k,
-      ex => queryTopKFiltered(spark, indexPath, idCol, embCol, ex,
-        "__fq", queryVecCol, labels, labelCol, k, threshold, probeWidth,
-        maxLabelFanout, refillCap, params))
-
-  /** [[queryTopKFiltered]] plus which path ran (`true` = the
-    * high-cardinality overfetch fallback) — the branch decision,
-    * spec-checkable. Branch rule identical to the plain index's: the
-    * fresh persisted artifact's row count when present
-    * (parquet-metadata-only), else `approx_count_distinct(label)`.
-    */
-  private[graft] def queryTopKFilteredWithPath(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      refillCap: Long = 65536L,
-      params: Params = Params()): (DataFrame, Boolean) = {
-    IvfIndex.ensureGeneration(spark, indexPath)
-    val cached = IvfIndex.cachedLabelRadii(spark, indexPath, labelCol)
-    val fanout = cached.map(_.count()).getOrElse(
-      labels.agg(approx_count_distinct(col(labelCol))).head.getLong(0))
-    if (fanout > maxLabelFanout)
-      (IvfIndex.filteredViaOverfetch(spark, indexPath, idCol, embCol, queries,
-        queryIdCol, queryVecCol, labels, labelCol, k, threshold, probeWidth,
-        refillCap,
-        Some((pending: DataFrame, kk: Int) =>
-          queryTopK(spark, indexPath, idCol, embCol, pending,
-            queryIdCol, queryVecCol, kk, threshold, probeWidth, params))), true)
-    else
-      (filteredWithDiag(spark, indexPath, idCol, embCol, queries,
-        queryIdCol, queryVecCol, labels, labelCol, k, threshold, probeWidth,
-        cached, params)._1, false)
-  }
-
-  /** The label-radius path of [[queryTopKFiltered]], plus a LAZY
-    * diagnostic frame of the (query, cell) pairs whose codes were
-    * scanned — the label-driven probe restriction, spec-checkable.
-    */
-  private[graft] def filteredWithDiag(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      labels: DataFrame,
-      labelCol: String,
-      k: Int,
-      threshold: Double,
-      probeWidth: Int,
-      cached: Option[DataFrame],
-      params: Params): (DataFrame, DataFrame) = {
-    val pad = lit(1e-6)
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
-    val residualMode = isResidual(spark, indexPath)
-    // per-(cell, label) radii: the persisted artifact when provably
-    // fresh, else derived per call (cost fallback, never correctness)
-    val cellLabel = cached.getOrElse {
-      // live rows only — the IvfIndex.filteredViaLabelRadii discipline
-      val assigned = Tombstones.liveOnly(
-          IvfIndex.normalizedAssigned(spark, indexPath, idCol, embCol),
-          spark, indexPath, idCol)
-        .join(labels.select(col(idCol), col(labelCol)), Seq(idCol))
-      IvfIndex.cellLabelRadii(assigned, cellMeta, labelCol).localCheckpoint()
-    }
-
-    val qNorm = AnnIndex.prepared(
-        queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
-        queryIdCol, "__qv")
-      .join(queries.select(col(queryIdCol), col(labelCol)), Seq(queryIdCol))
-      .select(col(queryIdCol), col("__qv"), col(labelCol),
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__qnorm"))
-    // ADC LUTs — same construction as [[queryTopKWithDiag]]: one per
-    // query (global) or one per (query, enc generation) (residual)
-    val lutq =
-      if (!residualMode)
-        PqIndex.queryLut(spark, indexPath,
-          queries.select(col(queryIdCol), col(queryVecCol)),
-          queryIdCol, queryVecCol, params.pq)
-          .select(col(queryIdCol), col("__lut"))
-      else
-        PqIndex.lutOf(
-          qNorm.crossJoin(broadcast(spark.read.parquet(s"$indexPath/enc_centers")))
-            .withColumn("__qdiff",
-              zip_with(col("__qnorm"), col("center"),
-                (a, b) => (a - b).cast("float"))),
-          Seq(queryIdCol, "enc_id"), "__qdiff",
-          PqIndex.codebooksDf(spark, indexPath), params.pq)
-    val lutKeys = if (!residualMode) Seq(queryIdCol) else Seq(queryIdCol, "enc_id")
-
-    // per (query, label-holding cell): probe order + label-radius bound.
-    // The cellLabel join restricts the frame to cells that CONTAIN the
-    // query's label — rare labels probe almost nowhere at any geometry
-    val wCent = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val qCells = qNorm
-      .join(broadcast(cellLabel), Seq(labelCol))
-      .join(cellMeta.select(col("centroid_id"), col("center")), Seq("centroid_id"))
-      .withColumn("cdist",
-        sqrt(graft.functions.l2_dist_sq(col("__qnorm"), col("center"))))
-      .withColumn("cell_ub",
-        lit(1.0) - pow(
-          greatest(lit(0.0), col("cdist") - col("__rl") - pad), 2) / 2)
-      .withColumn("crank", row_number().over(wCent))
-      .select(col(queryIdCol), col(labelCol), col("centroid_id"),
-        col("cell_ub"), col("crank"))
-
-    val codes = spark.read.parquet(s"$indexPath/cell_codes")
-    val corpLab = labels.select(col(idCol), col(labelCol).as("__clabel"))
-    // ADC-scan only the LABEL-MATES inside the selected (query, cell)
-    // pairs: probed cell ids (≤ nCells, driver-bounded) become a
-    // planning-time partition filter; corpus labels attach to just the
-    // pruned code rows, and the mate filter runs BEFORE any LUT work
-    def scan(sel: DataFrame): DataFrame = {
-      val (selM, probed) = IvfIndex.localizedSelection(spark,
-        sel.select(col(queryIdCol), col(labelCol), col("centroid_id")))
-      // tombstones mask before the mate filter and the lb floors —
-      // the queryTopKWithDiag scan discipline
-      Tombstones.liveOnly(
-          codes.filter(col("centroid_id").isin(probed: _*)),
-          spark, indexPath, idCol)
-        .join(corpLab, Seq(idCol))
-        .join(broadcast(selM), Seq("centroid_id"))
-        .filter(col("__clabel") === col(labelCol))
-        .join(broadcast(lutq), lutKeys)
-        .withColumn("__adc", sqrt(graft.functions.pq_adc(col("codes"), col("__lut"))))
-        .withColumn("__lb",
-          lit(1.0) - pow(col("__adc") + col("resid") + pad, 2) / 2)
-        .withColumn("__ub",
-          lit(1.0) - pow(
-            greatest(lit(0.0), col("__adc") - col("resid") - pad), 2) / 2)
-        .select(col(queryIdCol), col(idCol), col("centroid_id"),
-          col("__lb"), col("__ub"))
-    }
-
-    // pass 1: nearest probeWidth label-holding cells seed the floor
-    val pass1 = scan(qCells.filter(col("crank") <= probeWidth)).localCheckpoint()
-    val floor1 = SimilaritySearch.kthBestScore(
-      pass1.select(col(queryIdCol), col(idCol), col("__lb").as("s")),
-      queryIdCol, idCol, "s", k, "floor1")
-    // pass 2: only label-holding cells whose LABEL-radius bound reaches
-    // the certified floor
-    val sel2 = qCells.filter(col("crank") > probeWidth)
-      .join(floor1, Seq(queryIdCol), "left")
-      .filter(col("cell_ub") > threshold &&
-        col("cell_ub") >= coalesce(col("floor1"), lit(threshold)))
-    val scanned = pass1.unionByName(scan(sel2)).localCheckpoint()
-
-    // final floor over every scanned mate; fetch only code-bound
-    // survivors — already label-filtered, the re-rank needs no re-check
-    val floor = SimilaritySearch.kthBestScore(
-      scanned.select(col(queryIdCol), col(idCol), col("__lb").as("s")),
-      queryIdCol, idCol, "s", k, "floor_lb")
-    val cand = scanned
-      .join(floor, Seq(queryIdCol), "left")
-      .filter(col("__ub") > threshold &&
-        col("__ub") >= coalesce(col("floor_lb"), lit(threshold)))
-      .select(col(queryIdCol), col(idCol), col("centroid_id"))
-
-    // exact re-rank on payloads pruned to the candidates' cells; the
-    // (query, id) dedup applies only inside a split's commit window —
-    // same discipline and rationale as [[queryTopKWithDiag]]
-    val mp = new org.apache.hadoop.fs.Path(s"$indexPath/split_pending")
-    val inSplitWindow = mp.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(mp)
-    val candM = cand.localCheckpoint()
-    val fetchCells = candM.select("centroid_id").distinct()
-      .collect().map(_.get(0)).toSeq
-    val candPairs = candM.select(col(queryIdCol), col(idCol))
-    val result = spark.read.parquet(s"$indexPath/cells")
-      .filter(col("centroid_id").isin(fetchCells: _*))
-      .select(col(idCol), col(embCol))
-      .join(if (inSplitWindow) candPairs.distinct() else candPairs, idCol)
-      .join(broadcast(qNorm.select(col(queryIdCol), col("__qv"))), queryIdCol)
-      .withColumn("sim", cosine_sim(col("__qv"), col(embCol)))
-      .filter(col("sim") > threshold)
-      .select(col(queryIdCol), col(idCol), col("sim"))
-      .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
-    (result, scanned.select(col(queryIdCol), col("centroid_id")).distinct())
   }
 }

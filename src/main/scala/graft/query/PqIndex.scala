@@ -415,60 +415,67 @@ object PqIndex {
       .orderBy("table", "bucket")
   }
 
-  /** Per-query ADC lookup table against the index's persisted
-    * codebooks: one row per query — (queryIdCol, __qv raw vector,
-    * __lut FLAT array of one codebookSize-block per subspace in
-    * subspace order, the [[graft.functions.PqAdc]] input shape).
-    * lut[sub·K + code] = ‖q_sub − c‖², built from the SAME d2 kernel
-    * that priced the stored residuals. Broadcast-sized by the
-    * point-lookup contract; shared with [[IvfPq]].
+  /** ADC lookup rows: one per (vector row, subspace), `__lut_sub` =
+    * ‖v_sub − c‖² for every codebook center c via the same [[d2]] kernel
+    * that priced the stored residuals. The geometry is read from the
+    * index's own codebooks — one row per subspace `sub`, each center
+    * `subDim = size(centers[0])` floats — so a LUT always slices the
+    * subspaces the codes were encoded against, whatever the caller
+    * believes the build used.
     */
+  private def lutRows(vecRows: DataFrame, vecCol: String, codebooks: DataFrame): DataFrame = {
+    val subDim = size(col("centers").getItem(0))
+    vecRows.crossJoin(codebooks)
+      .withColumn("__subvec",
+        slice(col(vecCol).cast("array<float>"), col("sub") * subDim + 1, subDim))
+      .withColumn("__lut_sub",
+        transform(col("centers"), c => d2(col("__subvec"), c)))
+  }
+
+  /** The per-subspace rows of [[lutRows]] concatenated in subspace order
+    * — lut[sub·K + code], the [[graft.functions.PqAdc]] input shape.
+    */
+  private val flatLut: Column =
+    flatten(transform(array_sort(col("__ls")), s => s.getField("__lut_sub")))
+
   /** ADC lookup tables for arbitrary difference vectors, keyed by any
     * column set: (keyCols..., vecCol array<float>) → (keyCols...,
-    * __lut), lut[sub·K + code] = ‖v_sub − c‖² via the same [[d2]]
-    * kernel as everywhere. The residual path's per-(query, enc
-    * generation) LUT builder, where the vector is q − enc_center.
+    * __lut). The residual path's per-(query, enc generation) LUT
+    * builder, where the vector is q − enc_center.
     */
   private[query] def lutOf(
       vecRows: DataFrame,
       keyCols: Seq[String],
       vecCol: String,
-      codebooks: DataFrame,
-      params: Params): DataFrame =
-    vecRows
-      .withColumn("sub", explode(sequence(lit(0), lit(params.numSub - 1))))
-      .withColumn("__subvec",
-        slice(col(vecCol).cast("array<float>"),
-          col("sub") * params.subDim + 1, lit(params.subDim)))
-      .join(codebooks, "sub")
-      .withColumn("__lut_sub",
-        transform(col("centers"), c => d2(col("__subvec"), c)))
+      codebooks: DataFrame): DataFrame =
+    lutRows(vecRows, vecCol, codebooks)
       .groupBy(keyCols.map(col): _*)
       .agg(collect_list(struct(col("sub"), col("__lut_sub"))).as("__ls"))
-      .select(keyCols.map(col) :+
-        flatten(transform(array_sort(col("__ls")), s => s.getField("__lut_sub")))
-          .as("__lut"): _*)
+      .select(keyCols.map(col) :+ flatLut.as("__lut"): _*)
 
-  private[query] def queryLut(
+  /** Per-query ADC lookup table against the index's persisted
+    * codebooks: one row per query — (queryIdCol, __qv raw vector,
+    * __lut). Broadcast-sized by the point-lookup contract; shared with
+    * [[IvfPq]].
+    */
+  private[graft] def queryLut(
       spark: SparkSession,
       indexPath: String,
       queries: DataFrame,
       queryIdCol: String,
-      queryVecCol: String,
-      params: Params): DataFrame =
-    subspaceRows(
-        queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
-        queryIdCol, "__qv", params, Seq("__qv"))
-      .join(codebooksDf(spark, indexPath), "sub")
-      .withColumn("__lut_sub",
-        transform(col("centers"), c => d2(col("__subvec"), c)))
+      queryVecCol: String): DataFrame =
+    lutRows(
+        AnnIndex.prepared(
+            queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
+            queryIdCol, "__qv")
+          .select(col(queryIdCol), col("__qv"),
+            vector_to_array(col("features")).cast("array<float>").as("__prep")),
+        "__prep", codebooksDf(spark, indexPath))
       .groupBy(col(queryIdCol))
       .agg(
         first(col("__qv")).as("__qv"),
         collect_list(struct(col("sub"), col("__lut_sub"))).as("__ls"))
-      .select(col(queryIdCol), col("__qv"),
-        flatten(transform(array_sort(col("__ls")), s => s.getField("__lut_sub")))
-          .as("__lut"))
+      .select(col(queryIdCol), col("__qv"), flatLut.as("__lut"))
 
   /** Batch top-k against the compressed index, exact by the residual
     * bound. Output: (queryIdCol, idCol, sim, rn) — rn 1..k by exact
@@ -483,10 +490,9 @@ object PqIndex {
       queryIdCol: String,
       queryVecCol: String,
       k: Int,
-      threshold: Double,
-      params: Params = Params()): DataFrame =
+      threshold: Double): DataFrame =
     queryTopKWithCands(spark, indexPath, idCol, embCol, queries,
-      queryIdCol, queryVecCol, k, threshold, params)._1
+      queryIdCol, queryVecCol, k, threshold)._1
 
   /** [[queryTopK]] plus the LAZY candidate frame (query_id, id) that
     * survived the bound — the fetch volume, spec-checkable without
@@ -501,9 +507,8 @@ object PqIndex {
       queryIdCol: String,
       queryVecCol: String,
       k: Int,
-      threshold: Double,
-      params: Params = Params()): (DataFrame, DataFrame) = {
-    val lutq = queryLut(spark, indexPath, queries, queryIdCol, queryVecCol, params)
+      threshold: Double): (DataFrame, DataFrame) = {
+    val lutq = queryLut(spark, indexPath, queries, queryIdCol, queryVecCol)
 
     // code scan: d̂² = Σ_sub lut[sub·K + codes[sub]] via the codegen
     // pq_adc kernel (ascending-subspace summation — bit-identical to

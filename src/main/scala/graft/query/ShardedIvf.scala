@@ -111,8 +111,8 @@ object ShardedIvf {
   /** Append new vectors, each into its hash-home shard (the
     * single-index append contract per shard — including the
     * tombstone-overlap guard). `pqParams` must match the geometry the
-    * composed shards were built with ([[build]]/[[queryTopK]]'s
-    * parameter, same default): [[PqIndex.encode]] slices subvectors by
+    * composed shards were built with ([[build]]'s parameter, same
+    * default): [[PqIndex.encode]] slices subvectors by
     * dim/numSub, so encoding an upsert batch with a mismatched
     * geometry would write code rows whose ADC bounds price against the
     * wrong codebooks — silently corrupting exactness for those rows.
@@ -126,8 +126,7 @@ object ShardedIvf {
       newRows: DataFrame,
       pqParams: PqIndex.Params = PqIndex.Params()): Unit =
     routed(spark, root, idCol, newRows) { (p, slice) =>
-      val codes = new org.apache.hadoop.fs.Path(s"$p/cell_codes")
-      if (codes.getFileSystem(spark.sessionState.newHadoopConf()).exists(codes))
+      if (IvfPq.isComposed(spark, p))
         IvfPq.upsert(spark, p, idCol, embCol, slice,
           IvfPq.Params(pq = pqParams))
       else IvfIndex.upsert(spark, p, idCol, embCol, slice)
@@ -175,23 +174,13 @@ object ShardedIvf {
       queryVecCol: String,
       k: Int,
       threshold: Double,
-      probeWidth: Int = 1,
-      pqParams: PqIndex.Params = PqIndex.Params()): DataFrame = {
+      probeWidth: Int = 1): DataFrame = {
     val n = nShards(spark, root)
     def shardHits(i: Int): DataFrame = {
       val p = shardPath(root, i)
-      val codes = new org.apache.hadoop.fs.Path(s"$p/cell_codes")
-      val composed = codes.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(codes)
-      val hits =
-        if (composed)
-          IvfPq.queryTopK(spark, p, idCol, embCol, queries, queryIdCol,
-            queryVecCol, k, threshold, probeWidth,
-            IvfPq.Params(pq = pqParams))
-        else
-          IvfIndex.queryTopK(spark, p, idCol, embCol, queries, queryIdCol,
-            queryVecCol, k, threshold, probeWidth)
-      hits.select(col(queryIdCol), col(idCol), col("sim"))
+      IvfLayout.of(spark, p).queryTopK(spark, p, idCol, embCol, queries,
+          queryIdCol, queryVecCol, k, threshold, probeWidth)
+        .select(col(queryIdCol), col(idCol), col("sim"))
     }
     // shards probe CONCURRENTLY: the per-shard machinery runs its jobs
     // at construction (selection checkpoints, probed-id collects,
@@ -252,25 +241,14 @@ object ShardedIvf {
       k: Int,
       threshold: Double,
       probeWidth: Int = 1,
-      maxLabelFanout: Long = 1000000L,
-      pqParams: PqIndex.Params = PqIndex.Params()): DataFrame = {
+      maxLabelFanout: Long = 1000000L): DataFrame = {
     val n = nShards(spark, root)
     def shardHits(i: Int): DataFrame = {
       val p = shardPath(root, i)
-      val codes = new org.apache.hadoop.fs.Path(s"$p/cell_codes")
-      val composed = codes.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(codes)
-      val hits =
-        if (composed)
-          IvfPq.queryTopKFiltered(spark, p, idCol, embCol, queries,
-            queryIdCol, queryVecCol, labels, labelCol, k, threshold,
-            probeWidth, maxLabelFanout,
-            params = IvfPq.Params(pq = pqParams))
-        else
-          IvfIndex.queryTopKFiltered(spark, p, idCol, embCol, queries,
-            queryIdCol, queryVecCol, labels, labelCol, k, threshold,
-            probeWidth, maxLabelFanout)
-      hits.select(col(queryIdCol), col(idCol), col("sim"))
+      IvfLayout.of(spark, p).queryTopKFiltered(spark, p, idCol, embCol, queries,
+          queryIdCol, queryVecCol, labels, labelCol, k, threshold,
+          probeWidth, maxLabelFanout)
+        .select(col(queryIdCol), col(idCol), col("sim"))
     }
     graft.util.Par.all(spark, "ShardedIvf.queryTopKFiltered")(
         (0 until n).map(i => () => shardHits(i)): _*)
@@ -347,8 +325,7 @@ object ShardedIvf {
     require(shard >= 0 && shard < n,
       s"ShardedIvf.reclusterShard: shard $shard outside [0, $n)")
     val p = shardPath(root, shard)
-    val codes = new org.apache.hadoop.fs.Path(s"$p/cell_codes")
-    if (codes.getFileSystem(spark.sessionState.newHadoopConf()).exists(codes))
+    if (IvfPq.isComposed(spark, p))
       IvfPq.recluster(spark, p, idCol, embCol,
         IvfPq.Params(ivf = params, pq = pqParams))
     else IvfIndex.recluster(spark, p, idCol, embCol, params)

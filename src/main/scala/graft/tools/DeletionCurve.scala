@@ -77,8 +77,7 @@ object DeletionCurve {
           .write.format("noop").mode("overwrite").save()
       def queryPq(): Unit =
         IvfPq.queryTopK(spark, s"$root/ivfpq", "vec_id", "embedding",
-            q, "query_id", "qvec", k = 5, threshold = 0.0,
-            params = IvfPq.Params(ivf = ivfP, pq = pqP))
+            q, "query_id", "qvec", k = 5, threshold = 0.0)
           .write.format("noop").mode("overwrite").save()
 
       // tomb_pct 0 is the reference row; each pct masks its own slice

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.query.{IvfIndex, IvfPq, PqIndex}
+import graft.query.{IvfIndex, IvfLayout, IvfPq, PqIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -125,23 +125,24 @@ object ScalingCurve {
 
       val rows = Seq(
         measure("ivf_topk") {
-          val (r, p, c) = IvfIndex.queryTopKWithProbes(spark, s"$root/ivf",
-            "vec_id", "embedding", q, "query_id", "qvec", k = 5, threshold = 0.0)
-          (r, Some(p), Some(c))
+          val r = IvfIndex.retrieve(spark, s"$root/ivf", "vec_id", "embedding",
+            "query_id", "qvec", threshold = 0.0, probeWidth = 1)(q, 5, None)
+          (r.topK, Some(r.probed), Some(r.candidates))
         },
         measure("ivfpq_topk") {
-          val (r, p, c) = IvfPq.queryTopKWithDiag(spark, s"$root/ivfpq",
-            "vec_id", "embedding", q, "query_id", "qvec", k = 5, threshold = 0.0,
-            params = IvfPq.Params(ivf = ivfP, pq = pqP))
-          (r, Some(p), Some(c))
+          val r = IvfPq.retrieve(spark, s"$root/ivfpq", "vec_id", "embedding",
+            "query_id", "qvec", threshold = 0.0, probeWidth = 1)(q, 5, None)
+          (r.topK, Some(r.probed), Some(r.candidates))
         },
         measure("filtered_topk") {
-          val (r, p) = IvfIndex.filteredViaLabelRadii(spark, s"$root/ivf",
-            "vec_id", "embedding", q, "query_id", "qvec",
-            e.select("vec_id", "label"), "label", k = 5, threshold = 0.0,
-            probeWidth = 1,
-            cached = IvfIndex.cachedLabelRadii(spark, s"$root/ivf", "label"))
-          (r, Some(p), None)
+          val labels = e.select("vec_id", "label")
+          val scope = IvfLayout.LabelScope(labels, "label",
+            IvfIndex.cachedLabelRadii(spark, s"$root/ivf", "label").getOrElse(
+              IvfIndex.labelRadii(spark, s"$root/ivf", "vec_id", "embedding",
+                labels, "label")))
+          val r = IvfIndex.retrieve(spark, s"$root/ivf", "vec_id", "embedding",
+            "query_id", "qvec", threshold = 0.0, probeWidth = 1)(q, 5, Some(scope))
+          (r.topK, Some(r.probed), None)
         },
         measure("filtered_fallback") {
           // the q113 shape: a near-unique derived label forces the

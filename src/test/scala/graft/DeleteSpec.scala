@@ -158,8 +158,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     val exact = topkSet(SimilaritySearch.topKBatch(
       live, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     val masked = topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0,
-      params = delParams))
+      queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(masked == exact)
     val report = IvfPq.compactTombstones(spark, dir, "vec_id", "embedding")
     assert(report.rowsRemoved == 50L)
@@ -167,8 +166,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     assert(spark.read.parquet(s"$dir/cell_codes")
       .filter(pmod(col("vec_id"), lit(4)) === 1).isEmpty)
     val compacted = topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0,
-      params = delParams))
+      queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(compacted == exact)
   }
 
@@ -204,16 +202,14 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     val exact = topkSet(SimilaritySearch.topKBatch(
       live, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0,
-      params = delParams)) == exact)
+      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
     // the rerun must notice the codes side is still dirty
     IvfPq.compactTombstones(spark, dir, "vec_id", "embedding")
     assert(spark.read.parquet(s"$dir/cells").count() == 175L)
     assert(spark.read.parquet(s"$dir/cell_codes").count() == 175L)
     assert(!Tombstones.exists(spark, dir))
     assert(topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0,
-      params = delParams)) == exact)
+      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
   }
 
   test("selfKnnGraph and contrastivePairs drop deleted rows as nodes AND " +
@@ -272,8 +268,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     Tombstones.append(spark, pqDir, "vec_id",
       e.filter(pmod(col("vec_id"), lit(4)) === 0).select("vec_id"))
     assert(topkSet(PqIndex.queryTopK(spark, pqDir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0,
-      PqIndex.Params(dim = 8, numSub = 4))) == exact)
+      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
 
     val lshDir = tmp("lsh")
     AnnIndex.buildIndex(e, "vec_id", "embedding", lshDir)

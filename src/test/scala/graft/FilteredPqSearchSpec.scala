@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.{IvfIndex, IvfPq, PqIndex}
+import graft.query.{IvfIndex, IvfLayout, IvfPq, PqIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,7 +43,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
         col("label"))
     val got = IvfPq.queryTopKFiltered(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", e.select("vec_id", "label"), "label",
-      k = 5, threshold = 0.0, params = params)
+      k = 5, threshold = 0.0)
     assert(topkSet(got) == bruteForce(e, queries, 5))
     // every returned row is a label-mate
     val bad = got.join(e.select(col("vec_id"), col("label").as("__cl")), "vec_id")
@@ -77,7 +77,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
         col("label"))
     val got = IvfPq.queryTopKFiltered(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", e.select("vec_id", "label"), "label",
-      k = 4, threshold = 0.0, params = params)
+      k = 4, threshold = 0.0)
     assert(topkSet(got) == bruteForce(e, queries, 4))
   }
 
@@ -102,10 +102,12 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("label"))
-    val (got, scannedPairs) = IvfPq.filteredWithDiag(spark, dir,
-      "vec_id", "embedding", queries, "query_id", "qvec",
-      e.select("vec_id", "label"), "label", k = 3, threshold = 0.0,
-      probeWidth = 1, cached = None, params = params)
+    val r = IvfPq.retrieve(spark, dir, "vec_id", "embedding",
+      "query_id", "qvec", threshold = 0.0, probeWidth = 1)(queries, 3,
+      Some(IvfLayout.LabelScope(e.select("vec_id", "label"), "label",
+        IvfIndex.labelRadii(spark, dir, "vec_id", "embedding",
+          e.select("vec_id", "label"), "label"))))
+    val (got, scannedPairs) = (r.topK, r.probed)
     assert(topkSet(got) == bruteForce(e, queries, 3))
     // which cells hold which label (ground truth from the index itself)
     val cellsOfLabel = spark.read.parquet(s"$dir/cells")
@@ -143,7 +145,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
         col("label"))
     val got = IvfPq.queryTopKFiltered(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", e.select("vec_id", "label"), "label",
-      k = 5, threshold = 0.0, params = params)
+      k = 5, threshold = 0.0)
     assert(topkSet(got) == bruteForce(e, queries, 5))
   }
 
@@ -169,8 +171,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     val (got, usedFallback) = IvfPq.queryTopKFilteredWithPath(
       spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", e.select("vec_id", "label"), "label",
-      k = 3, threshold = 0.0, probeWidth = 1, maxLabelFanout = 16L,
-      params = params)
+      k = 3, threshold = 0.0, probeWidth = 1, maxLabelFanout = 16L)
     assert(usedFallback, "high-cardinality labels did not take the fallback")
     assert(topkSet(got) == bruteForce(e, queries, 3))
     // the branch decision, both ways: a roomy fanout cap keeps the
@@ -178,8 +179,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     val (got2, usedFallback2) = IvfPq.queryTopKFilteredWithPath(
       spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", e.select("vec_id", "label"), "label",
-      k = 3, threshold = 0.0, probeWidth = 1, maxLabelFanout = 1000000L,
-      params = params)
+      k = 3, threshold = 0.0, probeWidth = 1, maxLabelFanout = 1000000L)
     assert(!usedFallback2, "a roomy fanout cap still took the fallback")
     assert(topkSet(got2) == topkSet(got))
   }
@@ -196,7 +196,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
         array(col("label"), col("label") + lit(1)).as("lbls"))
     val got = IvfPq.queryTopKFilteredAny(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", "lbls", e.select("vec_id", "label"), "label",
-      k = 5, threshold = 0.0, params = params)
+      k = 5, threshold = 0.0)
     val exact = e.select(col("vec_id"), col("embedding"), col("label").as("__cl"))
       .join(broadcast(queries), expr("array_contains(lbls, __cl)"))
       .withColumn("sim", graft.functions.cosine_sim(col("embedding"), col("qvec")))
@@ -229,7 +229,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
         when(col("vec_id") < 2, col("label")).otherwise(lit(99L)).as("label"))
     val got = IvfPq.queryTopKFiltered(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", e.select("vec_id", "label"), "label",
-      k = 3, threshold = 0.0, params = params)
+      k = 3, threshold = 0.0)
     val byQuery = got.collect().groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.contains(0L) && byQuery.contains(1L))
     assert(!byQuery.contains(2L) && !byQuery.contains(3L),

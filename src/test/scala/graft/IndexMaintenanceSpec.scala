@@ -190,7 +190,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = topkSet(graft.query.IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0, 1, params))
+      queries, "query_id", "qvec", k = 5, threshold = 0.0, 1))
     val exact = topkSet(SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(got == exact)
@@ -248,7 +248,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = topkSet(graft.query.IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0, 1, params))
+      queries, "query_id", "qvec", k = 5, threshold = 0.0, 1))
     val exact = topkSet(SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(got == exact)
@@ -488,7 +488,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = topkSet(graft.query.IvfPq.queryTopK(spark, dir, "vec_id",
       "embedding", queries, "query_id", "qvec", k = 5, threshold = 0.0,
-      1, params))
+      1))
     val exact = topkSet(SimilaritySearch.topKBatch(
       live, "embedding", "vec_id", queries, "query_id", "qvec",
       k = 5, threshold = 0.0))

@@ -42,12 +42,12 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     }.toDF("vec_id", "embedding")
   }
 
-  private def queryBoth(e: DataFrame, dir: String, p: IvfPq.Params)
+  private def queryBoth(e: DataFrame, dir: String)
       : (Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, params = p)
+      queries, "query_id", "qvec", k = 3, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
     (topkSet(got), topkSet(exact))
@@ -62,7 +62,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0, params = p)
+      queries, "query_id", "qvec", k = 5, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0)
     assert(topkSet(got) == topkSet(exact))
@@ -76,9 +76,9 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
       val p = params.copy(residual = residual)
       val dir = tmp(if (residual) "res" else "glob")
       IvfPq.build(e, "vec_id", "embedding", dir, p)
-      val (result, _, cands) = IvfPq.queryTopKWithDiag(spark, dir,
-        "vec_id", "embedding", queries, "query_id", "qvec",
-        k = 3, threshold = 0.0, params = p)
+      val r = IvfPq.retrieve(spark, dir, "vec_id", "embedding",
+        "query_id", "qvec", threshold = 0.0, probeWidth = 1)(queries, 3, None)
+      val (result, cands) = (r.topK, r.candidates)
       // both modes stay exact while the fetch shrinks
       val exact = SimilaritySearch.topKBatch(
         e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
@@ -113,7 +113,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
 
     IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 40L)
     val (gotSplit, exactSplit) = queryBoth(
-      e.filter(pmod(col("vec_id"), lit(10)) =!= 1), dir, params)
+      e.filter(pmod(col("vec_id"), lit(10)) =!= 1), dir)
     assert(gotSplit == exactSplit, "split broke residual-mode answers")
 
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
@@ -125,7 +125,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     val dangling = spark.read.parquet(s"$dir/cell_codes")
       .join(spark.read.parquet(s"$dir/enc_centers"), Seq("enc_id"), "left_anti")
     assert(dangling.isEmpty, "a code row references a missing generation")
-    val (got, exact) = queryBoth(e, dir, params)
+    val (got, exact) = queryBoth(e, dir)
     assert(got == exact)
   }
 
@@ -151,8 +151,9 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
 
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    def fetch(): Long = IvfPq.queryTopKWithDiag(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, params = params)._3.count()
+    def fetch(): Long = IvfPq.retrieve(spark, dir, "vec_id", "embedding",
+      "query_id", "qvec", threshold = 0.0, probeWidth = 1)(queries, 3, None)
+      .candidates.count()
     val fetchBefore = fetch()
 
     IvfPq.reencodeCells(spark, dir, "vec_id", "embedding", params)
@@ -169,7 +170,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
       .join(spark.read.parquet(s"$dir/enc_centers"), Seq("enc_id"), "left_anti")
       .isEmpty)
     assert(spark.read.parquet(s"$dir/cell_codes").count() == 240L)
-    val (got, exact) = queryBoth(e, dir, params)
+    val (got, exact) = queryBoth(e, dir)
     assert(got == exact)
     assert(fetch() <= fetchBefore,
       "re-encoding against current centroids loosened the bounds")
@@ -210,12 +211,12 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     // tighter bounds fetch LESS for the exact verify
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    def fetch(d: String): Long = IvfPq.queryTopKWithDiag(spark, d,
-      "vec_id", "embedding", queries, "query_id", "qvec",
-      k = 3, threshold = 0.0, params = params)._3.count()
-    val (gotA, exactA) = queryBoth(e, dirA, params)
+    def fetch(d: String): Long = IvfPq.retrieve(spark, d,
+      "vec_id", "embedding", "query_id", "qvec",
+      threshold = 0.0, probeWidth = 1)(queries, 3, None).candidates.count()
+    val (gotA, exactA) = queryBoth(e, dirA)
     assert(gotA == exactA)
-    val (gotB, exactB) = queryBoth(e, dirB, params)
+    val (gotB, exactB) = queryBoth(e, dirB)
     assert(gotB == exactB)
     assert(fetch(dirB) <= fetch(dirA),
       s"drift repair loosened the fetch: ${fetch(dirB)} vs ${fetch(dirA)}")
@@ -241,7 +242,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     IvfPq.build(e, "vec_id", "embedding", dir, globalParams)
     assert(!IvfPq.isResidual(spark, dir),
       "stale enc tables survived a global rebuild — mode misread")
-    val (got, exact) = queryBoth(e, dir, globalParams)
+    val (got, exact) = queryBoth(e, dir)
     assert(got == exact)
   }
 
@@ -312,8 +313,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     val dangling = spark.read.parquet(s"$dir/cell_codes")
       .join(spark.read.parquet(s"$dir/enc_centers"), Seq("enc_id"), "left_anti")
     assert(dangling.isEmpty)
-    val (got, exact) = queryBoth(e, dir,
-      params.copy(ivf = IvfIndex.Params(nCentroids = 2)))
+    val (got, exact) = queryBoth(e, dir)
     assert(got == exact)
   }
 }

@@ -41,7 +41,7 @@ class IvfPqSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     def answer() = topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0, 1, params))
+      queries, "query_id", "qvec", k = 5, threshold = 0.0, 1))
     val exact = topkSet(SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(answer() == exact)
@@ -76,9 +76,9 @@ class IvfPqSpec extends AnyFunSuite with SharedSpark {
     // ids 0..7 are core members (i/4 <= 1) of the four clusters
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val (got, scannedCells, fetched) = IvfPq.queryTopKWithDiag(
-      spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, probeWidth = 1, params)
+    val r = IvfPq.retrieve(spark, dir, "vec_id", "embedding",
+      "query_id", "qvec", threshold = 0.0, probeWidth = 1)(queries, 3, None)
+    val (got, scannedCells, fetched) = (r.topK, r.probed, r.candidates)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
     assert(topkSet(got) == topkSet(exact))

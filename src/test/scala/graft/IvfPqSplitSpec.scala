@@ -76,7 +76,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, params = params)
+      queries, "query_id", "qvec", k = 3, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
     (topkSet(got), topkSet(exact))
@@ -197,7 +197,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     val queriesB = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val broken = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queriesB, "query_id", "qvec", k = 3, threshold = 0.0, params = params)
+      queriesB, "query_id", "qvec", k = 3, threshold = 0.0)
     val pairs = broken.select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length == pairs.distinct.length,

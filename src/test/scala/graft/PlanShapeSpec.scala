@@ -324,7 +324,7 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val plan = graft.query.IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-        queries, "query_id", "qvec", k = 5, threshold = 0.0, params = p)
+        queries, "query_id", "qvec", k = 5, threshold = 0.0)
       .queryExecution.executedPlan.toString
     // the per-(query, generation) LUT join must not change the scan
     // shape: payload fetch statically pruned, answer-sized ranking

@@ -55,7 +55,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     PqIndex.build(e, "vec_id", "embedding", dir, SmallParams)
     val queries = e.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val pq = PqIndex.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, SmallParams)
+      queries, "query_id", "qvec", k = 3, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
     assert(topkSet(pq) == topkSet(exact))
@@ -68,7 +68,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val (pq, cands) = PqIndex.queryTopKWithCands(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, SmallParams)
+      queries, "query_id", "qvec", k = 3, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
     assert(topkSet(pq) == topkSet(exact))
@@ -90,7 +90,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val pq = PqIndex.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0, SmallParams)
+      queries, "query_id", "qvec", k = 3, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
     assert(topkSet(pq) == topkSet(exact))

@@ -176,25 +176,25 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
       e.filter(col("vec_id") >= 160),
       IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 2), pq = pq, residual = true))
     assert(IvfPq.isResidual(spark, dir))
-    def q(params: IvfPq.Params): Set[(Long, Long, Long)] =
+    def q(): Set[(Long, Long, Long)] =
       topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
         e.filter(col("vec_id") < 6)
           .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-        "query_id", "qvec", k = 3, threshold = 0.0, params = params))
+        "query_id", "qvec", k = 3, threshold = 0.0))
     val globalP = IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8), pq = pq)
     IvfPq.recluster(spark, dir, "vec_id", "embedding", globalP)
     assert(!IvfPq.isResidual(spark, dir),
       "residual->global recluster left stale enc tables behind")
     assert(spark.read.parquet(s"$dir/cells_meta").count() == 8L)
     assert(spark.read.parquet(s"$dir/cells").count() == 200L)
-    assert(q(globalP) == brute(e))
+    assert(q() == brute(e))
     // ... and back to residual: enc tables minted fresh, still exact
     val resP = IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 4), pq = pq,
       residual = true)
     IvfPq.recluster(spark, dir, "vec_id", "embedding", resP)
     assert(IvfPq.isResidual(spark, dir),
       "global->residual recluster did not mint enc tables")
-    assert(q(resP) == brute(e))
+    assert(q() == brute(e))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     Seq("_regen", "recluster_pending").foreach { d =>
@@ -239,7 +239,7 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
       val got = topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
         e.filter(col("vec_id") < 6)
           .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-        "query_id", "qvec", k = 3, threshold = 0.0, params = newP))
+        "query_id", "qvec", k = 3, threshold = 0.0))
       assert(got == brute(e), s"composed crash point $crashAfter answered wrong")
       assert(spark.read.parquet(s"$dir/cells_meta").count() == regenMeta,
         s"composed crash point $crashAfter did not roll forward")
@@ -265,7 +265,7 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
       topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
         e.filter(col("vec_id") < 6)
           .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
-        "query_id", "qvec", k = 3, threshold = 0.0, params = params))
+        "query_id", "qvec", k = 3, threshold = 0.0))
     assert(graft.streaming.IndexMaintenance.applyIvfPqBatch(dir, "vec_id",
       "embedding", e.filter(col("vec_id") >= 60 && col("vec_id") < 120),
       batchId = 1L, params = params, reclusterEvery = Some(2L)))

@@ -156,11 +156,20 @@ class ShardedIvfSpec extends AnyFunSuite with SharedSpark {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val got = topkSet(ShardedIvf.queryTopK(spark, root, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0, pqParams = pq))
+      queries, "query_id", "qvec", k = 5, threshold = 0.0))
     val exact = topkSet(SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(got == exact,
       "upserted rows diverged — PQ geometry not threaded into the routed append")
+    // the query side reads the geometry from the shard's codebooks. On
+    // this isotropic fixture the bounds prune nothing, so the answers
+    // above stay exact under any query geometry; a mismatched one shows
+    // in the LUT, whose 8-float slices against 16-float centers price
+    // every code as null
+    val lut = PqIndex.queryLut(spark, ShardedIvf.shardPath(root, 0), queries,
+      "query_id", "qvec")
+    assert(lut.filter(size(col("__lut")) =!= 4 * 16 || exists(col("__lut"), _.isNull))
+        .isEmpty, "query LUT not priced with the built PQ geometry")
   }
 
   test("per-shard fsck and rolling one-shard re-cluster: exact mid-maintenance") {
