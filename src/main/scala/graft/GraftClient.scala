@@ -117,7 +117,7 @@ final class GraftClient(
       threshold: Double,
       count: Int): DataFrame =
     SimilaritySearch.topK(
-      spark.read.parquet(indexPath), "embedding", queryVec, count, threshold)
+      Tables.read(spark, indexPath), "embedding", queryVec, count, threshold)
       .select(col("content"), col("metadata"), col("sim"))
 
   /** Build the SCALE PATH for [[query]] over a written document index:
@@ -143,7 +143,7 @@ final class GraftClient(
       indexPath: String,
       annPath: String,
       composed: Boolean = false): Unit = {
-    val idx = spark.read.parquet(indexPath)
+    val idx = Tables.read(spark, indexPath)
     val withId = graft.pipeline.ScalableWindow.globalRunningSum(
         idx.withColumn("__one", lit(1L)), "__one", "row_id",
         col("doc_id").asc, col("chunk_id").asc, col("piece_id").asc)
@@ -192,7 +192,7 @@ final class GraftClient(
     val buckets = hitsM
       .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val payload = spark.read.parquet(s"$annPath/payload")
+    val payload = Tables.read(spark, s"$annPath/payload")
       .filter(col("__rbucket").isin(buckets: _*))
       .select(col("row_id"), col("content"), col("metadata"))
     hitsM.join(payload, "row_id")
@@ -212,20 +212,7 @@ final class GraftClient(
       count: Int): DataFrame = {
     import spark.implicits._
     val q = Seq((0L, queryVec)).toDF("query_id", "qvec")
-    val hits = topKHits(annPath, q, "query_id", "qvec", threshold, count)
-      .select(col("row_id"), col("sim"), col("rn"))
-      .localCheckpoint()
-    // ≤ count rows by construction: collect ids, prune the payload read
-    // to their partition directories (bucket = the same hash the write
-    // used, computed over the tiny id list)
-    val ids = hits.select("row_id").collect().map(_.getLong(0)).toSeq
-    val buckets = ids.toDF("row_id")
-      .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val payload = spark.read.parquet(s"$annPath/payload")
-      .filter(col("__rbucket").isin(buckets: _*))
-      .filter(col("row_id").isin(ids: _*))
-    hits.join(payload, "row_id")
+    withPayload(annPath, topKHits(annPath, q, "query_id", "qvec", threshold, count))
       .orderBy(col("rn").asc)
       .select(col("content"), col("metadata"), col("sim"))
   }
@@ -273,7 +260,7 @@ final class GraftClient(
   def payloadLabels(
       annPath: String,
       label: org.apache.spark.sql.Column): DataFrame =
-    spark.read.parquet(s"$annPath/payload")
+    Tables.read(spark, s"$annPath/payload")
       .select(col("row_id"), label.as("label"))
 
   /** Persist the per-(cell, label) radius artifact over the query
@@ -380,7 +367,7 @@ final class GraftClient(
     */
   def deleteWhere(annPath: String, predicate: org.apache.spark.sql.Column): Unit =
     deleteRows(annPath,
-      spark.read.parquet(s"$annPath/payload").filter(predicate)
+      Tables.read(spark, s"$annPath/payload").filter(predicate)
         .select(col("row_id")))
 
   /** Fold pending deletes into every physical artifact at `annPath`,
@@ -424,12 +411,12 @@ final class GraftClient(
         // underscore prefix keeps table readers from listing it; the
         // finally removes it win or lose.
         val tmpPurge = s"$annPath/_tmp_payload_purge"
-        spark.read.parquet(s"$annPath/payload")
+        Tables.read(spark, s"$annPath/payload")
           .filter(col("__rbucket").isin(buckets: _*))
           .join(tombIds, Seq("row_id"), "left_anti")
           .write.mode("overwrite").parquet(tmpPurge)
         try {
-          val survivors = spark.read.parquet(tmpPurge)
+          val survivors = Tables.read(spark, tmpPurge)
           survivors
             .transform(graft.util.PartitionedWrite.spread(
               _, buckets.size, col("__rbucket"), col("row_id")))
@@ -482,7 +469,7 @@ final class GraftClient(
     * fused retrieval without scanning either corpus.
     */
   def buildLexicalIndex(indexPath: String, annPath: String): Unit = {
-    val idx = spark.read.parquet(indexPath)
+    val idx = Tables.read(spark, indexPath)
     val withId = graft.pipeline.ScalableWindow.globalRunningSum(
         idx.withColumn("__one", lit(1L)), "__one", "row_id",
         col("doc_id").asc, col("chunk_id").asc, col("piece_id").asc)

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
-/** Fixture-table loaders (TESTDATA.md). One place normalizes the quirks of
+/** Table loaders: [[read]] opens every engine table, and the fixture
+  * loaders (TESTDATA.md) sit on it. One place normalizes the quirks of
   * `events.ts`, which has shipped in two parquet shapes across fixture
   * regenerations:
   *   - TIMESTAMP(NANOS): Spark cannot represent it; with
@@ -24,11 +27,53 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case _ => spark.read.parquet(s"$dir/$name.parquet")
+      case _ => read(spark, s"$dir/$name.parquet")
     }
 
+  /** The one way engine code opens a Parquet table. Plain
+    * `spark.read.parquet` infers the schema in a one-task Spark job;
+    * here the schema comes from the footer of the table's first data
+    * file, read on the driver and converted by Spark's own converter
+    * under the session's Parquet settings, so the frame, its schema and
+    * its rows are the same without the job. A path with no data file
+    * (missing, empty, or a glob) takes the plain read, so its errors
+    * stay Spark's; so does a session that merges Parquet schemas.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else firstDataFile(spark, path).flatMap(FooterSchema.of(spark, _))
+
+  /** The first data file under `path` in sorted path order, skipping
+    * what Spark's file index skips (`_`/`.` entries such as `_SUCCESS`,
+    * `_temporary`, `.crc`) but descending into `k=v` partition
+    * directories; `path` itself when it is a file.
+    */
+  private[graft] def firstDataFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(dir: Path): Option[FileStatus] =
+      fs.listStatus(dir).filterNot(s => FooterSchema.hidden(s.getPath.getName))
+        .sortBy(_.getPath.getName).iterator
+        .flatMap { s =>
+          if (s.isDirectory) walk(s.getPath)
+          else Option.when(!s.getPath.getName.startsWith("_"))(s)
+        }
+        .nextOption()
+    if (!fs.exists(root)) None
+    else {
+      val st = fs.getFileStatus(root)
+      if (st.isFile) Some(st) else walk(root)
+    }
+  }
+
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = read(spark, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case LongType =>
         // integral division: `/` would promote ~1.7e18 ns longs to double
@@ -92,6 +137,14 @@ object Tables {
     dir
   }
 
+  /** The engine's fixed partition fan-out: the directory count of every
+    * hash-bucketed table it writes. Up to this many directories are
+    * listed on the driver instead of in a listing job.
+    */
+  private[graft] val PartitionFanOut = Seq(GraftClient.PayloadBuckets,
+    query.LexicalSearch.IndexBuckets, query.AnnIndex.IndexBuckets,
+    pipeline.CurationStore.IndexBuckets, streaming.StreamingNearDup.IndexBuckets).max
+
   /** Session config every graft entry point should apply.
     *
     * The r21 performance setting is scale-adaptive, not tuned to a
@@ -107,6 +160,11 @@ object Tables {
     *    and is invisible at scale, where partition sizes are decided by
     *    total/parallelism, far above either floor.
     *
+    *  - `parallelPartitionDiscovery.threshold` = [[PartitionFanOut]]
+    *    (default 32): a 64-bucket table's directories are listed on the
+    *    driver, not in a 64-task job on every read; IVF cell tables with
+    *    more cells than that still list in parallel.
+    *
     * (`preferSortMergeJoin=false` — guide §9's suggested baseline — was
     * trialled in r21 and A/B-rejected: it cost q25 ~0.9 s at sf0.1 and
     * is deliberately NOT set.)
@@ -119,6 +177,8 @@ object Tables {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ", "false")
       .config("spark.sql.warehouse.dir", warehouseDir)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        PartitionFanOut.toString)
 
   /** The session every main runs on: [[configure]]d, `local[cpus]`,
     * one shuffle partition per core, no UI, WARN logging.

@@ -133,9 +133,9 @@ object CurationStore {
     */
   private def scoreUnderModel(
       spark: SparkSession, toks: DataFrame, workDir: String): DataFrame = {
-    val uni = spark.read.parquet(s"$workDir/model/unigrams")
-    val bi = spark.read.parquet(s"$workDir/model/bigrams")
-    val vocab = spark.read.parquet(s"$workDir/model/vocab")
+    val uni = Tables.read(spark, s"$workDir/model/unigrams")
+    val bi = Tables.read(spark, s"$workDir/model/bigrams")
+    val vocab = Tables.read(spark, s"$workDir/model/vocab")
     TextAnalysis.lmTrans(toks)
       .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("m"))
       .join(bi, Seq("w1", "w2"), "left")
@@ -209,7 +209,7 @@ object CurationStore {
     val newOld = corpusPairs(spark, gramable, sigs, workDir, threshold)
 
     // ---- contracted-graph cluster merge ----
-    val oldLabels = spark.read.parquet(s"$workDir/clusters").localCheckpoint()
+    val oldLabels = Tables.read(spark, s"$workDir/clusters").localCheckpoint()
     val contracted = newOld
       .join(oldLabels.withColumnRenamed("node", "d1"), Seq("d1"), "left")
       .select(coalesce(col("label"), col("d1")).as("d1"), col("d2"))
@@ -266,7 +266,7 @@ object CurationStore {
       .collect().map(_.getInt(0)).toSeq // ≤ IndexBuckets: bounded
     val capped = graft.util.BucketGuard.capOccupancy(
       bands, Seq("band", "bucket"), Dedup.MaxBucketOccupancy, "curation append probe")
-    val cand = spark.read.parquet(s"$workDir/bands")
+    val cand = Tables.read(spark, s"$workDir/bands")
       .filter(col("__bucket").isin(probeBuckets: _*))
       .select(col("doc_id").as("d1"), col("band"), col("bucket"))
       .join(capped.select(col("doc_id").as("d2"), col("band"), col("bucket")),
@@ -280,7 +280,7 @@ object CurationStore {
     val sigBuckets = cand
       .select(pmod(hash(col("d1")), lit(IndexBuckets)).as("__sb"))
       .distinct().collect().map(_.getInt(0)).toSeq // bounded
-    val oldSigDocs = spark.read.parquet(s"$workDir/sigdocs")
+    val oldSigDocs = Tables.read(spark, s"$workDir/sigdocs")
       .filter(col("__sbucket").isin(sigBuckets: _*))
     val estFloor = Dedup.estimatorFloor(threshold)
     val plausible = cand
@@ -306,8 +306,8 @@ object CurationStore {
     * recompute.
     */
   def bestOfCluster(spark: SparkSession, workDir: String): DataFrame = {
-    val labels = spark.read.parquet(s"$workDir/clusters")
-    val quality = spark.read.parquet(s"$workDir/scores")
+    val labels = Tables.read(spark, s"$workDir/clusters")
+    val quality = Tables.read(spark, s"$workDir/scores")
       .select(col("doc_id"), col("avg_prob_ppm"))
     quality.join(labels, quality("doc_id") === labels("node"), "left")
       .select(col("doc_id"),
@@ -327,8 +327,8 @@ object CurationStore {
     * over the stored document universe.
     */
   def leakageSafeSplit(spark: SparkSession, workDir: String): DataFrame = {
-    val labels = spark.read.parquet(s"$workDir/clusters")
-    val docs = spark.read.parquet(s"$workDir/docs")
+    val labels = Tables.read(spark, s"$workDir/clusters")
+    val docs = Tables.read(spark, s"$workDir/docs")
     val bucket = Sampling.keepBucket(col("cluster_id"))
     docs.join(labels, docs("doc_id") === labels("node"), "left")
       .select(col("doc_id"), col("source"),

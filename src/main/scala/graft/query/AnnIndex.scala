@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import graft.functions.cosine_sim
 import graft.util.PartitionedWrite
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel, Normalizer}
@@ -209,7 +210,7 @@ object AnnIndex {
     // partition directories + streamed against the literal query
     // buckets; collected pairs dedup driver-side BEFORE the vector
     // fetch (dedup here replaces a distinct shuffle + checkpoint)
-    val candPlan = spark.read.parquet(s"$indexPath/buckets")
+    val candPlan = Tables.read(spark, s"$indexPath/buckets")
       .filter(col("__bucket").isin(probeBuckets: _*))
       .join(broadcast(qbDf), Seq("table", "bucket"))
       .select(col(queryIdCol), col(idCol),
@@ -230,7 +231,7 @@ object AnnIndex {
     // every survivor is verified exactly (see [[Tombstones]]; physical
     // removal for this layout is a rebuild — tombstone-serve until then)
     Tombstones.liveOnly(
-        spark.read.parquet(s"$indexPath/vectors")
+        Tables.read(spark, s"$indexPath/vectors")
           .filter(col("__vbucket").isin(vBuckets: _*)),
         spark, indexPath, idCol)
       .join(broadcast(candDf), idCol)

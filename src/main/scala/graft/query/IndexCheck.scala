@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,7 +77,7 @@ object IndexCheck {
     // over LIVE rows: the exactness proofs only ever bound servable
     // rows (a tombstoned member is masked before any bound is used,
     // and compaction re-tightens radii to the survivors)
-    val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
+    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     checks += (() => {
       val assigned = Tombstones.liveOnly(
         IvfIndex.normalizedAssigned(spark, indexPath, idCol, embCol),
@@ -102,7 +103,7 @@ object IndexCheck {
 
     // -------------------------------------------------- unique_ids
     checks += (() => {
-      val dupIds = spark.read.parquet(s"$indexPath/cells")
+      val dupIds = Tables.read(spark, s"$indexPath/cells")
         .groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
         .filter(col("__n") > 1).count()
       ("unique_ids", dupIds == 0L, dupIds)
@@ -110,9 +111,9 @@ object IndexCheck {
 
     // -------------------------------------------------- codes_align
     if (hasCodes) checks += (() => {
-      val cells = spark.read.parquet(s"$indexPath/cells")
+      val cells = Tables.read(spark, s"$indexPath/cells")
         .select(col(idCol), col("centroid_id").cast("long").as("__cc"))
-      val codes = spark.read.parquet(s"$indexPath/cell_codes")
+      val codes = Tables.read(spark, s"$indexPath/cell_codes")
         .select(col(idCol), col("centroid_id").cast("long").as("__kc"))
       // one row per side per id is implied by unique_ids on cells; a
       // full outer join surfaces missing/stale/mis-celled rows in one
@@ -127,13 +128,13 @@ object IndexCheck {
 
     // -------------------------------------------------- enc_refs
     if (hasCodes && IvfPq.isResidual(spark, indexPath)) checks += (() => {
-      val encIds = spark.read.parquet(s"$indexPath/enc_centers")
+      val encIds = Tables.read(spark, s"$indexPath/enc_centers")
         .select(col("enc_id"))
-      val dangling = spark.read.parquet(s"$indexPath/cell_codes")
+      val dangling = Tables.read(spark, s"$indexPath/cell_codes")
         .select(col("enc_id"))
         .join(broadcast(encIds), Seq("enc_id"), "left_anti")
         .count()
-      val currentCells = spark.read.parquet(s"$indexPath/enc_current")
+      val currentCells = Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long")).collect().map(_.getLong(0)).toSet
       val unmapped = IvfIndex.codesDirIds(spark, indexPath)
         .count(!currentCells(_)).toLong
@@ -144,7 +145,7 @@ object IndexCheck {
     checks += (() => {
       val arts = IvfIndex.labelMetaArtifacts(spark, indexPath)
       val rawRows = if (arts.isEmpty) 0L
-        else spark.read.parquet(s"$indexPath/cells").count()
+        else Tables.read(spark, s"$indexPath/cells").count()
       val stale = arts.count { case (_, _, snapRows, snapCells) =>
         snapRows != rawRows ||
           snapCells != IvfIndex.cellDirIds(spark, indexPath).sorted
@@ -184,12 +185,12 @@ object IndexCheck {
     import spark.implicits._
     IvfIndex.ensureGeneration(spark, workDir)
     val rows = scala.collection.mutable.ArrayBuffer[(String, Boolean, Long)]()
-    val postings = spark.read.parquet(s"$workDir/postings")
+    val postings = Tables.read(spark, s"$workDir/postings")
 
     val agg = postings.groupBy(col(idCol)).agg(min(col("__len")).as("__l"))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("__l")), lit(0L)).as("tl"))
       .head
-    val st = spark.read.parquet(s"$workDir/stats").head
+    val st = Tables.read(spark, s"$workDir/stats").head
     val statsOk = agg.getLong(0) == st.getAs[Long]("__n_docs") &&
       agg.getLong(1) == st.getAs[Long]("__total_len")
     rows += (("stats_physical", statsOk,

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import graft.functions.cosine_sim
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -221,7 +222,7 @@ object IvfIndex extends IvfLayout {
     // rows, so it doubles as the complete physical compaction), writes
     // only under _regen/ — readers are untouched until the swap
     build(Tombstones.liveOnly(
-        spark.read.parquet(s"$indexPath/cells"), spark, indexPath, idCol)
+        Tables.read(spark, s"$indexPath/cells"), spark, indexPath, idCol)
         .select(col(idCol), col(embCol)),
       idCol, embCol, regen, params)
     // the swap itself retires the (now spent) tombstone table: it is
@@ -429,7 +430,7 @@ object IvfIndex extends IvfLayout {
     // before it can be re-inserted — see [[Tombstones.requireNoOverlap]]
     Tombstones.requireNoOverlap(spark, indexPath, idCol, newRows,
       "IvfIndex.upsert")
-    val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
+    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     // nCentroids-row frame: count it once here, not per write below
     val nCells = cellMeta.count().toInt.max(1)
     // label-meta fold eligibility is decided BEFORE the append: an
@@ -442,7 +443,7 @@ object IvfIndex extends IvfLayout {
     val foldable = labelMetaArtifacts(spark, indexPath)
       .filter { case (lc, _, snapRows, snapCells) =>
         batchCols(lc) &&
-          snapRows == spark.read.parquet(s"$indexPath/cells").count() &&
+          snapRows == Tables.read(spark, s"$indexPath/cells").count() &&
           snapCells == cellDirIds(spark, indexPath).sorted
       }
     val assigned = assignNew(cellMeta, nCells, idCol, embCol, newRows)
@@ -503,7 +504,7 @@ object IvfIndex extends IvfLayout {
         val snapP = new org.apache.hadoop.fs.Path(s"$base/snapshot")
         if (!fs.exists(snapP)) None
         else scala.util.Try {
-          val snap = spark.read.parquet(snapP.toString)
+          val snap = Tables.read(spark, snapP.toString)
           if (!snap.columns.contains("label_col")) None
           else {
             val r = snap.head
@@ -549,7 +550,7 @@ object IvfIndex extends IvfLayout {
     val batchCells = assigned.select(col("centroid_id").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq
     artifacts.foreach { case (lc, base, snapRows, snapCells) =>
-      val old = spark.read.parquet(s"$base/radii")
+      val old = Tables.read(spark, s"$base/radii")
       val cidT = old.schema("centroid_id").dataType
       // assignNew's `d` IS the member→centroid distance the radii
       // bound needs (same normalized-vector kernel as the build).
@@ -711,7 +712,7 @@ object IvfIndex extends IvfLayout {
     }
     val hasCodes = IvfPq.isComposed(spark, indexPath)
     val tombIds = tombs.select(col(Tombstones.IdColumn).as(idCol))
-    val cells = spark.read.parquet(s"$indexPath/cells")
+    val cells = Tables.read(spark, s"$indexPath/cells")
     // which cells hold a tombstoned row: one semi-join per table, ≤
     // nCentroids ids to the driver. The CODES side is checked too —
     // a rerun after a crash between the cells rewrite and the codes
@@ -723,7 +724,7 @@ object IvfIndex extends IvfLayout {
         .select(col("centroid_id").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSeq
     val affected = (dirtyCells(cells) ++ (if (!hasCodes) Nil
-      else dirtyCells(spark.read.parquet(s"$indexPath/cell_codes"))))
+      else dirtyCells(Tables.read(spark, s"$indexPath/cell_codes"))))
       .distinct.sorted
     if (affected.isEmpty) {
       // every tombstoned id is absent from the index (double-delete
@@ -747,7 +748,7 @@ object IvfIndex extends IvfLayout {
     // composed index: the affected cells' surviving CODE rows,
     // checkpointed before their source directories are overwritten
     val codeSurvivors = if (!hasCodes) None else Some {
-      spark.read.parquet(s"$indexPath/cell_codes")
+      Tables.read(spark, s"$indexPath/cell_codes")
         .filter(col("centroid_id").isin(affected: _*))
         .join(tombIds, Seq(idCol), "left_anti")
         .localCheckpoint()
@@ -789,7 +790,7 @@ object IvfIndex extends IvfLayout {
     // re-tighten the rewritten cells' radii from their survivors:
     // centers unchanged, max distance over a subset only shrinks —
     // deletes are the one lifecycle event where bounds IMPROVE
-    val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
+    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     val normalized = new org.apache.spark.ml.feature.Normalizer()
       .setInputCol("__raw").setOutputCol("__f").setP(2.0)
       .transform(survivors.withColumn("__raw",
@@ -850,7 +851,7 @@ object IvfIndex extends IvfLayout {
     * and operational reporting.
     */
   private def cellOccupancy(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(s"$indexPath/cells")
+    Tables.read(spark, s"$indexPath/cells")
       .groupBy(col("centroid_id").cast("long").as("centroid_id"))
       .agg(count(lit(1)).as("occupancy"))
 
@@ -861,7 +862,7 @@ object IvfIndex extends IvfLayout {
     val files = graft.util.PartitionFiles
       .counts(spark, s"$indexPath/cells", "centroid_id")
       .toDF("centroid_id", "n_files")
-    spark.read.parquet(s"$indexPath/cells_meta")
+    Tables.read(spark, s"$indexPath/cells_meta")
       .select(col("centroid_id").cast("long").as("centroid_id"), col("radius"))
       .join(occ, Seq("centroid_id"), "left")
       .join(broadcast(files), Seq("centroid_id"), "left")
@@ -959,14 +960,14 @@ object IvfIndex extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String): Seq[Long] = {
-    val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
+    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     val metaIds = cellMeta.select(col("centroid_id").cast("long"))
       .collect().map(_.getLong(0)).toSet
     val orphans = cellDirIds(spark, indexPath).filterNot(metaIds).sorted
     if (orphans.isEmpty) return Nil
     val members = new org.apache.spark.ml.feature.Normalizer()
       .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(spark.read.parquet(s"$indexPath/cells")
+      .transform(Tables.read(spark, s"$indexPath/cells")
         .filter(col("centroid_id").isin(orphans: _*))
         .withColumn("__raw",
           org.apache.spark.ml.functions.array_to_vector(
@@ -1017,7 +1018,7 @@ object IvfIndex extends IvfLayout {
     val mp = new org.apache.hadoop.fs.Path(splitPendingPath(indexPath))
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(mp)) return Nil
-    val pairs = spark.read.parquet(mp.toString)
+    val pairs = Tables.read(spark, mp.toString)
       .select(col("old_id").cast("long"), col("new_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val cellDirs = cellDirIds(spark, indexPath).toSet
@@ -1027,10 +1028,10 @@ object IvfIndex extends IvfLayout {
     val affectedCodes = affected.filter(codeDirs)
     if (affectedCodes.nonEmpty && present.nonEmpty) {
       // committed assignment of every member of the marked cells
-      val assign = spark.read.parquet(s"$indexPath/cells")
+      val assign = Tables.read(spark, s"$indexPath/cells")
         .filter(col("centroid_id").isin(present: _*))
         .select(col(idCol), col("centroid_id"))
-      val codes = spark.read.parquet(s"$indexPath/cell_codes")
+      val codes = Tables.read(spark, s"$indexPath/cell_codes")
         .filter(col("centroid_id").isin(affectedCodes: _*))
         .drop("centroid_id")
         .dropDuplicates(Seq(idCol)) // stale copies are value-identical
@@ -1153,14 +1154,14 @@ object IvfIndex extends IvfLayout {
     // one partial-aggregating scan of (partition col) to find hot
     // cells; ≤ nCentroids ids reach the driver (the probe-pruning
     // collect pattern)
-    val hot = spark.read.parquet(s"$indexPath/cells")
+    val hot = Tables.read(spark, s"$indexPath/cells")
       .groupBy("centroid_id").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > occupancyCap)
       .select(col("centroid_id").cast("long"))
       .collect().map(_.getLong(0)).sorted.toSeq
     if (hot.isEmpty) return SplitReport(Nil, Nil)
 
-    val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
+    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     // fresh ids allocate above BOTH the meta's max and the filesystem's
     // max directory id: even if a concurrent/crashed writer left a
     // directory the meta (re-read above) does not list, a fresh id can
@@ -1178,7 +1179,7 @@ object IvfIndex extends IvfLayout {
     // as the build's assignment pass ([[selfKnnGraph]] re-derive)
     val members = new org.apache.spark.ml.feature.Normalizer()
       .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(spark.read.parquet(s"$indexPath/cells")
+      .transform(Tables.read(spark, s"$indexPath/cells")
         .filter(col("centroid_id").isin(hot: _*))
         .withColumn("__raw",
           org.apache.spark.ml.functions.array_to_vector(
@@ -1243,7 +1244,7 @@ object IvfIndex extends IvfLayout {
       // any point is reconcilable by [[repairPendingCodes]]
       idPairs.toDF("old_id", "new_id").repartition(1)
         .write.mode("overwrite").parquet(splitPendingPath(indexPath))
-      spark.read.parquet(s"$indexPath/cell_codes")
+      Tables.read(spark, s"$indexPath/cell_codes")
         .filter(col("centroid_id").isin(splittable: _*))
         .withColumnRenamed("centroid_id", "__oldpart")
         .join(sides.select(col(idCol), col("__cid"), col("__oldcid")), idCol)
@@ -1337,7 +1338,7 @@ object IvfIndex extends IvfLayout {
       embCol: String): DataFrame =
     new org.apache.spark.ml.feature.Normalizer()
       .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(spark.read.parquet(s"$indexPath/cells")
+      .transform(Tables.read(spark, s"$indexPath/cells")
         .withColumn("__raw",
           org.apache.spark.ml.functions.array_to_vector(
             col(embCol).cast("array<double>"))))
@@ -1389,7 +1390,7 @@ object IvfIndex extends IvfLayout {
           normalizedAssigned(spark, indexPath, idCol, embCol),
           spark, indexPath, idCol)
         .join(labels.select(col(idCol), col(labelCol)), Seq(idCol)),
-      broadcast(spark.read.parquet(s"$indexPath/cells_meta")), labelCol)
+      broadcast(Tables.read(spark, s"$indexPath/cells_meta")), labelCol)
 
   private def labelMetaPath(indexPath: String, labelCol: String): String =
     s"$indexPath/label_meta_${labelCol.replaceAll("[^A-Za-z0-9_-]", "_")}"
@@ -1433,7 +1434,7 @@ object IvfIndex extends IvfLayout {
     import spark.implicits._
     val base = labelMetaPath(indexPath, labelCol)
     // snapshot FIRST (see the staleness note above)
-    val snap = (spark.read.parquet(s"$indexPath/cells").count(),
+    val snap = (Tables.read(spark, s"$indexPath/cells").count(),
       cellDirIds(spark, indexPath).sorted)
     // live rows only (see [[labelRadii]]); the freshness fingerprint
     // above still counts RAW rows, so a later compaction (which changes
@@ -1468,12 +1469,12 @@ object IvfIndex extends IvfLayout {
     // absent — the documented fail-safe. Answers then come from the
     // per-call derivation; only the cost reverts, never correctness.
     scala.util.Try {
-      val snap = spark.read.parquet(s"$base/snapshot").head
+      val snap = Tables.read(spark, s"$base/snapshot").head
       val fresh =
-        snap.getAs[Long]("rows") == spark.read.parquet(s"$indexPath/cells").count() &&
+        snap.getAs[Long]("rows") == Tables.read(spark, s"$indexPath/cells").count() &&
           snap.getSeq[Long](snap.fieldIndex("cells")).toSeq ==
             cellDirIds(spark, indexPath).sorted
-      if (fresh) Some(spark.read.parquet(s"$base/radii")) else None
+      if (fresh) Some(Tables.read(spark, s"$base/radii")) else None
     }.toOption.flatten
   }
 
@@ -1547,7 +1548,7 @@ object IvfIndex extends IvfLayout {
       body: (DataFrame, Int, Option[IvfLayout.LabelScope]) => IvfLayout.Retrieval): DataFrame = {
     // parquet-metadata-only row count: the overfetch ceiling
     val corpusN = math.min(
-      spark.read.parquet(s"$indexPath/cells").count(),
+      Tables.read(spark, s"$indexPath/cells").count(),
       Int.MaxValue.toLong)
     // per-query overfetch ceiling before escalating to the direct
     // equijoin — past this the top-k heaps and the hit frame grow
@@ -1639,7 +1640,7 @@ object IvfIndex extends IvfLayout {
         // Tombstones mask here too — the equijoin bypasses the
         // (already-masked) probe machinery entirely
         parts += Tombstones.liveOnly(
-            spark.read.parquet(s"$indexPath/cells"),
+            Tables.read(spark, s"$indexPath/cells"),
             spark, indexPath, idCol)
           .select(col(idCol), col(embCol))
           .join(mates, Seq(idCol))
@@ -1687,7 +1688,7 @@ object IvfIndex extends IvfLayout {
     ensureGeneration(spark, indexPath)
     // (centroid_id, center, radius) — only populated cells have a row,
     // and only populated cells can produce candidates
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
+    val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     val labelCols = scope.map(s => col(s.labelCol)).toSeq
 
     val qNorm = IvfLayout.withQueryLabel(AnnIndex.prepared(
@@ -1711,7 +1712,8 @@ object IvfIndex extends IvfLayout {
       .select((Seq(col(queryIdCol), col(queryVecCol)) ++ labelCols ++
         Seq(col("centroid_id"), col("ub_sim"), col("crank"))): _*)
 
-    val cells = spark.read.parquet(s"$indexPath/cells")
+    val cells = Tables.read(spark, s"$indexPath/cells")
+    val live = Tombstones.mask(Tombstones.df(spark, indexPath), idCol) _
     // probe: candidates of the selected (query, cell) rows, exact-ranked.
     // The selection is collected once into a driver-local relation
     // ([[localizedSelection]] — one job instead of the old checkpoint +
@@ -1727,9 +1729,7 @@ object IvfIndex extends IvfLayout {
       // a tombstoned candidate allowed into the k-th-best floor could
       // certify a cutoff above a live row's true rank (Tombstones doc)
       IvfLayout.rowsInScope(
-          Tombstones.liveOnly(
-            cells.filter(col("centroid_id").isin(probed: _*)),
-            spark, indexPath, idCol),
+          live(cells.filter(col("centroid_id").isin(probed: _*))),
           broadcast(selM), idCol, scope)
         .withColumn("sim", cosine_sim(col(embCol), col(queryVecCol)))
         .filter(col("sim") > threshold)
@@ -1858,7 +1858,7 @@ object IvfIndex extends IvfLayout {
       embCol: String,
       k: Int): DataFrame = {
     ensureGeneration(spark, indexPath)
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
+    val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     // deleted rows leave the graph as nodes AND as neighbors
     val assigned = Tombstones.liveOnly(
       normalizedAssigned(spark, indexPath, idCol, embCol),
@@ -1913,7 +1913,7 @@ object IvfIndex extends IvfLayout {
     val probedIds = probeSel.select("centroid_id").distinct()
       .collect().map(_.get(0)).toSeq
     val prunedCorpus = Tombstones.liveOnly(
-        spark.read.parquet(s"$indexPath/cells")
+        Tables.read(spark, s"$indexPath/cells")
           .filter(col("centroid_id").isin(probedIds: _*)),
         spark, indexPath, idCol)
       .select(col(idCol), col(embCol), col("centroid_id"))
@@ -1990,7 +1990,7 @@ object IvfIndex extends IvfLayout {
       labels: DataFrame,
       labelCol: String): (DataFrame, DataFrame, DataFrame) = {
     ensureGeneration(spark, indexPath)
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
+    val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     // deleted rows mine no pair and serve as no positive/negative
     val assigned = Tombstones.liveOnly(
         normalizedAssigned(spark, indexPath, idCol, embCol),
@@ -2082,7 +2082,7 @@ object IvfIndex extends IvfLayout {
     val probedIds = probeSel.select("centroid_id").distinct()
       .collect().map(_.get(0)).toSeq
     val prunedCorpus = Tombstones.liveOnly(
-        spark.read.parquet(s"$indexPath/cells")
+        Tables.read(spark, s"$indexPath/cells")
           .filter(col("centroid_id").isin(probedIds: _*)),
         spark, indexPath, idCol)
       .select(col(idCol), col(embCol), col("centroid_id"))

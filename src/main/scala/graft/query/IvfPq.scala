@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import graft.functions.cosine_sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -115,7 +116,7 @@ object IvfPq extends IvfLayout {
       // encode every vector and co-partition the codes WITH their cell:
       // the cell-level bound then prunes code directories before a
       // single code is read
-      val assignment = spark.read.parquet(s"$outPath/cells")
+      val assignment = Tables.read(spark, s"$outPath/cells")
         .select(col(idCol), col("centroid_id"))
       PqIndex.encode(df, idCol, embCol, PqIndex.codebooksDf(spark, outPath), params.pq)
         .join(assignment, idCol)
@@ -135,7 +136,7 @@ object IvfPq extends IvfLayout {
       // ([[PqIndex.BuildPartitions]] repartition + sort) makes the
       // codebooks bit-identical to the spill-fed fit it replaces.
       IvfIndex.build(df, idCol, embCol, outPath, params.ivf)
-      val meta = spark.read.parquet(s"$outPath/cells_meta")
+      val meta = Tables.read(spark, s"$outPath/cells_meta")
       def residualsOf(base: DataFrame): DataFrame = base
         .join(broadcast(meta.select(col("centroid_id"), col("center"))),
           "centroid_id")
@@ -163,7 +164,7 @@ object IvfPq extends IvfLayout {
               params.pq, Nil),
             idCol, params.pq),
           residualsOf(assigned).write.mode("overwrite").parquet(tmpResiduals))
-        val residuals = spark.read.parquet(tmpResiduals)
+        val residuals = Tables.read(spark, tmpResiduals)
         PqIndex.writeCodebooks(spark, codebooks, outPath)
         // enc tables FIRST (append-only; codes reference them) — the
         // residual-mode marker is the enc_centers table itself
@@ -209,7 +210,7 @@ object IvfPq extends IvfLayout {
       newRows: DataFrame,
       params: Params = Params()): Unit = {
     IvfIndex.upsertCells(spark, indexPath, idCol, embCol, newRows)
-    val cellMeta = spark.read.parquet(s"$indexPath/cells_meta")
+    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     val nCells = cellMeta.count().toInt.max(1)
     val assignment = IvfIndex.assignNew(cellMeta, nCells, idCol, embCol, newRows)
       .select(col(idCol), col("centroid_id"))
@@ -235,13 +236,13 @@ object IvfPq extends IvfLayout {
       // enc_id.
       val targets = assignment.select(col("centroid_id").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
-      val have = spark.read.parquet(s"$indexPath/enc_current")
+      val have = Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSet
       val missing = (targets -- have).toSeq.sorted
       if (missing.nonEmpty) {
         import spark.implicits._
-        val maxEnc = spark.read.parquet(s"$indexPath/enc_centers")
+        val maxEnc = Tables.read(spark, s"$indexPath/enc_centers")
           .agg(max(col("enc_id"))).head.getLong(0)
         val mintMap = missing.zipWithIndex
           .map { case (c, i) => (c, maxEnc + 1 + i) }
@@ -253,7 +254,7 @@ object IvfPq extends IvfLayout {
         minted.select(col("__enc").as("enc_id"), col("center"))
           .repartition(1).write.mode("append")
           .parquet(s"$indexPath/enc_centers")
-        val updatedCur = spark.read.parquet(s"$indexPath/enc_current")
+        val updatedCur = Tables.read(spark, s"$indexPath/enc_current")
           .unionByName(minted.select(
             col("centroid_id").cast("long").as("centroid_id"),
             col("__enc").as("enc_id")))
@@ -262,10 +263,10 @@ object IvfPq extends IvfLayout {
         updatedCur.repartition(1).write.mode("overwrite")
           .parquet(s"$indexPath/enc_current")
       }
-      val encCur = broadcast(spark.read.parquet(s"$indexPath/enc_current")
+      val encCur = broadcast(Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long").as("__ecell"), col("enc_id")))
       val encCenters = broadcast(
-        spark.read.parquet(s"$indexPath/enc_centers"))
+        Tables.read(spark, s"$indexPath/enc_centers"))
       val prep = AnnIndex.prepared(
           newRows.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
         .select(col(idCol),
@@ -360,7 +361,7 @@ object IvfPq extends IvfLayout {
     // it doubles as the complete physical compaction of pending
     // deletes (the IvfIndex.recluster discipline)
     build(Tombstones.liveOnly(
-        spark.read.parquet(s"$indexPath/cells"), spark, indexPath, idCol)
+        Tables.read(spark, s"$indexPath/cells"), spark, indexPath, idCol)
         .select(col(idCol), col(embCol)),
       idCol, embCol, regen, params)
     val artifacts = Seq("cells", "cells_meta", "cell_codes", "codebooks",
@@ -415,7 +416,7 @@ object IvfPq extends IvfLayout {
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
     IvfIndex.ensureGeneration(spark, indexPath)
     import spark.implicits._
-    val codeOcc = spark.read.parquet(s"$indexPath/cell_codes")
+    val codeOcc = Tables.read(spark, s"$indexPath/cell_codes")
       .groupBy(col("centroid_id").cast("long").as("centroid_id"))
       .agg(count(lit(1)).as("codes"))
     val codeFiles = graft.util.PartitionFiles
@@ -445,13 +446,13 @@ object IvfPq extends IvfLayout {
       // never wrong answers); [[reencodeCells]] when it grows. The
       // per-(cell, generation) aggregation is distinct-pair-sized —
       // ≤ nCells × nGenerations rows, no payload bytes.
-      val meta = spark.read.parquet(s"$indexPath/cells_meta")
+      val meta = Tables.read(spark, s"$indexPath/cells_meta")
         .select(col("centroid_id").cast("long").as("centroid_id"),
           col("center").as("__cur"))
-      val drift = spark.read.parquet(s"$indexPath/cell_codes")
+      val drift = Tables.read(spark, s"$indexPath/cell_codes")
         .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
         .distinct()
-        .join(broadcast(spark.read.parquet(s"$indexPath/enc_centers")), "enc_id")
+        .join(broadcast(Tables.read(spark, s"$indexPath/enc_centers")), "enc_id")
         .join(broadcast(meta), "centroid_id")
         .withColumn("__d",
           sqrt(graft.functions.l2_dist_sq(col("center"), col("__cur"))))
@@ -491,14 +492,14 @@ object IvfPq extends IvfLayout {
     require(isResidual(spark, indexPath),
       "IvfPq.reencodeCells: a global-codebook index has no generations to " +
         "re-encode — rebuild to refit its codebooks")
-    val meta = spark.read.parquet(s"$indexPath/cells_meta")
+    val meta = Tables.read(spark, s"$indexPath/cells_meta")
     val targets = cells.getOrElse(
       meta.select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSeq).sorted
     if (targets.isEmpty) return
     // one fresh generation per target cell, minted from the current
     // centroid; enc tables first (append-only, codes reference them)
-    val maxEnc = spark.read.parquet(s"$indexPath/enc_centers")
+    val maxEnc = Tables.read(spark, s"$indexPath/enc_centers")
       .agg(max(col("enc_id"))).head.getLong(0)
     val mintMap = targets.zipWithIndex
       .map { case (c, i) => (c, maxEnc + 1 + i) }
@@ -508,7 +509,7 @@ object IvfPq extends IvfLayout {
       .localCheckpoint()
     minted.select(col("__enc").as("enc_id"), col("center"))
       .repartition(1).write.mode("append").parquet(s"$indexPath/enc_centers")
-    val updatedCur = spark.read.parquet(s"$indexPath/enc_current")
+    val updatedCur = Tables.read(spark, s"$indexPath/enc_current")
       .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
       .filter(!col("centroid_id").isin(targets: _*))
       .unionByName(minted.select(
@@ -545,12 +546,12 @@ object IvfPq extends IvfLayout {
     // (tomorrow's upsert targets); the rewrite runs AFTER the code
     // overwrite commits, so a crash in between strands extra
     // generations (harmless), never a dangling reference.
-    val referenced = spark.read.parquet(s"$indexPath/cell_codes")
+    val referenced = Tables.read(spark, s"$indexPath/cell_codes")
       .select(col("enc_id")).distinct()
       .unionByName(
-        spark.read.parquet(s"$indexPath/enc_current").select(col("enc_id")))
+        Tables.read(spark, s"$indexPath/enc_current").select(col("enc_id")))
       .distinct()
-    val prunedEnc = spark.read.parquet(s"$indexPath/enc_centers")
+    val prunedEnc = Tables.read(spark, s"$indexPath/enc_centers")
       .join(referenced, "enc_id").localCheckpoint()
     prunedEnc.repartition(1).write.mode("overwrite")
       .parquet(s"$indexPath/enc_centers")
@@ -579,14 +580,14 @@ object IvfPq extends IvfLayout {
       cap: Double = 0.0): Seq[Long] = {
     IvfIndex.ensureGeneration(spark, indexPath)
     if (!isResidual(spark, indexPath)) return Nil
-    val meta = spark.read.parquet(s"$indexPath/cells_meta")
+    val meta = Tables.read(spark, s"$indexPath/cells_meta")
       .select(col("centroid_id").cast("long").as("centroid_id"),
         col("center").as("__cur"))
     // ≤ nCells ids reach the driver (the probe-pruning collect bound)
-    val drifted = spark.read.parquet(s"$indexPath/cell_codes")
+    val drifted = Tables.read(spark, s"$indexPath/cell_codes")
       .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
       .distinct()
-      .join(broadcast(spark.read.parquet(s"$indexPath/enc_centers")), "enc_id")
+      .join(broadcast(Tables.read(spark, s"$indexPath/enc_centers")), "enc_id")
       .join(broadcast(meta), "centroid_id")
       .withColumn("__d",
         sqrt(graft.functions.l2_dist_sq(col("center"), col("__cur"))))
@@ -624,7 +625,7 @@ object IvfPq extends IvfLayout {
     // one fs.exists when healthy: completes a crashed recluster swap
     IvfIndex.ensureGeneration(spark, indexPath)
     val pad = lit(IvfIndex.RadiusPad)
-    val cellMeta = broadcast(spark.read.parquet(s"$indexPath/cells_meta"))
+    val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     val residualMode = isResidual(spark, indexPath)
     val labelCols = scope.map(s => col(s.labelCol)).toSeq
     val qNorm = IvfLayout.withQueryLabel(AnnIndex.prepared(
@@ -644,7 +645,7 @@ object IvfPq extends IvfLayout {
         PqIndex.queryLut(spark, indexPath, queries, queryIdCol, queryVecCol)
       else
         PqIndex.lutOf(
-          qNorm.crossJoin(broadcast(spark.read.parquet(s"$indexPath/enc_centers")))
+          qNorm.crossJoin(broadcast(Tables.read(spark, s"$indexPath/enc_centers")))
             .withColumn("__qdiff",
               zip_with(col("__qnorm"), col("center"),
                 (a, b) => (a - b).cast("float"))),
@@ -666,7 +667,8 @@ object IvfPq extends IvfLayout {
       .select((col(queryIdCol) +: labelCols) ++
         Seq(col("centroid_id"), col("cell_ub"), col("crank")): _*)
 
-    val codes = spark.read.parquet(s"$indexPath/cell_codes")
+    val codes = Tables.read(spark, s"$indexPath/cell_codes")
+    val live = Tombstones.mask(Tombstones.df(spark, indexPath), idCol) _
     // ADC-scan the codes of the selected (query, cell) pairs — the
     // IvfIndex static-pruning discipline: probed cell ids (≤ nCells,
     // driver-bounded) become a planning-time partition filter; the
@@ -680,9 +682,7 @@ object IvfPq extends IvfLayout {
       // live row's true rank; see [[Tombstones]]), and before any LUT
       // work is spent on a row that cannot be served
       IvfLayout.rowsInScope(
-          Tombstones.liveOnly(
-            codes.filter(col("centroid_id").isin(probed: _*)),
-            spark, indexPath, idCol),
+          live(codes.filter(col("centroid_id").isin(probed: _*))),
           broadcast(selM), idCol, scope)
         .join(broadcast(lutq), lutKeys)
         .withColumn("__adc", sqrt(graft.functions.pq_adc(col("codes"), col("__lut"))))
@@ -738,7 +738,7 @@ object IvfPq extends IvfLayout {
     val fetchCells = candM.select("centroid_id").distinct()
       .collect().map(_.get(0)).toSeq
     val candPairs = candM.select(col(queryIdCol), col(idCol))
-    val result = spark.read.parquet(s"$indexPath/cells")
+    val result = Tables.read(spark, s"$indexPath/cells")
       .filter(col("centroid_id").isin(fetchCells: _*))
       .select(col(idCol), col(embCol))
       .join(if (inSplitWindow) candPairs.distinct() else candPairs, idCol)

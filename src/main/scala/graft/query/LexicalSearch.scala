@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -235,7 +236,7 @@ object LexicalSearch {
           .as("__total_len"))
     // two one-row frames; localCheckpoint materializes the merge
     // before the overwrite of the path it was read from
-    val merged = spark.read.parquet(s"$workDir/stats")
+    val merged = Tables.read(spark, s"$workDir/stats")
       .unionByName(add)
       .agg(
         sum(col("__n_docs")).as("__n_docs"),
@@ -288,7 +289,7 @@ object LexicalSearch {
       idCol: String,
       ids: DataFrame): Unit = {
     IvfIndex.ensureGeneration(spark, workDir)
-    spark.read.parquet(s"$workDir/postings")
+    Tables.read(spark, s"$workDir/postings")
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
       // __len is constant within a doc; min() is its order-independent
       // witness (first() would be partition-order-dependent)
@@ -307,10 +308,10 @@ object LexicalSearch {
   private def liveStats(
       spark: org.apache.spark.sql.SparkSession,
       workDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$workDir/stats")
+    val raw = Tables.read(spark, s"$workDir/stats")
     if (!Tombstones.exists(spark, workDir)) raw
     else {
-      val corr = spark.read.parquet(Tombstones.path(workDir))
+      val corr = Tables.read(spark, Tombstones.path(workDir))
         .groupBy(col(Tombstones.IdColumn))
         .agg(min(col("__del_len")).as("__l"))
         .agg(count(lit(1)).as("__dn"),
@@ -347,7 +348,7 @@ object LexicalSearch {
     val regen = s"$workDir/_regen"
     fs.delete(new org.apache.hadoop.fs.Path(regen), true)
     val survivors = Tombstones.liveOnly(
-        spark.read.parquet(s"$workDir/postings"), spark, workDir, idCol)
+        Tables.read(spark, s"$workDir/postings"), spark, workDir, idCol)
       .localCheckpoint()
     survivors
       .transform(graft.util.PartitionedWrite.spread(
@@ -377,7 +378,7 @@ object LexicalSearch {
       spark: org.apache.spark.sql.SparkSession,
       workDir: String): DataFrame = {
     import spark.implicits._
-    val occ = spark.read.parquet(s"$workDir/postings")
+    val occ = Tables.read(spark, s"$workDir/postings")
       .groupBy(col("__bucket").cast("long").as("bucket"))
       .agg(
         count(lit(1)).as("postings"),
@@ -420,7 +421,7 @@ object LexicalSearch {
       .select(pmod(hash(col(termCol)), lit(IndexBuckets)).as("__bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val cand = Tombstones.liveOnly(
-        spark.read.parquet(s"$workDir/postings")
+        Tables.read(spark, s"$workDir/postings")
           .filter(col("__bucket").isin(buckets: _*)),
         spark, workDir, idCol)
       .withColumnRenamed("__term", termCol)

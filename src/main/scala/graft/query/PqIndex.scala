@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import graft.functions.{cosine_sim, l2_dist_sq}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
@@ -100,7 +101,7 @@ object PqIndex {
     * subspace.
     */
   private[query] def codebooksDf(spark: SparkSession, indexPath: String): DataFrame =
-    broadcast(spark.read.parquet(s"$indexPath/codebooks"))
+    broadcast(Tables.read(spark, s"$indexPath/codebooks"))
 
   /** Normalize + slice into per-subspace rows: (idCol, passthrough...,
     * sub, __subvec). Subspaces partition the dimensions, so
@@ -399,7 +400,7 @@ object PqIndex {
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
     def side(table: String, bucketCol: String): DataFrame = {
-      val occ = spark.read.parquet(s"$indexPath/$table")
+      val occ = Tables.read(spark, s"$indexPath/$table")
         .groupBy(col(bucketCol).cast("long").as("bucket"))
         .agg(count(lit(1)).as("rows"))
       val files = graft.util.PartitionFiles
@@ -517,7 +518,7 @@ object PqIndex {
     // (see [[Tombstones]]; for this flat layout, physical removal is a
     // rebuild — tombstone-serve until then)
     val scored = Tombstones.liveOnly(
-        spark.read.parquet(s"$indexPath/codes"),
+        Tables.read(spark, s"$indexPath/codes"),
         spark, indexPath, idCol)
       .crossJoin(broadcast(lutq))
       .withColumn("__adc",
@@ -543,7 +544,7 @@ object PqIndex {
 
     // exact-verify fetch: equi-join on the id-hash-partitioned payload
     // table, candidates only
-    val result = spark.read.parquet(s"$indexPath/vectors")
+    val result = Tables.read(spark, s"$indexPath/vectors")
       .select(col(idCol), col(embCol))
       .join(cand, idCol)
       .withColumn("sim", cosine_sim(col("__qv"), col(embCol)))

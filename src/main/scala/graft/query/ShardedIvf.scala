@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ object ShardedIvf {
   def shardPath(root: String, i: Int): String = s"$root/shard=$i"
 
   def nShards(spark: SparkSession, root: String): Int =
-    spark.read.parquet(manifestPath(root)).head.getInt(0)
+    Tables.read(spark, manifestPath(root)).head.getInt(0)
 
   /** The routing expression — pmod of the id hash, the same function
     * for build, upsert and delete so a row's home shard never moves.

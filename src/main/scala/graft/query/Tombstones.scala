@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,7 +74,7 @@ object Tombstones {
     */
   def df(spark: SparkSession, indexPath: String): Option[DataFrame] =
     if (!exists(spark, indexPath)) None
-    else Some(spark.read.parquet(path(indexPath)).select(col(IdColumn)))
+    else Some(Tables.read(spark, path(indexPath)).select(col(IdColumn)))
 
   /** Rows per appended tombstone file: one narrow long/string column,
     * so ~4M rows ≈ a few tens of MB — comfortably one task's work. The
@@ -119,7 +120,13 @@ object Tombstones {
       spark: SparkSession,
       indexPath: String,
       idCol: String): DataFrame =
-    df(spark, indexPath) match {
+    mask(df(spark, indexPath), idCol)(rows)
+
+  /** [[liveOnly]] against a table already resolved by [[df]]: a body
+    * that masks several scans resolves it once and applies it to each.
+    */
+  def mask(tombstones: Option[DataFrame], idCol: String)(rows: DataFrame): DataFrame =
+    tombstones match {
       case None => rows
       case Some(t) =>
         // compaction-bounded build side: let the planner broadcast it

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.pipeline.Events
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,7 +28,7 @@ object EventStream {
     * normalization in [[readEvents]] covers all three shapes.
     */
   def eventsSchema(spark: SparkSession, dir: String): StructType =
-    spark.read.parquet(s"$dir/events.parquet").schema
+    Tables.read(spark, s"$dir/events.parquet").schema
 
   /** File-source stream of the events fixture with the same ns→µs
     * timestamp normalization the batch loader applies. A production

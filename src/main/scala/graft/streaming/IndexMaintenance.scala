@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.query.IvfIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -50,7 +51,7 @@ object IndexMaintenance {
     // fence on every distributed filesystem.
     val p = new org.apache.hadoop.fs.Path(fencePath(indexPath))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(p.toString).head.getLong(0)
+    if (fs.exists(p)) Tables.read(spark, p.toString).head.getLong(0)
     else -1L
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.embed.Embedder
 import graft.ingest.{IngestJob, MdxSplitter}
 import org.apache.spark.sql.SparkSession
@@ -68,5 +69,5 @@ object IngestStream {
     * projected away — same schema as a batch-built index.
     */
   def readIndex(spark: SparkSession, indexPath: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(indexPath).drop("batch")
+    Tables.read(spark, indexPath).drop("batch")
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.pipeline.DriftMonitor
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +36,7 @@ object StreamingDrift {
     * reference. Empty-schema-safe only after the first applied batch.
     */
   def report(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(reportPath(statePath))
+    Tables.read(spark, reportPath(statePath))
 
   /** Fold one micro-batch into the cumulative counts and refresh the
     * report; fenced on batchId. @return true iff applied.
@@ -52,7 +53,7 @@ object StreamingDrift {
     val existing = {
       val p = new org.apache.hadoop.fs.Path(countsPath(statePath))
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+      if (fs.exists(p)) Some(Tables.read(spark, p.toString)) else None
     }
     // #buckets rows: localCheckpoint materializes the merge before the
     // overwrite of the path it was read from (the stats-merge shape of
@@ -63,7 +64,7 @@ object StreamingDrift {
       .localCheckpoint()
     merged.write.mode("overwrite").parquet(countsPath(statePath))
     DriftMonitor.chiSquareDriftFromCounts(
-        spark.read.parquet(refPath(statePath)), merged, bucketCols)
+        Tables.read(spark, refPath(statePath)), merged, bucketCols)
       .write.mode("overwrite").parquet(reportPath(statePath))
     IndexMaintenance.writeFence(spark, statePath, batchId)
     true

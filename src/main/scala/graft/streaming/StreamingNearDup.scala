@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.pipeline.Dedup
 import graft.util.PartitionedWrite
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -101,7 +102,7 @@ object StreamingNearDup {
         val cappedBands = graft.util.BucketGuard.capOccupancy(
           bands, Seq("band", "bucket"),
           Dedup.MaxBucketOccupancy, "streaming near-dup corpus probe")
-        val cand = spark.read.parquet(bandsPath)
+        val cand = Tables.read(spark, bandsPath)
           .filter(col("__bucket").isin(probeBuckets: _*))
           .select(col("doc_id").as("d1"), col("band"), col("bucket"))
           .join(cappedBands.select(col("doc_id").as("d2"), col("band"), col("bucket")),
@@ -122,7 +123,7 @@ object StreamingNearDup {
           val sigBuckets = cand
             .select(pmod(hash(col("d1")), lit(IndexBuckets)).as("__sb"))
             .distinct().collect().map(_.getInt(0)).toSeq // bounded
-          val oldSigDocs = spark.read.parquet(sigPath)
+          val oldSigDocs = Tables.read(spark, sigPath)
             .filter(col("__sbucket").isin(sigBuckets: _*))
           val estFloor = Dedup.estimatorFloor(threshold)
           val plausible = cand

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.query.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -116,7 +117,7 @@ object StreamingSemanticDedup {
             max(struct(col("sim"), -col("vec_id"))).getField("sim").as("cm_score"))
       else if (exists(spark, seedPath))
         vecs.select(col("vec_id").as("doc_id"), col("embedding").as("__qe"))
-          .crossJoin(broadcast(spark.read.parquet(seedPath)
+          .crossJoin(broadcast(Tables.read(spark, seedPath)
             .select(col("vec_id").as("__sid"), col("embedding").as("__se"))))
           .filter(col("__sid") < col("doc_id"))
           .withColumn("__s", graft.functions.cosine_sim(col("__qe"), col("__se")))
@@ -167,7 +168,7 @@ object StreamingSemanticDedup {
           IvfIndex.splitToConvergence(spark, idx, "vec_id", "embedding", cap))
       } else {
         val total = (if (exists(spark, seedPath))
-          spark.read.parquet(seedPath).unionByName(admitted)
+          Tables.read(spark, seedPath).unionByName(admitted)
         else admitted).localCheckpoint()
         val n = total.count()
         if (n >= 2) {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.query.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -157,7 +158,7 @@ object TrainingFeed {
     val shasPath = s"$workDir/shas"
     val fresh =
       (if (exists(spark, shasPath))
-         firstPerSha.join(spark.read.parquet(shasPath), Seq("content_sha"), "left_anti")
+         firstPerSha.join(Tables.read(spark, shasPath), Seq("content_sha"), "left_anti")
        else firstPerSha).localCheckpoint()
 
     val gatedDir = s"$workDir/gated/batch=$batchId"
@@ -169,7 +170,7 @@ object TrainingFeed {
       // below is mode(overwrite), so re-running it over a torn
       // partition is idempotent (budgets still counted once: the prior
       // consumption scan reads only committed rows).
-      if (exists(spark, s"$gatedDir/_SUCCESS")) spark.read.parquet(gatedDir)
+      if (exists(spark, s"$gatedDir/_SUCCESS")) Tables.read(spark, gatedDir)
       else {
         // ---- stage 2: near-dup admission (persisted probe index) ----
         val verdicts = StreamingNearDup.admissionStep(
@@ -181,7 +182,7 @@ object TrainingFeed {
         val gatedPath = s"$workDir/gated"
         val prior =
           if (exists(spark, gatedPath))
-            spark.read.parquet(gatedPath)
+            Tables.read(spark, gatedPath)
               .groupBy("source").agg(sum("n_tokens").as("__consumed"))
           else spark.emptyDataset[(String, Long)].toDF("source", "__consumed")
         val quotasDf = cfg.quotas.toSeq.toDF("source", "__quota")
@@ -295,9 +296,9 @@ object TrainingFeed {
       // The overwrite below makes the retried write idempotent.
       if (!exists(spark, s"$mDir/_SUCCESS"))
         try {
-          val hq = spark.read.parquet(s"$workDir/health/queries")
-          val rels = spark.read.parquet(s"$workDir/health/rels")
-          val kH = spark.read.parquet(s"$workDir/health/k").head.getInt(0)
+          val hq = Tables.read(spark, s"$workDir/health/queries")
+          val rels = Tables.read(spark, s"$workDir/health/rels")
+          val kH = Tables.read(spark, s"$workDir/health/k").head.getInt(0)
           // threshold -2 < any cosine: health wants the full ranked
           // list, the relevance join does the grading
           val hits = IvfIndex.queryTopK(spark, indexPath, "doc_id", "embedding",
@@ -320,10 +321,10 @@ object TrainingFeed {
         val fDir = s"$workDir/health/metrics_filtered/batch=$batchId"
         if (!exists(spark, s"$fDir/_SUCCESS"))
           try {
-            val hq = spark.read.parquet(s"$workDir/health/queries")
-            val rels = spark.read.parquet(s"$workDir/health/rels")
-            val kH = spark.read.parquet(s"$workDir/health/k").head.getInt(0)
-            val labs = spark.read.parquet(s"$workDir/health/labels")
+            val hq = Tables.read(spark, s"$workDir/health/queries")
+            val rels = Tables.read(spark, s"$workDir/health/rels")
+            val kH = Tables.read(spark, s"$workDir/health/k").head.getInt(0)
+            val labs = Tables.read(spark, s"$workDir/health/labels")
             val hits = IvfIndex.queryTopKFiltered(spark, indexPath,
               "doc_id", "embedding", hq, "query_id", "qvec",
               labs, "label", kH, threshold = -2.0)
@@ -359,7 +360,7 @@ object TrainingFeed {
 
   /** The admitted feed so far: the quota ledger's admitted rows. */
   def admittedFeed(spark: SparkSession, workDir: String): DataFrame =
-    spark.read.parquet(s"$workDir/gated")
+    Tables.read(spark, s"$workDir/gated")
       .filter(col("admitted"))
       .select("doc_id", "source", "n_tokens", "cum_tokens")
 
@@ -439,11 +440,11 @@ object TrainingFeed {
     * the index state just after that batch's fold.
     */
   def healthReport(spark: SparkSession, workDir: String): DataFrame =
-    spark.read.parquet(s"$workDir/health/metrics")
+    Tables.read(spark, s"$workDir/health/metrics")
 
   /** [[healthReport]] for the LABELED (filtered-retrieval) probe face —
     * present iff [[enableHealthProbe]] was given a labels frame.
     */
   def filteredHealthReport(spark: SparkSession, workDir: String): DataFrame =
-    spark.read.parquet(s"$workDir/health/metrics_filtered")
+    Tables.read(spark, s"$workDir/health/metrics_filtered")
 }

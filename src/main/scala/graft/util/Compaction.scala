@@ -1,5 +1,6 @@
 package graft.util
 
+import graft.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -64,7 +65,7 @@ object Compaction {
     require(fs.exists(p), s"compaction target does not exist: $path")
 
     val before = parquetFiles(fs, p)
-    val src = spark.read.parquet(path)
+    val src = Tables.read(spark, path)
     val srcRows = src.count()
 
     val tmp = new Path(path + ".__compact_next")
@@ -85,7 +86,7 @@ object Compaction {
       else writer0
     writer.parquet(tmp.toString)
 
-    val gotRows = spark.read.parquet(tmp.toString).count()
+    val gotRows = Tables.read(spark, tmp.toString).count()
     require(gotRows == srcRows,
       s"compaction row-count mismatch: src=$srcRows rewritten=$gotRows — " +
         s"generation left at $tmp, source untouched")

@@ -1,6 +1,5 @@
 package graft.util
 
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -27,18 +26,9 @@ object ParquetFooter {
       spark: SparkSession,
       path: String,
       column: String): (String, Option[LogicalTypeAnnotation]) = {
-    // resolved through the Hadoop FileSystem API, not java.io.File, so
-    // the check works wherever the fixture lives (HDFS/S3/local) —
-    // the IndexMaintenance.lastApplied discipline
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p).isFile) p
-      else fs.listStatus(p).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
-        .getOrElse(sys.error(s"no parquet part files under $path"))
-    val in = HadoopInputFile.fromPath(file, conf)
+    val file = graft.Tables.firstDataFile(spark, path)
+      .getOrElse(sys.error(s"no parquet part files under $path"))
+    val in = HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration)
     val reader = ParquetFileReader.open(in)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema

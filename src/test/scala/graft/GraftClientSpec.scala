@@ -92,6 +92,14 @@ class GraftClientSpec extends AnyFunSuite with SharedSpark {
           math.rint(r.getDouble(2) * 1e9), (i + 1).toLong) }
     }.toSet
     assert(batch == looped, "batch serving diverged from the per-vector loop")
+    // a warm request opens every table on the driver: no leaf-file
+    // listing job and no Parquet schema job
+    val opened = TablesReadSpec.fileOpeningJobs(spark) {
+      client.queryIndexedBatch(s"$dir/ann", queries, "query_id", "qvec",
+        threshold = 0.0, count = 3).collect()
+      ()
+    }
+    assert(opened.isEmpty, opened.mkString("jobs that only open files:\n", "\n", ""))
   }
 
   test("composed-index serving equals the plain-IVF path, routed by layout") {
@@ -312,6 +320,13 @@ class GraftClientSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
     assert(vecMasked == vecOracle, "masked vector serve diverged from the live-corpus ranking")
+    // every table kind the client wrote opens through Tables.read with
+    // spark.read.parquet's schema and rows
+    for (t <- Seq("ivf/cells", "ivf/cells_meta", "ivf/cell_codes", "ivf/codebooks",
+        "ivf/tombstones", "lex/postings", "lex/stats", "tombstones", "payload"))
+      TablesReadSpec.assertSameRead(spark, s"$dir/ann/$t")
+    assert(Tables.read(spark, s"$dir/ann/payload").schema("metadata").dataType
+      .isInstanceOf[org.apache.spark.sql.types.StructType])
     val qTerms = queries.select(col("query_id"),
       explode(graft.query.LexicalSearch.tokens(col("qtext"))).as("__term"))
     val lexOracle = graft.query.LexicalSearch.bm25TopK(
