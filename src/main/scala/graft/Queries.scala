@@ -286,7 +286,7 @@ object Queries {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
         "vec_id", "embedding", work, params)
       IvfPq.upsert(spark, work, "vec_id", "embedding",
-        e.filter(pmod(col("vec_id"), lit(10)) === 0), params)
+        e.filter(pmod(col("vec_id"), lit(10)) === 0))
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
         queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
@@ -372,11 +372,11 @@ object Queries {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) >= 2),
         "vec_id", "embedding", work, params)
       IvfPq.upsert(spark, work, "vec_id", "embedding",
-        e.filter(pmod(col("vec_id"), lit(10)) === 0), params)
+        e.filter(pmod(col("vec_id"), lit(10)) === 0))
       IvfPq.splitToConvergence(spark, work, "vec_id", "embedding",
         occupancyCap = e.count() / 6)
       IvfPq.upsert(spark, work, "vec_id", "embedding",
-        e.filter(pmod(col("vec_id"), lit(10)) === 1), params)
+        e.filter(pmod(col("vec_id"), lit(10)) === 1))
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
         queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
@@ -672,7 +672,7 @@ object Queries {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
         "vec_id", "embedding", work, poor)
       IvfPq.upsert(spark, work, "vec_id", "embedding",
-        e.filter(pmod(col("vec_id"), lit(10)) === 0), poor)
+        e.filter(pmod(col("vec_id"), lit(10)) === 0))
       IvfPq.recluster(spark, work, "vec_id", "embedding", fresh)
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",

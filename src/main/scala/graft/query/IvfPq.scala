@@ -118,7 +118,7 @@ object IvfPq extends IvfLayout {
       // single code is read
       val assignment = Tables.read(spark, s"$outPath/cells")
         .select(col(idCol), col("centroid_id"))
-      PqIndex.encode(df, idCol, embCol, PqIndex.codebooksDf(spark, outPath), params.pq)
+      PqIndex.encode(df, idCol, embCol, PqIndex.codebooksDf(spark, outPath))
         .join(assignment, idCol)
         .transform(graft.util.PartitionedWrite.spread(
           _, params.ivf.nCentroids, col("centroid_id"), col(idCol)))
@@ -145,10 +145,7 @@ object IvfPq extends IvfLayout {
             (a, b) => (a - b).cast("float")))
         .select(col(idCol), col("centroid_id"), col("__res"))
       val assigned = IvfIndex.normalizedAssigned(spark, outPath, idCol, embCol)
-      val fitBase = if (params.pq.fitSampleMod > 1)
-        assigned.filter(
-          pmod(hash(col(idCol)), lit(params.pq.fitSampleMod)) === 0)
-      else assigned
+      val fitBase = PqIndex.fitSample(assigned, idCol, params.pq)
       // the residual frame is CORPUS-sized and feeds the encode: spill
       // it to a parquet temp table under the index path instead of
       // localCheckpoint — checkpoint blocks are executor-resident and
@@ -160,8 +157,7 @@ object IvfPq extends IvfLayout {
       try {
         val (codebooks, _) = graft.util.Par.both(spark, "IvfPq.build.residual")(
           PqIndex.fitCodebooks(
-            PqIndex.subspaceRowsOf(residualsOf(fitBase), idCol, "__res",
-              params.pq, Nil),
+            PqIndex.subspaceRowsOf(residualsOf(fitBase), idCol, "__res", params.pq),
             idCol, params.pq),
           residualsOf(assigned).write.mode("overwrite").parquet(tmpResiduals))
         val residuals = Tables.read(spark, tmpResiduals)
@@ -176,7 +172,7 @@ object IvfPq extends IvfLayout {
           .repartition(1)
           .write.mode("overwrite").parquet(s"$outPath/enc_current")
         PqIndex.encodePrepared(residuals, idCol, "__res",
-            PqIndex.codebooksDf(spark, outPath), params.pq)
+            PqIndex.codebooksDf(spark, outPath))
           .join(residuals.select(col(idCol), col("centroid_id")), idCol)
           .withColumn("enc_id", col("centroid_id").cast("long"))
           .transform(graft.util.PartitionedWrite.spread(
@@ -207,20 +203,16 @@ object IvfPq extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String,
-      newRows: DataFrame,
-      params: Params = Params()): Unit = {
+      newRows: DataFrame): Unit = {
     IvfIndex.upsertCells(spark, indexPath, idCol, embCol, newRows)
     val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     val nCells = cellMeta.count().toInt.max(1)
     val assignment = IvfIndex.assignNew(cellMeta, nCells, idCol, embCol, newRows)
       .select(col(idCol), col("centroid_id"))
+    val codebooks = PqIndex.codebooksDf(spark, indexPath)
     if (!isResidual(spark, indexPath)) {
-      PqIndex.encode(newRows, idCol, embCol,
-          PqIndex.codebooksDf(spark, indexPath), params.pq)
+      PqIndex.encode(newRows, idCol, embCol, codebooks)
         .join(assignment, idCol)
-        // spread by the LIVE cell count (read above), not the params'
-        // nominal nCentroids — the caller's params need not match the
-        // build and the count is already on hand
         .transform(graft.util.PartitionedWrite.spread(
           _, nCells, col("centroid_id"), col(idCol)))
         .write.mode("append").partitionBy("centroid_id")
@@ -230,39 +222,14 @@ object IvfPq extends IvfLayout {
       // generation; cells without one (minted by a split since the
       // last generation was recorded) get a fresh generation from
       // their current centroid. All driver collects are ≤ nCells
-      // (the probe-pruning bound); the enc tables are written BEFORE
-      // any code references them, so a crash between the writes
-      // leaves at worst unreferenced generations, never a dangling
-      // enc_id.
+      // (the probe-pruning bound).
       val targets = assignment.select(col("centroid_id").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
       val have = Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSet
       val missing = (targets -- have).toSeq.sorted
-      if (missing.nonEmpty) {
-        import spark.implicits._
-        val maxEnc = Tables.read(spark, s"$indexPath/enc_centers")
-          .agg(max(col("enc_id"))).head.getLong(0)
-        val mintMap = missing.zipWithIndex
-          .map { case (c, i) => (c, maxEnc + 1 + i) }
-          .toDF("__cid", "__enc")
-        val minted = cellMeta
-          .join(broadcast(mintMap),
-            col("centroid_id").cast("long") === col("__cid"))
-          .localCheckpoint()
-        minted.select(col("__enc").as("enc_id"), col("center"))
-          .repartition(1).write.mode("append")
-          .parquet(s"$indexPath/enc_centers")
-        val updatedCur = Tables.read(spark, s"$indexPath/enc_current")
-          .unionByName(minted.select(
-            col("centroid_id").cast("long").as("centroid_id"),
-            col("__enc").as("enc_id")))
-          .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
-          .localCheckpoint()
-        updatedCur.repartition(1).write.mode("overwrite")
-          .parquet(s"$indexPath/enc_current")
-      }
+      if (missing.nonEmpty) mintGenerations(spark, indexPath, cellMeta, missing)
       val encCur = broadcast(Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long").as("__ecell"), col("enc_id")))
       val encCenters = broadcast(
@@ -281,8 +248,7 @@ object IvfPq extends IvfLayout {
             (a, b) => (a - b).cast("float")))
         .select(col(idCol), col("centroid_id"), col("enc_id"), col("__res"))
         .localCheckpoint()
-      PqIndex.encodePrepared(residuals, idCol, "__res",
-          PqIndex.codebooksDf(spark, indexPath), params.pq)
+      PqIndex.encodePrepared(residuals, idCol, "__res", codebooks)
         .join(residuals.select(col(idCol), col("centroid_id"), col("enc_id")),
           idCol)
         .transform(graft.util.PartitionedWrite.spread(
@@ -290,6 +256,44 @@ object IvfPq extends IvfLayout {
         .write.mode("append").partitionBy("centroid_id")
         .parquet(s"$indexPath/cell_codes")
     }
+  }
+
+  /** Mint one fresh encoding generation per cell of `cells` from the
+    * cell's current centroid in `meta` (cells_meta): enc_ids continue
+    * past the largest in `enc_centers`, in ascending cell order; the
+    * generations append to `enc_centers` and replace those cells'
+    * entries in `enc_current`. Both enc tables are written before this
+    * returns, so before any code row can reference a minted id — a
+    * crash between these writes and the codes leaves at worst
+    * unreferenced generations, never a dangling enc_id.
+    * @return the minted (centroid_id, center, __enc) rows, materialized
+    */
+  private def mintGenerations(
+      spark: SparkSession,
+      indexPath: String,
+      meta: DataFrame,
+      cells: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    val maxEnc = Tables.read(spark, s"$indexPath/enc_centers")
+      .agg(max(col("enc_id"))).head.getLong(0)
+    val mintMap = cells.zipWithIndex
+      .map { case (c, i) => (c, maxEnc + 1 + i) }
+      .toDF("__cid", "__enc")
+    val minted = meta
+      .join(broadcast(mintMap), col("centroid_id").cast("long") === col("__cid"))
+      .localCheckpoint()
+    minted.select(col("__enc").as("enc_id"), col("center"))
+      .repartition(1).write.mode("append").parquet(s"$indexPath/enc_centers")
+    val updatedCur = Tables.read(spark, s"$indexPath/enc_current")
+      .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
+      .filter(!col("centroid_id").isin(cells: _*))
+      .unionByName(minted.select(
+        col("centroid_id").cast("long").as("centroid_id"),
+        col("__enc").as("enc_id")))
+      .localCheckpoint()
+    updatedCur.repartition(1).write.mode("overwrite")
+      .parquet(s"$indexPath/enc_current")
+    minted
   }
 
   /** Hot-cell split maintenance for the composed index — delegates to
@@ -485,9 +489,7 @@ object IvfPq extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String,
-      params: Params = Params(),
       cells: Option[Seq[Long]] = None): Unit = {
-    import spark.implicits._
     IvfIndex.ensureGeneration(spark, indexPath)
     require(isResidual(spark, indexPath),
       "IvfPq.reencodeCells: a global-codebook index has no generations to " +
@@ -497,27 +499,7 @@ object IvfPq extends IvfLayout {
       meta.select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSeq).sorted
     if (targets.isEmpty) return
-    // one fresh generation per target cell, minted from the current
-    // centroid; enc tables first (append-only, codes reference them)
-    val maxEnc = Tables.read(spark, s"$indexPath/enc_centers")
-      .agg(max(col("enc_id"))).head.getLong(0)
-    val mintMap = targets.zipWithIndex
-      .map { case (c, i) => (c, maxEnc + 1 + i) }
-      .toDF("__cid", "__enc")
-    val minted = meta
-      .join(broadcast(mintMap), col("centroid_id").cast("long") === col("__cid"))
-      .localCheckpoint()
-    minted.select(col("__enc").as("enc_id"), col("center"))
-      .repartition(1).write.mode("append").parquet(s"$indexPath/enc_centers")
-    val updatedCur = Tables.read(spark, s"$indexPath/enc_current")
-      .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
-      .filter(!col("centroid_id").isin(targets: _*))
-      .unionByName(minted.select(
-        col("centroid_id").cast("long").as("centroid_id"),
-        col("__enc").as("enc_id")))
-      .localCheckpoint()
-    updatedCur.repartition(1).write.mode("overwrite")
-      .parquet(s"$indexPath/enc_current")
+    val minted = mintGenerations(spark, indexPath, meta, targets)
     // pruned payload scan of the target cells, residual vs the CURRENT
     // centroid, frozen-codebook encode, dynamic overwrite of only the
     // target code directories
@@ -532,7 +514,7 @@ object IvfPq extends IvfLayout {
       .select(col(idCol), col("centroid_id"), col("enc_id"), col("__res"))
       .localCheckpoint()
     PqIndex.encodePrepared(residuals, idCol, "__res",
-        PqIndex.codebooksDf(spark, indexPath), params.pq)
+        PqIndex.codebooksDf(spark, indexPath))
       .join(residuals.select(col(idCol), col("centroid_id"), col("enc_id")), idCol)
       .transform(graft.util.PartitionedWrite.spread(
         _, targets.size, col("centroid_id"), col(idCol)))
@@ -576,7 +558,6 @@ object IvfPq extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String,
-      params: Params = Params(),
       cap: Double = 0.0): Seq[Long] = {
     IvfIndex.ensureGeneration(spark, indexPath)
     if (!isResidual(spark, indexPath)) return Nil
@@ -597,7 +578,7 @@ object IvfPq extends IvfLayout {
       .select(col("centroid_id"))
       .collect().map(_.getLong(0)).sorted.toSeq
     if (drifted.nonEmpty)
-      reencodeCells(spark, indexPath, idCol, embCol, params, Some(drifted))
+      reencodeCells(spark, indexPath, idCol, embCol, Some(drifted))
     drifted
   }
 

@@ -103,88 +103,92 @@ object PqIndex {
   private[query] def codebooksDf(spark: SparkSession, indexPath: String): DataFrame =
     broadcast(Tables.read(spark, s"$indexPath/codebooks"))
 
-  /** Normalize + slice into per-subspace rows: (idCol, passthrough...,
-    * sub, __subvec). Subspaces partition the dimensions, so
-    * ‖q − x‖² = Σ_sub ‖q_sub − x_sub‖² exactly.
-    */
-  private[query] def subspaceRows(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      params: Params,
-      keep: Seq[String]): DataFrame =
-    subspaceRowsOf(
-      AnnIndex.prepared(df, idCol, embCol)
-        .select(
-          (col(idCol) +: keep.map(col) :+
-            vector_to_array(col("features")).cast("array<float>").as("__prep")): _*),
-      idCol, "__prep", params, keep)
-
-  /** [[subspaceRows]] over an ALREADY-prepared float-array column —
-    * no normalization. The residual path needs this: a residual is
-    * the DIFFERENCE of a unit vector and its cell center, and
-    * re-normalizing it would destroy the ‖q − x̂‖ identity the ADC
+  /** Slice an already-prepared float-array column into per-subspace
+    * rows for the codebook FIT: (idCol, sub, __subvec). Subspaces
+    * partition the dimensions, so ‖q − x‖² = Σ_sub ‖q_sub − x_sub‖²
+    * exactly. The fit is the one step that slices by [[Params]] — no
+    * codebooks exist yet; every later encode slices by the codebooks
+    * it is given ([[sliced]]). No normalization happens here: a
+    * residual is the DIFFERENCE of a unit vector and its cell center,
+    * and re-normalizing it would destroy the ‖q − x̂‖ identity the ADC
     * bound rests on.
     */
   private[query] def subspaceRowsOf(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      params: Params,
-      keep: Seq[String]): DataFrame =
+      params: Params): DataFrame =
     df
-      .select((col(idCol) +: keep.map(col) :+
-        col(vecCol).cast("array<float>").as("__pqv")): _*)
+      .select(col(idCol), col(vecCol).cast("array<float>").as("__pqv"))
       .withColumn("sub", explode(sequence(lit(0), lit(params.numSub - 1))))
       .withColumn("__subvec",
         slice(col("__pqv"), col("sub") * params.subDim + 1, lit(params.subDim)))
       .drop("__pqv")
 
+  /** The deterministic codebook-fit sample ([[Params.fitSampleMod]]):
+    * `hash(id) % fitSampleMod == 0`, or every row when the mod is 1 —
+    * the one definition both families' fits read.
+    */
+  private[query] def fitSample(df: DataFrame, idCol: String, params: Params): DataFrame =
+    if (params.fitSampleMod > 1)
+      df.filter(pmod(hash(col(idCol)), lit(params.fitSampleMod)) === 0)
+    else df
+
+  /** Each vector row crossed with the codebooks, subvector sliced out:
+    * one row per (vector row, codebook row `sub`), `__subvec` the
+    * `subDim = size(centers[0])` floats subspace `sub` covers. The
+    * geometry is read from the index's own codebooks, so an encode or
+    * a LUT always slices the subspaces the codebooks were fit on.
+    */
+  private def sliced(vecRows: DataFrame, vecCol: String, codebooks: DataFrame): DataFrame = {
+    val subDim = size(col("centers").getItem(0))
+    vecRows.crossJoin(codebooks)
+      .withColumn("__subvec",
+        slice(col(vecCol).cast("array<float>"), col("sub") * subDim + 1, subDim))
+  }
+
   /** Encode a corpus against per-subspace codebooks: one row per id with
     * `codes` (argmin codebook entry per subspace, ties to the lower
-    * code id) and `resid` = ‖x − x̂‖. The unique-id contract is
-    * ENFORCED: after collapsing exact duplicate (id, emb) rows — an
-    * at-least-once producer's retry, benign — every id must contribute
-    * exactly numSub subspace rows; a CONFLICTING duplicate (same id,
-    * different embedding) would interleave two vectors' subspaces into
-    * one garbage code word, so it fails the job naming the id.
+    * code id) and `resid` = ‖x − x̂‖. Exact duplicate (id, emb) rows —
+    * an at-least-once producer's retry, benign — collapse first.
     */
   private[query] def encode(
       df: DataFrame,
       idCol: String,
       embCol: String,
-      codebooks: DataFrame,
-      params: Params): DataFrame =
-    encodeSubRows(
-      subspaceRows(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol, params, Nil),
-      idCol, codebooks, params)
+      codebooks: DataFrame): DataFrame =
+    encodeRows(
+      AnnIndex.prepared(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
+        .select(col(idCol), vector_to_array(col("features")).as("__prep")),
+      idCol, "__prep", codebooks)
 
-  /** [[encode]] over an already-prepared vector column
-    * ([[subspaceRowsOf]] semantics — no normalization): the residual
-    * path's encoder. Same per-id shape and the same
-    * conflicting-duplicate enforcement: exact duplicate (id, vec)
-    * rows collapse (benign retry), while a CONFLICTING duplicate must
-    * SURVIVE to the per-id subspace-count check so the job fails
-    * naming the id — deduping by id alone would silently encode an
-    * arbitrary copy.
+  /** [[encode]] over an already-prepared vector column, with no
+    * normalization: the residual path's encoder (a residual must not
+    * be re-normalized — see [[subspaceRowsOf]]). Exact duplicate
+    * (id, vec) rows collapse; deduping by id alone would silently
+    * encode an arbitrary copy of a CONFLICTING duplicate, which must
+    * instead fail in [[encodeRows]].
     */
   private[query] def encodePrepared(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      codebooks: DataFrame,
-      params: Params): DataFrame =
-    encodeSubRows(
-      subspaceRowsOf(df.dropDuplicates(Seq(idCol, vecCol)), idCol, vecCol, params, Nil),
-      idCol, codebooks, params)
+      codebooks: DataFrame): DataFrame =
+    encodeRows(df.dropDuplicates(Seq(idCol, vecCol)), idCol, vecCol, codebooks)
 
-  private def encodeSubRows(
-      subRows: DataFrame,
+  /** The one encode body. The unique-id contract is ENFORCED: every id
+    * meets each codebook row once, so its row count must equal the
+    * number of distinct subspaces it covered — the codebooks' own
+    * subspace count. A CONFLICTING duplicate (same id, different
+    * vector) would interleave two vectors' subspaces into one garbage
+    * code word, so it fails the job naming the id.
+    */
+  private def encodeRows(
+      vecRows: DataFrame,
       idCol: String,
-      codebooks: DataFrame,
-      params: Params): DataFrame = {
-    val best = subRows
-      .join(codebooks, "sub")
+      vecCol: String,
+      codebooks: DataFrame): DataFrame =
+    sliced(vecRows.select(col(idCol), col(vecCol)), vecCol, codebooks)
       // per-(id, sub) argmin over the codebook: a per-row fold over the
       // K centers (no K-way row blow-up, no shuffle) — strict < keeps
       // the lowest code on ties
@@ -203,13 +207,11 @@ object PqIndex {
           }))
       .select(col(idCol), col("sub"),
         col("__best.code").as("code"), col("__best.d2").as("d2"))
-    best
       .groupBy(col(idCol))
       .agg(
         collect_list(struct(col("sub"), col("code"))).as("__sc"),
-        sum(col("d2")).as("__r2"),
-        count(lit(1)).as("__n"))
-      .filter(assert_true(col("__n") === params.numSub,
+        sum(col("d2")).as("__r2"))
+      .filter(assert_true(size(col("__sc")) === size(array_distinct(col("__sc.sub"))),
         concat(lit("PqIndex: input contains a duplicated id ("),
           col(idCol).cast("string"),
           lit(") with conflicting embeddings — one embedding per id " +
@@ -217,7 +219,6 @@ object PqIndex {
       .select(col(idCol),
         transform(array_sort(col("__sc")), s => s.getField("code")).as("codes"),
         sqrt(col("__r2")).as("resid"))
-  }
 
   /** Fit per-subspace codebooks, encode every vector, persist
     * `codebooks/` (numSub rows), `codes/` (the compact scan table) and
@@ -246,53 +247,33 @@ object PqIndex {
           _, IndexBuckets, col("__vbucket"), col(idCol)))
         .write.mode("overwrite").partitionBy("__vbucket").parquet(s"$outPath/vectors"))
     writeCodebooks(spark, codebooks, outPath)
-    encode(df, idCol, embCol, codebooksDf(spark, outPath), params)
+    encode(df, idCol, embCol, codebooksDf(spark, outPath))
       .withColumn("__cbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
       .transform(graft.util.PartitionedWrite.spread(
         _, IndexBuckets, col("__cbucket"), col(idCol)))
       .write.mode("overwrite").partitionBy("__cbucket").parquet(s"$outPath/codes")
   }
 
-  /** Fit the per-subspace codebooks and persist them under
-    * `outPath/codebooks` — shared by [[build]] and [[IvfPq.build]].
-    */
-  private[query] def fitAndWriteCodebooks(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      outPath: String,
-      params: Params): Unit =
-    writeCodebooks(df.sparkSession,
-      fitCodebooksSampled(df, idCol, embCol, params), outPath)
-
-  /** [[fitAndWriteCodebooks]] minus the write — sampling + fit only,
-    * so a caller can overlap the fit with an independent job chain
-    * (guide §2.6) and write the table when the path is safe.
+  /** Sample ([[fitSample]]), normalize and fit — no write, so a caller
+    * can overlap the fit with an independent job chain (guide §2.6)
+    * and write the table when the path is safe.
     */
   private[query] def fitCodebooksSampled(
       df: DataFrame,
       idCol: String,
       embCol: String,
-      params: Params): Seq[(Int, Seq[Seq[Float]])] = {
-    val fitInput = if (params.fitSampleMod > 1)
-      df.filter(pmod(hash(col(idCol)), lit(params.fitSampleMod)) === 0)
-    else df
-    fitCodebooks(subspaceRows(fitInput, idCol, embCol, params, Nil), idCol, params)
-  }
+      params: Params): Seq[(Int, Seq[Seq[Float]])] =
+    fitCodebooks(
+      subspaceRowsOf(
+        AnnIndex.prepared(fitSample(df, idCol, params), idCol, embCol)
+          .select(col(idCol),
+            vector_to_array(col("features")).cast("array<float>").as("__prep")),
+        idCol, "__prep", params),
+      idCol, params)
 
   /** The fitting core over any per-subspace row source ((idCol, sub,
-    * __subvec) — [[subspaceRows]] for raw vectors, [[subspaceRowsOf]]
-    * for residuals). Caller owns sampling.
-    */
-  private[query] def fitCodebooksFrom(
-      subRowsIn: DataFrame,
-      idCol: String,
-      outPath: String,
-      params: Params): Unit =
-    writeCodebooks(subRowsIn.sparkSession,
-      fitCodebooks(subRowsIn, idCol, params), outPath)
-
-  /** [[fitCodebooksFrom]] minus the write — returns the fitted
+    * __subvec) — [[subspaceRowsOf]] over normalized vectors or
+    * residuals); the caller owns sampling. Returns the fitted
     * (sub, centers) rows so a caller can overlap the fit with another
     * independent job chain (guide §2.6) and write the table only when
     * the path is safe to write (e.g. after [[IvfIndex.build]]'s
@@ -349,7 +330,8 @@ object PqIndex {
   }
 
   /** Incremental maintenance: encode NEW vectors against the FROZEN
-    * codebooks and append to `codes/` + `vectors/` — no re-fit, no
+    * codebooks (geometry included — [[sliced]] reads it from them)
+    * and append to `codes/` + `vectors/` — no re-fit, no
     * touch of existing rows (the [[IvfIndex.upsert]] story: stale
     * codebooks cost fetch volume on drifted data, never correctness,
     * because the residual bound is computed against the codebook
@@ -363,9 +345,8 @@ object PqIndex {
       indexPath: String,
       idCol: String,
       embCol: String,
-      newRows: DataFrame,
-      params: Params = Params()): Unit = {
-    encode(newRows, idCol, embCol, codebooksDf(spark, indexPath), params)
+      newRows: DataFrame): Unit = {
+    encode(newRows, idCol, embCol, codebooksDf(spark, indexPath))
       .withColumn("__cbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
       .transform(graft.util.PartitionedWrite.spread(
         _, IndexBuckets, col("__cbucket"), col(idCol)))
@@ -418,20 +399,13 @@ object PqIndex {
 
   /** ADC lookup rows: one per (vector row, subspace), `__lut_sub` =
     * ‖v_sub − c‖² for every codebook center c via the same [[d2]] kernel
-    * that priced the stored residuals. The geometry is read from the
-    * index's own codebooks — one row per subspace `sub`, each center
-    * `subDim = size(centers[0])` floats — so a LUT always slices the
-    * subspaces the codes were encoded against, whatever the caller
-    * believes the build used.
+    * that priced the stored residuals, sliced by [[sliced]] exactly as
+    * the codes were encoded.
     */
-  private def lutRows(vecRows: DataFrame, vecCol: String, codebooks: DataFrame): DataFrame = {
-    val subDim = size(col("centers").getItem(0))
-    vecRows.crossJoin(codebooks)
-      .withColumn("__subvec",
-        slice(col(vecCol).cast("array<float>"), col("sub") * subDim + 1, subDim))
+  private def lutRows(vecRows: DataFrame, vecCol: String, codebooks: DataFrame): DataFrame =
+    sliced(vecRows, vecCol, codebooks)
       .withColumn("__lut_sub",
         transform(col("centers"), c => d2(col("__subvec"), c)))
-  }
 
   /** The per-subspace rows of [[lutRows]] concatenated in subspace order
     * — lut[sub·K + code], the [[graft.functions.PqAdc]] input shape.

@@ -41,13 +41,6 @@ object ShardedIvf {
 
   /** The routing expression — pmod of the id hash, the same function
     * for build, upsert and delete so a row's home shard never moves.
-    *
-    * Caveat for per-shard builds: [[PqIndex.Params.fitSampleMod]]
-    * samples the codebook fit by pmod of the SAME id hash, so a mod
-    * sharing a factor with n_shards selects a residue class a shard
-    * does not contain (hash%2==1 holds no hash%4==0 row — an empty fit
-    * sample, loud require failure). Use a fitSampleMod coprime to
-    * n_shards (or 1) when composing the two.
     */
   private def shardOf(idCol: String, n: Int) =
     pmod(hash(col(idCol)), lit(n))
@@ -55,7 +48,10 @@ object ShardedIvf {
   /** Hash-partition `df` across `n` shards and build each one — N
     * INDEPENDENT builds over 1/Nth of the corpus each (restartable,
     * memory-bounded), not one corpus-wide fit. `composed` builds the
-    * memory-bound [[IvfPq]] layout per shard instead.
+    * memory-bound [[IvfPq]] layout per shard instead; its codebook fit
+    * samples by pmod of the SAME id hash ([[PqIndex.fitSample]]), so
+    * `pqParams.fitSampleMod` must be coprime to `n` — otherwise shard
+    * i holds no sampled row unless gcd(n, fitSampleMod) divides i.
     */
   def build(
       df: DataFrame,
@@ -67,6 +63,10 @@ object ShardedIvf {
       composed: Boolean = false,
       pqParams: PqIndex.Params = PqIndex.Params()): Unit = {
     require(n >= 1, s"ShardedIvf.build: need at least 1 shard (got $n)")
+    require(!composed || BigInt(n).gcd(pqParams.fitSampleMod) == 1,
+      s"ShardedIvf.build: fitSampleMod=${pqParams.fitSampleMod} shares a factor " +
+        s"with n=$n shards — some shards would get an empty codebook-fit " +
+        "sample; use a fitSampleMod coprime to n")
     val spark = df.sparkSession
     import spark.implicits._
     // shards build CONCURRENTLY (the [[queryTopK]] concurrent-probe
@@ -111,25 +111,16 @@ object ShardedIvf {
 
   /** Append new vectors, each into its hash-home shard (the
     * single-index append contract per shard — including the
-    * tombstone-overlap guard). `pqParams` must match the geometry the
-    * composed shards were built with ([[build]]'s parameter, same
-    * default): [[PqIndex.encode]] slices subvectors by
-    * dim/numSub, so encoding an upsert batch with a mismatched
-    * geometry would write code rows whose ADC bounds price against the
-    * wrong codebooks — silently corrupting exactness for those rows.
-    * Plain shards ignore it.
+    * tombstone-overlap guard).
     */
   def upsert(
       spark: SparkSession,
       root: String,
       idCol: String,
       embCol: String,
-      newRows: DataFrame,
-      pqParams: PqIndex.Params = PqIndex.Params()): Unit =
+      newRows: DataFrame): Unit =
     routed(spark, root, idCol, newRows) { (p, slice) =>
-      if (IvfPq.isComposed(spark, p))
-        IvfPq.upsert(spark, p, idCol, embCol, slice,
-          IvfPq.Params(pq = pqParams))
+      if (IvfPq.isComposed(spark, p)) IvfPq.upsert(spark, p, idCol, embCol, slice)
       else IvfIndex.upsert(spark, p, idCol, embCol, slice)
     }
 

@@ -200,12 +200,11 @@ object IndexMaintenance {
       idCol: String,
       embCol: String,
       batch: DataFrame,
-      batchId: Long,
-      params: graft.query.PqIndex.Params = graft.query.PqIndex.Params()): Boolean = {
+      batchId: Long): Boolean = {
     val spark = batch.sparkSession
     if (batchId <= lastApplied(spark, indexPath) || batch.isEmpty) false
     else {
-      graft.query.PqIndex.upsert(spark, indexPath, idCol, embCol, batch, params)
+      graft.query.PqIndex.upsert(spark, indexPath, idCol, embCol, batch)
       writeFence(spark, indexPath, batchId)
       true
     }
@@ -215,7 +214,10 @@ object IndexMaintenance {
     * into cells + radii + frozen-codebook cell codes
     * ([[graft.query.IvfPq.upsert]]) behind the shared replay fence —
     * q109's result-invisibility contract per batch, hence under any
-    * batch sequence. @return true iff the batch was applied.
+    * batch sequence. Every encode reads the PQ geometry from the
+    * index's codebooks; `params` is used only by the `reclusterEvery`
+    * re-cluster, the one step here that fits codebooks.
+    * @return true iff the batch was applied.
     */
   def applyIvfPqBatch(
       indexPath: String,
@@ -249,7 +251,7 @@ object IndexMaintenance {
         if (opCol.isDefined &&
             graft.query.Tombstones.overlaps(spark, indexPath, idCol, upserts))
           graft.query.IvfPq.compactTombstones(spark, indexPath, idCol, embCol)
-        graft.query.IvfPq.upsert(spark, indexPath, idCol, embCol, upserts, params)
+        graft.query.IvfPq.upsert(spark, indexPath, idCol, embCol, upserts)
       }
       // optional in-line occupancy repair (the [[applyBatch]] splitCap
       // story, now available for the composed family too): the split
@@ -266,7 +268,7 @@ object IndexMaintenance {
       // continuous ingest. No-op on global-codebook indexes and on
       // drift-free batches; result-invisible always.
       reencodeDriftCap.foreach(cap => graft.query.IvfPq.reencodeDrifted(
-        spark, indexPath, idCol, embCol, params, cap))
+        spark, indexPath, idCol, embCol, cap))
       // optional physical deletion fold-in at a batch cadence — the
       // [[applyBatch]] compactDeletesEvery story; the composed pass
       // moves surviving code rows with their cells
@@ -296,8 +298,9 @@ object IndexMaintenance {
     * encoding-generation drift past the cap is repaired in the same
     * batch too ([[graft.query.IvfPq.reencodeDrifted]]), so bound
     * tightness — and with it exact-verify fetch volume — stays bounded
-    * as well. Run [[graft.query.IvfPq.compactIndex]] off the query
-    * path at compaction cadence.
+    * as well. `params` feeds only the `reclusterEvery` re-cluster (see
+    * [[applyIvfPqBatch]]). Run [[graft.query.IvfPq.compactIndex]] off
+    * the query path at compaction cadence.
     */
   def maintainIvfPq(
       vectors: DataFrame,
@@ -334,14 +337,13 @@ object IndexMaintenance {
       indexPath: String,
       idCol: String,
       embCol: String,
-      checkpointDir: String,
-      params: graft.query.PqIndex.Params = graft.query.PqIndex.Params()): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     vectors.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyPqBatch(indexPath, idCol, embCol, batch, batchId, params); ()
+        applyPqBatch(indexPath, idCol, embCol, batch, batchId); ()
       }
       .start()
 

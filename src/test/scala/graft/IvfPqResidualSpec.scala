@@ -107,7 +107,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
       "vec_id", "embedding", dir, params)
     val enc0 = spark.read.parquet(s"$dir/enc_centers").count()
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0), params)
+      e.filter(pmod(col("vec_id"), lit(10)) === 0))
     // pre-split upserts reuse the build generations (no mint)
     assert(spark.read.parquet(s"$dir/enc_centers").count() == enc0)
 
@@ -117,7 +117,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     assert(gotSplit == exactSplit, "split broke residual-mode answers")
 
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 1), params)
+      e.filter(pmod(col("vec_id"), lit(10)) === 1))
     // the post-split upsert hit split-minted cells: fresh generations
     val enc1 = spark.read.parquet(s"$dir/enc_centers").count()
     assert(enc1 > enc0, "no generation was minted for split-minted cells")
@@ -135,10 +135,10 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) >= 2),
       "vec_id", "embedding", dir, params)
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0), params)
+      e.filter(pmod(col("vec_id"), lit(10)) === 0))
     IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 40L)
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 1), params)
+      e.filter(pmod(col("vec_id"), lit(10)) === 1))
 
     // post-split state: moved rows price against pre-split centers —
     // the stats report must SHOW the drift
@@ -156,7 +156,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
       .candidates.count()
     val fetchBefore = fetch()
 
-    IvfPq.reencodeCells(spark, dir, "vec_id", "embedding", params)
+    IvfPq.reencodeCells(spark, dir, "vec_id", "embedding")
     val after = drifts()
     assert(after.values.forall { case (g, d) => g == 1L && d < 1e-6 },
       s"re-encode left drifted generations: $after")
@@ -221,14 +221,14 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     assert(fetch(dirB) <= fetch(dirA),
       s"drift repair loosened the fetch: ${fetch(dirB)} vs ${fetch(dirA)}")
     // the detection pass alone: nothing left over the cap → no-op
-    assert(IvfPq.reencodeDrifted(spark, dirB, "vec_id", "embedding", params,
+    assert(IvfPq.reencodeDrifted(spark, dirB, "vec_id", "embedding",
       cap = 1e-6).isEmpty)
     // ... and a global-codebook index has no generations: uncondition-
     // ally callable from maintenance, always a no-op there
     val dirG = tmp("drift-global")
     IvfPq.build(e, "vec_id", "embedding", dirG, params.copy(residual = false))
     assert(IvfPq.reencodeDrifted(spark, dirG, "vec_id", "embedding",
-      params.copy(residual = false), cap = 0.0).isEmpty)
+      cap = 0.0).isEmpty)
   }
 
   test("a global rebuild over a residual directory retires the mode cleanly") {

@@ -35,7 +35,7 @@ class IvfPqSpec extends AnyFunSuite with SharedSpark {
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
       "vec_id", "embedding", dir, params)
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0), params)
+      e.filter(pmod(col("vec_id"), lit(10)) === 0))
     assert(spark.read.parquet(s"$dir/cell_codes").count() == e.count())
 
     val queries = e.filter(col("vec_id") < 10)

@@ -105,7 +105,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
       "vec_id", "embedding", dir, params)
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0), params)
+      e.filter(pmod(col("vec_id"), lit(10)) === 0))
     IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
     assertInSync(dir, 200L)
     assert(perCellCounts("cells", dir).values.forall(_ <= 60L))

@@ -85,7 +85,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     PqIndex.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
       "vec_id", "embedding", dir, SmallParams)
     PqIndex.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0), SmallParams)
+      e.filter(pmod(col("vec_id"), lit(10)) === 0))
     assert(spark.read.parquet(s"$dir/codes").count() == 200L)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
@@ -110,7 +110,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
       s"build totals wrong: $s0")
 
     PqIndex.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0), SmallParams)
+      e.filter(pmod(col("vec_id"), lit(10)) === 0))
     val s1 = snap()
     assert(s1("codes")._1 == 200L && s1("vectors")._1 == 200L,
       s"post-upsert totals wrong: $s1 — a codes/vectors mismatch is the " +
@@ -135,7 +135,7 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
       (1000L, Array(0f, 1.0f, 0f, 0f, 0f, 0f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val err = intercept[Exception] {
-      PqIndex.upsert(spark, dir, "vec_id", "embedding", conflicting, SmallParams)
+      PqIndex.upsert(spark, dir, "vec_id", "embedding", conflicting)
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))

@@ -173,8 +173,7 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
     IvfPq.build(e.filter(col("vec_id") < 160), "vec_id", "embedding", dir,
       IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 2), pq = pq, residual = true))
     IvfPq.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(col("vec_id") >= 160),
-      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 2), pq = pq, residual = true))
+      e.filter(col("vec_id") >= 160))
     assert(IvfPq.isResidual(spark, dir))
     def q(): Set[(Long, Long, Long)] =
       topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
