@@ -82,7 +82,7 @@ object Queries {
   }
 
   /** Q39: batch top-k against the IVF index (the second ANN path —
-    * KMeans cells, parquet partition-pruned probes, exact by the
+    * k-means cells, parquet partition-pruned probes, exact by the
     * cell-radius triangle bound — see [[graft.query.IvfIndex]]). Same
     * batch/oracle as q9/q38; green by construction at any corpus shape,
     * because the bound probes every cell that could still change the
@@ -113,11 +113,7 @@ object Queries {
   def q105PqTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("pq", dir)
-    // fitSampleMod: codebooks fit on a deterministic quarter-sample —
-    // the 100 TB build discipline (the fit needs the distribution's
-    // shape, not the corpus), and the bound is exact for any codebook
-    buildOnce(work)(PqIndex.build(e, "vec_id", "embedding", work,
-      PqIndex.Params(fitSampleMod = 4)))
+    buildOnce(work)(PqIndex.build(e, "vec_id", "embedding", work))
     PqIndex.queryTopK(spark, work, "vec_id", "embedding",
         queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
@@ -167,8 +163,7 @@ object Queries {
   def q107IvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("ivfpq", dir)
-    buildOnce(work)(IvfPq.build(e, "vec_id", "embedding", work,
-      IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4))))
+    buildOnce(work)(IvfPq.build(e, "vec_id", "embedding", work))
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
         queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
@@ -253,8 +248,7 @@ object Queries {
   def q114FilteredPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("ivfpq", dir)
-    buildOnce(work)(IvfPq.build(e, "vec_id", "embedding", work,
-      IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4))))
+    buildOnce(work)(IvfPq.build(e, "vec_id", "embedding", work))
     // label metadata is its own build-once artifact over the shared
     // "ivfpq" index (q107/q114 share the build, priced once in bench)
     buildOnce(s"$work/__label_meta")(IvfIndex.buildLabelMeta(
@@ -281,7 +275,7 @@ object Queries {
   def q109IvfPqUpsert(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("ivfpq_upsert", dir)
-    val params = IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4))
+    val params = IvfPq.Params()
     buildOnce(work) {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
         "vec_id", "embedding", work, params)
@@ -331,8 +325,7 @@ object Queries {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("ivfpq_split", dir)
     val params = IvfPq.Params(
-      ivf = IvfIndex.Params(nCentroids = 4),
-      pq = PqIndex.Params(fitSampleMod = 4))
+      ivf = IvfIndex.Params(nCentroids = 4))
     buildOnce(work) {
       IvfPq.build(e, "vec_id", "embedding", work, params)
       // same cap rule as q106: every balanced cell (~n/4) is hot
@@ -366,7 +359,6 @@ object Queries {
     val work = indexWorkDir("ivfpq_residual", dir)
     val params = IvfPq.Params(
       ivf = IvfIndex.Params(nCentroids = 4),
-      pq = PqIndex.Params(fitSampleMod = 4),
       residual = true)
     buildOnce(work) {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) >= 2),
@@ -490,7 +482,7 @@ object Queries {
   def q119IvfPqDelete(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("ivfpq_delete", dir)
-    val params = IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4))
+    val params = IvfPq.Params()
     buildOnce(work) {
       IvfPq.build(e, "vec_id", "embedding", work, params)
       IvfPq.delete(spark, work, "vec_id",
@@ -529,8 +521,7 @@ object Queries {
       // delete mutates its own just-built artifact)
       graft.util.Par.both(spark, "q121.build")(
         {
-          IvfPq.build(e, "vec_id", "embedding", s"$work/ivfpq",
-            IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4)))
+          IvfPq.build(e, "vec_id", "embedding", s"$work/ivfpq")
           IvfPq.delete(spark, s"$work/ivfpq", "vec_id",
             e.filter(pmod(col("vec_id"), lit(10)) === 0).select("vec_id"))
         },
@@ -665,9 +656,8 @@ object Queries {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("ivfpq_recluster", dir)
     val poor = IvfPq.Params(
-      ivf = IvfIndex.Params(nCentroids = 2),
-      pq = PqIndex.Params(fitSampleMod = 4))
-    val fresh = IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4))
+      ivf = IvfIndex.Params(nCentroids = 2))
+    val fresh = IvfPq.Params()
     buildOnce(work) {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
         "vec_id", "embedding", work, poor)
@@ -915,7 +905,7 @@ object Queries {
     * ([[graft.pipeline.SemanticDedup.dedupWithinCells]]). The cell
     * assignment is a deterministic 2-bit sign grid on the first two
     * embedding components: a SQL-expressible random-projection
-    * stand-in for the production IVF/KMeans cells, so DuckDB replays
+    * stand-in for the production IVF/k-means cells, so DuckDB replays
     * the assignment exactly and the oracle grades the survivor
     * contract itself. τ reuses q20's cross-engine-verified 0.35
     * operating point (the fixture's embeddings are spread; real

@@ -27,6 +27,17 @@ object VectorOps {
 
   def l2Norm(x: Array[Float]): Double = math.sqrt(normSq(x))
 
+  /** `x / ‖x‖₂`, a zero vector unchanged — MLlib `Normalizer(p = 2)`'s
+    * arithmetic exactly (sequential `v·v` sum, `sqrt`, one division each).
+    */
+  def l2Normalize(x: Array[Double]): Array[Double] = {
+    var acc = 0.0
+    var i = 0
+    while (i < x.length) { acc += x(i) * x(i); i += 1 }
+    val norm = math.sqrt(acc)
+    if (norm == 0.0) x else x.map(_ / norm)
+  }
+
   /** Cosine similarity; 0.0 when either vector is all-zero (matches the
     * pgvector convention the reference delegates to —
     * reference: src/clients/vector-client.ts:396-415 delegates the whole

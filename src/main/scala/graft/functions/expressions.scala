@@ -72,6 +72,26 @@ case class L2Norm(child: Expression) extends UnaryExpression
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** `l2_normalize(v)`: `v` over its L2 norm, in double
+  * ([[VectorOps.l2Normalize]]) — every index family's normalization.
+  */
+case class L2Normalize(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes with Serializable {
+  override def prettyName: String = "l2_normalize"
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(a: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(
+      VectorOps.l2Normalize(a.asInstanceOf[ArrayData].toDoubleArray()))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |  .fromPrimitiveArray(graft.functions.VectorOps.l2Normalize($a.toDoubleArray()));"""
+        .stripMargin)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** Deterministic hashing embedder: text -> array<float> of dimension `dim`
   * (a foldable int). Engine-local stand-in for the reference's network
   * embedding call (vector-client.ts:375-388).

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Column-level API over the native expressions, plus SQL registration. */
 package object functions {
@@ -15,6 +16,7 @@ package object functions {
   def dot_product(a: Column, bb: Column): Column = Bridge.column(DotProduct(fa(a), fa(bb)))
   def l2_dist_sq(a: Column, bb: Column): Column = Bridge.column(L2Distance(fa(a), fa(bb)))
   def l2_norm(a: Column): Column = Bridge.column(L2Norm(fa(a)))
+  def l2_normalize(a: Column): Column = Bridge.column(L2Normalize(b(a.cast("array<double>"))))
   def hash_embed(text: Column, dim: Column): Column =
     Bridge.column(HashEmbed(st(text), b(dim.cast("int"))))
   def simhash64(text: Column): Column = Bridge.column(SimHash64(st(text)))
@@ -57,6 +59,8 @@ package object functions {
     "dot_product" -> (es => DotProduct(es(0), es(1))),
     "l2_dist_sq" -> (es => L2Distance(es(0), es(1))),
     "l2_norm" -> (es => L2Norm(es.head)),
+    "l2_normalize" -> (es => L2Normalize(
+      org.apache.spark.sql.catalyst.expressions.Cast(es.head, ArrayType(DoubleType)))),
     "hash_embed" -> (es => HashEmbed(es(0), es(1))),
     "simhash64" -> (es => SimHash64(es.head)),
     "rolling_hash" -> (es => RollingHash(es.head)),

@@ -1,9 +1,9 @@
 package graft.query
 
 import graft.Tables
-import graft.functions.cosine_sim
+import graft.functions.{cosine_sim, l2_normalize}
 import graft.util.PartitionedWrite
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel, Normalizer}
+import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -47,16 +47,20 @@ object AnnIndex {
       maxBucketOccupancy: Int = 10000)
 
   /** Project (id, array<float>) to (id, embedding, features) where
-    * `features` is the L2-normalized MLlib vector the LSH hashes.
+    * `features` is the L2-normalized `array<double>` every index family
+    * assigns, encodes and probes with ([[graft.functions.l2_normalize]]).
     */
-  def prepared(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    val raw = graft.Tables.parallelize(df.select(col(idCol), col(embCol)))
-      .withColumn("raw_vec", array_to_vector(col(embCol).cast("array<double>")))
-    new Normalizer().setInputCol("raw_vec").setOutputCol("features").setP(2.0)
-      .transform(raw)
-      .drop("raw_vec")
-  }
+  def prepared(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    graft.Tables.parallelize(df.select(col(idCol), col(embCol)))
+      .withColumn("features", l2_normalize(col(embCol)))
 
+  /** A [[prepared]] frame with `features` as the MLlib vector the LSH
+    * fits on and hashes — the one array → vector conversion left.
+    */
+  def hashInput(prepared: DataFrame): DataFrame =
+    prepared.withColumn("features", array_to_vector(col("features")))
+
+  /** Fit the LSH on a [[hashInput]] frame. */
   def fit(prepared: DataFrame, params: Params = Params()): BucketedRandomProjectionLSHModel =
     new BucketedRandomProjectionLSH()
       .setInputCol("features")
@@ -105,7 +109,7 @@ object AnnIndex {
     // a fresh build indexes exactly `df`: a stale delete log from a
     // previous index at this path must not mask the new corpus
     Tombstones.clear(df.sparkSession, outPath)
-    val prep = prepared(df, idCol, embCol)
+    val prep = hashInput(prepared(df, idCol, embCol))
     val model = fit(prep, params)
     model.write.overwrite().save(s"$outPath/model")
     modelCache.remove(outPath)
@@ -182,7 +186,8 @@ object AnnIndex {
     }
     val model = loadModel(indexPath)
     val qPrep = model.transform(
-      prepared(queries.select(col(queryIdCol), col(queryVecCol).as(embCol)), queryIdCol, embCol))
+      hashInput(prepared(
+        queries.select(col(queryIdCol), col(queryVecCol).as(embCol)), queryIdCol, embCol)))
     // job 1: collect the hashed query batch once — vectors + their
     // (table, bucket) probes; ≤ batch × numHashTables rows
     val qPlan = qPrep
@@ -260,8 +265,8 @@ object AnnIndex {
       params: Params = Params()): DataFrame = {
     require(simThreshold > -1.0 && simThreshold < 1.0, "simThreshold in (-1, 1)")
     require(idColA != idColB, "id columns must have distinct names")
-    val prepA = prepared(dfA, idColA, embCol)
-    val prepB = prepared(dfB, idColB, embCol)
+    val prepA = hashInput(prepared(dfA, idColA, embCol))
+    val prepB = hashInput(prepared(dfB, idColB, embCol))
     val model = fit(prepA, params)
     def buckets(prep: DataFrame, idCol: String) =
       model.transform(prep)
@@ -305,7 +310,7 @@ object AnnIndex {
       simThreshold: Double,
       params: Params = Params()): DataFrame = {
     require(simThreshold > -1.0 && simThreshold < 1.0, "simThreshold in (-1, 1)")
-    val prep = prepared(df, idCol, embCol)
+    val prep = hashInput(prepared(df, idCol, embCol))
     val model = fit(prep, params)
     // one row per (vector, hash table): the table's bucket id.
     // localCheckpoint: the hashing pass feeds the occupancy accounting

@@ -2,8 +2,7 @@ package graft.query
 
 import graft.Tables
 import graft.functions.cosine_sim
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,35 +22,24 @@ import org.apache.spark.sql.functions._
   * the bound prunes most cells; on an adversarially isotropic corpus it
   * degrades toward a full scan rather than silently dropping neighbors.
   *
-  * 100 TB shape: the build is one KMeans fit + one assignment pass + a
-  * partitioned write; the per-cell radius aggregation is one tiny
-  * shuffle. A query batch reads only the cells that survive the bound —
-  * the join on the `centroid_id` partition column prunes whole
-  * directories at the source, which is the property LSH bucketing cannot
-  * give a columnar store.
+  * 100 TB shape: the build is one bounded-sample collect, a driver-side
+  * k-means fit over at most 256 points per centroid ([[Lloyd]]), one
+  * assignment pass + a partitioned write; the per-cell radius
+  * aggregation is one tiny shuffle. A query batch reads only the cells
+  * that survive the bound — the join on the `centroid_id` partition
+  * column prunes whole directories at the source, which is the property
+  * LSH bucketing cannot give a columnar store.
   */
 object IvfIndex extends IvfLayout {
 
   /** maxIter=10: the coarse quantizer does not need tight convergence —
     * centroid quality only moves the probe count (the query bound is
-    * exact for any centroid set), and each Lloyd iteration is a full
-    * distributed pass over the fit input.
+    * exact for any centroid set).
     */
   case class Params(
       nCentroids: Int = 16,
       maxIter: Int = 10,
       seed: Long = 42L)
-
-  /** Fixed partition count + in-partition sort for the KMeans fit input.
-    * The fit's tree aggregation sums floats in partition/row order, so
-    * centroids (and the cell assignment of boundary vectors) would
-    * otherwise depend on the session's core count — an index built at
-    * local[4] must be bit-identical to one built at local[32] so that
-    * probe-cost characteristics validated on one layout hold on another.
-    * (Correctness never depends on this: the query-time bound is exact
-    * for ANY centroid set.)
-    */
-  val BuildPartitions = 8
 
   /** Absorbs float-vs-double kernel noise when the stored radius is
     * reused at query time; padding only adds probes, never drops them.
@@ -72,19 +60,33 @@ object IvfIndex extends IvfLayout {
     */
   private val HitRowBytes = 48L
 
-  /** Fit centroids, assign every vector, persist model + cells (parquet
-    * partitioned by centroid_id) + per-cell radii (the completeness
-    * bound's data).
+  /** Fit centroids ([[Lloyd]]), assign every vector, persist cells
+    * (partitioned by centroid_id) + per-cell radii (the bound's data).
     */
   def build(
       df: DataFrame,
       idCol: String,
       embCol: String,
       outPath: String,
-      params: Params = Params()): KMeansModel = {
+      params: Params = Params()): Unit = {
+    val prep = AnnIndex.prepared(df, idCol, embCol)
+    buildFitted(prep, idCol, embCol, outPath, params, Lloyd.sample(prep, idCol, params.nCentroids))
+  }
+
+  /** [[build]] from a prepared frame and its fit sample, which
+    * [[IvfPq.build]] shares with its PQ fit. @return the centers by id.
+    */
+  private[query] def buildFitted(
+      prep: DataFrame,
+      idCol: String,
+      embCol: String,
+      outPath: String,
+      params: Params,
+      sample: Array[Array[Float]]): Array[Array[Float]] = {
+    val spark = prep.sparkSession
     // a rebuild invalidates any persisted label metadata FIRST — its
     // freshness fingerprints cannot distinguish two same-shaped builds
-    invalidateLabelMeta(df.sparkSession, outPath)
+    invalidateLabelMeta(spark, outPath)
     // ... and retires any COMPOSED artifacts from a previous build at
     // this path: stale cell_codes would desync from the fresh cells,
     // and a stale enc_centers table would make [[IvfPq.isResidual]]
@@ -94,7 +96,7 @@ object IvfIndex extends IvfLayout {
     // artifacts right after.
     locally {
       val fs = new org.apache.hadoop.fs.Path(outPath)
-        .getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+        .getFileSystem(spark.sessionState.newHadoopConf())
       // tombstones too: a fresh build indexes exactly `df`, and a stale
       // delete log from a previous index at this path would silently
       // mask rows of the NEW corpus that happen to share ids
@@ -104,36 +106,17 @@ object IvfIndex extends IvfLayout {
           fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/$t"), true); ()
         }
     }
-    val prep = AnnIndex.prepared(df, idCol, embCol)
-      .repartition(BuildPartitions, col(idCol))
-      .sortWithinPartitions(idCol)
-      .persist()
-    // MLlib KMeans requires 2 <= k <= n (random init samples centers
-    // WITHOUT replacement): clamp so small corpora — a client's first
-    // tiny ingest, a cold-start admission batch — build instead of
-    // crashing in the aggregator. Fewer cells than asked only means
-    // coarser pruning; the query bound stays exact.
-    val n = prep.count()
-    require(n >= 2,
-      s"IvfIndex.build: need at least 2 vectors to build an index (got $n) " +
+    // the sample holds min(n, its cap) rows, so this is n >= 2
+    require(sample.length >= 2,
+      s"IvfIndex.build: need at least 2 vectors to build an index (got ${sample.length}) " +
         "— brute-force SimilaritySearch serves degenerate corpora")
-    val model = new KMeans()
-      .setK(math.max(2L, math.min(params.nCentroids.toLong, n)).toInt)
-      .setMaxIter(params.maxIter)
-      .setSeed(params.seed)
-      // seeded random init: k-means|| costs several extra distributed
-      // passes per build for marginally better coarse cells — IVF only
-      // needs a reasonable space partition (the query bound is exact for
-      // any centroid set), and random init keeps the build one
-      // iteration-loop of jobs
-      .setInitMode("random")
-      .setFeaturesCol("features")
-      .setPredictionCol("centroid_id")
-      .fit(prep)
-    val assigned = model.transform(prep)
-      .select(col(idCol), col(embCol), col("centroid_id"),
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__norm"))
+    val centers = Lloyd.fit(sample, params.nCentroids, params.maxIter, params.seed)
+    val cells = centers.indices.map(i => (i.toLong, centers(i)))
+    val assigned = prep
+      .select(col(idCol), col(embCol), col("features").cast("array<float>").as("__norm"))
+      .withColumn("__a", nearestCell(cells))
+      .select(col(idCol), col(embCol),
+        col("__a.centroid_id").cast("int").as("centroid_id"), col("__a.d").as("d"))
       .persist()
     try {
       assigned
@@ -144,22 +127,33 @@ object IvfIndex extends IvfLayout {
           _, params.nCentroids, col("centroid_id"), col(idCol)))
         .write.partitionBy("centroid_id").mode("overwrite")
         .parquet(s"$outPath/cells")
-      // one tiny frame per index: each cell's centroid plus the max
-      // distance of a member's normalized vector to it — the radius in
-      // the query-time triangle bound. (The fitted MLlib model is NOT
-      // persisted: retrieval needs only this, and the MLlib writer/reader
-      // round-trip costs more jobs than the rest of the build.)
+      // one tiny frame per index: each populated cell's centroid plus
+      // the max distance of a member's normalized vector to it — the
+      // radius in the query-time triangle bound
+      import spark.implicits._
       assigned
-        .join(broadcast(centersOf(df.sparkSession, model)), "centroid_id")
-        .withColumn("d", sqrt(graft.functions.l2_dist_sq(col("__norm"), col("center"))))
         .groupBy("centroid_id")
         .agg(max(col("d")).as("radius"))
-        .join(broadcast(centersOf(df.sparkSession, model)), "centroid_id")
+        .join(broadcast(centers.toSeq.zipWithIndex
+          .map { case (c, i) => (i, c) }.toDF("centroid_id", "center")), "centroid_id")
         .select(col("centroid_id"), col("center"), col("radius"))
         .write.mode("overwrite").parquet(s"$outPath/cells_meta")
-    } finally { assigned.unpersist(); prep.unpersist(); () }
-    model
+    } finally { assigned.unpersist(); () }
+    centers
   }
+
+  /** The one assignment rule of [[build]] and [[assignNew]]: the
+    * nearest of `cells` to `__norm` by L2, ties to the lower id —
+    * `struct(centroid_id, d)`, a per-row fold over a literal array.
+    */
+  private def nearestCell(cells: Seq[(Long, Array[Float])]): Column =
+    aggregate(typedLit(cells.sortBy(_._1)),
+      struct(lit(-1L).as("centroid_id"), lit(Double.PositiveInfinity).as("d")),
+      (acc, c) => {
+        val d = sqrt(graft.functions.l2_dist_sq(col("__norm"), c.getField("_2")))
+        when(d < acc.getField("d"),
+          struct(c.getField("_1").as("centroid_id"), d.as("d"))).otherwise(acc)
+      })
 
   /** Full RE-CLUSTER with an atomic generation swap — the repair for
     * the one drift mode the log-structured lifecycle (append → split →
@@ -372,8 +366,8 @@ object IvfIndex extends IvfLayout {
 
   /** Incremental index maintenance: fold NEW vectors into a built index
     * without re-clustering. Each new vector is assigned to its nearest
-    * existing centroid (one broadcast of the nCentroids-row metadata, no
-    * KMeans fit) and appended to that cell's parquet partition; the
+    * existing centroid (one collect of the nCentroids-row metadata, no
+    * re-fit) and appended to that cell's parquet partition; the
     * cell's stored radius grows to cover its new members.
     *
     * The exactness contract survives unconditionally: the query-time
@@ -385,7 +379,7 @@ object IvfIndex extends IvfLayout {
     * not a correctness one; re-cluster (full [[build]]) when probe
     * counts degrade, the same compact-when-it-pays discipline as any
     * log-structured index. At 100 TB this is the difference between a
-    * nightly KMeans over the whole corpus and a per-batch append that
+    * nightly re-cluster of the whole corpus and a per-batch append that
     * touches only the arriving rows plus one tiny metadata frame.
     *
     * Append-only contract: `newRows` ids must be disjoint from the ids
@@ -446,7 +440,7 @@ object IvfIndex extends IvfLayout {
           snapRows == Tables.read(spark, s"$indexPath/cells").count() &&
           snapCells == cellDirIds(spark, indexPath).sorted
       }
-    val assigned = assignNew(cellMeta, nCells, idCol, embCol, newRows)
+    val assigned = assignNew(cellMeta, idCol, embCol, newRows)
       .persist()
     try {
       assigned
@@ -587,45 +581,35 @@ object IvfIndex extends IvfLayout {
     */
   private[query] def assignNew(
       cellMeta: DataFrame,
-      nCells: Int,
       idCol: String,
       embCol: String,
       newRows: DataFrame): DataFrame = {
-    val prep = AnnIndex.prepared(
-      newRows.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
-      .select(col(idCol), col(embCol),
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__norm"))
-    // nearest existing centroid by the assignment metric (Euclidean on
-    // the normalized vector — the same metric build's KMeans assigned
-    // with), ties to the lower centroid id. Argmin as a k=1 topk_by on
-    // NEGATED distance ((-d) desc == d asc, ties id asc — the window's
-    // exact order): the map-side partial collapses each task to one row
-    // per batch id instead of shuffling the batch × nCentroids frame;
-    // embCol is unique per id, so first() is deterministic here
-    prep.crossJoin(broadcast(cellMeta))
-      .withColumn("d", sqrt(graft.functions.l2_dist_sq(col("__norm"), col("center"))))
+    // ≤ nCells rows (the probe-pruning collect bound)
+    val cells = cellMeta
+      .select(col("centroid_id").cast("long"), col("center").cast("array<float>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    // nearest existing centroid by the build's own assignment rule
+    // ([[nearestCell]]); embCol is unique per id after the exact-
+    // duplicate collapse, so first() is deterministic here
+    AnnIndex.prepared(newRows.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
+      .select(col(idCol), col(embCol), col("features").cast("array<float>").as("__norm"))
+      .withColumn("__a", nearestCell(cells))
       .groupBy(col(idCol))
-      .agg(
-        graft.functions.topk_by(col("centroid_id"), -col("d"), lit(1)).as("__t"),
-        first(col(embCol)).as(embCol),
+      .agg(first(col("__a")).as("__a"), first(col(embCol)).as(embCol),
         count(lit(1)).as("__nrows"))
-      // the unique-id contract above is ENFORCED, not assumed: under a
-      // duplicated batch id, first(embCol) could pair one duplicate's
-      // embedding with the other's argmin centroid. Exact duplicates
-      // were collapsed above, so each surviving id contributes exactly
-      // nCells rows to this aggregation (the cross join); any other
-      // count proves a CONFLICTING duplicate (same id, different
-      // embedding) — assert_true inside the filter fails the job
+      // the unique-id contract above is ENFORCED, not assumed: exact
+      // duplicates were collapsed above, so any id with more than one
+      // row is a CONFLICTING duplicate (same id, different embedding),
+      // and first() could pair one duplicate's embedding with the
+      // other's cell — assert_true inside the filter fails the job
       // naming the id, at zero extra jobs
-      .filter(assert_true(col("__nrows") === nCells,
+      .filter(assert_true(col("__nrows") === 1,
         concat(lit("IvfIndex.upsert: newRows contains a duplicated id ("),
           col(idCol).cast("string"),
           lit(") with conflicting embeddings — the append-only contract " +
             "requires one embedding per batch id"))).isNull)
       .select(col(idCol), col(embCol),
-        col("__t").getItem(0).getField("id").as("centroid_id"),
-        (-col("__t").getItem(0).getField("score")).as("d"))
+        col("__a.centroid_id").as("centroid_id"), col("__a.d").as("d"))
   }
 
   /** Compact the append-maintained cells table
@@ -791,14 +775,9 @@ object IvfIndex extends IvfLayout {
     // centers unchanged, max distance over a subset only shrinks —
     // deletes are the one lifecycle event where bounds IMPROVE
     val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
-    val normalized = new org.apache.spark.ml.feature.Normalizer()
-      .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(survivors.withColumn("__raw",
-        org.apache.spark.ml.functions.array_to_vector(
-          col(embCol).cast("array<double>"))))
+    val normalized = survivors
       .select(col("centroid_id"),
-        org.apache.spark.ml.functions.vector_to_array(col("__f"))
-          .cast("array<float>").as("__norm"))
+        graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
     val tightened = normalized
       .join(broadcast(cellMeta.select(col("centroid_id"), col("center"))),
         "centroid_id")
@@ -965,16 +944,10 @@ object IvfIndex extends IvfLayout {
       .collect().map(_.getLong(0)).toSet
     val orphans = cellDirIds(spark, indexPath).filterNot(metaIds).sorted
     if (orphans.isEmpty) return Nil
-    val members = new org.apache.spark.ml.feature.Normalizer()
-      .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(Tables.read(spark, s"$indexPath/cells")
-        .filter(col("centroid_id").isin(orphans: _*))
-        .withColumn("__raw",
-          org.apache.spark.ml.functions.array_to_vector(
-            col(embCol).cast("array<double>"))))
+    val members = Tables.read(spark, s"$indexPath/cells")
+      .filter(col("centroid_id").isin(orphans: _*))
       .select(col("centroid_id").as("__cid"),
-        org.apache.spark.ml.functions.vector_to_array(col("__f"))
-          .cast("array<float>").as("__norm"))
+        graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
     val updated = cellMeta
       .unionByName(centersAndRadii(members, 1e6).select(
         col("centroid_id").cast(cellMeta.schema("centroid_id").dataType),
@@ -1177,16 +1150,10 @@ object IvfIndex extends IvfLayout {
 
     // members of the hot cells only — pruned scan, normalized exactly
     // as the build's assignment pass ([[selfKnnGraph]] re-derive)
-    val members = new org.apache.spark.ml.feature.Normalizer()
-      .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(Tables.read(spark, s"$indexPath/cells")
-        .filter(col("centroid_id").isin(hot: _*))
-        .withColumn("__raw",
-          org.apache.spark.ml.functions.array_to_vector(
-            col(embCol).cast("array<double>"))))
+    val members = Tables.read(spark, s"$indexPath/cells")
+      .filter(col("centroid_id").isin(hot: _*))
       .select(col(idCol), col(embCol), col("centroid_id"),
-        org.apache.spark.ml.functions.vector_to_array(col("__f"))
-          .cast("array<float>").as("__norm"))
+        graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
       .localCheckpoint() // feeds stats, sides, rewrite AND is the
     // frame whose source directories the rewrite overwrites
 
@@ -1319,13 +1286,6 @@ object IvfIndex extends IvfLayout {
     SplitReport(splittable, degenerate, idPairs)
   }
 
-  private def centersOf(spark: SparkSession, model: KMeansModel): DataFrame = {
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("centroid_id", "center")
-  }
-
   /** The indexed rows with their normalized float vectors re-derived
     * exactly as the build's assignment pass (so stored radii bound
     * them): (idCol, embCol, centroid_id, __norm) — shared by every
@@ -1336,15 +1296,9 @@ object IvfIndex extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String): DataFrame =
-    new org.apache.spark.ml.feature.Normalizer()
-      .setInputCol("__raw").setOutputCol("__f").setP(2.0)
-      .transform(Tables.read(spark, s"$indexPath/cells")
-        .withColumn("__raw",
-          org.apache.spark.ml.functions.array_to_vector(
-            col(embCol).cast("array<double>"))))
+    Tables.read(spark, s"$indexPath/cells")
       .select(col(idCol), col(embCol), col("centroid_id"),
-        org.apache.spark.ml.functions.vector_to_array(col("__f"))
-          .cast("array<float>").as("__norm"))
+        graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
 
   /** Per-(cell, label) radii — max distance of a cell's members with
     * that label to the cell centroid. An nCells × nLabels frame,
@@ -1695,8 +1649,7 @@ object IvfIndex extends IvfLayout {
         queries.select(col(queryIdCol), col(queryVecCol).as("__qv")), queryIdCol, "__qv"),
         queries, queryIdCol, scope)
       .select((Seq(col(queryIdCol), col("__qv").as(queryVecCol)) ++ labelCols :+
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__qnorm")): _*)
+        col("features").cast("array<float>").as("__qnorm")): _*)
 
     // per (query, cell): probe-order distance + completeness bound
     val wCent = Window.partitionBy(col(queryIdCol))

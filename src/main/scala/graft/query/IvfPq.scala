@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** IVF + PQ composed index — the canonical two-level ANN layout
   * (Jégou et al.'s IVFADC shape, TPAMI 2011; public method, no code
-  * consulted): coarse KMeans cells prune whole PARTITION DIRECTORIES,
+  * consulted): coarse k-means cells prune whole PARTITION DIRECTORIES,
   * and within the probed cells a product-quantization code scan prunes
   * individual FETCHES. The two certified bounds stack:
   *
@@ -101,18 +101,16 @@ object IvfPq extends IvfLayout {
       outPath: String,
       params: Params = Params()): Unit = {
     val spark = df.sparkSession
+    // ONE sample feeds both fits: the IVF fit and the PQ fit each read
+    // their own MaxPointsPerCentroid · k prefix of it
+    val prep = AnnIndex.prepared(df, idCol, embCol)
+    val sample = Lloyd.sample(prep, idCol,
+      math.max(params.ivf.nCentroids, params.pq.codebookSize))
+    val centers = IvfIndex.buildFitted(prep, idCol, embCol, outPath, params.ivf, sample)
     if (!params.residual) {
-      // the coarse IVF build and the PQ codebook fits are INDEPENDENT
-      // job chains (codebooks fit on the sampled normalized subvectors,
-      // not on anything the IVF build writes) — run them concurrently
-      // (§2.6: each alone is a barrier-heavy sequence of small KMeans
-      // iteration jobs that leaves most cores idle). The codebooks
-      // TABLE is written only after the IVF build returns: its artifact
-      // pre-clean deletes any codebooks it finds at this path.
-      val (_, codebooks) = graft.util.Par.both(spark, "IvfPq.build")(
-        IvfIndex.build(df, idCol, embCol, outPath, params.ivf),
-        PqIndex.fitCodebooksSampled(df, idCol, embCol, params.pq))
-      PqIndex.writeCodebooks(spark, codebooks, outPath)
+      // the codebooks TABLE is written only after the IVF build
+      // returns: its artifact pre-clean deletes any codebooks it finds
+      PqIndex.fitCodebooks(spark, sample, params.pq, outPath)
       // encode every vector and co-partition the codes WITH their cell:
       // the cell-level bound then prunes code directories before a
       // single code is read
@@ -127,25 +125,14 @@ object IvfPq extends IvfLayout {
     } else {
       // RESIDUAL mode ([[Params.residual]]): codebooks fit on
       // (normalized vector − cell centroid), codes priced against the
-      // per-row generation center — the fit DEPENDS on the IVF build's
-      // centers, so it cannot overlap the IVF build itself. It does
-      // NOT depend on the corpus-sized residual spill below, though:
-      // the fit reads only the hash-sample, recomputed lazily straight
-      // from the build output, so the fit chain and the spill write
-      // overlap as concurrent jobs (§2.6). The fit's pinned layout
-      // ([[PqIndex.BuildPartitions]] repartition + sort) makes the
-      // codebooks bit-identical to the spill-fed fit it replaces.
-      IvfIndex.build(df, idCol, embCol, outPath, params.ivf)
+      // per-row generation center. The sample's residuals use the
+      // build's own assignment rule, so each is exactly the residual
+      // its row is encoded with below
+      PqIndex.fitCodebooks(spark, sample.map { p =>
+        val c = centers(Lloyd.nearestCenter(p, centers))
+        Array.tabulate(p.length)(j => p(j) - c(j))
+      }, params.pq, outPath)
       val meta = Tables.read(spark, s"$outPath/cells_meta")
-      def residualsOf(base: DataFrame): DataFrame = base
-        .join(broadcast(meta.select(col("centroid_id"), col("center"))),
-          "centroid_id")
-        .withColumn("__res",
-          zip_with(col("__norm"), col("center"),
-            (a, b) => (a - b).cast("float")))
-        .select(col(idCol), col("centroid_id"), col("__res"))
-      val assigned = IvfIndex.normalizedAssigned(spark, outPath, idCol, embCol)
-      val fitBase = PqIndex.fitSample(assigned, idCol, params.pq)
       // the residual frame is CORPUS-sized and feeds the encode: spill
       // it to a parquet temp table under the index path instead of
       // localCheckpoint — checkpoint blocks are executor-resident and
@@ -155,13 +142,15 @@ object IvfPq extends IvfLayout {
       // win or lose
       val tmpResiduals = s"$outPath/_tmp_residuals"
       try {
-        val (codebooks, _) = graft.util.Par.both(spark, "IvfPq.build.residual")(
-          PqIndex.fitCodebooks(
-            PqIndex.subspaceRowsOf(residualsOf(fitBase), idCol, "__res", params.pq),
-            idCol, params.pq),
-          residualsOf(assigned).write.mode("overwrite").parquet(tmpResiduals))
+        IvfIndex.normalizedAssigned(spark, outPath, idCol, embCol)
+          .join(broadcast(meta.select(col("centroid_id"), col("center"))),
+            "centroid_id")
+          .withColumn("__res",
+            zip_with(col("__norm"), col("center"),
+              (a, b) => (a - b).cast("float")))
+          .select(col(idCol), col("centroid_id"), col("__res"))
+          .write.mode("overwrite").parquet(tmpResiduals)
         val residuals = Tables.read(spark, tmpResiduals)
-        PqIndex.writeCodebooks(spark, codebooks, outPath)
         // enc tables FIRST (append-only; codes reference them) — the
         // residual-mode marker is the enc_centers table itself
         meta.select(col("centroid_id").cast("long").as("enc_id"), col("center"))
@@ -207,7 +196,7 @@ object IvfPq extends IvfLayout {
     IvfIndex.upsertCells(spark, indexPath, idCol, embCol, newRows)
     val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
     val nCells = cellMeta.count().toInt.max(1)
-    val assignment = IvfIndex.assignNew(cellMeta, nCells, idCol, embCol, newRows)
+    val assignment = IvfIndex.assignNew(cellMeta, idCol, embCol, newRows)
       .select(col(idCol), col("centroid_id"))
     val codebooks = PqIndex.codebooksDf(spark, indexPath)
     if (!isResidual(spark, indexPath)) {
@@ -236,9 +225,7 @@ object IvfPq extends IvfLayout {
         Tables.read(spark, s"$indexPath/enc_centers"))
       val prep = AnnIndex.prepared(
           newRows.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
-        .select(col(idCol),
-          org.apache.spark.ml.functions.vector_to_array(col("features"))
-            .cast("array<float>").as("__norm"))
+        .select(col(idCol), col("features").cast("array<float>").as("__norm"))
       val residuals = prep
         .join(assignment, idCol)
         .join(encCur, col("centroid_id").cast("long") === col("__ecell"))
@@ -613,8 +600,7 @@ object IvfPq extends IvfLayout {
         queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
         queryIdCol, "__qv"), queries, queryIdCol, scope)
       .select((Seq(col(queryIdCol), col("__qv")) ++ labelCols :+
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .cast("array<float>").as("__qnorm")): _*)
+        col("features").cast("array<float>").as("__qnorm")): _*)
     // the ADC lookup tables: global mode prices every code against one
     // LUT per query; residual mode prices a code against the LUT of
     // ITS encoding generation — one LUT per (query, enc_id), built

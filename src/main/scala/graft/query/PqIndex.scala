@@ -2,8 +2,6 @@ package graft.query
 
 import graft.Tables
 import graft.functions.{cosine_sim, l2_dist_sq}
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,41 +38,26 @@ import org.apache.spark.sql.functions._
   * crossed with a broadcast query batch — no shuffle of the corpus.
   * The exact-verify fetch is an equi-join on the id-hash-partitioned
   * vectors table, carrying only bound-surviving candidates. Builds are
-  * one pass to encode plus `numSub` tiny k-means fits (optionally over
-  * a deterministic hash-sample of the corpus via `Params.fitSampleMod`
-  * — codebooks only need the distribution's shape, and the exactness
-  * contract is codebook-independent).
+  * one pass to encode plus `numSub` driver-side k-means fits over one
+  * bounded sample ([[Lloyd]]) — codebooks only need the distribution's
+  * shape, and the exactness contract is codebook-independent.
   */
 object PqIndex {
 
   /** numSub × codebookSize defaults give 8 × 4-bit codes for the
     * fixture's d=64 (`dim` is a declared contract, as everywhere in the
     * vector family — array columns carry no width in their schema).
-    * `fitSampleMod > 1` fits codebooks on the deterministic hash-sample
-    * `hash(id) % fitSampleMod == 0` — at corpus scale the fit input
-    * must not be the corpus, and a hash-sample keeps builds
-    * re-run-identical where `df.sample`'s rand() is not.
     */
   case class Params(
       dim: Int = 64,
       numSub: Int = 8,
       codebookSize: Int = 16,
       maxIter: Int = 10,
-      seed: Long = 42L,
-      fitSampleMod: Int = 1) {
+      seed: Long = 42L) {
     require(dim % numSub == 0,
       s"PqIndex: embedding dim $dim must be divisible by numSub=$numSub")
     def subDim: Int = dim / numSub
   }
-
-  /** Same fixed fit layout as [[IvfIndex.BuildPartitions]]: KMeans'
-    * tree aggregation sums floats in partition/row order, so without
-    * the pin codebooks (and codes) would depend on the session's core
-    * count. Correctness never does — the query-time bound is exact for
-    * ANY codebook — but an index built at local[4] must be
-    * bit-identical to one built at local[32].
-    */
-  val BuildPartitions = 8
 
   /** Absorbs float-vs-double kernel noise between the stored bounds
     * and the exact rerank (the [[IvfIndex]] RadiusPad discipline):
@@ -103,37 +86,6 @@ object PqIndex {
   private[query] def codebooksDf(spark: SparkSession, indexPath: String): DataFrame =
     broadcast(Tables.read(spark, s"$indexPath/codebooks"))
 
-  /** Slice an already-prepared float-array column into per-subspace
-    * rows for the codebook FIT: (idCol, sub, __subvec). Subspaces
-    * partition the dimensions, so ‖q − x‖² = Σ_sub ‖q_sub − x_sub‖²
-    * exactly. The fit is the one step that slices by [[Params]] — no
-    * codebooks exist yet; every later encode slices by the codebooks
-    * it is given ([[sliced]]). No normalization happens here: a
-    * residual is the DIFFERENCE of a unit vector and its cell center,
-    * and re-normalizing it would destroy the ‖q − x̂‖ identity the ADC
-    * bound rests on.
-    */
-  private[query] def subspaceRowsOf(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      params: Params): DataFrame =
-    df
-      .select(col(idCol), col(vecCol).cast("array<float>").as("__pqv"))
-      .withColumn("sub", explode(sequence(lit(0), lit(params.numSub - 1))))
-      .withColumn("__subvec",
-        slice(col("__pqv"), col("sub") * params.subDim + 1, lit(params.subDim)))
-      .drop("__pqv")
-
-  /** The deterministic codebook-fit sample ([[Params.fitSampleMod]]):
-    * `hash(id) % fitSampleMod == 0`, or every row when the mod is 1 —
-    * the one definition both families' fits read.
-    */
-  private[query] def fitSample(df: DataFrame, idCol: String, params: Params): DataFrame =
-    if (params.fitSampleMod > 1)
-      df.filter(pmod(hash(col(idCol)), lit(params.fitSampleMod)) === 0)
-    else df
-
   /** Each vector row crossed with the codebooks, subvector sliced out:
     * one row per (vector row, codebook row `sub`), `__subvec` the
     * `subDim = size(centers[0])` floats subspace `sub` covers. The
@@ -159,12 +111,14 @@ object PqIndex {
       codebooks: DataFrame): DataFrame =
     encodeRows(
       AnnIndex.prepared(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
-        .select(col(idCol), vector_to_array(col("features")).as("__prep")),
+        .select(col(idCol), col("features").as("__prep")),
       idCol, "__prep", codebooks)
 
   /** [[encode]] over an already-prepared vector column, with no
     * normalization: the residual path's encoder (a residual must not
-    * be re-normalized — see [[subspaceRowsOf]]). Exact duplicate
+    * be re-normalized: it is the DIFFERENCE of a unit vector and its
+    * cell center, and re-normalizing it would destroy the ‖q − x̂‖
+    * identity the ADC bound rests on). Exact duplicate
     * (id, vec) rows collapse; deduping by id alone would silently
     * encode an arbitrary copy of a CONFLICTING duplicate, which must
     * instead fail in [[encodeRows]].
@@ -195,9 +149,9 @@ object PqIndex {
       .withColumn("__best",
         aggregate(
           // iterate the codebook's ACTUAL length, not the nominal
-          // params.codebookSize: the fit clamps K to the corpus size
-          // (cold-start corpora — see kEff at the fit), and a static
-          // bound would index past the centers array exactly there
+          // params.codebookSize: [[Lloyd.fit]] clamps K to the distinct
+          // sample points (cold-start corpora), and a static bound
+          // would index past the centers array exactly there
           sequence(lit(0), size(col("centers")) - 1),
           struct(lit(-1).as("code"), lit(Double.MaxValue).as("d2")),
           (acc, j) => {
@@ -205,20 +159,22 @@ object PqIndex {
             when(dd < acc.getField("d2"),
               struct(j.cast("int").as("code"), dd.as("d2"))).otherwise(acc)
           }))
-      .select(col(idCol), col("sub"),
-        col("__best.code").as("code"), col("__best.d2").as("d2"))
       .groupBy(col(idCol))
-      .agg(
-        collect_list(struct(col("sub"), col("code"))).as("__sc"),
-        sum(col("d2")).as("__r2"))
+      .agg(collect_list(struct(col("sub"), col("__best.code").as("code"),
+        col("__best.d2").as("d2"))).as("__sc"))
       .filter(assert_true(size(col("__sc")) === size(array_distinct(col("__sc.sub"))),
         concat(lit("PqIndex: input contains a duplicated id ("),
           col(idCol).cast("string"),
           lit(") with conflicting embeddings — one embedding per id " +
             "is required"))).isNull)
+      // codes AND the residual fold in ascending subspace order, so
+      // `resid` is a function of the vector and the codebooks alone —
+      // never of the grouping a partial aggregation met the terms in
+      .withColumn("__sc", array_sort(col("__sc")))
       .select(col(idCol),
-        transform(array_sort(col("__sc")), s => s.getField("code")).as("codes"),
-        sqrt(col("__r2")).as("resid"))
+        transform(col("__sc"), s => s.getField("code")).as("codes"),
+        sqrt(aggregate(col("__sc"), lit(0.0), (r2, s) => r2 + s.getField("d2")))
+          .as("resid"))
 
   /** Fit per-subspace codebooks, encode every vector, persist
     * `codebooks/` (numSub rows), `codes/` (the compact scan table) and
@@ -235,96 +191,52 @@ object PqIndex {
     // a fresh build indexes exactly `df`: a stale delete log from a
     // previous index at this path must not mask the new corpus
     Tombstones.clear(spark, outPath)
-    // the codebook fits and the vectors-table write are independent
-    // job chains — overlap them (§2.6: the fit alone is numSub
-    // barriered KMeans iteration loops that leave most cores idle)
-    val (codebooks, _) = graft.util.Par.both(spark, "PqIndex.build")(
-      fitCodebooksSampled(df, idCol, embCol, params),
-      AnnIndex.prepared(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
-        .select(col(idCol), col(embCol))
-        .withColumn("__vbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
-        .transform(graft.util.PartitionedWrite.spread(
-          _, IndexBuckets, col("__vbucket"), col(idCol)))
-        .write.mode("overwrite").partitionBy("__vbucket").parquet(s"$outPath/vectors"))
-    writeCodebooks(spark, codebooks, outPath)
-    encode(df, idCol, embCol, codebooksDf(spark, outPath))
-      .withColumn("__cbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
-      .transform(graft.util.PartitionedWrite.spread(
-        _, IndexBuckets, col("__cbucket"), col(idCol)))
-      .write.mode("overwrite").partitionBy("__cbucket").parquet(s"$outPath/codes")
+    val prep = AnnIndex.prepared(df.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
+    fitCodebooks(spark, Lloyd.sample(prep, idCol, params.codebookSize), params, outPath)
+    writeRows(spark, outPath, idCol, embCol, df, "overwrite")
   }
 
-  /** Sample ([[fitSample]]), normalize and fit — no write, so a caller
-    * can overlap the fit with an independent job chain (guide §2.6)
-    * and write the table when the path is safe.
+  /** Encode `rows` against the index's stored codebooks and write
+    * `codes/` then `vectors/`, both id-hash partitioned like
+    * [[AnnIndex]]'s tables — [[build]] overwrites, [[upsert]] appends.
     */
-  private[query] def fitCodebooksSampled(
-      df: DataFrame,
+  private def writeRows(
+      spark: SparkSession,
+      indexPath: String,
       idCol: String,
       embCol: String,
-      params: Params): Seq[(Int, Seq[Seq[Float]])] =
-    fitCodebooks(
-      subspaceRowsOf(
-        AnnIndex.prepared(fitSample(df, idCol, params), idCol, embCol)
-          .select(col(idCol),
-            vector_to_array(col("features")).cast("array<float>").as("__prep")),
-        idCol, "__prep", params),
-      idCol, params)
-
-  /** The fitting core over any per-subspace row source ((idCol, sub,
-    * __subvec) — [[subspaceRowsOf]] over normalized vectors or
-    * residuals); the caller owns sampling. Returns the fitted
-    * (sub, centers) rows so a caller can overlap the fit with another
-    * independent job chain (guide §2.6) and write the table only when
-    * the path is safe to write (e.g. after [[IvfIndex.build]]'s
-    * artifact pre-clean, which deletes any codebooks table it finds).
-    */
-  private[query] def fitCodebooks(
-      subRowsIn: DataFrame,
-      idCol: String,
-      params: Params): Seq[(Int, Seq[Seq[Float]])] = {
-    // one materialized pass feeds all numSub fits with the pinned
-    // layout; each fit reads only its 8-dim slice
-    val subRows = subRowsIn
-      .repartition(BuildPartitions, col(idCol))
-      .sortWithinPartitions(idCol, "sub")
-      .persist()
-    try {
-      // MlLib KMeans needs 2 <= k <= n (see IvfIndex.build): clamp so
-      // tiny fit inputs produce coarser codebooks instead of crashing —
-      // residuals grow, answers don't move
-      val nFit = subRows.count() / params.numSub
-      require(nFit >= 2,
-        s"PqIndex: need at least 2 vectors to fit codebooks (got $nFit)")
-      val kEff = math.max(2L, math.min(params.codebookSize.toLong, nFit)).toInt
-      // the numSub fits are independent — submit them as concurrent
-      // Spark jobs (each fit's input and seed are fixed, so scheduling
-      // order cannot move a codebook); sequentially this is
-      // numSub × maxIter scheduler round-trips of tiny jobs, the
-      // dominant build cost
-      graft.util.Par.all(subRows.sparkSession, "PqIndex.fitCodebooks")(
-        (0 until params.numSub).map { m => () =>
-          val model = new KMeans()
-            .setK(kEff)
-            .setMaxIter(params.maxIter)
-            .setSeed(params.seed + m)
-            .setInitMode("random") // the IvfIndex rationale: codebooks
-            // only need a reasonable partition of the subspace; the
-            // query bound is exact for any codebook
-            .setFeaturesCol("__f")
-            .fit(subRows.filter(col("sub") === m)
-              .withColumn("__f", array_to_vector(col("__subvec").cast("array<double>"))))
-          (m, model.clusterCenters.toSeq.map(_.toArray.toSeq.map(_.toFloat)))
-        }: _*)
-    } finally { subRows.unpersist(); () }
+      rows: DataFrame,
+      mode: String): Unit = {
+    def write(df: DataFrame, table: String, bucketCol: String): Unit =
+      df.withColumn(bucketCol, pmod(hash(col(idCol)), lit(IndexBuckets)))
+        .transform(graft.util.PartitionedWrite.spread(
+          _, IndexBuckets, col(bucketCol), col(idCol)))
+        .write.mode(mode).partitionBy(bucketCol).parquet(s"$indexPath/$table")
+    write(encode(rows, idCol, embCol, codebooksDf(spark, indexPath)), "codes", "__cbucket")
+    write(rows.dropDuplicates(Seq(idCol, embCol)).select(col(idCol), col(embCol)),
+      "vectors", "__vbucket")
   }
 
-  private[query] def writeCodebooks(
+  /** Fit per-subspace codebooks on a collected sample of normalized
+    * vectors or residuals ([[Lloyd.sample]]) and write `codebooks/`:
+    * subspace `m` is dims `[m·subDim, (m+1)·subDim)` of every sample
+    * row — the geometry is decided here, once, and every later encode
+    * reads it from the codebooks. Subspaces partition the dimensions,
+    * so ‖q − x‖² = Σ_sub ‖q_sub − x_sub‖² exactly.
+    */
+  private[query] def fitCodebooks(
       spark: SparkSession,
-      codebooks: Seq[(Int, Seq[Seq[Float]])],
+      sample: Array[Array[Float]],
+      params: Params,
       outPath: String): Unit = {
     import spark.implicits._
-    codebooks.toDF("sub", "centers")
+    (0 until params.numSub)
+      .map { m =>
+        val sub = sample.map(_.slice(m * params.subDim, (m + 1) * params.subDim))
+        (m, Lloyd.fit(sub, params.codebookSize, params.maxIter, params.seed + m)
+          .toSeq.map(_.toSeq))
+      }
+      .toDF("sub", "centers")
       .repartition(1)
       .write.mode("overwrite").parquet(s"$outPath/codebooks")
   }
@@ -345,19 +257,8 @@ object PqIndex {
       indexPath: String,
       idCol: String,
       embCol: String,
-      newRows: DataFrame): Unit = {
-    encode(newRows, idCol, embCol, codebooksDf(spark, indexPath))
-      .withColumn("__cbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
-      .transform(graft.util.PartitionedWrite.spread(
-        _, IndexBuckets, col("__cbucket"), col(idCol)))
-      .write.mode("append").partitionBy("__cbucket").parquet(s"$indexPath/codes")
-    AnnIndex.prepared(newRows.dropDuplicates(Seq(idCol, embCol)), idCol, embCol)
-      .select(col(idCol), col(embCol))
-      .withColumn("__vbucket", pmod(hash(col(idCol)), lit(IndexBuckets)))
-      .transform(graft.util.PartitionedWrite.spread(
-        _, IndexBuckets, col("__vbucket"), col(idCol)))
-      .write.mode("append").partitionBy("__vbucket").parquet(s"$indexPath/vectors")
-  }
+      newRows: DataFrame): Unit =
+    writeRows(spark, indexPath, idCol, embCol, newRows, "append")
 
   /** Compact the append-maintained tables off the query path
     * ([[graft.util.Compaction]] — partition layout preserved).
@@ -444,7 +345,7 @@ object PqIndex {
             queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
             queryIdCol, "__qv")
           .select(col(queryIdCol), col("__qv"),
-            vector_to_array(col("features")).cast("array<float>").as("__prep")),
+            col("features").cast("array<float>").as("__prep")),
         "__prep", codebooksDf(spark, indexPath))
       .groupBy(col(queryIdCol))
       .agg(

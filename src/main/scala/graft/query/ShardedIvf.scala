@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** HORIZONTAL composition of IVF indexes — the shape a 100 TB corpus
   * actually serves from. One monolithic index has three scale walls a
-  * shard set does not: the coarse KMeans fit is one job over the whole
-  * corpus (a shard fits over 1/Nth, bounded build memory and
-  * restartable per shard); every maintenance pass (split, compaction,
+  * shard set does not: the build's assignment and write passes run
+  * over the whole corpus at once (a shard builds over 1/Nth, bounded
+  * and restartable per shard); every maintenance pass (split, compaction,
   * re-cluster) fences the whole artifact (a shard set repairs ONE
   * shard per window — rolling maintenance); and the per-index
   * driver-bounded collects (probed cell ids) grow with nCentroids ~ √n
@@ -48,10 +48,7 @@ object ShardedIvf {
   /** Hash-partition `df` across `n` shards and build each one — N
     * INDEPENDENT builds over 1/Nth of the corpus each (restartable,
     * memory-bounded), not one corpus-wide fit. `composed` builds the
-    * memory-bound [[IvfPq]] layout per shard instead; its codebook fit
-    * samples by pmod of the SAME id hash ([[PqIndex.fitSample]]), so
-    * `pqParams.fitSampleMod` must be coprime to `n` — otherwise shard
-    * i holds no sampled row unless gcd(n, fitSampleMod) divides i.
+    * memory-bound [[IvfPq]] layout per shard instead.
     */
   def build(
       df: DataFrame,
@@ -63,20 +60,16 @@ object ShardedIvf {
       composed: Boolean = false,
       pqParams: PqIndex.Params = PqIndex.Params()): Unit = {
     require(n >= 1, s"ShardedIvf.build: need at least 1 shard (got $n)")
-    require(!composed || BigInt(n).gcd(pqParams.fitSampleMod) == 1,
-      s"ShardedIvf.build: fitSampleMod=${pqParams.fitSampleMod} shares a factor " +
-        s"with n=$n shards — some shards would get an empty codebook-fit " +
-        "sample; use a fitSampleMod coprime to n")
     val spark = df.sparkSession
     import spark.implicits._
     // shards build CONCURRENTLY (the [[queryTopK]] concurrent-probe
     // pattern, guide §2.6): the N builds are independent job chains
     // over disjoint slices into disjoint directories, and each chain is
-    // mostly small sequential jobs (KMeans iterations, metadata writes)
-    // that leave the cluster idle between barriers — overlapping them
+    // mostly small sequential jobs (sample collect, metadata writes)
+    // that leave the cluster idle between them — overlapping them
     // back-fills that idle time. Each build is deterministic in
-    // isolation (fixed seed, pinned fit layout), so completion order
-    // cannot move a byte of any shard.
+    // isolation (a fixed seed over a layout-independent sample), so
+    // completion order cannot move a byte of any shard.
     graft.util.Par.all(spark, "ShardedIvf.build")((0 until n).map { i => () =>
       val part = df.filter(shardOf(idCol, n) === i)
       if (composed)

@@ -92,7 +92,7 @@ object StreamingSemanticDedup {
     // k = batch+1 the best legitimate match always survives (at most
     // batch poison rows can outrank it). The per-query top-k heap is
     // batch-sized, which the micro-batch contract bounds.
-    // Before the index exists (KMeans needs ≥ 2 rows), the admitted-
+    // Before the index exists (a build needs ≥ 2 rows), the admitted-
     // so-far corpus is the tiny `seed/` stash — probed by a broadcast
     // exact join; the seed holds at most one row by the build-as-soon-
     // as-two invariant below.
@@ -156,7 +156,7 @@ object StreamingSemanticDedup {
 
     // fold the admitted into the index; before the index exists the
     // admitted-so-far set stashes in `seed/` until it reaches the two
-    // rows a KMeans build needs (a cold start whose first batch admits
+    // rows an index build needs (a cold start whose first batch admits
     // a single vector), then builds and drops the seed. Optional split
     // keeps occupancy bounded under continuous admission.
     val admitted = vecs.join(
@@ -172,8 +172,7 @@ object StreamingSemanticDedup {
         else admitted).localCheckpoint()
         val n = total.count()
         if (n >= 2) {
-          IvfIndex.build(total, "vec_id", "embedding", idx,
-            IvfIndex.Params(nCentroids = math.min(16L, n).toInt))
+          IvfIndex.build(total, "vec_id", "embedding", idx)
           val p = new org.apache.hadoop.fs.Path(seedPath)
           p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
           ()

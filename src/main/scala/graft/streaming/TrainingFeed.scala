@@ -227,7 +227,7 @@ object TrainingFeed {
       if (n > 0) {
         if (!exists(spark, s"$indexPath/cells_meta"))
           IvfIndex.build(vecs, "doc_id", "embedding", indexPath,
-            IvfIndex.Params(nCentroids = math.min(cfg.nCentroids.toLong, n).toInt))
+            IvfIndex.Params(nCentroids = cfg.nCentroids))
         else {
           // CDC convergence, mirroring [[IndexMaintenance.applyBatch]]
           // (r21, ADVICE item 2): with a delete channel open

@@ -64,8 +64,7 @@ object DeletionCurve {
       }
       rm(new java.io.File(root))
       val ivfP = IvfIndex.Params(nCentroids = nCentroids, maxIter = 5)
-      val pqP = PqIndex.Params(dim = dim, numSub = 4, codebookSize = 16,
-        fitSampleMod = math.max(1, (n / 50000).toInt))
+      val pqP = PqIndex.Params(dim = dim, numSub = 4, codebookSize = 16)
       IvfIndex.build(e.select("vec_id", "embedding"), "vec_id", "embedding",
         s"$root/ivf", ivfP)
       IvfPq.build(e.select("vec_id", "embedding"), "vec_id", "embedding",

@@ -41,7 +41,7 @@ object PlanAudit {
     if (what == "q25" || what == "all") {
       import graft.query.AnnIndex
       val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-      val prep = AnnIndex.prepared(e, "vec_id", "embedding").cache()
+      val prep = AnnIndex.hashInput(AnnIndex.prepared(e, "vec_id", "embedding")).cache()
       timed("q25 prepared")(println(s"[audit] vectors: ${prep.count()}"))
       val model = timed("q25 fit")(AnnIndex.fit(prep))
       val dist = math.sqrt(2.0 - 2.0 * 0.35)

@@ -98,8 +98,7 @@ object ScalingCurve {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
       rm(new java.io.File(root))
-      val pqP = PqIndex.Params(dim = dim, numSub = 4, codebookSize = 16,
-        fitSampleMod = math.max(1, (n / 50000).toInt))
+      val pqP = PqIndex.Params(dim = dim, numSub = 4, codebookSize = 16)
       val ivfP = IvfIndex.Params(nCentroids = nCentroids, maxIter = 5)
       val buildIvf = timed(IvfIndex.build(
         e.select("vec_id", "embedding"), "vec_id", "embedding", s"$root/ivf", ivfP))

@@ -35,8 +35,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     val e = Tables(spark, Sf0001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft-fpq-fix").toString
     val params = IvfPq.Params(
-      ivf = IvfIndex.Params(nCentroids = 8),
-      pq = PqIndex.Params(fitSampleMod = 4))
+      ivf = IvfIndex.Params(nCentroids = 8))
     IvfPq.build(e.select("vec_id", "embedding"), "vec_id", "embedding", dir, params)
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
@@ -133,8 +132,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     val e = Tables(spark, Sf0001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft-fpq-meta").toString
     val params = IvfPq.Params(
-      ivf = IvfIndex.Params(nCentroids = 8),
-      pq = PqIndex.Params(fitSampleMod = 4))
+      ivf = IvfIndex.Params(nCentroids = 8))
     IvfPq.build(e.select("vec_id", "embedding"), "vec_id", "embedding", dir, params)
     IvfIndex.buildLabelMeta(spark, dir, "vec_id", "embedding",
       e.select("vec_id", "label"), "label")
@@ -188,8 +186,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     val e = Tables(spark, Sf0001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft-fpq-any").toString
     val params = IvfPq.Params(
-      ivf = IvfIndex.Params(nCentroids = 8),
-      pq = PqIndex.Params(fitSampleMod = 4))
+      ivf = IvfIndex.Params(nCentroids = 8))
     IvfPq.build(e.select("vec_id", "embedding"), "vec_id", "embedding", dir, params)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.{IndexCheck, IvfIndex, IvfPq, LexicalSearch, PqIndex, Tombstones}
+import graft.query.{IndexCheck, IvfIndex, IvfPq, LexicalSearch, Tombstones}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,8 +37,7 @@ class IndexCheckSpec extends AnyFunSuite with SharedSpark {
 
     val pqDir = tmp("healthy-pq")
     IvfPq.build(e, "vec_id", "embedding", pqDir,
-      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8),
-        pq = PqIndex.Params(fitSampleMod = 4)))
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8)))
     val composed = checks(IndexCheck.checkIvf(spark, pqDir, "vec_id", "embedding"))
     assert(composed.contains("codes_align"))
     assert(composed.values.forall(_._1), s"healthy composed index flagged: $composed")
@@ -46,8 +45,7 @@ class IndexCheckSpec extends AnyFunSuite with SharedSpark {
     // residual mode adds (and passes) the enc-reference check
     val resDir = tmp("healthy-res")
     IvfPq.build(e, "vec_id", "embedding", resDir,
-      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8),
-        pq = PqIndex.Params(fitSampleMod = 4), residual = true))
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8), residual = true))
     val res = checks(IndexCheck.checkIvf(spark, resDir, "vec_id", "embedding"))
     assert(res.contains("enc_refs"))
     assert(res.values.forall(_._1), s"healthy residual index flagged: $res")
@@ -87,8 +85,7 @@ class IndexCheckSpec extends AnyFunSuite with SharedSpark {
     // composed: a code row whose vector is gone (stale) + one missing
     val cDir = tmp("codes")
     IvfPq.build(e, "vec_id", "embedding", cDir,
-      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8),
-        pq = PqIndex.Params(fitSampleMod = 4)))
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8)))
     val pruned = spark.read.parquet(s"$cDir/cell_codes")
       .filter(col("vec_id") =!= 3L).localCheckpoint()
     pruned.write.mode("overwrite").partitionBy("centroid_id")

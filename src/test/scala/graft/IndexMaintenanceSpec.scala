@@ -217,7 +217,6 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivfpqres-ckpt").toString
     val params = graft.query.IvfPq.Params(
       ivf = IvfIndex.Params(nCentroids = 4),
-      pq = graft.query.PqIndex.Params(fitSampleMod = 4),
       residual = true)
     graft.query.IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) < 7),
       "vec_id", "embedding", dir, params)

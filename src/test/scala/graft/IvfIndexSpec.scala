@@ -39,6 +39,44 @@ class IvfIndexSpec extends AnyFunSuite with SharedSpark {
     assert(topkSet(ivf) == topkSet(exact))
   }
 
+  test("cells and assignment are bit-identical at any input layout and shuffle width") {
+    val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
+    def buildAt(parts: Int, shuffle: Int): String = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-ivf-det$parts").toString
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      try {
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle.toString)
+        IvfIndex.build(e.repartition(parts), "vec_id", "embedding", dir,
+          IvfIndex.Params(nCentroids = 8))
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      dir
+    }
+    def meta(d: String) = spark.read.parquet(s"$d/cells_meta")
+      .collect().map(r => (r.getAs[Int]("centroid_id"),
+        r.getSeq[Float](r.fieldIndex("center")), r.getAs[Double]("radius")))
+      .sortBy(_._1).toSeq
+    def assignment(d: String) = spark.read.parquet(s"$d/cells")
+      .select(col("vec_id").cast("long"), col("centroid_id").cast("int"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
+    val (a, b) = (buildAt(2, 3), buildAt(7, 11))
+    assert(meta(a).size > 1)
+    assert(meta(a) == meta(b), "cells_meta (center, radius) moved with the layout")
+    assert(assignment(a) == assignment(b), "the (id, centroid_id) assignment moved")
+  }
+
+  test("the fit clamps k to the distinct vectors: one zero-radius cell each") {
+    import spark.implicits._
+    // 30 rows, 3 distinct directions, 16 centroids asked for
+    val e = (0L until 30L).map { i =>
+      val v = Array.fill(4)(0f); v((i % 3).toInt) = 1f + i; (i, v)
+    }.toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-clamp").toString
+    IvfIndex.build(e, "vec_id", "embedding", dir, IvfIndex.Params(nCentroids = 16))
+    val meta = spark.read.parquet(s"$dir/cells_meta")
+    assert(meta.count() == 3)
+    assert(meta.filter(col("radius") =!= 0.0).isEmpty)
+  }
+
   test("clustered corpus: bound stays exact where pruning actually bites") {
     import spark.implicits._
     // 4 tight clusters around orthogonal axes: cell radii are small, so

@@ -56,7 +56,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
   test("isotropic fixture: residual-mode top-k EQUALS the exact top-k") {
     val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
     val dir = tmp("fixture")
-    val p = IvfPq.Params(pq = PqIndex.Params(fitSampleMod = 4), residual = true)
+    val p = IvfPq.Params(residual = true)
     IvfPq.build(e, "vec_id", "embedding", dir, p)
     assert(IvfPq.isResidual(spark, dir))
     val queries = e.filter(col("vec_id") < 10)

@@ -143,12 +143,19 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
       m != null && m.contains("1000") && m.contains("conflicting")))
   }
 
-  test("codes are build-layout-independent (the BuildPartitions pin)") {
+  test("codes are build-layout-independent (any shuffle, any layout)") {
     val e = clustered(120L)
     val d1 = tmp("det1")
     val d2 = tmp("det2")
     PqIndex.build(e.repartition(2), "vec_id", "embedding", d1, SmallParams)
-    PqIndex.build(e.repartition(7), "vec_id", "embedding", d2, SmallParams)
+    // a different input partitioning AND a different shuffle width: the
+    // driver-side fit and the subspace-ordered residual fold must not
+    // see either
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "11")
+      PqIndex.build(e.repartition(7), "vec_id", "embedding", d2, SmallParams)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     def codes(d: String) = spark.read.parquet(s"$d/codes")
       .select("vec_id", "codes", "resid")
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getDouble(2)))

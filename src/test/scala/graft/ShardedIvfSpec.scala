@@ -124,11 +124,6 @@ class ShardedIvfSpec extends AnyFunSuite with SharedSpark {
       spark.read.parquet(s"$p1/cells").select("vec_id", "embedding")
         .localCheckpoint(),
       "vec_id", "embedding", p1,
-      // fitSampleMod stays 1 here ON PURPOSE: the codebook fit sample
-      // and the shard router share the id hash, so a mod sharing a
-      // factor with n_shards selects an empty sample inside a shard
-      // (hash%2==1 excludes every hash%4==0 row) — the coprime rule
-      // ShardedIvf.build enforces, which this direct rebuild bypasses
       graft.query.IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 4)))
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
@@ -169,23 +164,6 @@ class ShardedIvfSpec extends AnyFunSuite with SharedSpark {
       "query_id", "qvec")
     assert(lut.filter(size(col("__lut")) =!= 4 * 16 || exists(col("__lut"), _.isNull))
         .isEmpty, "query LUT not priced with the built PQ geometry")
-  }
-
-  test("a composed build rejects a fitSampleMod sharing a factor with n " +
-      "before any shard is built") {
-    val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
-    val root = tmp("badmod")
-    // n = 4, mod = 2: shards 1 and 3 hold no hash%2==0 row, so their
-    // codebook fits would have nothing to fit on
-    val err = intercept[IllegalArgumentException](
-      ShardedIvf.build(e, "vec_id", "embedding", root, n = 4,
-        IvfIndex.Params(nCentroids = 2), composed = true,
-        pqParams = PqIndex.Params(fitSampleMod = 2)))
-    assert(err.getMessage.contains("fitSampleMod=2") && err.getMessage.contains("n=4"),
-      err.getMessage)
-    val written = Option(new java.io.File(root).list()).toSeq.flatten
-    assert(!written.exists(_.startsWith("shard=")),
-      s"shards were written before the rejection: $written")
   }
 
   test("per-shard fsck and rolling one-shard re-cluster: exact mid-maintenance") {
