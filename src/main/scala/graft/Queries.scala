@@ -265,7 +265,7 @@ object Queries {
 
   /** Q109: INCREMENTAL maintenance of the composed IVF+PQ index under
     * the exactness gate — built over 90% of the corpus, the held-out
-    * tenth folded in by [[graft.query.IvfPq.upsert]] (cell append +
+    * tenth folded in by [[graft.query.IvfIndex.upsert]] (cell append +
     * radius growth + frozen-codebook code append), then the standard
     * batch queries the merged index against the same full-corpus
     * exact oracle: both stacked bounds must survive maintenance
@@ -279,7 +279,7 @@ object Queries {
     buildOnce(work) {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
         "vec_id", "embedding", work, params)
-      IvfPq.upsert(spark, work, "vec_id", "embedding",
+      IvfIndex.upsert(spark, work, "vec_id", "embedding",
         e.filter(pmod(col("vec_id"), lit(10)) === 0))
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
@@ -329,7 +329,7 @@ object Queries {
     buildOnce(work) {
       IvfPq.build(e, "vec_id", "embedding", work, params)
       // same cap rule as q106: every balanced cell (~n/4) is hot
-      IvfPq.splitToConvergence(spark, work, "vec_id", "embedding",
+      IvfIndex.splitToConvergence(spark, work, "vec_id", "embedding",
         occupancyCap = e.count() / 6)
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
@@ -363,11 +363,11 @@ object Queries {
     buildOnce(work) {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) >= 2),
         "vec_id", "embedding", work, params)
-      IvfPq.upsert(spark, work, "vec_id", "embedding",
+      IvfIndex.upsert(spark, work, "vec_id", "embedding",
         e.filter(pmod(col("vec_id"), lit(10)) === 0))
-      IvfPq.splitToConvergence(spark, work, "vec_id", "embedding",
+      IvfIndex.splitToConvergence(spark, work, "vec_id", "embedding",
         occupancyCap = e.count() / 6)
-      IvfPq.upsert(spark, work, "vec_id", "embedding",
+      IvfIndex.upsert(spark, work, "vec_id", "embedding",
         e.filter(pmod(col("vec_id"), lit(10)) === 1))
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
@@ -485,10 +485,10 @@ object Queries {
     val params = IvfPq.Params()
     buildOnce(work) {
       IvfPq.build(e, "vec_id", "embedding", work, params)
-      IvfPq.delete(spark, work, "vec_id",
+      IvfIndex.delete(spark, work, "vec_id",
         e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
-      IvfPq.compactTombstones(spark, work, "vec_id", "embedding")
-      IvfPq.delete(spark, work, "vec_id",
+      IvfIndex.compactTombstones(spark, work, "vec_id", "embedding")
+      IvfIndex.delete(spark, work, "vec_id",
         e.filter(pmod(col("vec_id"), lit(11)) === 5).select("vec_id"))
     }
     IvfPq.queryTopK(spark, work, "vec_id", "embedding",
@@ -522,7 +522,7 @@ object Queries {
       graft.util.Par.both(spark, "q121.build")(
         {
           IvfPq.build(e, "vec_id", "embedding", s"$work/ivfpq")
-          IvfPq.delete(spark, s"$work/ivfpq", "vec_id",
+          IvfIndex.delete(spark, s"$work/ivfpq", "vec_id",
             e.filter(pmod(col("vec_id"), lit(10)) === 0).select("vec_id"))
         },
         {
@@ -661,7 +661,7 @@ object Queries {
     buildOnce(work) {
       IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
         "vec_id", "embedding", work, poor)
-      IvfPq.upsert(spark, work, "vec_id", "embedding",
+      IvfIndex.upsert(spark, work, "vec_id", "embedding",
         e.filter(pmod(col("vec_id"), lit(10)) === 0))
       IvfPq.recluster(spark, work, "vec_id", "embedding", fresh)
     }

@@ -184,12 +184,11 @@ object IvfIndex extends IvfLayout {
     * Persisted label metadata is invalidated FIRST: its freshness
     * fingerprint (row count + cell id set) cannot distinguish two
     * same-shaped generations, so a swap could otherwise serve stale
-    * per-label radii as fresh. Plain-IVF only — a composed index's
-    * codes are priced against build-time structures; re-cluster it
-    * with a full [[IvfPq.build]]. Result-invisible by the family
-    * contract: the new generation indexes exactly the old one's rows,
-    * and the query bound is exact for ANY centroid set (spec + q115
-    * oracle-gated).
+    * per-label radii as fresh. Plain-IVF only — a composed index
+    * re-clusters through [[IvfPq.recluster]], which rebuilds its codes
+    * too. Result-invisible by the family contract: the new generation
+    * indexes exactly the old one's rows, and the query bound is exact
+    * for ANY centroid set (spec + q115 oracle-gated).
     */
   def recluster(
       spark: SparkSession,
@@ -197,14 +196,28 @@ object IvfIndex extends IvfLayout {
       idCol: String,
       embCol: String,
       params: Params = Params()): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    // complete any crashed prior swap first: its window can hide
+    // cell_codes from the layout check below
+    ensureGeneration(spark, indexPath)
     require(!IvfPq.isComposed(spark, indexPath),
       "IvfIndex.recluster: this index carries a cell_codes table (a composed " +
-        "IvfPq index) — its codes are priced against build-time structures; " +
-        "re-cluster with IvfPq.build")
-    // complete any crashed prior swap before starting a new one
-    ensureGeneration(spark, indexPath)
+        "IvfPq index) — re-cluster it through IvfPq.recluster")
+    regenerate(spark, indexPath, idCol, embCol)(build(_, idCol, embCol, _, params))
+  }
+
+  /** The one re-cluster body of [[recluster]] and [[IvfPq.recluster]],
+    * which first complete any crashed prior swap ([[ensureGeneration]])
+    * and check the layout: invalidate label metadata, build the LIVE
+    * corpus into `_regen/` with `buildInto(rows, path)`, then
+    * [[commitGeneration]] every generation artifact that build wrote.
+    */
+  private[query] def regenerate(
+      spark: SparkSession,
+      indexPath: String,
+      idCol: String,
+      embCol: String)(buildInto: (DataFrame, String) => Unit): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     // stale-by-construction after the swap; delete while the old
     // generation is still live so a crash at any later point can never
     // leave an artifact whose fingerprint matches the NEW generation
@@ -215,15 +228,31 @@ object IvfIndex extends IvfLayout {
     // pending tombstones (a re-cluster is a full rebuild from current
     // rows, so it doubles as the complete physical compaction), writes
     // only under _regen/ — readers are untouched until the swap
-    build(Tombstones.liveOnly(
+    buildInto(Tombstones.liveOnly(
         Tables.read(spark, s"$indexPath/cells"), spark, indexPath, idCol)
-        .select(col(idCol), col(embCol)),
-      idCol, embCol, regen, params)
+        .select(col(idCol), col(embCol)), regen)
     // the swap itself retires the (now spent) tombstone table: it is
     // in the non-installed-artifact purge list, so the marker-fenced
     // commit — and any crash replay of it — drops it atomically with
     // the generation change
-    commitGeneration(spark, indexPath, Seq("cells", "cells_meta"))
+    commitGeneration(spark, indexPath, GenerationArtifacts.filter(a =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$regen/$a"))))
+  }
+
+  /** [[recluster]] by the index's own layout — the maintenance
+    * cadence's re-cluster, at the default cell count; a composed index
+    * keeps the PQ geometry and encoding mode it was built with
+    * ([[IvfPq.builtParams]]).
+    */
+  private[graft] def reclusterAsBuilt(
+      spark: SparkSession,
+      indexPath: String,
+      idCol: String,
+      embCol: String): Unit = {
+    ensureGeneration(spark, indexPath)
+    if (IvfPq.isComposed(spark, indexPath))
+      IvfPq.recluster(spark, indexPath, idCol, embCol, IvfPq.builtParams(spark, indexPath))
+    else recluster(spark, indexPath, idCol, embCol)
   }
 
   private[query] def reclusterPendingPath(indexPath: String): String =
@@ -392,28 +421,16 @@ object IvfIndex extends IvfLayout {
     * silently serve wrong neighbors. An id repeated across batches
     * surfaces twice as a candidate — never silently dropped, but not
     * replaced either.
+    *
+    * A COMPOSED ([[IvfPq]]) index — one with a `cell_codes` table —
+    * gets the batch's code rows in the same call, encoded against its
+    * FROZEN codebooks and appended to the same cell partitions
+    * ([[IvfPq.appendCodes]]): both bounds keep their contracts
+    * (radius coverage; residuals priced against the codebook actually
+    * stored), so the upsert is result-invisible — q109's oracle-gated
+    * property.
     */
   def upsert(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      newRows: DataFrame): Unit = {
-    // a COMPOSED index must append through [[IvfPq.upsert]]: a
-    // cells-only append would leave the new vectors with no code
-    // rows, and the composed scan would silently never surface them
-    require(!IvfPq.isComposed(spark, indexPath),
-      "IvfIndex.upsert: this index carries a cell_codes table (a composed " +
-        "IvfPq index) — append through IvfPq.upsert so the codes land " +
-        "with their cells")
-    upsertCells(spark, indexPath, idCol, embCol, newRows)
-  }
-
-  /** [[upsert]]'s body without the composed-index guard — the cells
-    * half of [[IvfPq.upsert]], which appends the matching code rows
-    * itself.
-    */
-  private[query] def upsertCells(
       spark: SparkSession,
       indexPath: String,
       idCol: String,
@@ -471,6 +488,11 @@ object IvfIndex extends IvfLayout {
       // maintenance included) with no manual [[buildLabelMeta]] rerun.
       if (foldable.nonEmpty)
         foldLabelMeta(spark, indexPath, idCol, assigned, newRows, foldable)
+      // codes LAST: a crash before this append leaves codes < occupancy
+      // in [[IvfPq.stats]] — a torn upsert, repaired by replaying the batch
+      if (IvfPq.isComposed(spark, indexPath))
+        IvfPq.appendCodes(spark, indexPath, idCol, embCol, newRows,
+          assigned.select(col(idCol), col("centroid_id")), nCells)
     } finally assigned.unpersist()
   }
 
@@ -512,7 +534,7 @@ object IvfIndex extends IvfLayout {
       }
   }
 
-  /** The batch-sized max-merge of [[upsertCells]]: fold the assigned
+  /** The batch-sized max-merge of [[upsert]]: fold the assigned
     * batch's per-(cell, label) max distances into each foldable
     * artifact's radii and advance its snapshot. The new snapshot is
     * derived ARITHMETICALLY from the pre-append snapshot plus this
@@ -575,7 +597,7 @@ object IvfIndex extends IvfLayout {
 
   /** Nearest-existing-centroid assignment of a new batch:
     * (idCol, embCol, centroid_id, d) — the shared front half of
-    * [[upsert]] and [[IvfPq.upsert]]'s code append. Enforces the
+    * [[upsert]]'s cell and code appends. Enforces the
     * append-only contract (conflicting duplicate batch ids fail
     * loudly); exact duplicate rows collapse.
     */
@@ -617,10 +639,16 @@ object IvfIndex extends IvfLayout {
     * touched cell, so at batch cadence the index decays into small
     * files whose open/footer cost dominates probes. The centroid_id
     * partition layout is preserved — the static `isin` partition
-    * pruning keeps pruning exactly as before. Run off the query path.
+    * pruning keeps pruning exactly as before. A composed index's
+    * `cell_codes` table compacts in the same call, same layout. Run off
+    * the query path. @return one report per compacted table, cells
+    * first.
     */
-  def compactIndex(spark: SparkSession, indexPath: String): graft.util.Compaction.Report =
-    graft.util.Compaction.compact(spark, s"$indexPath/cells", Seq("centroid_id"))
+  def compactIndex(spark: SparkSession, indexPath: String): Seq[graft.util.Compaction.Report] = {
+    ensureGeneration(spark, indexPath)
+    ("cells" +: (if (IvfPq.isComposed(spark, indexPath)) Seq("cell_codes") else Nil))
+      .map(t => graft.util.Compaction.compact(spark, s"$indexPath/$t", Seq("centroid_id")))
+  }
 
   /** Mark `ids` DELETED — the O(batch) half of row removal (see
     * [[Tombstones]] for the design and the exactness argument). Every
@@ -1363,7 +1391,7 @@ object IvfIndex extends IvfLayout {
     * exhaustive over the index's mutation surface: [[upsert]] either
     * FOLDS the batch into this artifact and advances the snapshot
     * (when the batch carries the label column — the radii max-merge
-    * in [[upsertCells]], exact because an append can only grow
+    * in [[upsert]], exact because an append can only grow
     * per-(cell, label) radii) or leaves the snapshot behind the grown
     * row count (stale, detected), [[splitHotCells]] always mints
     * fresh cell directories (id set changes), [[compactIndex]] is
@@ -1395,7 +1423,7 @@ object IvfIndex extends IvfLayout {
     // that count) stales it automatically
     labelRadii(spark, indexPath, idCol, embCol, labels, labelCol)
       .write.mode("overwrite").parquet(s"$base/radii")
-    // label_col rides the snapshot so [[upsertCells]] can fold a
+    // label_col rides the snapshot so [[upsert]] can fold a
     // label-carrying batch into this artifact without guessing the
     // column back out of the sanitized directory name
     Seq((snap._1, snap._2, labelCol)).toDF("rows", "cells", "label_col")

@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions._
   * hence far smaller exact-verify fetches, on clustered corpora).
   * Both keep every code row self-consistent under maintenance —
   * global codes are cell-independent outright, residual codes carry
-  * their generation — which is what lets [[splitHotCells]] move code
-  * rows between partitions without re-encoding anything in either
-  * mode.
+  * their generation — which is what lets [[IvfIndex.splitHotCells]]
+  * move code rows between partitions without re-encoding anything in
+  * either mode.
   */
 object IvfPq extends IvfLayout {
 
@@ -81,7 +81,7 @@ object IvfPq extends IvfLayout {
     * every layout-routed face (serve, shard routing, maintenance) reads
     * the layout from the index through this one predicate.
     */
-  private[graft] def isComposed(spark: SparkSession, indexPath: String): Boolean =
+  private[query] def isComposed(spark: SparkSession, indexPath: String): Boolean =
     hasTable(spark, indexPath, "cell_codes")
 
   private def hasTable(spark: SparkSession, indexPath: String, table: String): Boolean = {
@@ -176,28 +176,19 @@ object IvfPq extends IvfLayout {
     }
   }
 
-  /** Incremental maintenance of the composed index: assign NEW vectors
-    * to their nearest existing cell and append to `cells/` + grow radii
-    * ([[IvfIndex.upsert]]), then encode them against the FROZEN
-    * codebooks and append the codes to the same cell partitions. Both
-    * bounds keep their contracts unconditionally (radius coverage;
-    * residuals priced against the codebook actually stored), so the
-    * upsert is result-invisible — q109's oracle-gated property. The
-    * assignment is computed once more for the codes row (one broadcast
-    * cross-join over the batch — cheaper than rereading the appended
-    * cells), deterministic, so the two appends agree.
+  /** The composed half of [[IvfIndex.upsert]]: encode the batch's NEW
+    * vectors against the FROZEN codebooks and append the codes to the
+    * cell partitions `assignment` (idCol, centroid_id) — the upsert's
+    * own cell assignment — put them in.
     */
-  def upsert(
+  private[query] def appendCodes(
       spark: SparkSession,
       indexPath: String,
       idCol: String,
       embCol: String,
-      newRows: DataFrame): Unit = {
-    IvfIndex.upsertCells(spark, indexPath, idCol, embCol, newRows)
-    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
-    val nCells = cellMeta.count().toInt.max(1)
-    val assignment = IvfIndex.assignNew(cellMeta, idCol, embCol, newRows)
-      .select(col(idCol), col("centroid_id"))
+      newRows: DataFrame,
+      assignment: DataFrame,
+      nCells: Int): Unit = {
     val codebooks = PqIndex.codebooksDf(spark, indexPath)
     if (!isResidual(spark, indexPath)) {
       PqIndex.encode(newRows, idCol, embCol, codebooks)
@@ -218,7 +209,8 @@ object IvfPq extends IvfLayout {
         .select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSet
       val missing = (targets -- have).toSeq.sorted
-      if (missing.nonEmpty) mintGenerations(spark, indexPath, cellMeta, missing)
+      if (missing.nonEmpty) mintGenerations(spark, indexPath,
+        Tables.read(spark, s"$indexPath/cells_meta"), missing)
       val encCur = broadcast(Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long").as("__ecell"), col("enc_id")))
       val encCenters = broadcast(
@@ -283,37 +275,6 @@ object IvfPq extends IvfLayout {
     minted
   }
 
-  /** Hot-cell split maintenance for the composed index — delegates to
-    * [[IvfIndex.splitHotCells]], which moves the `cell_codes` rows
-    * WITH their cells: only the partition key changes, in BOTH
-    * encodings (global codes are cell-independent; residual codes
-    * carry their enc generation, which the move preserves — a moved
-    * row keeps pricing against the center it was encoded with).
-    * Result-invisible by the stacked bounds' contracts; see the
-    * crash-ordering story on [[IvfIndex.splitHotCells]]. This
-    * completes the composed family's log-structured lifecycle: append
-    * ([[upsert]]) → split → compact ([[compactIndex]]), no full
-    * re-cluster anywhere.
-    */
-  def splitHotCells(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      occupancyCap: Long): IvfIndex.SplitReport =
-    IvfIndex.splitHotCells(spark, indexPath, idCol, embCol, occupancyCap)
-
-  /** [[splitHotCells]] looped to convergence — the occupancy-repair
-    * step of [[graft.streaming.IndexMaintenance.maintainIvfPq]].
-    */
-  def splitToConvergence(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      occupancyCap: Long): Unit =
-    IvfIndex.splitToConvergence(spark, indexPath, idCol, embCol, occupancyCap)
-
   /** Full RE-CLUSTER of the COMPOSED index with an atomic generation
     * swap — [[IvfIndex.recluster]]'s centroid-placement repair
     * extended to the whole composed artifact set: a fresh
@@ -339,68 +300,37 @@ object IvfPq extends IvfLayout {
       idCol: String,
       embCol: String,
       params: Params = Params()): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    IvfIndex.ensureGeneration(spark, indexPath)
     require(isComposed(spark, indexPath),
       "IvfPq.recluster: no cell_codes table — a plain IVF index " +
         "re-clusters through IvfIndex.recluster")
-    IvfIndex.ensureGeneration(spark, indexPath)
-    IvfIndex.invalidateLabelMeta(spark, indexPath)
-    val regen = s"$indexPath/_regen"
-    fs.delete(new org.apache.hadoop.fs.Path(regen), true)
-    // LIVE corpus only — the composed re-cluster is a full rebuild, so
-    // it doubles as the complete physical compaction of pending
-    // deletes (the IvfIndex.recluster discipline)
-    build(Tombstones.liveOnly(
-        Tables.read(spark, s"$indexPath/cells"), spark, indexPath, idCol)
-        .select(col(idCol), col(embCol)),
-      idCol, embCol, regen, params)
-    val artifacts = Seq("cells", "cells_meta", "cell_codes", "codebooks",
-        "enc_centers", "enc_current")
-      .filter(a => fs.exists(new org.apache.hadoop.fs.Path(s"$regen/$a")))
-    // the marker-fenced swap also purges the (now spent) tombstone
-    // table — see IvfIndex.recluster
-    IvfIndex.commitGeneration(spark, indexPath, artifacts)
+    IvfIndex.regenerate(spark, indexPath, idCol, embCol)(build(_, idCol, embCol, _, params))
   }
 
-  /** Compact cells and cell_codes off the query path (partition
-    * layouts preserved, pruning unaffected).
+  /** The build parameters an existing composed index already encodes:
+    * PQ geometry (subspace count, width and codebook size) read from its
+    * codebooks, the encoding mode from its enc tables, every other
+    * parameter at its default — [[IvfIndex.reclusterAsBuilt]]'s input.
     */
-  def compactIndex(spark: SparkSession, indexPath: String): Seq[graft.util.Compaction.Report] =
-    Seq(
-      graft.util.Compaction.compact(spark, s"$indexPath/cells", Seq("centroid_id")),
-      graft.util.Compaction.compact(spark, s"$indexPath/cell_codes", Seq("centroid_id")))
-
-  /** Row deletion on the composed index — [[IvfIndex.delete]]
-    * verbatim: one shared tombstone table masks the code row and the
-    * payload row alike (every composed scan anti-joins it), and
-    * [[compactTombstones]] rewrites both tables' affected directories.
-    */
-  def delete(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      ids: DataFrame): Unit =
-    IvfIndex.delete(spark, indexPath, idCol, ids)
-
-  /** Physical fold-in of pending deletes — [[IvfIndex
-    * .compactTombstones]], which detects the `cell_codes` table and
-    * moves the surviving code rows with their cells in the same pass.
-    */
-  def compactTombstones(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String): IvfIndex.DeleteCompactionReport =
-    IvfIndex.compactTombstones(spark, indexPath, idCol, embCol)
+  private[query] def builtParams(spark: SparkSession, indexPath: String): Params = {
+    // numSub rows
+    val cb = Tables.read(spark, s"$indexPath/codebooks")
+      .agg(count(lit(1)), max(size(col("centers"))), max(size(col("centers").getItem(0))))
+      .head
+    val numSub = cb.getLong(0).toInt
+    Params(
+      pq = PqIndex.Params(dim = numSub * cb.getInt(2), numSub = numSub,
+        codebookSize = cb.getInt(1)),
+      residual = isResidual(spark, indexPath))
+  }
 
   /** Maintenance diagnostics for the composed index —
     * [[IvfIndex.stats]] widened with the codes side: one row per cell,
     * (centroid_id, occupancy, radius, n_files, codes, code_files).
     * `codes != occupancy` is the operational desync signal: a crashed
     * split awaiting [[IvfIndex.repairPendingCodes]] (codes > occupancy
-    * — stale duplicates) or a torn [[upsert]] (codes < occupancy —
-    * cells appended, codes not; replay the batch). Two
+    * — stale duplicates) or a torn [[IvfIndex.upsert]] (codes <
+    * occupancy — cells appended, codes not; replay the batch). Two
     * partition-column scans + two ≤ nCells directory listings; run
     * off the query path.
     */

@@ -112,10 +112,7 @@ object ShardedIvf {
       idCol: String,
       embCol: String,
       newRows: DataFrame): Unit =
-    routed(spark, root, idCol, newRows) { (p, slice) =>
-      if (IvfPq.isComposed(spark, p)) IvfPq.upsert(spark, p, idCol, embCol, slice)
-      else IvfIndex.upsert(spark, p, idCol, embCol, slice)
-    }
+    routed(spark, root, idCol, newRows)(IvfIndex.upsert(spark, _, idCol, embCol, _))
 
   /** Mark ids deleted — routed to their home shards' tombstone tables
     * (an id's shard is a pure hash, so no shard scan is needed to find
@@ -310,6 +307,7 @@ object ShardedIvf {
     require(shard >= 0 && shard < n,
       s"ShardedIvf.reclusterShard: shard $shard outside [0, $n)")
     val p = shardPath(root, shard)
+    IvfIndex.ensureGeneration(spark, p)
     if (IvfPq.isComposed(spark, p))
       IvfPq.recluster(spark, p, idCol, embCol,
         IvfPq.Params(ivf = params, pq = pqParams))

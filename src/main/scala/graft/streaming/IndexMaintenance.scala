@@ -8,11 +8,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Continuous vector-index maintenance — the streaming face of
   * [[graft.query.IvfIndex.upsert]]: every micro-batch of arriving
   * vectors is folded into the persisted IVF index (nearest-centroid
-  * assignment + partition append + radius growth), so the index a
-  * query session reads is never more than one trigger behind the
-  * stream, and never needs a rebuild to stay EXACT (the triangle
-  * bound's radius-coverage invariant is maintained per batch — q85's
-  * oracle-gated property).
+  * assignment + partition append + radius growth, plus frozen-codebook
+  * code append on a composed IVF+PQ index), so the index a query
+  * session reads is never more than one trigger behind the stream, and
+  * never needs a rebuild to stay EXACT (the triangle bound's
+  * radius-coverage invariant is maintained per batch — q85's
+  * oracle-gated property, q109's for the composed layout). One face
+  * serves both IVF layouts: every step reads the layout from the
+  * index, so a caller never states it.
   *
   * `foreachBatch` is the right sink shape: an upsert touches two
   * paths (cells append + cells_meta overwrite) and must see each
@@ -22,8 +25,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (upsert is append-only by contract). Production deployments fence
   * that with the (batchId, checkpoint) pair: skip batches at or below
   * the last fully-applied id recorded next to the index. That fence
-  * is [[maintainIvf]]'s `appliedBatchId` hook, default-on, stored as
-  * one tiny parquet row beside the index — the same
+  * is [[fenced]], shared by every streaming maintenance face, stored
+  * as one tiny parquet row beside the index — the same
   * idempotent-per-batch discipline as [[IngestStream]]'s partition
   * overwrite.
   */
@@ -31,9 +34,7 @@ object IndexMaintenance {
 
   private[streaming] def fencePath(indexPath: String) = s"$indexPath/applied_batch"
 
-  /** Record `batchId` as applied — the write half of the fence,
-    * shared by every streaming maintenance face.
-    */
+  /** Record `batchId` as applied — the write half of the fence. */
   private[streaming] def writeFence(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
@@ -55,18 +56,37 @@ object IndexMaintenance {
     else -1L
   }
 
-  /** The per-batch handler, exposed for direct testing of the replay
-    * fence. @return true iff the batch was applied (not fenced/empty).
+  /** The replay fence of every streaming face: run `apply` unless
+    * `batchId` is at or below the last id recorded at `path` or the
+    * batch is empty, then record `batchId`. @return true iff applied.
     *
-    * Residual at-least-once window: the fence row is written AFTER the
-    * upsert and not atomically with it. A crash after the cells append
-    * but before the fence write (or between the cells append and the
-    * cells_meta overwrite inside upsert) still double-applies that one
+    * Residual at-least-once window: the fence row is written AFTER
+    * `apply` and not atomically with it. A crash after `apply`'s first
+    * write but before the fence write still double-applies that one
     * batch on replay. The fence narrows replay duplication from "every
     * batch since the last checkpoint" to "at most the one in-flight
     * batch"; closing it fully needs a durable-atomic apply (write
-    * cells/meta/fence into a temp generation directory and commit via
-    * rename), which is filesystem-dependent and out of scope here.
+    * every table and the fence into a temp generation directory and
+    * commit via rename), which is filesystem-dependent and out of
+    * scope here.
+    */
+  private[streaming] def fenced(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      batch: DataFrame,
+      batchId: Long)(apply: => Unit): Boolean =
+    if (batchId <= lastApplied(spark, path) || batch.isEmpty) false
+    else {
+      apply
+      writeFence(spark, path, batchId)
+      true
+    }
+
+  /** The per-batch handler of [[maintainIvf]], exposed for direct
+    * testing of the replay fence: one CDC → split → drift re-encode →
+    * delete compaction → re-cluster sequence on a plain or composed
+    * IVF index. @return true iff the batch was applied (not
+    * fenced/empty).
     */
   def applyBatch(
       indexPath: String,
@@ -75,16 +95,17 @@ object IndexMaintenance {
       batch: DataFrame,
       batchId: Long,
       splitCap: Option[Long] = None,
+      reencodeDriftCap: Option[Double] = None,
       reclusterEvery: Option[Long] = None,
       opCol: Option[String] = None,
       compactDeletesEvery: Option[Long] = None): Boolean = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val spark = batch.sparkSession
-    if (batchId <= lastApplied(spark, indexPath) || batch.isEmpty) false
-    else {
+    fenced(spark, indexPath, batch, batchId) {
       // CDC-shaped feed: with `opCol` set, rows tagged "delete" mask
       // their ids out of the index ([[graft.query.IvfIndex.delete]] —
-      // O(batch), exact from this batch on) and every other row
+      // O(batch), exact from this batch on; one shared tombstone table
+      // masks code and payload rows alike) and every other row
       // upserts — including rows whose op is NULL (the common CDC
       // encoding for plain inserts; a bare =!= comparison would
       // evaluate NULL and silently drop them from both branches).
@@ -123,16 +144,26 @@ object IndexMaintenance {
         IvfIndex.upsert(spark, indexPath, idCol, embCol, upserts)
       }
       // optional in-line occupancy repair before the fence is written:
-      // result-invisible (the radius-coverage contract). Replay
-      // semantics differ from the upsert's benign-duplication window:
-      // a split that crashes between its cells rewrite and its meta
-      // swap leaves the fresh directory meta-less (INVISIBLE to
-      // queries, not lost) — the next split pass's head-of-call
-      // IvfIndex.repairOrphanCells adopts it, and fresh ids allocate
-      // above filesystem directory ids so a replayed split can never
-      // overwrite the orphan
+      // result-invisible (the radius-coverage contract; a composed
+      // split moves code rows with their cells). Replay semantics
+      // differ from the upsert's benign-duplication window: a split
+      // that crashes between its cells rewrite and its meta swap
+      // leaves the fresh directory meta-less (INVISIBLE to queries,
+      // not lost) — the next split pass's head-of-call repair adopts
+      // it (and reconciles a composed split's code rows), and fresh
+      // ids allocate above filesystem directory ids so a replayed
+      // split can never overwrite the orphan
       splitCap.foreach(cap =>
         IvfIndex.splitToConvergence(spark, indexPath, idCol, embCol, cap))
+      // optional in-line residual-drift repair AFTER the split (splits
+      // re-center cells, which is exactly what mints drift): any cell
+      // whose enc_drift exceeds the cap re-encodes against its current
+      // centroid in the same fenced batch, so residual-mode bound
+      // tightness is maintained — not merely observable — under
+      // continuous ingest. No-op on plain and global-codebook indexes
+      // and on drift-free batches; result-invisible always.
+      reencodeDriftCap.foreach(cap =>
+        graft.query.IvfPq.reencodeDrifted(spark, indexPath, idCol, embCol, cap))
       // optional physical fold-in of accumulated tombstones at a batch
       // cadence (the deletion twin of reclusterEvery): cell-pruned
       // rewrite, radii re-tightened, spent tombstones retired — the
@@ -143,28 +174,35 @@ object IndexMaintenance {
           IvfIndex.compactTombstones(spark, indexPath, idCol, embCol)
       }
       // optional full re-cluster at a batch cadence — the centroid-
-      // PLACEMENT repair splits cannot provide ([[IvfIndex.recluster]]:
-      // generation built off the query path, marker-fenced atomic
-      // swap). Result-invisible, so replay semantics stay the fence's:
-      // a crash mid-swap is completed by the next reader's
+      // PLACEMENT repair splits cannot provide
+      // ([[graft.query.IvfIndex.reclusterAsBuilt]]: generation built
+      // off the query path at the default cell count — a composed index
+      // keeps its PQ geometry and encoding mode — then a marker-fenced
+      // atomic swap). Result-invisible, so replay semantics stay the
+      // fence's: a crash mid-swap is completed by the next reader's
       // ensureGeneration, and a replayed batch is fenced before any of
       // this re-runs. Cadence (every Nth applied batch), not drift-
       // triggered: the trigger input a drift rule would want (probe
       // counts) lives in query sessions, not here.
       reclusterEvery.foreach { n =>
         if (n > 0 && batchId % n == 0)
-          IvfIndex.recluster(spark, indexPath, idCol, embCol)
+          IvfIndex.reclusterAsBuilt(spark, indexPath, idCol, embCol)
       }
-      writeFence(spark, indexPath, batchId)
-      true
     }
   }
 
-  /** Start a maintenance stream: each micro-batch upserts into the
-    * index at `indexPath`, fenced so a replayed batch id is a no-op.
-    * With `splitCap` set, any cell the append pushes over the cap is
-    * split in the same batch — occupancy (and so probe cost) stays
-    * bounded under continuous ingest without ever re-clustering.
+  /** Start a maintenance stream: each micro-batch runs [[applyBatch]]
+    * on the plain or composed index at `indexPath`, fenced so a
+    * replayed batch id is a no-op. With `splitCap` set, any cell the
+    * append pushes over the cap is split in the same batch — occupancy
+    * (and so probe cost) stays bounded under continuous ingest without
+    * ever re-clustering; with `reencodeDriftCap` set, a residual
+    * composed index's encoding-generation drift past the cap is
+    * repaired in the same batch too
+    * ([[graft.query.IvfPq.reencodeDrifted]]), so bound tightness — and
+    * with it exact-verify fetch volume — stays bounded as well. Run
+    * [[graft.query.IvfIndex.compactIndex]] off the query path at
+    * compaction cadence.
     */
   def maintainIvf(
       vectors: DataFrame,
@@ -173,6 +211,7 @@ object IndexMaintenance {
       embCol: String,
       checkpointDir: String,
       splitCap: Option[Long] = None,
+      reencodeDriftCap: Option[Double] = None,
       reclusterEvery: Option[Long] = None,
       opCol: Option[String] = None,
       compactDeletesEvery: Option[Long] = None): StreamingQuery =
@@ -182,7 +221,7 @@ object IndexMaintenance {
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(indexPath, idCol, embCol, batch, batchId, splitCap,
-          reclusterEvery, opCol, compactDeletesEvery); ()
+          reencodeDriftCap, reclusterEvery, opCol, compactDeletesEvery); ()
       }
       .start()
 
@@ -200,133 +239,12 @@ object IndexMaintenance {
       idCol: String,
       embCol: String,
       batch: DataFrame,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    if (batchId <= lastApplied(spark, indexPath) || batch.isEmpty) false
-    else {
-      graft.query.PqIndex.upsert(spark, indexPath, idCol, embCol, batch)
-      writeFence(spark, indexPath, batchId)
-      true
-    }
-  }
-
-  /** The composed IVF+PQ twin of [[applyBatch]]: one micro-batch folds
-    * into cells + radii + frozen-codebook cell codes
-    * ([[graft.query.IvfPq.upsert]]) behind the shared replay fence —
-    * q109's result-invisibility contract per batch, hence under any
-    * batch sequence. Every encode reads the PQ geometry from the
-    * index's codebooks; `params` is used only by the `reclusterEvery`
-    * re-cluster, the one step here that fits codebooks.
-    * @return true iff the batch was applied.
-    */
-  def applyIvfPqBatch(
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      batch: DataFrame,
-      batchId: Long,
-      params: graft.query.IvfPq.Params = graft.query.IvfPq.Params(),
-      splitCap: Option[Long] = None,
-      reencodeDriftCap: Option[Double] = None,
-      reclusterEvery: Option[Long] = None,
-      opCol: Option[String] = None,
-      compactDeletesEvery: Option[Long] = None): Boolean = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val spark = batch.sparkSession
-    if (batchId <= lastApplied(spark, indexPath) || batch.isEmpty) false
-    else {
-      // CDC-shaped feed — the [[applyBatch]] opCol contract verbatim
-      // (NULL-op rows upsert; a delete→re-insert overlap compacts
-      // first so replay converges); one shared tombstone table masks
-      // code AND payload rows
-      val (deletes, upserts) = opCol match {
-        case Some(oc) =>
-          (batch.filter(col(oc) === "delete").select(col(idCol)),
-            batch.filter(coalesce(col(oc), lit("")) =!= "delete").drop(oc))
-        case None => (batch.limit(0).select(col(idCol)), batch)
-      }
-      if (!deletes.isEmpty)
-        graft.query.IvfPq.delete(spark, indexPath, idCol, deletes)
-      if (!upserts.isEmpty) {
-        if (opCol.isDefined &&
-            graft.query.Tombstones.overlaps(spark, indexPath, idCol, upserts))
-          graft.query.IvfPq.compactTombstones(spark, indexPath, idCol, embCol)
-        graft.query.IvfPq.upsert(spark, indexPath, idCol, embCol, upserts)
-      }
-      // optional in-line occupancy repair (the [[applyBatch]] splitCap
-      // story, now available for the composed family too): the split
-      // moves code rows with their cells under the split_pending
-      // marker, so a replayed/crashed split reconciles at the next
-      // pass's head-of-call repair instead of desyncing codes
-      splitCap.foreach(cap => graft.query.IvfPq.splitToConvergence(
-        spark, indexPath, idCol, embCol, cap))
-      // optional in-line residual-drift repair AFTER the split (splits
-      // re-center cells, which is exactly what mints drift): any cell
-      // whose enc_drift exceeds the cap re-encodes against its current
-      // centroid in the same fenced batch, so residual-mode bound
-      // tightness is maintained — not merely observable — under
-      // continuous ingest. No-op on global-codebook indexes and on
-      // drift-free batches; result-invisible always.
-      reencodeDriftCap.foreach(cap => graft.query.IvfPq.reencodeDrifted(
-        spark, indexPath, idCol, embCol, cap))
-      // optional physical deletion fold-in at a batch cadence — the
-      // [[applyBatch]] compactDeletesEvery story; the composed pass
-      // moves surviving code rows with their cells
-      compactDeletesEvery.foreach { n =>
-        if (n > 0 && batchId % n == 0)
-          graft.query.IvfPq.compactTombstones(spark, indexPath, idCol, embCol)
-      }
-      // optional full composed re-cluster at a batch cadence — the
-      // centroid-placement repair ([[graft.query.IvfPq.recluster]]:
-      // whole artifact set rebuilt off the query path, marker-fenced
-      // atomic swap that any reader completes after a crash). Inside
-      // the replay fence like everything above.
-      reclusterEvery.foreach { n =>
-        if (n > 0 && batchId % n == 0)
-          graft.query.IvfPq.recluster(spark, indexPath, idCol, embCol, params)
-      }
-      writeFence(spark, indexPath, batchId)
-      true
-    }
-  }
-
-  /** Continuous composed-index maintenance. Same at-least-once caveat
-    * as [[applyBatch]]; with `splitCap` set, any cell an append pushes
-    * over the cap is split (codes moved with their cells) in the same
-    * batch, so probe cost stays bounded under continuous composed
-    * ingest without a rebuild; with `reencodeDriftCap` set, residual
-    * encoding-generation drift past the cap is repaired in the same
-    * batch too ([[graft.query.IvfPq.reencodeDrifted]]), so bound
-    * tightness — and with it exact-verify fetch volume — stays bounded
-    * as well. `params` feeds only the `reclusterEvery` re-cluster (see
-    * [[applyIvfPqBatch]]). Run [[graft.query.IvfPq.compactIndex]] off
-    * the query path at compaction cadence.
-    */
-  def maintainIvfPq(
-      vectors: DataFrame,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      checkpointDir: String,
-      params: graft.query.IvfPq.Params = graft.query.IvfPq.Params(),
-      splitCap: Option[Long] = None,
-      reencodeDriftCap: Option[Double] = None,
-      reclusterEvery: Option[Long] = None,
-      opCol: Option[String] = None,
-      compactDeletesEvery: Option[Long] = None): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIvfPqBatch(indexPath, idCol, embCol, batch, batchId, params,
-          splitCap, reencodeDriftCap, reclusterEvery, opCol,
-          compactDeletesEvery); ()
-      }
-      .start()
+      batchId: Long): Boolean =
+    fenced(batch.sparkSession, indexPath, batch, batchId)(
+      graft.query.PqIndex.upsert(batch.sparkSession, indexPath, idCol, embCol, batch))
 
   /** Continuous PQ-index maintenance — every index family
-    * (near-dup LSH, IVF, lexical, PQ, composed IVF+PQ) has the
+    * (near-dup LSH, IVF and composed IVF+PQ, lexical, PQ) has the
     * symmetric build/upsert/stream/compact story. Same at-least-once
     * caveat as [[applyBatch]]; run
     * [[graft.query.PqIndex.compactIndex]] off the query path at
@@ -361,15 +279,9 @@ object IndexMaintenance {
       idCol: String,
       textCol: String,
       batch: DataFrame,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    if (batchId <= lastApplied(spark, workDir) || batch.isEmpty) false
-    else {
-      graft.query.LexicalSearch.upsertIndex(spark, workDir, idCol, textCol, batch)
-      writeFence(spark, workDir, batchId)
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    fenced(batch.sparkSession, workDir, batch, batchId)(
+      graft.query.LexicalSearch.upsertIndex(batch.sparkSession, workDir, idCol, textCol, batch))
 
   /** Continuous lexical-index maintenance — completes the
     * build-once/query-many story symmetrically with [[maintainIvf]]

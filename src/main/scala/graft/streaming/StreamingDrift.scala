@@ -47,27 +47,25 @@ object StreamingDrift {
       batch: DataFrame,
       batchId: Long): Boolean = {
     val spark = batch.sparkSession
-    if (batchId <= IndexMaintenance.lastApplied(spark, statePath) || batch.isEmpty)
-      return false
-    val fresh = DriftMonitor.bucketCounts(batch, bucketCols, "cur_n")
-    val existing = {
-      val p = new org.apache.hadoop.fs.Path(countsPath(statePath))
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) Some(Tables.read(spark, p.toString)) else None
+    IndexMaintenance.fenced(spark, statePath, batch, batchId) {
+      val fresh = DriftMonitor.bucketCounts(batch, bucketCols, "cur_n")
+      val existing = {
+        val p = new org.apache.hadoop.fs.Path(countsPath(statePath))
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        if (fs.exists(p)) Some(Tables.read(spark, p.toString)) else None
+      }
+      // #buckets rows: localCheckpoint materializes the merge before the
+      // overwrite of the path it was read from (the stats-merge shape of
+      // LexicalSearch.upsertIndex)
+      val merged = existing.map(_.unionByName(fresh)).getOrElse(fresh)
+        .groupBy(bucketCols.map(col): _*)
+        .agg(sum(col("cur_n")).as("cur_n"))
+        .localCheckpoint()
+      merged.write.mode("overwrite").parquet(countsPath(statePath))
+      DriftMonitor.chiSquareDriftFromCounts(
+          Tables.read(spark, refPath(statePath)), merged, bucketCols)
+        .write.mode("overwrite").parquet(reportPath(statePath))
     }
-    // #buckets rows: localCheckpoint materializes the merge before the
-    // overwrite of the path it was read from (the stats-merge shape of
-    // LexicalSearch.upsertIndex)
-    val merged = existing.map(_.unionByName(fresh)).getOrElse(fresh)
-      .groupBy(bucketCols.map(col): _*)
-      .agg(sum(col("cur_n")).as("cur_n"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(countsPath(statePath))
-    DriftMonitor.chiSquareDriftFromCounts(
-        Tables.read(spark, refPath(statePath)), merged, bucketCols)
-      .write.mode("overwrite").parquet(reportPath(statePath))
-    IndexMaintenance.writeFence(spark, statePath, batchId)
-    true
   }
 
   /** Start the monitoring stream: each micro-batch updates the

@@ -223,12 +223,9 @@ object StreamingNearDup {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (batchId > IndexMaintenance.lastApplied(spark, workDir) && !batch.isEmpty) {
+        IndexMaintenance.fenced(batch.sparkSession, workDir, batch, batchId)(
           admissionStep(batch, workDir, threshold)
-            .write.mode("append").parquet(s"$workDir/verdicts")
-          IndexMaintenance.writeFence(spark, workDir, batchId)
-        }
+            .write.mode("append").parquet(s"$workDir/verdicts"))
         ()
       }
       .start()

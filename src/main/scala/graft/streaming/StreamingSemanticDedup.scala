@@ -185,7 +185,7 @@ object StreamingSemanticDedup {
   }
 
   /** Compact the admitted index off the admission path. */
-  def compactIndex(spark: SparkSession, workDir: String): graft.util.Compaction.Report =
+  def compactIndex(spark: SparkSession, workDir: String): Seq[graft.util.Compaction.Report] =
     IvfIndex.compactIndex(spark, ivfPath(workDir))
 
   /** Wire a (vec_id, embedding) stream through [[admissionStep]];
@@ -199,12 +199,9 @@ object StreamingSemanticDedup {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (batchId > IndexMaintenance.lastApplied(spark, workDir) && !batch.isEmpty) {
+        IndexMaintenance.fenced(batch.sparkSession, workDir, batch, batchId)(
           admissionStep(batch, workDir, tau, splitCap)
-            .write.mode("append").parquet(s"$workDir/verdicts")
-          IndexMaintenance.writeFence(spark, workDir, batchId)
-        }
+            .write.mode("append").parquet(s"$workDir/verdicts"))
         ()
       }
       .start()

@@ -115,234 +115,234 @@ object TrainingFeed {
   def step(batch: DataFrame, batchId: Long, workDir: String, cfg: Config): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (batchId <= IndexMaintenance.lastApplied(spark, workDir) || batch.isEmpty)
-      return
-    // CDC split ([[IndexMaintenance.applyBatch]]'s opCol contract):
-    // tagged deletes become stage-4 takedown ids; everything else —
-    // including NULL-op rows, the common CDC insert encoding — is a
-    // document for admission
-    val (delIds, arriving) = cfg.opCol match {
-      case Some(oc) =>
-        (batch.filter(col(oc) === "delete")
-           .select(col("doc_id").cast("long").as("doc_id")).localCheckpoint(),
-         batch.filter(coalesce(col(oc), lit("")) =!= "delete"))
-      case None =>
-        (batch.limit(0).select(col("doc_id").cast("long").as("doc_id")), batch)
-    }
-    val docs = arriving
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
-      .localCheckpoint()
-
-    // ---- stage 0 (observer): ingest-mix drift vs the reference ----
-    // opt-in via [[enableDriftMonitor]]; observes the RAW arriving
-    // batch (pre-dedup — the point is what the firehose delivers, not
-    // what survives admission), behind its own fence so a replayed
-    // batch never double-counts. Purely observational: no effect on
-    // any admission verdict — which includes its failures: a corrupt
-    // drift state must log and skip, never halt admission.
-    if (exists(spark, s"$workDir/drift/ref_counts"))
-      try StreamingDrift.applyBatch(
-        s"$workDir/drift", Seq("source"), docs.select("source"), batchId)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger("graft.TrainingFeed").warn(
-            s"drift observer failed on batch $batchId (admission unaffected): $e")
+    IndexMaintenance.fenced(spark, workDir, batch, batchId) {
+      // CDC split ([[IndexMaintenance.applyBatch]]'s opCol contract):
+      // tagged deletes become stage-4 takedown ids; everything else —
+      // including NULL-op rows, the common CDC insert encoding — is a
+      // document for admission
+      val (delIds, arriving) = cfg.opCol match {
+        case Some(oc) =>
+          (batch.filter(col(oc) === "delete")
+             .select(col("doc_id").cast("long").as("doc_id")).localCheckpoint(),
+           batch.filter(coalesce(col(oc), lit("")) =!= "delete"))
+        case None =>
+          (batch.limit(0).select(col("doc_id").cast("long").as("doc_id")), batch)
       }
-
-    // ---- stage 1: exact dedup (first occurrence per payload sha) ----
-    val wSha = Window.partitionBy("content_sha").orderBy("doc_id")
-    val firstPerSha = docs
-      .withColumn("content_sha", sha2(col("text"), 256))
-      .withColumn("__rn", row_number().over(wSha))
-      .filter(col("__rn") === 1).drop("__rn")
-    val shasPath = s"$workDir/shas"
-    val fresh =
-      (if (exists(spark, shasPath))
-         firstPerSha.join(Tables.read(spark, shasPath), Seq("content_sha"), "left_anti")
-       else firstPerSha).localCheckpoint()
-
-    val gatedDir = s"$workDir/gated/batch=$batchId"
-    val gated =
-      // first-write-wins on the COMMIT marker, not the directory: a
-      // crash mid-write leaves gatedDir with only _temporary, which a
-      // dir-existence gate would try to READ — throwing on every
-      // replay and wedging the feed permanently. The ledger write
-      // below is mode(overwrite), so re-running it over a torn
-      // partition is idempotent (budgets still counted once: the prior
-      // consumption scan reads only committed rows).
-      if (exists(spark, s"$gatedDir/_SUCCESS")) Tables.read(spark, gatedDir)
-      else {
-        // ---- stage 2: near-dup admission (persisted probe index) ----
-        val verdicts = StreamingNearDup.admissionStep(
-          fresh.select("doc_id", "text"), s"$workDir/neardup", cfg.threshold)
-        val ndOk = fresh
-          .join(verdicts.filter(col("admitted")).select("doc_id"), "doc_id")
-
-        // ---- stage 3: per-source quota gate ----
-        val gatedPath = s"$workDir/gated"
-        val prior =
-          if (exists(spark, gatedPath))
-            Tables.read(spark, gatedPath)
-              .groupBy("source").agg(sum("n_tokens").as("__consumed"))
-          else spark.emptyDataset[(String, Long)].toDF("source", "__consumed")
-        val quotasDf = cfg.quotas.toSeq.toDF("source", "__quota")
-        val wSrc = Window.partitionBy("source").orderBy("doc_id")
-        val g = ndOk
-          .withColumn("n_tokens", tokenCount(col("text")))
-          .join(broadcast(prior), Seq("source"), "left")
-          .join(broadcast(quotasDf), Seq("source"), "left")
-          .withColumn("cum_tokens",
-            sum("n_tokens").over(wSrc) + coalesce(col("__consumed"), lit(0L)))
-          .withColumn("admitted",
-            col("cum_tokens") <= coalesce(col("__quota"), lit(0L)))
-          .select("doc_id", "source", "n_tokens", "cum_tokens", "admitted")
-          .localCheckpoint()
-        g.write.mode("overwrite").parquet(gatedDir)
-        g
-      }
-
-    // ---- stage 4: index maintenance over the finally admitted ----
-    // own fence (inside the index dir, [[IndexMaintenance]] shape): a
-    // replay whose quota ledger already existed must not upsert the
-    // same rows twice
-    val indexPath = s"$workDir/index"
-    if (batchId > IndexMaintenance.lastApplied(spark, indexPath)) {
-      // takedowns FIRST, on the index as the feed left it last batch
-      // (a delete targets earlier batches' admissions — feed ids
-      // increase, so it can never name a row this batch will fold).
-      // Replay-safe without extra machinery: a replayed tombstone
-      // append is a duplicate mask row, deduplicated by every reader
-      // and by compaction. No index yet means nothing was admitted —
-      // the delete targets nothing and is skipped rather than leaving
-      // a tombstone table for a directory the first build owns.
-      if (!exists(spark, s"$indexPath/cells_meta")) ()
-      else if (!delIds.isEmpty)
-        IvfIndex.delete(spark, indexPath, "doc_id", delIds)
-      val vecs = gated.filter(col("admitted"))
-        .join(docs.select("doc_id", "text"), "doc_id")
-        .select(col("doc_id"),
-          graft.functions.hash_embed(col("text"), lit(cfg.embedDim)).as("embedding"))
+      val docs = arriving
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
         .localCheckpoint()
-      val n = vecs.count()
-      if (n > 0) {
-        if (!exists(spark, s"$indexPath/cells_meta"))
-          IvfIndex.build(vecs, "doc_id", "embedding", indexPath,
-            IvfIndex.Params(nCentroids = cfg.nCentroids))
-        else {
-          // CDC convergence, mirroring [[IndexMaintenance.applyBatch]]
-          // (r21, ADVICE item 2): with a delete channel open
-          // (cfg.opCol), a batch admitting a doc whose id is
-          // pending-tombstoned (same-batch delete+insert, or an id
-          // reused before the compaction cadence) would trip the
-          // upsert's overlap guard — identically on every foreachBatch
-          // replay, wedging the feed forever. Fold the pending deletes
-          // in physically FIRST, so the upsert lands on an index whose
-          // old rows are gone: replace semantics, idempotent under
-          // replay. One semi-join against the cadence-bounded table,
-          // only in CDC mode.
-          if (cfg.opCol.isDefined &&
-              graft.query.Tombstones.overlaps(spark, indexPath, "doc_id", vecs))
-            IvfIndex.compactTombstones(spark, indexPath, "doc_id", "embedding")
-          IvfIndex.upsert(spark, indexPath, "doc_id", "embedding", vecs)
-        }
-        // optional occupancy repair inside the fence — a replayed or
-        // crashed split reconciles at the next pass's head-of-call
-        // repair (the IndexMaintenance.applyBatch splitCap story)
-        cfg.splitCap.foreach(cap => IvfIndex.splitToConvergence(
-          spark, indexPath, "doc_id", "embedding", cap))
-        // optional centroid-placement repair at a batch cadence (the
-        // applyBatch reclusterEvery story): fresh generation built off
-        // the query path, marker-fenced atomic swap any reader
-        // completes, fenced against replays like everything here
-        cfg.reclusterEvery.foreach { rn =>
-          if (rn > 0 && batchId % rn == 0)
-            IvfIndex.recluster(spark, indexPath, "doc_id", "embedding",
-              IvfIndex.Params(nCentroids = cfg.nCentroids))
-        }
-      }
-      // physical deletion fold-in at a batch cadence (the
-      // [[IndexMaintenance.applyBatch]] compactDeletesEvery story):
-      // cell-pruned rewrite, radii re-tightened, spent tombstones
-      // retired — the tombstones-are-the-marker discipline makes a
-      // crashed pass a clean rerun inside the same fence. Runs even on
-      // admission-empty batches: a takedown-only feed window still
-      // owes its compaction cadence.
-      cfg.compactDeletesEvery.foreach { cn =>
-        if (cn > 0 && batchId % cn == 0 &&
-            exists(spark, s"$indexPath/cells_meta"))
-          IvfIndex.compactTombstones(spark, indexPath, "doc_id", "embedding")
-      }
-      IndexMaintenance.writeFence(spark, indexPath, batchId)
-    }
 
-    // ---- stage 5 (observer): retrieval health of the maintained ----
-    // ---- index                                                  ----
-    // opt-in via [[enableHealthProbe]]: after the index fold, the fixed
-    // probe set is retrieved against the maintained index and scored by
-    // [[graft.query.RetrievalEval.metrics]] — the signal [[driftReport]]
-    // cannot give (not "has the input mix moved" but "does the index
-    // still RETRIEVE"). Replay-proof without its own fence: one metrics
-    // partition per batch, first write wins — and a replay that does
-    // reach the recompute sees the identical post-index-fence index, so
-    // the metrics it would write are identical anyway. Observational
-    // like stage 0: failures log and skip, admission unaffected.
-    if (exists(spark, s"$workDir/health/queries") &&
-        exists(spark, s"$indexPath/cells_meta")) {
-      val mDir = s"$workDir/health/metrics/batch=$batchId"
-      // first-write-wins gates on the COMMIT marker, not the directory:
-      // a crash mid-write leaves mDir with only _temporary and no
-      // _SUCCESS, and a dir-existence gate would then skip the replay's
-      // recompute forever — healthReport silently missing that batch.
-      // The overwrite below makes the retried write idempotent.
-      if (!exists(spark, s"$mDir/_SUCCESS"))
-        try {
-          val hq = Tables.read(spark, s"$workDir/health/queries")
-          val rels = Tables.read(spark, s"$workDir/health/rels")
-          val kH = Tables.read(spark, s"$workDir/health/k").head.getInt(0)
-          // threshold -2 < any cosine: health wants the full ranked
-          // list, the relevance join does the grading
-          val hits = IvfIndex.queryTopK(spark, indexPath, "doc_id", "embedding",
-            hq, "query_id", "qvec", kH, threshold = -2.0)
-          graft.query.RetrievalEval
-            .metrics(hits, "query_id", "doc_id", "rn", rels, kH)
-            .write.mode("overwrite").parquet(mDir)
-        } catch {
+      // ---- stage 0 (observer): ingest-mix drift vs the reference ----
+      // opt-in via [[enableDriftMonitor]]; observes the RAW arriving
+      // batch (pre-dedup — the point is what the firehose delivers, not
+      // what survives admission), behind its own fence so a replayed
+      // batch never double-counts. Purely observational: no effect on
+      // any admission verdict — which includes its failures: a corrupt
+      // drift state must log and skip, never halt admission.
+      if (exists(spark, s"$workDir/drift/ref_counts"))
+        try StreamingDrift.applyBatch(
+          s"$workDir/drift", Seq("source"), docs.select("source"), batchId)
+        catch {
           case scala.util.control.NonFatal(e) =>
             org.slf4j.LoggerFactory.getLogger("graft.TrainingFeed").warn(
-              s"health probe failed on batch $batchId (admission unaffected): $e")
+              s"drift observer failed on batch $batchId (admission unaffected): $e")
         }
-      // LABELED face: filtered retrieval health — the q108 shape the
-      // serve faces users actually hit (metadata WHERE + ANN in one
-      // operator). Runs IFF [[enableHealthProbe]] was given a label
-      // frame; same first-write-wins + log-and-skip discipline, its
-      // own metrics partition so the two faces' trajectories read
-      // independently.
-      if (exists(spark, s"$workDir/health/labels")) {
-        val fDir = s"$workDir/health/metrics_filtered/batch=$batchId"
-        if (!exists(spark, s"$fDir/_SUCCESS"))
+
+      // ---- stage 1: exact dedup (first occurrence per payload sha) ----
+      val wSha = Window.partitionBy("content_sha").orderBy("doc_id")
+      val firstPerSha = docs
+        .withColumn("content_sha", sha2(col("text"), 256))
+        .withColumn("__rn", row_number().over(wSha))
+        .filter(col("__rn") === 1).drop("__rn")
+      val shasPath = s"$workDir/shas"
+      val fresh =
+        (if (exists(spark, shasPath))
+           firstPerSha.join(Tables.read(spark, shasPath), Seq("content_sha"), "left_anti")
+         else firstPerSha).localCheckpoint()
+
+      val gatedDir = s"$workDir/gated/batch=$batchId"
+      val gated =
+        // first-write-wins on the COMMIT marker, not the directory: a
+        // crash mid-write leaves gatedDir with only _temporary, which a
+        // dir-existence gate would try to READ — throwing on every
+        // replay and wedging the feed permanently. The ledger write
+        // below is mode(overwrite), so re-running it over a torn
+        // partition is idempotent (budgets still counted once: the prior
+        // consumption scan reads only committed rows).
+        if (exists(spark, s"$gatedDir/_SUCCESS")) Tables.read(spark, gatedDir)
+        else {
+          // ---- stage 2: near-dup admission (persisted probe index) ----
+          val verdicts = StreamingNearDup.admissionStep(
+            fresh.select("doc_id", "text"), s"$workDir/neardup", cfg.threshold)
+          val ndOk = fresh
+            .join(verdicts.filter(col("admitted")).select("doc_id"), "doc_id")
+
+          // ---- stage 3: per-source quota gate ----
+          val gatedPath = s"$workDir/gated"
+          val prior =
+            if (exists(spark, gatedPath))
+              Tables.read(spark, gatedPath)
+                .groupBy("source").agg(sum("n_tokens").as("__consumed"))
+            else spark.emptyDataset[(String, Long)].toDF("source", "__consumed")
+          val quotasDf = cfg.quotas.toSeq.toDF("source", "__quota")
+          val wSrc = Window.partitionBy("source").orderBy("doc_id")
+          val g = ndOk
+            .withColumn("n_tokens", tokenCount(col("text")))
+            .join(broadcast(prior), Seq("source"), "left")
+            .join(broadcast(quotasDf), Seq("source"), "left")
+            .withColumn("cum_tokens",
+              sum("n_tokens").over(wSrc) + coalesce(col("__consumed"), lit(0L)))
+            .withColumn("admitted",
+              col("cum_tokens") <= coalesce(col("__quota"), lit(0L)))
+            .select("doc_id", "source", "n_tokens", "cum_tokens", "admitted")
+            .localCheckpoint()
+          g.write.mode("overwrite").parquet(gatedDir)
+          g
+        }
+
+      // ---- stage 4: index maintenance over the finally admitted ----
+      // own fence (inside the index dir, [[IndexMaintenance]] shape): a
+      // replay whose quota ledger already existed must not upsert the
+      // same rows twice
+      val indexPath = s"$workDir/index"
+      if (batchId > IndexMaintenance.lastApplied(spark, indexPath)) {
+        // takedowns FIRST, on the index as the feed left it last batch
+        // (a delete targets earlier batches' admissions — feed ids
+        // increase, so it can never name a row this batch will fold).
+        // Replay-safe without extra machinery: a replayed tombstone
+        // append is a duplicate mask row, deduplicated by every reader
+        // and by compaction. No index yet means nothing was admitted —
+        // the delete targets nothing and is skipped rather than leaving
+        // a tombstone table for a directory the first build owns.
+        if (!exists(spark, s"$indexPath/cells_meta")) ()
+        else if (!delIds.isEmpty)
+          IvfIndex.delete(spark, indexPath, "doc_id", delIds)
+        val vecs = gated.filter(col("admitted"))
+          .join(docs.select("doc_id", "text"), "doc_id")
+          .select(col("doc_id"),
+            graft.functions.hash_embed(col("text"), lit(cfg.embedDim)).as("embedding"))
+          .localCheckpoint()
+        val n = vecs.count()
+        if (n > 0) {
+          if (!exists(spark, s"$indexPath/cells_meta"))
+            IvfIndex.build(vecs, "doc_id", "embedding", indexPath,
+              IvfIndex.Params(nCentroids = cfg.nCentroids))
+          else {
+            // CDC convergence, mirroring [[IndexMaintenance.applyBatch]]
+            // (r21, ADVICE item 2): with a delete channel open
+            // (cfg.opCol), a batch admitting a doc whose id is
+            // pending-tombstoned (same-batch delete+insert, or an id
+            // reused before the compaction cadence) would trip the
+            // upsert's overlap guard — identically on every foreachBatch
+            // replay, wedging the feed forever. Fold the pending deletes
+            // in physically FIRST, so the upsert lands on an index whose
+            // old rows are gone: replace semantics, idempotent under
+            // replay. One semi-join against the cadence-bounded table,
+            // only in CDC mode.
+            if (cfg.opCol.isDefined &&
+                graft.query.Tombstones.overlaps(spark, indexPath, "doc_id", vecs))
+              IvfIndex.compactTombstones(spark, indexPath, "doc_id", "embedding")
+            IvfIndex.upsert(spark, indexPath, "doc_id", "embedding", vecs)
+          }
+          // optional occupancy repair inside the fence — a replayed or
+          // crashed split reconciles at the next pass's head-of-call
+          // repair (the IndexMaintenance.applyBatch splitCap story)
+          cfg.splitCap.foreach(cap => IvfIndex.splitToConvergence(
+            spark, indexPath, "doc_id", "embedding", cap))
+          // optional centroid-placement repair at a batch cadence (the
+          // applyBatch reclusterEvery story): fresh generation built off
+          // the query path, marker-fenced atomic swap any reader
+          // completes, fenced against replays like everything here
+          cfg.reclusterEvery.foreach { rn =>
+            if (rn > 0 && batchId % rn == 0)
+              IvfIndex.recluster(spark, indexPath, "doc_id", "embedding",
+                IvfIndex.Params(nCentroids = cfg.nCentroids))
+          }
+        }
+        // physical deletion fold-in at a batch cadence (the
+        // [[IndexMaintenance.applyBatch]] compactDeletesEvery story):
+        // cell-pruned rewrite, radii re-tightened, spent tombstones
+        // retired — the tombstones-are-the-marker discipline makes a
+        // crashed pass a clean rerun inside the same fence. Runs even on
+        // admission-empty batches: a takedown-only feed window still
+        // owes its compaction cadence.
+        cfg.compactDeletesEvery.foreach { cn =>
+          if (cn > 0 && batchId % cn == 0 &&
+              exists(spark, s"$indexPath/cells_meta"))
+            IvfIndex.compactTombstones(spark, indexPath, "doc_id", "embedding")
+        }
+        IndexMaintenance.writeFence(spark, indexPath, batchId)
+      }
+
+      // ---- stage 5 (observer): retrieval health of the maintained ----
+      // ---- index                                                  ----
+      // opt-in via [[enableHealthProbe]]: after the index fold, the fixed
+      // probe set is retrieved against the maintained index and scored by
+      // [[graft.query.RetrievalEval.metrics]] — the signal [[driftReport]]
+      // cannot give (not "has the input mix moved" but "does the index
+      // still RETRIEVE"). Replay-proof without its own fence: one metrics
+      // partition per batch, first write wins — and a replay that does
+      // reach the recompute sees the identical post-index-fence index, so
+      // the metrics it would write are identical anyway. Observational
+      // like stage 0: failures log and skip, admission unaffected.
+      if (exists(spark, s"$workDir/health/queries") &&
+          exists(spark, s"$indexPath/cells_meta")) {
+        val mDir = s"$workDir/health/metrics/batch=$batchId"
+        // first-write-wins gates on the COMMIT marker, not the directory:
+        // a crash mid-write leaves mDir with only _temporary and no
+        // _SUCCESS, and a dir-existence gate would then skip the replay's
+        // recompute forever — healthReport silently missing that batch.
+        // The overwrite below makes the retried write idempotent.
+        if (!exists(spark, s"$mDir/_SUCCESS"))
           try {
             val hq = Tables.read(spark, s"$workDir/health/queries")
             val rels = Tables.read(spark, s"$workDir/health/rels")
             val kH = Tables.read(spark, s"$workDir/health/k").head.getInt(0)
-            val labs = Tables.read(spark, s"$workDir/health/labels")
-            val hits = IvfIndex.queryTopKFiltered(spark, indexPath,
-              "doc_id", "embedding", hq, "query_id", "qvec",
-              labs, "label", kH, threshold = -2.0)
+            // threshold -2 < any cosine: health wants the full ranked
+            // list, the relevance join does the grading
+            val hits = IvfIndex.queryTopK(spark, indexPath, "doc_id", "embedding",
+              hq, "query_id", "qvec", kH, threshold = -2.0)
             graft.query.RetrievalEval
               .metrics(hits, "query_id", "doc_id", "rn", rels, kH)
-              .write.mode("overwrite").parquet(fDir)
+              .write.mode("overwrite").parquet(mDir)
           } catch {
             case scala.util.control.NonFatal(e) =>
               org.slf4j.LoggerFactory.getLogger("graft.TrainingFeed").warn(
-                s"filtered health probe failed on batch $batchId " +
-                  s"(admission unaffected): $e")
+                s"health probe failed on batch $batchId (admission unaffected): $e")
           }
+        // LABELED face: filtered retrieval health — the q108 shape the
+        // serve faces users actually hit (metadata WHERE + ANN in one
+        // operator). Runs IFF [[enableHealthProbe]] was given a label
+        // frame; same first-write-wins + log-and-skip discipline, its
+        // own metrics partition so the two faces' trajectories read
+        // independently.
+        if (exists(spark, s"$workDir/health/labels")) {
+          val fDir = s"$workDir/health/metrics_filtered/batch=$batchId"
+          if (!exists(spark, s"$fDir/_SUCCESS"))
+            try {
+              val hq = Tables.read(spark, s"$workDir/health/queries")
+              val rels = Tables.read(spark, s"$workDir/health/rels")
+              val kH = Tables.read(spark, s"$workDir/health/k").head.getInt(0)
+              val labs = Tables.read(spark, s"$workDir/health/labels")
+              val hits = IvfIndex.queryTopKFiltered(spark, indexPath,
+                "doc_id", "embedding", hq, "query_id", "qvec",
+                labs, "label", kH, threshold = -2.0)
+              graft.query.RetrievalEval
+                .metrics(hits, "query_id", "doc_id", "rn", rels, kH)
+                .write.mode("overwrite").parquet(fDir)
+            } catch {
+              case scala.util.control.NonFatal(e) =>
+                org.slf4j.LoggerFactory.getLogger("graft.TrainingFeed").warn(
+                  s"filtered health probe failed on batch $batchId " +
+                    s"(admission unaffected): $e")
+            }
+        }
       }
-    }
 
-    // ---- seen-payload shas (LAST state write before the fence) ----
-    fresh.select("content_sha").write.mode("append").parquet(shasPath)
-    IndexMaintenance.writeFence(spark, workDir, batchId)
+      // ---- seen-payload shas (LAST state write before the fence) ----
+      fresh.select("content_sha").write.mode("append").parquet(shasPath)
+    }
+    ()
   }
 
   /** Wire a (doc_id, text, source) stream through [[step]]. */

@@ -107,7 +107,7 @@ object DeletionCurve {
       IvfIndex.delete(spark, s"$root/ivfpq", "vec_id", dead10)
       val cIvf = timed(IvfIndex.compactTombstones(
         spark, s"$root/ivf", "vec_id", "embedding"))
-      val cPq = timed(IvfPq.compactTombstones(
+      val cPq = timed(IvfIndex.compactTombstones(
         spark, s"$root/ivfpq", "vec_id", "embedding"))
       val sIvfAfter = timed(queryIvf())
       val sPqAfter = timed(queryPq())

@@ -150,7 +150,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     val dir = tmp("ivfpq")
     IvfPq.build(e, "vec_id", "embedding", dir,
       delParams)
-    IvfPq.delete(spark, dir, "vec_id",
+    IvfIndex.delete(spark, dir, "vec_id",
       e.filter(pmod(col("vec_id"), lit(4)) === 1).select("vec_id"))
     val live = e.filter(pmod(col("vec_id"), lit(4)) =!= 1)
     val queries = e.filter(col("vec_id") < 8)
@@ -160,7 +160,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     val masked = topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(masked == exact)
-    val report = IvfPq.compactTombstones(spark, dir, "vec_id", "embedding")
+    val report = IvfIndex.compactTombstones(spark, dir, "vec_id", "embedding")
     assert(report.rowsRemoved == 50L)
     assert(spark.read.parquet(s"$dir/cell_codes").count() == 150L)
     assert(spark.read.parquet(s"$dir/cell_codes")
@@ -180,7 +180,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     // simulated partial rewrite below actually rewrites its directory
     // (a fully-emptied cell is exercised by the compact test above)
     val dead = e.filter(pmod(col("vec_id"), lit(8)) === 2).select("vec_id")
-    IvfPq.delete(spark, dir, "vec_id", dead)
+    IvfIndex.delete(spark, dir, "vec_id", dead)
     // simulate the crash point: rewrite the CELLS side only, exactly as
     // compactTombstones would, and leave tombstones + codes untouched
     val tombIds = spark.read.parquet(Tombstones.path(dir))
@@ -204,7 +204,7 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     assert(topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
     // the rerun must notice the codes side is still dirty
-    IvfPq.compactTombstones(spark, dir, "vec_id", "embedding")
+    IvfIndex.compactTombstones(spark, dir, "vec_id", "embedding")
     assert(spark.read.parquet(s"$dir/cells").count() == 175L)
     assert(spark.read.parquet(s"$dir/cell_codes").count() == 175L)
     assert(!Tombstones.exists(spark, dir))

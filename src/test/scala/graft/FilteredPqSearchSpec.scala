@@ -69,7 +69,7 @@ class FilteredPqSearchSpec extends AnyFunSuite with SharedSpark {
     // BOTH accumulated encoding generations
     IvfPq.build(e.filter(col("vec_id") < 160).select("vec_id", "embedding"),
       "vec_id", "embedding", dir, params)
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(col("vec_id") >= 160).select("vec_id", "embedding"))
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),

@@ -175,9 +175,9 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
       .as[(Long, Array[Float])].collect().toSeq
 
     val input = MemoryStream[(Long, Array[Float])]
-    val q = IndexMaintenance.maintainIvfPq(
+    val q = IndexMaintenance.maintainIvf(
       input.toDS().toDF("vec_id", "embedding"), dir, "vec_id", "embedding",
-      ckpt, params)
+      ckpt)
     try {
       val (b1, b2) = arrivals.splitAt(arrivals.size / 2)
       input.addData(b1); q.processAllAvailable()
@@ -198,8 +198,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
     // crash-replay of an applied batch id must be a fenced no-op
     val before = spark.read.parquet(s"$dir/cell_codes").count()
     val lastId = IndexMaintenance.lastApplied(spark, dir)
-    assert(!IndexMaintenance.applyIvfPqBatch(
-      dir, "vec_id", "embedding", arrivals.toDF("vec_id", "embedding"), lastId, params))
+    assert(!IndexMaintenance.applyBatch(
+      dir, "vec_id", "embedding", arrivals.toDF("vec_id", "embedding"), lastId))
     assert(spark.read.parquet(s"$dir/cell_codes").count() == before)
   }
 
@@ -225,9 +225,9 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val cap = e.count() / 6
 
     val input = MemoryStream[(Long, Array[Float])]
-    val q = IndexMaintenance.maintainIvfPq(
+    val q = IndexMaintenance.maintainIvf(
       input.toDS().toDF("vec_id", "embedding"), dir, "vec_id", "embedding",
-      ckpt, params, splitCap = Some(cap))
+      ckpt, splitCap = Some(cap))
     try {
       val (b1, b2) = arrivals.splitAt(arrivals.size / 2)
       input.addData(b1); q.processAllAvailable()
@@ -317,7 +317,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
       queries, "query_id", "qvec", k = 5, threshold = 0.0))
 
     val before = answer()
-    val report = IvfIndex.compactIndex(spark, dir)
+    val Seq(report) = IvfIndex.compactIndex(spark, dir)
     assert(report.filesAfter < report.filesBefore,
       s"compaction did not shrink files: $report")
     assert(answer() === before, "compaction changed query results")
@@ -464,16 +464,16 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
     val dels = e.filter(col("vec_id").isin(6L, 7L))
       .select(lit("delete").as("op"), col("vec_id"), col("embedding"))
-    assert(IndexMaintenance.applyIvfPqBatch(dir, "vec_id", "embedding", dels,
-      0L, params, opCol = Some("op")))
+    assert(IndexMaintenance.applyBatch(dir, "vec_id", "embedding", dels,
+      0L, opCol = Some("op")))
     val vec7 = e.filter(col("vec_id") === 7L)
       .select("embedding").head.getSeq[Float](0).toArray
     val batch1 = Seq(
       (Option("upsert"), 7L, vec7),
       (Option.empty[String], 100001L, Array.fill(64)(0.5f)))
       .toDF("op", "vec_id", "embedding")
-    assert(IndexMaintenance.applyIvfPqBatch(dir, "vec_id", "embedding", batch1,
-      1L, params, opCol = Some("op")))
+    assert(IndexMaintenance.applyBatch(dir, "vec_id", "embedding", batch1,
+      1L, opCol = Some("op")))
 
     assert(!graft.query.Tombstones.exists(spark, dir))
     // codes stay aligned with cells through the compact+re-insert
@@ -492,5 +492,73 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
       live, "embedding", "vec_id", queries, "query_id", "qvec",
       k = 5, threshold = 0.0))
     assert(got == exact, "converged composed CDC index diverged")
+  }
+
+  test("one applyBatch face: the same CDC batches keep a plain and a residual " +
+      "composed index exact under split and drift caps; replays fenced on both") {
+    import graft.query.IvfPq
+    val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
+    def tmp(s: String) =
+      java.nio.file.Files.createTempDirectory(s"graft-one-face-$s").toString
+    val plain = tmp("plain")
+    val plainNoDrift = tmp("plain-nodrift")
+    val res = tmp("res")
+    val base = e.filter(pmod(col("vec_id"), lit(10)) < 7)
+    Seq(plain, plainNoDrift).foreach(d => IvfIndex.build(base, "vec_id", "embedding", d,
+      IvfIndex.Params(nCentroids = 4)))
+    IvfPq.build(base, "vec_id", "embedding", res,
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 4), residual = true))
+
+    // batch 0: two deletes of built rows + tagged upserts; batch 1:
+    // NULL-op upserts. The cap makes every balanced cell hot, so both
+    // batches split — which is what mints residual drift
+    def tagged(df: org.apache.spark.sql.DataFrame, op: String) =
+      df.select(lit(op).cast("string").as("op"), col("vec_id"), col("embedding"))
+    val batches = Seq(
+      tagged(e.filter(col("vec_id").isin(3L, 5L)), "delete")
+        .unionByName(tagged(e.filter(pmod(col("vec_id"), lit(10)) === 7), "upsert")),
+      tagged(e.filter(pmod(col("vec_id"), lit(10)) >= 8), null))
+    val cap = e.count() / 6
+    def feed(dir: String, batch: Int, driftCap: Option[Double]): Boolean =
+      IndexMaintenance.applyBatch(dir, "vec_id", "embedding", batches(batch),
+        batch.toLong, splitCap = Some(cap), reencodeDriftCap = driftCap,
+        opCol = Some("op"))
+    for (b <- batches.indices) {
+      assert(feed(plain, b, Some(1e-6)))
+      assert(feed(plainNoDrift, b, None))
+      assert(feed(res, b, Some(1e-6)))
+    }
+
+    val live = e.filter(!col("vec_id").isin(3L, 5L))
+    val queries = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+    val exact = topkSet(SimilaritySearch.topKBatch(
+      live, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
+    assert(topkSet(IvfIndex.queryTopK(spark, plain, "vec_id", "embedding",
+      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
+    assert(topkSet(IvfPq.queryTopK(spark, res, "vec_id", "embedding",
+      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
+
+    // the drift cap is a no-op on a plain index: same cells, same meta
+    // as its twin fed without it
+    def layout(d: String) = (
+      spark.read.parquet(s"$d/cells")
+        .select(col("vec_id"), col("centroid_id").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+      spark.read.parquet(s"$d/cells_meta")
+        .select(col("centroid_id").cast("long"), col("radius"), col("center"))
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Float](2))).toSet)
+    assert(layout(plain) == layout(plainNoDrift))
+    // ... and a real repair on the residual one
+    assert(IvfPq.stats(spark, res).agg(max(col("enc_drift"))).head.getDouble(0) <= 1e-6)
+    assert(spark.read.parquet(s"$res/cell_codes").count() ==
+      spark.read.parquet(s"$res/cells").count())
+
+    // a replayed batch id is fenced on both layouts
+    Seq(plain, res).foreach { d =>
+      val before = spark.read.parquet(s"$d/cells").count()
+      assert(!feed(d, 1, Some(1e-6)))
+      assert(spark.read.parquet(s"$d/cells").count() == before)
+    }
   }
 }

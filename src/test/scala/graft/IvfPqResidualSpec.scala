@@ -106,17 +106,17 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) >= 2),
       "vec_id", "embedding", dir, params)
     val enc0 = spark.read.parquet(s"$dir/enc_centers").count()
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(pmod(col("vec_id"), lit(10)) === 0))
     // pre-split upserts reuse the build generations (no mint)
     assert(spark.read.parquet(s"$dir/enc_centers").count() == enc0)
 
-    IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 40L)
+    IvfIndex.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 40L)
     val (gotSplit, exactSplit) = queryBoth(
       e.filter(pmod(col("vec_id"), lit(10)) =!= 1), dir)
     assert(gotSplit == exactSplit, "split broke residual-mode answers")
 
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(pmod(col("vec_id"), lit(10)) === 1))
     // the post-split upsert hit split-minted cells: fresh generations
     val enc1 = spark.read.parquet(s"$dir/enc_centers").count()
@@ -134,10 +134,10 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     val dir = tmp("reencode")
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) >= 2),
       "vec_id", "embedding", dir, params)
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(pmod(col("vec_id"), lit(10)) === 0))
-    IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 40L)
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 40L)
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(pmod(col("vec_id"), lit(10)) === 1))
 
     // post-split state: moved rows price against pre-split centers —
@@ -190,20 +190,20 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     // batch 0: upsert 10% + split to convergence — the split re-centers
     // cells while moved rows keep pricing against pre-split centers:
     // drift injected on both sides
-    Seq(dirA, dirB).foreach(d => assert(IndexMaintenance.applyIvfPqBatch(
+    Seq(dirA, dirB).foreach(d => assert(IndexMaintenance.applyBatch(
       d, "vec_id", "embedding", e.filter(pmod(col("vec_id"), lit(10)) === 0),
-      0L, params, splitCap = Some(40L))))
+      0L, splitCap = Some(40L))))
     def maxDrift(d: String): Double = IvfPq.stats(spark, d)
       .agg(max(col("enc_drift"))).head.getDouble(0)
     assert(maxDrift(dirA) > 1e-6, "the split injected no visible drift")
     // batch 1: the last 10% — B's batch also carries the drift cap, so
     // the repair runs INSIDE the fenced batch, after its split pass
-    assert(IndexMaintenance.applyIvfPqBatch(
+    assert(IndexMaintenance.applyBatch(
       dirA, "vec_id", "embedding", e.filter(pmod(col("vec_id"), lit(10)) === 1),
-      1L, params, splitCap = Some(40L)))
-    assert(IndexMaintenance.applyIvfPqBatch(
+      1L, splitCap = Some(40L)))
+    assert(IndexMaintenance.applyBatch(
       dirB, "vec_id", "embedding", e.filter(pmod(col("vec_id"), lit(10)) === 1),
-      1L, params, splitCap = Some(40L), reencodeDriftCap = Some(1e-6)))
+      1L, splitCap = Some(40L), reencodeDriftCap = Some(1e-6)))
     assert(maxDrift(dirA) > 1e-6, "the un-capped side lost its drift")
     assert(maxDrift(dirB) <= 1e-6,
       s"the capped side kept drift ${maxDrift(dirB)} after its fenced repair")
@@ -246,17 +246,20 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
     assert(got == exact)
   }
 
-  test("the plain-IVF upsert face refuses a composed index") {
+  test("the one upsert face lands a composed index's codes with its cells") {
     val e = clustered(80L)
-    val dir = tmp("guard")
+    val dir = tmp("upsert-face")
     IvfPq.build(e.filter(col("vec_id") < 60), "vec_id", "embedding", dir, params)
     // a cells-only append would leave the new vectors code-less and
-    // silently invisible to the composed scan — the face fails loudly
-    val err = intercept[IllegalArgumentException] {
-      IvfIndex.upsert(spark, dir, "vec_id", "embedding",
-        e.filter(col("vec_id") >= 60))
-    }
-    assert(err.getMessage.contains("IvfPq.upsert"))
+    // silently invisible to the composed scan: the face reads the
+    // layout from disk and appends the codes in the same call
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
+      e.filter(col("vec_id") >= 60))
+    assert(spark.read.parquet(s"$dir/cell_codes").count() == 80L)
+    assert(IvfPq.stats(spark, dir).collect()
+      .forall(r => r.getAs[Long]("codes") == r.getAs[Long]("occupancy")))
+    val (got, exact) = queryBoth(e, dir)
+    assert(got == exact)
   }
 
   test("a conflicting duplicate id fails the residual build loudly") {
@@ -296,7 +299,7 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
     cp(new java.io.File(dir), new java.io.File(snap))
-    val report = IvfPq.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
+    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
     assert(report.newIds.nonEmpty)
     // reconstruct the stale-duplicates crash state (kill before the
     // old-directory shrink), then repair

@@ -34,7 +34,7 @@ class IvfPqSpec extends AnyFunSuite with SharedSpark {
     val params = IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 8))
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
       "vec_id", "embedding", dir, params)
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(pmod(col("vec_id"), lit(10)) === 0))
     assert(spark.read.parquet(s"$dir/cell_codes").count() == e.count())
 
@@ -45,7 +45,7 @@ class IvfPqSpec extends AnyFunSuite with SharedSpark {
     val exact = topkSet(SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
     assert(answer() == exact)
-    val reports = IvfPq.compactIndex(spark, dir)
+    val reports = IvfIndex.compactIndex(spark, dir)
     assert(reports.forall(r => r.filesAfter <= r.filesBefore))
     assert(answer() == exact, "compaction changed composed-index answers")
   }

@@ -86,7 +86,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     val e = clustered(200L)
     val dir = tmp("basic")
     IvfPq.build(e, "vec_id", "embedding", dir, params)
-    val report = IvfPq.splitHotCells(spark, dir, "vec_id", "embedding",
+    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding",
       occupancyCap = 60L)
     assert(report.split.nonEmpty)
     assert(report.newIds.map(_._1).sorted == report.split.sorted,
@@ -104,9 +104,9 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     val dir = tmp("upsert")
     IvfPq.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
       "vec_id", "embedding", dir, params)
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(pmod(col("vec_id"), lit(10)) === 0))
-    IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
+    IvfIndex.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
     assertInSync(dir, 200L)
     assert(perCellCounts("cells", dir).values.forall(_ <= 60L))
     val (got, exact) = queryBoth(e, dir)
@@ -125,7 +125,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     // codes write but BEFORE the cells overwrite leaves: cells, meta
     // and the old code directories as before the split, the fresh code
     // directories present, the marker present
-    val report = IvfPq.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
+    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
     assert(report.newIds.nonEmpty)
     Seq("cells", "cells_meta").foreach { t =>
       rm(new java.io.File(s"$dir/$t")); cp(new java.io.File(s"$snap/$t"), new java.io.File(s"$dir/$t"))
@@ -153,7 +153,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
 
     // next maintenance pass: repair reconciles (fresh code directories
     // whose cells never committed are deleted), then the split re-runs
-    IvfPq.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
+    IvfIndex.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
     assert(!new java.io.File(s"$dir/split_pending").exists())
     assertInSync(dir, 200L)
     val (got, exact) = queryBoth(e, dir)
@@ -172,7 +172,7 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     // swap but BEFORE the old-directory shrink leaves: everything
     // committed except the old code directories, which still hold
     // stale copies of the moved side-1 rows; marker present
-    val report = IvfPq.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
+    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
     assert(report.newIds.nonEmpty)
     report.newIds.foreach { case (old, _) =>
       rm(new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
@@ -217,13 +217,13 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     assert(got == exact)
   }
 
-  test("maintenance face: applyIvfPqBatch with splitCap keeps occupancy bounded") {
+  test("maintenance face: applyBatch with splitCap keeps composed occupancy bounded") {
     val e = clustered(240L)
     val dir = tmp("maintain")
     IvfPq.build(e.filter(col("vec_id") < 80), "vec_id", "embedding", dir, params)
-    val applied = graft.streaming.IndexMaintenance.applyIvfPqBatch(
+    val applied = graft.streaming.IndexMaintenance.applyBatch(
       dir, "vec_id", "embedding", e.filter(col("vec_id") >= 80), batchId = 0L,
-      params = params, splitCap = Some(60L))
+      splitCap = Some(60L))
     assert(applied)
     assertInSync(dir, 240L)
     assert(perCellCounts("cells", dir).values.forall(_ <= 60L),
@@ -231,9 +231,9 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     val (got, exact) = queryBoth(e, dir)
     assert(got == exact)
     // replay fenced: the same batch id is a no-op
-    assert(!graft.streaming.IndexMaintenance.applyIvfPqBatch(
+    assert(!graft.streaming.IndexMaintenance.applyBatch(
       dir, "vec_id", "embedding", e.filter(col("vec_id") >= 80), batchId = 0L,
-      params = params, splitCap = Some(60L)))
+      splitCap = Some(60L)))
     assertInSync(dir, 240L)
   }
 }

@@ -172,7 +172,7 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
     // enc tables, or isResidual would misprice the fresh global codes
     IvfPq.build(e.filter(col("vec_id") < 160), "vec_id", "embedding", dir,
       IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 2), pq = pq, residual = true))
-    IvfPq.upsert(spark, dir, "vec_id", "embedding",
+    IvfIndex.upsert(spark, dir, "vec_id", "embedding",
       e.filter(col("vec_id") >= 160))
     assert(IvfPq.isResidual(spark, dir))
     def q(): Set[(Long, Long, Long)] =
@@ -250,14 +250,40 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("the plain re-cluster face sees a composed index caught mid-swap as composed") {
+    import graft.query.{IvfPq, PqIndex}
+    val e = clustered(160, 41)
+    val dir = java.nio.file.Files.createTempDirectory("graft-reclu-pqguard").toString
+    val pq = PqIndex.Params(dim = 8, numSub = 4, codebookSize = 8)
+    IvfPq.build(e, "vec_id", "embedding", dir,
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 2), pq = pq))
+    IvfPq.build(spark.read.parquet(s"$dir/cells").select("vec_id", "embedding"),
+      "vec_id", "embedding", s"$dir/_regen",
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 4), pq = pq))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    // crash after every live artifact was retired, before any install:
+    // no cell_codes directory is visible until the swap rolls forward
+    val arts = Seq("cells", "cells_meta", "cell_codes", "codebooks")
+    fs.create(p(s"$dir/_regen/_COMPLETE"), true).close()
+    val m = fs.create(p(s"$dir/recluster_pending"), true)
+    m.write(arts.mkString("\n").getBytes("UTF-8")); m.close()
+    arts.foreach(a => assert(fs.rename(p(s"$dir/$a"), p(s"$dir/_retired_$a"))))
+    intercept[IllegalArgumentException] {
+      IvfIndex.recluster(spark, dir, "vec_id", "embedding")
+    }
+    assert(fs.exists(p(s"$dir/cell_codes")) && fs.exists(p(s"$dir/codebooks")),
+      "a plain re-cluster purged the composed artifacts")
+  }
+
   test("composed maintenance cadence: reclusterEvery re-clusters the composed index, fenced") {
     import graft.query.{IvfPq, PqIndex}
     val e = clustered(180, 37)
     val dir = java.nio.file.Files.createTempDirectory("graft-reclu-pqmaint").toString
     val pq = PqIndex.Params(dim = 8, numSub = 4, codebookSize = 8)
-    // the maintained params carry the TARGET shape (6 cells): upserts
-    // read only the pq half, the cadence re-cluster reads the ivf half
-    val params = IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 6), pq = pq)
+    // the cadence re-cluster keeps the index's PQ geometry and re-fits
+    // at the default cell count
     IvfPq.build(e.filter(col("vec_id") < 60), "vec_id", "embedding", dir,
       IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 2), pq = pq))
     def qAll(): Set[(Long, Long, Long)] =
@@ -265,19 +291,19 @@ class ReclusterSpec extends AnyFunSuite with SharedSpark {
         e.filter(col("vec_id") < 6)
           .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
         "query_id", "qvec", k = 3, threshold = 0.0))
-    assert(graft.streaming.IndexMaintenance.applyIvfPqBatch(dir, "vec_id",
+    assert(graft.streaming.IndexMaintenance.applyBatch(dir, "vec_id",
       "embedding", e.filter(col("vec_id") >= 60 && col("vec_id") < 120),
-      batchId = 1L, params = params, reclusterEvery = Some(2L)))
+      batchId = 1L, reclusterEvery = Some(2L)))
     assert(spark.read.parquet(s"$dir/cells_meta").count() == 2L)
-    assert(graft.streaming.IndexMaintenance.applyIvfPqBatch(dir, "vec_id",
+    assert(graft.streaming.IndexMaintenance.applyBatch(dir, "vec_id",
       "embedding", e.filter(col("vec_id") >= 120),
-      batchId = 2L, params = params, reclusterEvery = Some(2L)))
+      batchId = 2L, reclusterEvery = Some(2L)))
     assert(spark.read.parquet(s"$dir/cells_meta").count() > 2L,
       "composed cadence re-cluster did not fire")
     assert(qAll() == brute(e))
     // a replayed batch id is fenced
-    assert(!graft.streaming.IndexMaintenance.applyIvfPqBatch(dir, "vec_id",
-      "embedding", e.limit(10), batchId = 2L, params = params,
+    assert(!graft.streaming.IndexMaintenance.applyBatch(dir, "vec_id",
+      "embedding", e.limit(10), batchId = 2L,
       reclusterEvery = Some(2L)))
     assert(qAll() == brute(e))
   }
