@@ -45,6 +45,12 @@ object Tables {
       case None => spark.read.parquet(path)
     }
 
+  /** Whether `path` exists: one driver-side file-system call, no job. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
     else firstDataFile(spark, path).flatMap(FooterSchema.of(spark, _))
@@ -143,7 +149,7 @@ object Tables {
     */
   private[graft] val PartitionFanOut = Seq(GraftClient.PayloadBuckets,
     query.LexicalSearch.IndexBuckets, query.AnnIndex.IndexBuckets,
-    pipeline.CurationStore.IndexBuckets, streaming.StreamingNearDup.IndexBuckets).max
+    pipeline.NearDupIndex.IndexBuckets).max
 
   /** Session config every graft entry point should apply.
     *

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
-import graft.util.PartitionedWrite
+import graft.util.Compaction
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,10 +31,10 @@ import org.apache.spark.sql.functions._
   *     curated with (the production contract: the quality model is
   *     trained once and applied to each incoming batch; retraining
   *     per batch would silently re-rank already-curated documents).
-  *   - `bands/` (partitioned by band-hash bucket) and `sigdocs/`
-  *     (partitioned by id-hash bucket) — the near-dup probe index in
-  *     the [[graft.streaming.StreamingNearDup]] layout, so an append
-  *     probes only the partition directories its own bands hash into.
+  *   - `bands/` and `sigdocs/` — the [[NearDupIndex]] over every stored
+  *     document (the index [[graft.streaming.StreamingNearDup]] keeps
+  *     over admitted ones), so an append probes only the partition
+  *     directories its own bands hash into.
   *
   * 100 TB shape: `build` pays the corpus passes once; each `append`
   * costs O(batch) — its bands, its candidate buckets, its verified
@@ -47,15 +47,14 @@ import org.apache.spark.sql.functions._
   */
 object CurationStore {
 
-  /** Partition-directory count for the probe index tables. */
-  val IndexBuckets = 64
+  /** The flat append-maintained tables (the index tables are
+    * [[NearDupIndex]]'s).
+    */
+  private def flatTables(workDir: String) = Seq(s"$workDir/docs", s"$workDir/scores")
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def exists(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir))
+  /** Complete a compaction swap a crash tore in a flat table. */
+  private def recover(spark: SparkSession, workDir: String): Unit =
+    flatTables(workDir).foreach(Compaction.recover(spark, _))
 
   /** Build the store from the corpus at `dir`. One LSH pass (shared
     * with the session pair cache), one LM pass, plus the probe-index
@@ -87,7 +86,7 @@ object CurationStore {
       // safe), not the cluster labels: fork it alongside the pair
       // verification + connected components chain
       graft.util.Par.both(spark, "CurationStore.nearDup")(
-        writeProbeIndex(docsAll.select("doc_id", "text"), spark, dir, workDir),
+        NearDupIndex.append(Dedup.minhashSigs(spark, dir), docsAll, workDir),
         {
           docsAll.select("doc_id", "source")
             .write.mode("overwrite").parquet(s"$workDir/docs")
@@ -150,29 +149,6 @@ object CurationStore {
       .withColumn("avg_prob_ppm", expr("sum_prob_ppm div n_trans"))
   }
 
-  /** Probe-index rows for a document frame. Signatures come from the
-    * session cache when `fromCorpus` names the built corpus (build
-    * path — the sigs were just computed for the pair frame), else from
-    * the kernel directly (append path).
-    */
-  private def writeProbeIndex(
-      docs: DataFrame, spark: SparkSession, fromCorpus: String, workDir: String): Unit = {
-    val sigs = Dedup.minhashSigs(spark, fromCorpus)
-    Dedup.minhashBands(sigs)
-      .withColumn("__bucket", pmod(hash(col("band"), col("bucket")), lit(IndexBuckets)))
-      // bounded files/dir AND cluster-scaled write parallelism — see
-      // graft.util.PartitionedWrite
-      .transform(PartitionedWrite.spread(
-        _, IndexBuckets, col("__bucket"), col("doc_id")))
-      .write.mode("append").partitionBy("__bucket").parquet(s"$workDir/bands")
-    sigs.join(docs, "doc_id")
-      .select(col("doc_id"), col("sig"), col("text"))
-      .withColumn("__sbucket", pmod(hash(col("doc_id")), lit(IndexBuckets)))
-      .transform(PartitionedWrite.spread(
-        _, IndexBuckets, col("__sbucket"), col("doc_id")))
-      .write.mode("append").partitionBy("__sbucket").parquet(s"$workDir/sigdocs")
-  }
-
   /** Fold a new batch (doc_id, text, source) into the store: score it
     * under the frozen model, discover its verified near-dup pairs —
     * in-batch, and against the corpus via the partition-pruned probe
@@ -185,6 +161,7 @@ object CurationStore {
       batch: DataFrame,
       workDir: String,
       threshold: Double = 0.5): Unit = {
+    recover(spark, workDir)
     val docs = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
       .localCheckpoint()
@@ -195,18 +172,11 @@ object CurationStore {
     scoreUnderModel(spark, TextAnalysis.lmToks(docs), workDir)
       .write.mode("append").parquet(s"$workDir/scores")
 
-    // ---- near-dup pairs of the batch ----
-    val gramable = docs.filter(length(col("text")) >= Dedup.GramLen)
-    // same one-pass kernel as the stored corpus signatures — estimator
-    // comparisons across old/new sigs require bit-identical hashing
-    val sigs = gramable.select(
-        col("doc_id"),
-        graft.functions.minhash_text(
-          col("text"), lit(Dedup.GramLen), lit(Dedup.NumHashes)).as("sig"))
-      .localCheckpoint()
-    val newNew = Dedup.nearDupPairs(gramable.select("doc_id", "text"), sigs, threshold)
+    // ---- near-dup pairs of the batch: in-batch, and vs the index ----
+    val sigs = Dedup.minhashSigs(docs).localCheckpoint()
+    val newNew = Dedup.nearDupPairs(docs, sigs, threshold).select("d1", "d2")
+    val newOld = NearDupIndex.probe(spark, workDir, sigs, docs, threshold)
       .select("d1", "d2")
-    val newOld = corpusPairs(spark, gramable, sigs, workDir, threshold)
 
     // ---- contracted-graph cluster merge ----
     val oldLabels = Tables.read(spark, s"$workDir/clusters").localCheckpoint()
@@ -224,81 +194,7 @@ object CurationStore {
     val updated = relabeledOld.unionByName(newMembers).localCheckpoint()
     updated.write.mode("overwrite").parquet(s"$workDir/clusters")
 
-    writeBatchProbeIndex(gramable, sigs, workDir)
-  }
-
-  private def writeBatchProbeIndex(
-      docs: DataFrame, sigs: DataFrame, workDir: String): Unit = {
-    Dedup.minhashBands(sigs)
-      .withColumn("__bucket", pmod(hash(col("band"), col("bucket")), lit(IndexBuckets)))
-      // bounded files/dir per batch, cluster-scaled parallelism
-      .transform(PartitionedWrite.spread(
-        _, IndexBuckets, col("__bucket"), col("doc_id")))
-      .write.mode("append").partitionBy("__bucket").parquet(s"$workDir/bands")
-    sigs.join(docs.select("doc_id", "text"), "doc_id")
-      .select(col("doc_id"), col("sig"), col("text"))
-      .withColumn("__sbucket", pmod(hash(col("doc_id")), lit(IndexBuckets)))
-      .transform(PartitionedWrite.spread(
-        _, IndexBuckets, col("__sbucket"), col("doc_id")))
-      .write.mode("append").partitionBy("__sbucket").parquet(s"$workDir/sigdocs")
-  }
-
-  /** Verified (old, new) near-dup pairs of a batch against the stored
-    * corpus — the [[graft.streaming.StreamingNearDup]] probe shape:
-    * candidate generation reads only the partition directories the
-    * batch's own bands hash into, estimator payloads only the candidate
-    * ids' buckets, both id lists driver-bounded by [[IndexBuckets]];
-    * batch-side occupancy is capped with logged drops.
-    */
-  private def corpusPairs(
-      spark: SparkSession,
-      docs: DataFrame,
-      sigs: DataFrame,
-      workDir: String,
-      threshold: Double): DataFrame = {
-    import spark.implicits._
-    val empty = spark.emptyDataset[(Long, Long)].toDF("d1", "d2")
-    if (!exists(spark, s"$workDir/bands")) return empty
-    val bands = Dedup.minhashBands(sigs)
-      .withColumn("__bucket", pmod(hash(col("band"), col("bucket")), lit(IndexBuckets)))
-      .localCheckpoint()
-    val probeBuckets = bands.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ IndexBuckets: bounded
-    val capped = graft.util.BucketGuard.capOccupancy(
-      bands, Seq("band", "bucket"), Dedup.MaxBucketOccupancy, "curation append probe")
-    val cand = Tables.read(spark, s"$workDir/bands")
-      .filter(col("__bucket").isin(probeBuckets: _*))
-      .select(col("doc_id").as("d1"), col("band"), col("bucket"))
-      .join(capped.select(col("doc_id").as("d2"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      // ids increase batch over batch, so corpus ids are strictly
-      // smaller; the guard keeps a replayed batch from self-matching
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-      .localCheckpoint()
-    if (cand.isEmpty) return empty
-    val sigBuckets = cand
-      .select(pmod(hash(col("d1")), lit(IndexBuckets)).as("__sb"))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded
-    val oldSigDocs = Tables.read(spark, s"$workDir/sigdocs")
-      .filter(col("__sbucket").isin(sigBuckets: _*))
-    val estFloor = Dedup.estimatorFloor(threshold)
-    val plausible = cand
-      .join(oldSigDocs.select(col("doc_id").as("d1"), col("sig").as("s1")), "d1")
-      .join(sigs.select(col("doc_id").as("d2"), col("sig").as("s2")), "d2")
-      .filter(graft.functions.sig_jaccard_est(col("s1"), col("s2")) >= estFloor)
-      .select("d1", "d2")
-    plausible
-      .join(oldSigDocs.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
-      .join(docs.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
-      .withColumn("g1", Dedup.charGramsOf(col("t1")))
-      .withColumn("g2", Dedup.charGramsOf(col("t2")))
-      .withColumn("i", size(array_intersect(col("g1"), col("g2"))).cast("long"))
-      .withColumn("jac",
-        col("i").cast("double") /
-          (size(col("g1")).cast("long") + size(col("g2")).cast("long") - col("i")))
-      .filter(col("jac") >= threshold)
-      .select(col("d1"), col("d2"))
+    NearDupIndex.append(sigs, docs, workDir)
   }
 
   /** q100's output from the store: one artifact-read join + the same
@@ -306,6 +202,7 @@ object CurationStore {
     * recompute.
     */
   def bestOfCluster(spark: SparkSession, workDir: String): DataFrame = {
+    recover(spark, workDir)
     val labels = Tables.read(spark, s"$workDir/clusters")
     val quality = Tables.read(spark, s"$workDir/scores")
       .select(col("doc_id"), col("avg_prob_ppm"))
@@ -327,6 +224,7 @@ object CurationStore {
     * over the stored document universe.
     */
   def leakageSafeSplit(spark: SparkSession, workDir: String): DataFrame = {
+    recover(spark, workDir)
     val labels = Tables.read(spark, s"$workDir/clusters")
     val docs = Tables.read(spark, s"$workDir/docs")
     val bucket = Sampling.keepBucket(col("cluster_id"))
@@ -347,13 +245,7 @@ object CurationStore {
     * probes unaffected); flat tables compact to well-sized files. Run
     * off the ingest path.
     */
-  def compactStore(spark: SparkSession, workDir: String): Seq[graft.util.Compaction.Report] =
-    Seq(
-      (s"$workDir/bands", Seq("__bucket")),
-      (s"$workDir/sigdocs", Seq("__sbucket")),
-      (s"$workDir/docs", Seq.empty[String]),
-      (s"$workDir/scores", Seq.empty[String])).collect {
-      case (dir, pcols) if exists(spark, dir) =>
-        graft.util.Compaction.compact(spark, dir, pcols)
-    }
+  def compactStore(spark: SparkSession, workDir: String): Seq[Compaction.Report] =
+    NearDupIndex.compact(spark, workDir) ++
+      Compaction.compactExisting(spark, flatTables(workDir).map(_ -> Seq.empty[String]))
 }

@@ -106,12 +106,19 @@ object Dedup {
     // object graph for the JVM's lifetime
     sigCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     sigCache.computeIfAbsent((spark, dir), { key: (SparkSession, String) =>
-      minhashDocs(key._1, key._2).select(
-          col("doc_id"),
-          graft.functions.minhash_text(col("text"), lit(GramLen), lit(NumHashes)).as("sig"))
-        .persist()
+      minhashSigs(minhashDocs(key._1, key._2)).persist()
     })
   }
+
+  /** (doc_id, sig) of the (doc_id, text) rows at least [[GramLen]] long:
+    * the one signature computation, so signatures stored by one caller
+    * compare bit-identically with those another computes. Shorter docs
+    * carry no signature.
+    */
+  private[graft] def minhashSigs(docs: DataFrame): DataFrame =
+    docs.filter(length(col("text")) >= GramLen)
+      .select(col("doc_id"),
+        graft.functions.minhash_text(col("text"), lit(GramLen), lit(NumHashes)).as("sig"))
 
   /** Release the shared signature cache (and the derived verified-pair
     * frames) for one corpus — tests, audits, and long-lived sessions
@@ -161,12 +168,17 @@ object Dedup {
       maxOccupancy: Int = MaxBucketOccupancy): (DataFrame, Option[DataFrame]) = {
     val (kept, dropped) = graft.util.BucketGuard.capOccupancyWithDropped(
       bands, Seq("band", "bucket"), maxOccupancy, "minhash LSH")
-    (kept.as("a").join(kept.as("b"),
+    (bandSelfJoin(kept), dropped)
+  }
+
+  /** (d1 < d2) pairs of docs sharing a (band, bucket) of already-capped
+    * band rows.
+    */
+  private def bandSelfJoin(kept: DataFrame): DataFrame =
+    kept.as("a").join(kept.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")),
-      dropped)
-  }
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
 
   /** Estimator floor for the pre-filter, derived from the signature
     * width instead of hard-coded: the estimated Jaccard of a true pair
@@ -192,16 +204,20 @@ object Dedup {
     * codegen'd 128-long compare per row, far cheaper than a distinct()
     * shuffle of the multi-million-pair collision multiset, yet it
     * rejects the j ≲ 0.25 mass that 64×2 banding admits (floor
-    * derivation and accepted tail risk: [[estimatorFloor]]).
+    * derivation and accepted tail risk: [[estimatorFloor]]). `d1` reads
+    * its signature from `sigs1`, `d2` from `sigs2`: one frame twice
+    * within a corpus, the stored and the batch side in
+    * [[NearDupIndex.probe]].
     */
   private[graft] def minhashPlausible(
       collisions: DataFrame,
-      sigs: DataFrame,
+      sigs1: DataFrame,
+      sigs2: DataFrame,
       threshold: Double): DataFrame = {
     val estFloor = estimatorFloor(threshold)
     collisions
-      .join(sigs.select(col("doc_id").as("d1"), col("sig").as("s1")), "d1")
-      .join(sigs.select(col("doc_id").as("d2"), col("sig").as("s2")), "d2")
+      .join(sigs1.select(col("doc_id").as("d1"), col("sig").as("s1")), "d1")
+      .join(sigs2.select(col("doc_id").as("d2"), col("sig").as("s2")), "d2")
       .filter(graft.functions.sig_jaccard_est(col("s1"), col("s2")) >= estFloor)
       .select("d1", "d2")
       .distinct() // now a few hundred rows, not millions
@@ -223,21 +239,25 @@ object Dedup {
       sigs: DataFrame,
       threshold: Double): DataFrame =
     verifyPlausiblePairs(
-      minhashPlausible(minhashCollisions(minhashBands(sigs)), sigs, threshold),
-      docs, threshold)
+      minhashPlausible(minhashCollisions(minhashBands(sigs)), sigs, sigs, threshold),
+      docs, docs, threshold)
 
   /** Exact gram verification of an estimator-survivor (d1, d2) frame —
-    * real character grams computed only for the survivor pairs. The
-    * terminal stage of [[nearDupPairs]], shared with [[cleanCorpus]]'s
-    * cap-regime top-up so both paths verify with identical arithmetic.
+    * real character grams computed only for the survivor pairs, `d1`'s
+    * text from `docs1` and `d2`'s from `docs2` (sided as in
+    * [[minhashPlausible]]). The terminal stage of [[nearDupPairs]],
+    * shared with [[cleanCorpus]]'s cap-regime top-up and
+    * [[NearDupIndex.probe]] so every path verifies with identical
+    * arithmetic.
     */
   private[graft] def verifyPlausiblePairs(
       plausible: DataFrame,
-      docs: DataFrame,
+      docs1: DataFrame,
+      docs2: DataFrame,
       threshold: Double): DataFrame =
     plausible
-      .join(docs.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
-      .join(docs.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
+      .join(docs1.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
+      .join(docs2.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
       .withColumn("g1", charGramsOf(col("t1")))
       .withColumn("g2", charGramsOf(col("t2")))
       .withColumn("i", size(array_intersect(col("g1"), col("g2"))).cast("long"))
@@ -282,9 +302,9 @@ object Dedup {
         val sigs = minhashSigs(key._1, key._2)
         val (collisions, dropped) = minhashCollisionsWithDrops(minhashBands(sigs))
         pairDropsCache.put(key, dropped)
+        val docs = minhashDocs(key._1, key._2)
         verifyPlausiblePairs(
-            minhashPlausible(collisions, sigs, key._3),
-            minhashDocs(key._1, key._2), key._3)
+            minhashPlausible(collisions, sigs, sigs, key._3), docs, docs, key._3)
           .localCheckpoint()
       })
   }
@@ -605,13 +625,9 @@ object Dedup {
             .join(broadcast(droppedKeys), Seq("band", "bucket"), "left_semi"),
           Seq("band", "bucket"), MaxBucketOccupancy,
           "cleanCorpus rep-level top-up")
-        val gapCollisions = gapKept.as("a").join(gapKept.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
         val topUp = verifyPlausiblePairs(
-            minhashPlausible(gapCollisions, sigs, threshold), docs, threshold)
+            minhashPlausible(bandSelfJoin(gapKept), sigs, sigs, threshold),
+            docs, docs, threshold)
           .select("d1", "d2")
         // a pair colliding in both a kept and a dropped bucket appears
         // in both frames — distinct() over the answer-sized union

@@ -84,10 +84,8 @@ object IvfPq extends IvfLayout {
   private[query] def isComposed(spark: SparkSession, indexPath: String): Boolean =
     hasTable(spark, indexPath, "cell_codes")
 
-  private def hasTable(spark: SparkSession, indexPath: String, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/$table")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  private def hasTable(spark: SparkSession, indexPath: String, table: String): Boolean =
+    Tables.exists(spark, s"$indexPath/$table")
 
   /** Build = one [[IvfIndex.build]] (cells + radii metadata + the
     * payload table, parquet-partitioned by cell) + PQ codebooks fit

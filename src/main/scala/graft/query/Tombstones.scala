@@ -63,10 +63,8 @@ object Tombstones {
 
   def path(indexPath: String): String = s"$indexPath/$TableName"
 
-  def exists(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(indexPath))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  def exists(spark: SparkSession, indexPath: String): Boolean =
+    Tables.exists(spark, path(indexPath))
 
   /** The tombstoned ids as a one-column ([[IdColumn]]) frame, None when
     * no delete was ever issued (the common case — one driver-side

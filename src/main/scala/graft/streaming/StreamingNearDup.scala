@@ -1,8 +1,6 @@
 package graft.streaming
 
-import graft.Tables
-import graft.pipeline.Dedup
-import graft.util.PartitionedWrite
+import graft.pipeline.{Dedup, NearDupIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,16 +26,10 @@ import org.apache.spark.sql.functions._
   * signature and are always admitted (exact-dedup upstream — q10 /
   * [[StreamingDedup]] — owns identical payloads).
   *
-  * Index layout under `workDir` (the [[graft.query.LexicalSearch]]
-  * bucketed-index discipline):
-  *   - `bands/`   (doc_id, band, bucket) parquet-partitioned by a
-  *     band-hash bucket — the probe reads only the partition
-  *     directories the batch's own bands hash into (≤ [[IndexBuckets]]
-  *     directories, collected driver-side: query compilation, not data
-  *     movement).
-  *   - `sigdocs/` (doc_id, sig, text) partitioned by an id-hash bucket
-  *     — estimator/verification payloads for exactly the candidate old
-  *     ids' buckets, never a full corpus scan.
+  * Index under `workDir`: the [[graft.pipeline.NearDupIndex]] over the
+  * admitted documents (`bands/`, `sigdocs/`; the same index
+  * [[graft.pipeline.CurationStore]] keeps over its corpus) — each batch
+  * probes it partition-pruned, then appends its admitted docs.
   *
   * 100 TB shape: per-batch cost scales with the BATCH (its bands, its
   * candidate buckets, its verified pairs), not the corpus. And because
@@ -48,19 +40,9 @@ import org.apache.spark.sql.functions._
   */
 object StreamingNearDup {
 
-  /** Partition-directory count for both index tables. */
-  val IndexBuckets = 64
-
   case class Verdict(
       doc_id: Long, admitted: Boolean,
       dup_of: Option[Long], jac: Option[Double])
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def exists(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir))
 
   /** Decide one batch against the corpus-so-far at `workDir`, emit one
     * [[Verdict]] per batch doc, and append the admitted docs' index
@@ -71,79 +53,13 @@ object StreamingNearDup {
   def admissionStep(
       batch: DataFrame, workDir: String, threshold: Double = 0.5): DataFrame = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val bandsPath = s"$workDir/bands"
-    val sigPath = s"$workDir/sigdocs"
-
     val docs = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .localCheckpoint()
-    val sigs = docs.filter(length(col("text")) >= Dedup.GramLen)
-      .select(col("doc_id"),
-        graft.functions.minhash_text(
-          col("text"), lit(Dedup.GramLen), lit(Dedup.NumHashes)).as("sig"))
-      .localCheckpoint()
-    val bands = Dedup.minhashBands(sigs)
-      .withColumn("__bucket", pmod(hash(col("band"), col("bucket")), lit(IndexBuckets)))
-      .localCheckpoint()
+    val sigs = Dedup.minhashSigs(docs).localCheckpoint()
 
-    // ---- candidates vs the admitted corpus (partition-pruned probe) ----
-    val oldNewVerified: DataFrame =
-      if (!exists(spark, bandsPath)) {
-        spark.emptyDataset[(Long, Long, Double)].toDF("d1", "d2", "jac")
-      } else {
-        val probeBuckets = bands.select("__bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq // ≤ IndexBuckets: bounded
-        // corpus-side occupancy is naturally low (only mutually
-        // non-duplicate docs are indexed), but the BATCH side has no
-        // such guarantee — a boilerplate-heavy batch would flood the
-        // probe join; same capped-with-logged-drops discipline as the
-        // in-batch path (Dedup.minhashCollisions)
-        val cappedBands = graft.util.BucketGuard.capOccupancy(
-          bands, Seq("band", "bucket"),
-          Dedup.MaxBucketOccupancy, "streaming near-dup corpus probe")
-        val cand = Tables.read(spark, bandsPath)
-          .filter(col("__bucket").isin(probeBuckets: _*))
-          .select(col("doc_id").as("d1"), col("band"), col("bucket"))
-          .join(cappedBands.select(col("doc_id").as("d2"), col("band"), col("bucket")),
-            Seq("band", "bucket"))
-          // ids are contractually increasing, so corpus ids are always
-          // smaller than batch ids — EXCEPT on crash replay inside the
-          // documented fence window (index appended, fence not yet
-          // written), where a replayed doc meets its own just-indexed
-          // copy at jac 1.0 and would reject every previously admitted
-          // doc. The strict inequality degrades that to the documented
-          // duplicate-verdict case instead of self-rejection.
-          .filter(col("d1") < col("d2"))
-          .select("d1", "d2")
-          .localCheckpoint()
-        if (cand.isEmpty) {
-          spark.emptyDataset[(Long, Long, Double)].toDF("d1", "d2", "jac")
-        } else {
-          val sigBuckets = cand
-            .select(pmod(hash(col("d1")), lit(IndexBuckets)).as("__sb"))
-            .distinct().collect().map(_.getInt(0)).toSeq // bounded
-          val oldSigDocs = Tables.read(spark, sigPath)
-            .filter(col("__sbucket").isin(sigBuckets: _*))
-          val estFloor = Dedup.estimatorFloor(threshold)
-          val plausible = cand
-            .join(oldSigDocs.select(col("doc_id").as("d1"), col("sig").as("s1")), "d1")
-            .join(sigs.select(col("doc_id").as("d2"), col("sig").as("s2")), "d2")
-            .filter(graft.functions.sig_jaccard_est(col("s1"), col("s2")) >= estFloor)
-            .select("d1", "d2").distinct()
-          plausible
-            .join(oldSigDocs.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
-            .join(docs.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
-            .withColumn("g1", Dedup.charGramsOf(col("t1")))
-            .withColumn("g2", Dedup.charGramsOf(col("t2")))
-            .withColumn("i", size(array_intersect(col("g1"), col("g2"))).cast("long"))
-            .withColumn("jac",
-              col("i").cast("double") /
-                (size(col("g1")).cast("long") + size(col("g2")).cast("long") - col("i")))
-            .filter(col("jac") >= threshold)
-            .select(col("d1"), col("d2"), round(col("jac"), 6).as("jac"))
-        }
-      }
+    // ---- verified pairs vs the admitted corpus (partition-pruned probe) ----
+    val oldNewVerified = NearDupIndex.probe(spark, workDir, sigs, docs, threshold)
 
     // ---- in-batch verified pairs (batch-sized; full banded machinery) ----
     val newNew = Dedup.nearDupPairs(docs, sigs, threshold).localCheckpoint()
@@ -179,35 +95,18 @@ object StreamingNearDup {
       .localCheckpoint()
 
     // ---- index append for the admitted (only non-duplicates enter) ----
-    val admittedIds = verdicts.filter(col("admitted")).select("doc_id")
-    bands.join(admittedIds, "doc_id")
-      // bounded files/dir per batch, cluster-scaled parallelism
-      .transform(PartitionedWrite.spread(
-        _, IndexBuckets, col("__bucket"), col("doc_id")))
-      .write.mode("append").partitionBy("__bucket").parquet(bandsPath)
-    sigs.join(admittedIds, "doc_id")
-      .join(docs, "doc_id")
-      .withColumn("__sbucket", pmod(hash(col("doc_id")), lit(IndexBuckets)))
-      .transform(PartitionedWrite.spread(
-        _, IndexBuckets, col("__sbucket"), col("doc_id")))
-      .write.mode("append").partitionBy("__sbucket").parquet(sigPath)
+    NearDupIndex.append(
+      sigs.join(verdicts.filter(col("admitted")).select("doc_id"), "doc_id"),
+      docs, workDir)
 
     verdicts
   }
 
-  /** Compact both index tables ([[graft.util.Compaction]]): per-batch
-    * appends land one file per bucket per batch, so at micro-batch
-    * cadence the index decays into thousands of small files — run this
-    * off the admission path on a maintenance cadence. Partition
-    * layouts are preserved, so the pruned probes are unaffected.
+  /** Compact the index ([[graft.pipeline.NearDupIndex.compact]]) off
+    * the admission path, on a maintenance cadence.
     */
   def compactIndex(spark: SparkSession, workDir: String): Seq[graft.util.Compaction.Report] =
-    Seq(
-      (s"$workDir/bands", "__bucket"),
-      (s"$workDir/sigdocs", "__sbucket")).collect {
-      case (dir, pcol) if exists(spark, dir) =>
-        graft.util.Compaction.compact(spark, dir, Seq(pcol))
-    }
+    NearDupIndex.compact(spark, workDir)
 
   /** Wire a (doc_id, text) stream through [[admissionStep]]; verdicts
     * append to `workDir/verdicts` as the audit log. Replayed batch ids

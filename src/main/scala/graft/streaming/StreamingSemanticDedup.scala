@@ -55,11 +55,6 @@ object StreamingSemanticDedup {
 
   private def ivfPath(workDir: String) = s"$workDir/ivf"
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Decide one batch against the admitted-so-far corpus, emit one
     * verdict row (vec_id, admitted, dup_of, sim) per batch vector,
     * and fold the admitted vectors into the IVF index. Works
@@ -106,7 +101,7 @@ object StreamingSemanticDedup {
         "(graft.pipeline.SemanticDedup) instead")
     val batchK = (nBatch + 1).min(Int.MaxValue - 1).toInt
     val cm: DataFrame =
-      if (exists(spark, idx))
+      if (Tables.exists(spark, idx))
         IvfIndex.queryTopK(spark, idx, "vec_id", "embedding",
             vecs.select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
             "query_id", "qvec", k = batchK, threshold = Math.nextDown(tau))
@@ -115,7 +110,7 @@ object StreamingSemanticDedup {
           .agg(
             max_by(col("vec_id"), struct(col("sim"), -col("vec_id"))).as("cm_dup"),
             max(struct(col("sim"), -col("vec_id"))).getField("sim").as("cm_score"))
-      else if (exists(spark, seedPath))
+      else if (Tables.exists(spark, seedPath))
         vecs.select(col("vec_id").as("doc_id"), col("embedding").as("__qe"))
           .crossJoin(broadcast(Tables.read(spark, seedPath)
             .select(col("vec_id").as("__sid"), col("embedding").as("__se"))))
@@ -162,12 +157,12 @@ object StreamingSemanticDedup {
     val admitted = vecs.join(
       verdicts.filter(col("admitted")).select(col("doc_id").as("vec_id")), "vec_id")
     if (!admitted.isEmpty) {
-      if (exists(spark, idx)) {
+      if (Tables.exists(spark, idx)) {
         IvfIndex.upsert(spark, idx, "vec_id", "embedding", admitted)
         splitCap.foreach(cap =>
           IvfIndex.splitToConvergence(spark, idx, "vec_id", "embedding", cap))
       } else {
-        val total = (if (exists(spark, seedPath))
+        val total = (if (Tables.exists(spark, seedPath))
           Tables.read(spark, seedPath).unionByName(admitted)
         else admitted).localCheckpoint()
         val n = total.count()

@@ -19,9 +19,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   - `shas/`     seen payload hashes (exact-dedup state; a payload
   *     seen once never re-enters, even if a later stage rejected it —
   *     [[StreamingDedup]]'s first-occurrence contract).
-  *   - `neardup/`  [[StreamingNearDup]]'s probe index: only documents
-  *     that stage ADMITS are indexed, so the corpus side stays
-  *     mutually non-duplicate.
+  *   - `neardup/`  the [[graft.pipeline.NearDupIndex]] that
+  *     [[StreamingNearDup]] admits against: only documents that stage
+  *     ADMITS are indexed, so the corpus side stays mutually
+  *     non-duplicate.
   *   - `gated/batch=N/` the quota verdict ledger, one partition per
   *     micro-batch (doc_id, source, n_tokens, cum_tokens, admitted).
   *     [[StreamingQuota]] semantics: every gated document's tokens
@@ -92,13 +93,6 @@ object TrainingFeed {
       opCol: Option[String] = None,
       compactDeletesEvery: Option[Long] = None)
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def exists(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir))
-
   /** Whitespace token count, Python-split parity (empty → 0; regex
     * trim because Spark's `trim` strips spaces only).
     */
@@ -139,7 +133,7 @@ object TrainingFeed {
       // batch never double-counts. Purely observational: no effect on
       // any admission verdict — which includes its failures: a corrupt
       // drift state must log and skip, never halt admission.
-      if (exists(spark, s"$workDir/drift/ref_counts"))
+      if (Tables.exists(spark, s"$workDir/drift/ref_counts"))
         try StreamingDrift.applyBatch(
           s"$workDir/drift", Seq("source"), docs.select("source"), batchId)
         catch {
@@ -156,7 +150,7 @@ object TrainingFeed {
         .filter(col("__rn") === 1).drop("__rn")
       val shasPath = s"$workDir/shas"
       val fresh =
-        (if (exists(spark, shasPath))
+        (if (Tables.exists(spark, shasPath))
            firstPerSha.join(Tables.read(spark, shasPath), Seq("content_sha"), "left_anti")
          else firstPerSha).localCheckpoint()
 
@@ -169,7 +163,7 @@ object TrainingFeed {
         // below is mode(overwrite), so re-running it over a torn
         // partition is idempotent (budgets still counted once: the prior
         // consumption scan reads only committed rows).
-        if (exists(spark, s"$gatedDir/_SUCCESS")) Tables.read(spark, gatedDir)
+        if (Tables.exists(spark, s"$gatedDir/_SUCCESS")) Tables.read(spark, gatedDir)
         else {
           // ---- stage 2: near-dup admission (persisted probe index) ----
           val verdicts = StreamingNearDup.admissionStep(
@@ -180,7 +174,7 @@ object TrainingFeed {
           // ---- stage 3: per-source quota gate ----
           val gatedPath = s"$workDir/gated"
           val prior =
-            if (exists(spark, gatedPath))
+            if (Tables.exists(spark, gatedPath))
               Tables.read(spark, gatedPath)
                 .groupBy("source").agg(sum("n_tokens").as("__consumed"))
             else spark.emptyDataset[(String, Long)].toDF("source", "__consumed")
@@ -214,7 +208,7 @@ object TrainingFeed {
         // and by compaction. No index yet means nothing was admitted —
         // the delete targets nothing and is skipped rather than leaving
         // a tombstone table for a directory the first build owns.
-        if (!exists(spark, s"$indexPath/cells_meta")) ()
+        if (!Tables.exists(spark, s"$indexPath/cells_meta")) ()
         else if (!delIds.isEmpty)
           IvfIndex.delete(spark, indexPath, "doc_id", delIds)
         val vecs = gated.filter(col("admitted"))
@@ -224,7 +218,7 @@ object TrainingFeed {
           .localCheckpoint()
         val n = vecs.count()
         if (n > 0) {
-          if (!exists(spark, s"$indexPath/cells_meta"))
+          if (!Tables.exists(spark, s"$indexPath/cells_meta"))
             IvfIndex.build(vecs, "doc_id", "embedding", indexPath,
               IvfIndex.Params(nCentroids = cfg.nCentroids))
           else {
@@ -268,7 +262,7 @@ object TrainingFeed {
         // owes its compaction cadence.
         cfg.compactDeletesEvery.foreach { cn =>
           if (cn > 0 && batchId % cn == 0 &&
-              exists(spark, s"$indexPath/cells_meta"))
+              Tables.exists(spark, s"$indexPath/cells_meta"))
             IvfIndex.compactTombstones(spark, indexPath, "doc_id", "embedding")
         }
         IndexMaintenance.writeFence(spark, indexPath, batchId)
@@ -285,15 +279,15 @@ object TrainingFeed {
       // reach the recompute sees the identical post-index-fence index, so
       // the metrics it would write are identical anyway. Observational
       // like stage 0: failures log and skip, admission unaffected.
-      if (exists(spark, s"$workDir/health/queries") &&
-          exists(spark, s"$indexPath/cells_meta")) {
+      if (Tables.exists(spark, s"$workDir/health/queries") &&
+          Tables.exists(spark, s"$indexPath/cells_meta")) {
         val mDir = s"$workDir/health/metrics/batch=$batchId"
         // first-write-wins gates on the COMMIT marker, not the directory:
         // a crash mid-write leaves mDir with only _temporary and no
         // _SUCCESS, and a dir-existence gate would then skip the replay's
         // recompute forever — healthReport silently missing that batch.
         // The overwrite below makes the retried write idempotent.
-        if (!exists(spark, s"$mDir/_SUCCESS"))
+        if (!Tables.exists(spark, s"$mDir/_SUCCESS"))
           try {
             val hq = Tables.read(spark, s"$workDir/health/queries")
             val rels = Tables.read(spark, s"$workDir/health/rels")
@@ -316,9 +310,9 @@ object TrainingFeed {
         // frame; same first-write-wins + log-and-skip discipline, its
         // own metrics partition so the two faces' trajectories read
         // independently.
-        if (exists(spark, s"$workDir/health/labels")) {
+        if (Tables.exists(spark, s"$workDir/health/labels")) {
           val fDir = s"$workDir/health/metrics_filtered/batch=$batchId"
-          if (!exists(spark, s"$fDir/_SUCCESS"))
+          if (!Tables.exists(spark, s"$fDir/_SUCCESS"))
             try {
               val hq = Tables.read(spark, s"$workDir/health/queries")
               val rels = Tables.read(spark, s"$workDir/health/rels")

@@ -31,7 +31,7 @@ object PlanAudit {
       timed("q15 sig compute")(println(s"[audit] sigs: ${sigs.count()}"))
       val collisions = Dedup.minhashCollisions(Dedup.minhashBands(sigs))
       timed("q15 raw band collisions")(println(s"[audit] collisions: ${collisions.count()}"))
-      val plausible = Dedup.minhashPlausible(collisions, sigs, threshold = 0.5)
+      val plausible = Dedup.minhashPlausible(collisions, sigs, sigs, threshold = 0.5)
       timed("q15 est-filter survivors")(println(s"[audit] plausible: ${plausible.count()}"))
       println("[audit] q15 plausible plan:")
       plausible.explain("formatted")

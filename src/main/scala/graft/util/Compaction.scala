@@ -20,9 +20,14 @@ import org.apache.spark.sql.functions.col
   * directory, is row-count-verified against the source, and only then
   * swapped in (old dir moved aside, new dir renamed over, old dir
   * deleted). On a POSIX filesystem/HDFS the rename pair is two atomic
-  * metadata ops with a crash window BETWEEN them (recoverable: the
-  * `.old` dir is the complete prior state); on object stores rename is
-  * copy+delete and a table format (or the fence discipline of
+  * metadata ops with a crash window BETWEEN them, which [[recover]]
+  * closes (the moved-aside dir is the complete prior state). `compact`
+  * recovers at its head, and so does every [[graft.pipeline.NearDupIndex]]
+  * and [[graft.pipeline.CurationStore]] entry point before it reads or
+  * appends a table; IVF and lexical tables do not recover yet. Such an
+  * entry point must not race a compaction of the same table, the rule
+  * appends already follow. On object stores rename is copy+delete and a
+  * table format (or the fence discipline of
   * [[graft.streaming.IndexMaintenance]]) should own the swap instead —
   * documented, not hidden.
   *
@@ -37,6 +42,37 @@ object Compaction {
   case class Report(
       rows: Long, filesBefore: Long, filesAfter: Long,
       bytesBefore: Long, bytesAfter: Long)
+
+  private def moved(path: String) = new Path(path + ".__compact_old")
+
+  /** Complete a swap torn between its two renames. With `path` missing,
+    * the moved-aside prior generation is the whole table and is renamed
+    * back; with `path` present, a moved-aside generation is stale and is
+    * deleted. A no-op when no swap was torn.
+    */
+  def recover(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val old = moved(path)
+    if (fs.exists(old)) {
+      if (fs.exists(p)) fs.delete(old, true)
+      else {
+        require(fs.rename(old, p), s"recovery failed: could not restore $p from $old")
+        org.slf4j.LoggerFactory.getLogger("graft.Compaction")
+          .warn(s"restored $path from a compaction swap torn before its promote")
+      }
+    }
+  }
+
+  /** [[compact]] each `(path, partitionCols)` table that exists after
+    * [[recover]], in order.
+    */
+  def compactExisting(
+      spark: SparkSession, tables: Seq[(String, Seq[String])]): Seq[Report] =
+    tables.flatMap { case (path, partitionCols) =>
+      recover(spark, path)
+      Option.when(Tables.exists(spark, path))(compact(spark, path, partitionCols))
+    }
 
   private def parquetFiles(
       fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -60,6 +96,7 @@ object Compaction {
       path: String,
       partitionCols: Seq[String] = Seq.empty,
       maxRecordsPerFile: Long = 5000000L): Report = {
+    recover(spark, path)
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"compaction target does not exist: $path")
@@ -69,9 +106,8 @@ object Compaction {
     val srcRows = src.count()
 
     val tmp = new Path(path + ".__compact_next")
-    val old = new Path(path + ".__compact_old")
+    val old = moved(path)
     fs.delete(tmp, true)
-    fs.delete(old, true)
 
     // one output task per partition directory (or per shuffle
     // partition on flat layouts), maxRecordsPerFile re-splitting any

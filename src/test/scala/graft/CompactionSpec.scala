@@ -1,6 +1,8 @@
 package graft
 
+import graft.streaming.StreamingNearDup
 import graft.util.Compaction
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,5 +65,40 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
       Compaction.compact(spark, dir, Seq("no_such_col"))
     }
     assert(spark.read.parquet(dir).count() == 100L)
+  }
+
+  test("a swap torn between its renames is recovered: no re-admitted duplicate, no lost row") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("compact-torn").toString
+    val a = "the quick brown fox jumps over the lazy dog near the old riverbank at dawn"
+    val c = "an entirely unrelated sentence about compiling scala code on a quiet evening"
+    def admit(rows: (Long, String)*) =
+      StreamingNearDup.admissionStep(rows.toDF("doc_id", "text"), dir)
+        .collect().map(r => (r.getLong(0), r.getBoolean(1), r.get(2))).toSet
+    assert(admit(1L -> a, 2L -> c) == Set((1L, true, null), (2L, true, null)))
+
+    // the crash window of a bands/ compaction, staged by hand: the
+    // rewrite is complete and the source moved aside, but the promote
+    // never ran
+    val bands = new Path(s"$dir/bands")
+    val old = new Path(s"$dir/bands.__compact_old")
+    val next = new Path(s"$dir/bands.__compact_next")
+    val fs = bands.getFileSystem(spark.sessionState.newHadoopConf())
+    val storedRows = spark.read.parquet(bands.toString).count()
+    assert(FileUtil.copy(fs, bands, fs, next, false, fs.getConf))
+    assert(fs.rename(bands, old))
+
+    // a near-duplicate of doc 1 still meets the stored corpus
+    assert(admit(3L -> (a + " today")) == Set((3L, false, 1L)))
+    // and a later compaction keeps every stored row
+    StreamingNearDup.compactIndex(spark, dir)
+    assert(spark.read.parquet(bands.toString).count() == storedRows)
+    assert(!fs.exists(old) && !fs.exists(next))
+
+    // a moved-aside generation next to a promoted table is stale
+    assert(FileUtil.copy(fs, bands, fs, old, false, fs.getConf))
+    Compaction.recover(spark, bands.toString)
+    assert(!fs.exists(old))
+    assert(spark.read.parquet(bands.toString).count() == storedRows)
   }
 }

@@ -111,6 +111,20 @@ class StreamingNearDupSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("a batch replayed after its index append repeats its verdicts (d1 < d2 guard)") {
+    import spark.implicits._
+    val dir = tempDir("replay")
+    val batch = docs.toDF("doc_id", "text")
+    val first = collectVerdicts(StreamingNearDup.admissionStep(batch, dir))
+    // the crash window of start(): the index append landed, the fence
+    // write did not, so the same batch runs again over its own rows
+    val second = collectVerdicts(StreamingNearDup.admissionStep(batch, dir))
+    assert(second == first)
+    assert(second.values.exists(!_._1), "fixture must reject some docs for this spec to bite")
+    assert(second.forall { case (id, (_, dupOf, _)) => !dupOf.contains(id) },
+      "a replayed doc was rejected as a duplicate of itself")
+  }
+
   test("start() wires the step through foreachBatch and persists verdicts") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
