@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
-import graft.util.Compaction
+import graft.util.{Compaction, Generation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,10 +51,6 @@ object CurationStore {
     * [[NearDupIndex]]'s).
     */
   private def flatTables(workDir: String) = Seq(s"$workDir/docs", s"$workDir/scores")
-
-  /** Complete a compaction swap a crash tore in a flat table. */
-  private def recover(spark: SparkSession, workDir: String): Unit =
-    flatTables(workDir).foreach(Compaction.recover(spark, _))
 
   /** Build the store from the corpus at `dir`. One LSH pass (shared
     * with the session pair cache), one LM pass, plus the probe-index
@@ -161,7 +157,7 @@ object CurationStore {
       batch: DataFrame,
       workDir: String,
       threshold: Double = 0.5): Unit = {
-    recover(spark, workDir)
+    Generation.recover(spark, workDir)
     val docs = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
       .localCheckpoint()
@@ -202,7 +198,7 @@ object CurationStore {
     * recompute.
     */
   def bestOfCluster(spark: SparkSession, workDir: String): DataFrame = {
-    recover(spark, workDir)
+    Generation.recover(spark, workDir)
     val labels = Tables.read(spark, s"$workDir/clusters")
     val quality = Tables.read(spark, s"$workDir/scores")
       .select(col("doc_id"), col("avg_prob_ppm"))
@@ -224,7 +220,7 @@ object CurationStore {
     * over the stored document universe.
     */
   def leakageSafeSplit(spark: SparkSession, workDir: String): DataFrame = {
-    recover(spark, workDir)
+    Generation.recover(spark, workDir)
     val labels = Tables.read(spark, s"$workDir/clusters")
     val docs = Tables.read(spark, s"$workDir/docs")
     val bucket = Sampling.keepBucket(col("cluster_id"))

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
-import graft.util.{BucketGuard, Compaction, PartitionedWrite}
+import graft.util.{BucketGuard, Compaction, Generation, PartitionedWrite}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *     full corpus scan.
   *
   * Every entry point first completes a compaction swap a crash tore
-  * ([[Compaction.recover]]), so a missing table always means an empty
+  * ([[Generation.recover]]), so a missing table always means an empty
   * corpus, never a stranded one. Ids must increase append over append
   * (the ordered-feed contract the streaming operators share).
   */
@@ -37,9 +37,6 @@ object NearDupIndex {
   private def bandsPath(path: String) = s"$path/bands"
   private def sigdocsPath(path: String) = s"$path/sigdocs"
 
-  private def recover(spark: SparkSession, path: String): Unit =
-    Seq(bandsPath(path), sigdocsPath(path)).foreach(Compaction.recover(spark, _))
-
   private def bucketedBands(sigs: DataFrame): DataFrame =
     Dedup.minhashBands(sigs)
       .withColumn("__bucket", pmod(hash(col("band"), col("bucket")), lit(IndexBuckets)))
@@ -48,7 +45,7 @@ object NearDupIndex {
     * `docs` (doc_id, text) supplies their text and may hold more rows.
     */
   def append(sigs: DataFrame, docs: DataFrame, path: String): Unit = {
-    recover(sigs.sparkSession, path)
+    Generation.recover(sigs.sparkSession, path)
     bucketedBands(sigs)
       // bounded files/dir per append, cluster-scaled parallelism — see
       // graft.util.PartitionedWrite
@@ -75,7 +72,7 @@ object NearDupIndex {
       docs: DataFrame,
       threshold: Double): DataFrame = {
     import spark.implicits._
-    recover(spark, path)
+    Generation.recover(spark, path)
     val empty = spark.emptyDataset[(Long, Long, Double)].toDF("d1", "d2", "jac")
     if (!Tables.exists(spark, bandsPath(path))) return empty
     val bands = bucketedBands(sigs).localCheckpoint()

@@ -1,6 +1,7 @@
 package graft.query
 
 import graft.Tables
+import graft.util.Generation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,7 +61,7 @@ object IndexCheck {
       idCol: String,
       embCol: String): DataFrame = {
     import spark.implicits._
-    IvfIndex.ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
     def exists(t: String) =
@@ -154,10 +155,10 @@ object IndexCheck {
     })
 
     // -------------------------------------------------- pending state
+    // a generation swap's marker cannot be pending: recovered above
     val markers =
-      Seq(IvfIndex.splitPendingPath(indexPath),
-          IvfIndex.reclusterPendingPath(indexPath))
-        .count(p => fs.exists(new org.apache.hadoop.fs.Path(p))).toLong
+      if (fs.exists(new org.apache.hadoop.fs.Path(IvfIndex.splitPendingPath(indexPath)))) 1L
+      else 0L
     val rows = graft.util.Par.all(spark, "IndexCheck.checkIvf")(checks.toSeq: _*) ++
       Seq(("pending_markers", true, markers),
         ("pending_tombstones", true, Tombstones.pendingCount(spark, indexPath)))
@@ -183,7 +184,7 @@ object IndexCheck {
       workDir: String,
       idCol: String): DataFrame = {
     import spark.implicits._
-    IvfIndex.ensureGeneration(spark, workDir)
+    Generation.recover(spark, workDir)
     val rows = scala.collection.mutable.ArrayBuffer[(String, Boolean, Long)]()
     val postings = Tables.read(spark, s"$workDir/postings")
 

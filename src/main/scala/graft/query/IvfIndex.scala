@@ -2,6 +2,7 @@ package graft.query
 
 import graft.Tables
 import graft.functions.cosine_sim
+import graft.util.Generation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -100,11 +101,9 @@ object IvfIndex extends IvfLayout {
       // tombstones too: a fresh build indexes exactly `df`, and a stale
       // delete log from a previous index at this path would silently
       // mask rows of the NEW corpus that happen to share ids
-      Seq("cell_codes", "enc_centers", "enc_current", "codebooks",
-          "split_pending", "_tmp_residuals", Tombstones.TableName)
-        .foreach { t =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/$t"), true); ()
-        }
+      GenerationArtifacts.filterNot(Seq("cells", "cells_meta").contains).foreach { t =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$outPath/$t"), true); ()
+      }
     }
     // the sample holds min(n, its cap) rows, so this is n >= 2
     require(sample.length >= 2,
@@ -161,25 +160,12 @@ object IvfIndex extends IvfLayout {
     * original centroid PLACEMENT is globally poor (every cell still
     * valid by the radius contract, but radii huge → probe counts
     * degrade toward a full scan). Fresh centroids/cells/meta are built
-    * from the CURRENT corpus into a generation directory while readers
-    * keep serving the old tables, then swapped in behind a marker
-    * fence (the `split_pending` discipline):
-    *
-    *  - `_regen/` is built completely (cells, cells_meta, then a
-    *    `_COMPLETE` sentinel — written LAST, so its presence proves
-    *    the build finished);
-    *  - the `recluster_pending` marker is written, the two live
-    *    directories are renamed aside (`_retired_*`), the fresh ones
-    *    renamed in, the retired generation and `_regen` are deleted,
-    *    and the marker is removed LAST;
-    *  - a crash ANYWHERE in that window leaves the marker, and
-    *    [[ensureGeneration]] — one driver-side `fs.exists` at the head
-    *    of every read/maintenance entry point when healthy — completes
-    *    the swap deterministically (the sentinel says the build
-    *    finished, so rolling forward is always safe; an artifact whose
-    *    live directory is missing is restored from `_regen` or
-    *    `_retired_*`, whichever still holds it). No reader ever sees a
-    *    cells/cells_meta pair from two generations.
+    * from the CURRENT corpus into the staging directory while readers
+    * keep serving the old tables, then published by
+    * [[graft.util.Generation.commit]]: a crash anywhere after its
+    * marker is rolled forward by the next reader's
+    * [[graft.util.Generation.recover]], and no reader ever sees a
+    * cells/cells_meta pair from two generations.
     *
     * Persisted label metadata is invalidated FIRST: its freshness
     * fingerprint (row count + cell id set) cannot distinguish two
@@ -198,7 +184,7 @@ object IvfIndex extends IvfLayout {
       params: Params = Params()): Unit = {
     // complete any crashed prior swap first: its window can hide
     // cell_codes from the layout check below
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     require(!IvfPq.isComposed(spark, indexPath),
       "IvfIndex.recluster: this index carries a cell_codes table (a composed " +
         "IvfPq index) — re-cluster it through IvfPq.recluster")
@@ -206,10 +192,11 @@ object IvfIndex extends IvfLayout {
   }
 
   /** The one re-cluster body of [[recluster]] and [[IvfPq.recluster]],
-    * which first complete any crashed prior swap ([[ensureGeneration]])
-    * and check the layout: invalidate label metadata, build the LIVE
-    * corpus into `_regen/` with `buildInto(rows, path)`, then
-    * [[commitGeneration]] every generation artifact that build wrote.
+    * which first complete any crashed prior swap and check the layout:
+    * invalidate label metadata, build the LIVE corpus into the staging
+    * directory with `buildInto(rows, path)`, then commit every
+    * generation artifact that build wrote and purge every one it did
+    * not.
     */
   private[query] def regenerate(
       spark: SparkSession,
@@ -222,21 +209,17 @@ object IvfIndex extends IvfLayout {
     // generation is still live so a crash at any later point can never
     // leave an artifact whose fingerprint matches the NEW generation
     invalidateLabelMeta(spark, indexPath)
-    val regen = s"$indexPath/_regen"
-    fs.delete(new org.apache.hadoop.fs.Path(regen), true)
+    val regen = Generation.stage(spark, indexPath)
     // fresh build from the LIVE corpus: reads the OLD cells/ minus any
     // pending tombstones (a re-cluster is a full rebuild from current
     // rows, so it doubles as the complete physical compaction), writes
-    // only under _regen/ — readers are untouched until the swap
+    // only under the stage — readers are untouched until the swap
     buildInto(Tombstones.liveOnly(
         Tables.read(spark, s"$indexPath/cells"), spark, indexPath, idCol)
         .select(col(idCol), col(embCol)), regen)
-    // the swap itself retires the (now spent) tombstone table: it is
-    // in the non-installed-artifact purge list, so the marker-fenced
-    // commit — and any crash replay of it — drops it atomically with
-    // the generation change
-    commitGeneration(spark, indexPath, GenerationArtifacts.filter(a =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$regen/$a"))))
+    val (installs, purge) = GenerationArtifacts.partition(a =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$regen/$a")))
+    Generation.commit(spark, indexPath, installs, purge)
   }
 
   /** [[recluster]] by the index's own layout — the maintenance
@@ -249,149 +232,27 @@ object IvfIndex extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String): Unit = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     if (IvfPq.isComposed(spark, indexPath))
       IvfPq.recluster(spark, indexPath, idCol, embCol, IvfPq.builtParams(spark, indexPath))
     else recluster(spark, indexPath, idCol, embCol)
   }
 
-  private[query] def reclusterPendingPath(indexPath: String): String =
-    s"$indexPath/recluster_pending"
-
-  /** Every artifact name a generation swap may install or purge —
-    * the superset [[commitGeneration]] deletes stale non-installed
-    * members of (a residual→global composed re-cluster must remove
-    * the old enc tables, or [[IvfPq.isResidual]] would misread the
-    * fresh global codes as residual — wrong LUT pricing, silently
-    * wrong answers). `split_pending` rides along: a fresh generation
-    * has no in-flight split.
+  /** Every artifact of one index generation: what [[buildFitted]]
+    * clears before it writes cells and cells_meta, and what a
+    * re-cluster installs when its fresh build wrote it or purges when
+    * not. A residual→global composed re-cluster must remove the old
+    * enc tables, or [[IvfPq.isResidual]] would misread the fresh global
+    * codes as residual (wrong LUT pricing, silently wrong answers). A
+    * fresh generation has no in-flight split and, built from LIVE rows
+    * only, no pending delete: purging `split_pending` and the
+    * tombstones inside the marker-fenced swap makes "new tables, no
+    * stale masks" atomic for readers.
     */
   private val GenerationArtifacts = Seq(
     "cells", "cells_meta", "cell_codes", "codebooks",
-    "enc_centers", "enc_current", "split_pending",
-    // the delete log rides along like split_pending: a fresh
-    // generation is built from LIVE rows only, so its tombstones are
-    // spent — purging them INSIDE the marker-fenced swap (and its
-    // crash replay) makes "new tables, no stale masks" atomic for
-    // readers, with no separate clear step to crash between. The
-    // lexical index's swap reuses this purge for its stats atomicity
-    // (see LexicalSearch.compactTombstones).
+    "enc_centers", "enc_current", "split_pending", "_tmp_residuals",
     Tombstones.TableName)
-
-  /** Commit a fully-built `_regen/` generation: sentinel, marker
-    * (carrying the artifact list, so a crashed swap replays the SAME
-    * plan), retire-then-install renames per artifact, purge of stale
-    * non-installed generation artifacts, cleanup, marker removed
-    * LAST. Shared by [[recluster]] and [[IvfPq.recluster]].
-    */
-  private[query] def commitGeneration(
-      spark: SparkSession,
-      indexPath: String,
-      artifacts: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val regen = s"$indexPath/_regen"
-    fs.create(p(s"$regen/_COMPLETE"), true).close()
-    // marker written ATOMICALLY (temp + rename): a torn marker read
-    // back as empty would replay the default cells/cells_meta plan
-    // over a composed swap — fresh cells installed, stale codes kept,
-    // silently wrong bounds. A crash before the rename leaves no
-    // marker at all: the old generation stays live, _regen is an
-    // orphan the next re-cluster deletes.
-    val tmp = p(s"${reclusterPendingPath(indexPath)}._tmp")
-    val m = fs.create(tmp, true)
-    m.write(artifacts.mkString("\n").getBytes("UTF-8"))
-    m.close()
-    require(fs.rename(tmp, p(reclusterPendingPath(indexPath))),
-      "recluster: could not publish the swap marker")
-    artifacts.foreach { a =>
-      // a mode-switching composed re-cluster can install an artifact
-      // the old generation never had (global→residual mints enc
-      // tables) — nothing to retire then
-      if (fs.exists(p(s"$indexPath/$a")))
-        require(fs.rename(p(s"$indexPath/$a"), p(s"$indexPath/_retired_$a")),
-          s"recluster: could not retire $indexPath/$a")
-    }
-    artifacts.foreach { a =>
-      require(fs.rename(p(s"$regen/$a"), p(s"$indexPath/$a")),
-        s"recluster: could not install $regen/$a")
-    }
-    GenerationArtifacts.filterNot(artifacts.contains).foreach { a =>
-      fs.delete(p(s"$indexPath/$a"), true); ()
-    }
-    (artifacts.map(a => s"$indexPath/_retired_$a") :+ regen)
-      .foreach { d => fs.delete(p(d), true); () }
-    // marker removed LAST: a crash during the cleanup above re-enters
-    // ensureGeneration, which just finishes the deletes
-    fs.delete(p(reclusterPendingPath(indexPath)), true)
-    ()
-  }
-
-  /** Complete a crashed [[recluster]] swap — called at the head of
-    * every read/maintenance entry point (one driver-side `fs.exists`
-    * when healthy, the overwhelmingly common case). With the marker
-    * present, the `_regen/_COMPLETE` sentinel proves the fresh
-    * generation finished building (the marker is only ever written
-    * after it), so the swap always rolls FORWARD: each live table
-    * missing its directory is restored from `_regen` (not yet
-    * installed) or is already installed; a live directory that still
-    * coexists with its `_regen` copy is the OLD generation caught
-    * before its retire-rename and is moved aside. Cleanup then deletes
-    * the retired generation and the marker (marker last). Idempotent:
-    * re-entry at any crash point converges to the fully-swapped state.
-    */
-  private[graft] def ensureGeneration(spark: SparkSession, indexPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val marker = p(reclusterPendingPath(indexPath))
-    if (!fs.exists(marker)) return
-    // the marker carries the swap's artifact list (written atomically
-    // with the marker itself), so a crashed swap replays the same plan
-    val artifacts = {
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val names = txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-      if (names.nonEmpty) names else Seq("cells", "cells_meta")
-    }
-    val regen = s"$indexPath/_regen"
-    artifacts.foreach { a =>
-      val live = p(s"$indexPath/$a")
-      val fresh = p(s"$regen/$a")
-      val retired = p(s"$indexPath/_retired_$a")
-      if (fs.exists(fresh)) {
-        // fresh copy not yet installed: retire the old live first (the
-        // crash hit between the marker write and this artifact's
-        // renames), then install
-        if (fs.exists(live)) {
-          if (fs.exists(retired)) fs.delete(live, true) // unreachable; defensive
-          else require(fs.rename(live, retired),
-            s"ensureGeneration: could not retire $live")
-        }
-        require(fs.rename(fresh, live),
-          s"ensureGeneration: could not install $fresh")
-      } else if (!fs.exists(live) && fs.exists(retired)) {
-        // fresh already consumed elsewhere or cleanup-crashed state
-        // where this artifact never swapped: restore the old copy so
-        // the SET stays single-generation (only reachable if _regen
-        // was already deleted — i.e. every fresh table was installed —
-        // so this branch restoring is the unreachable-defensive arm)
-        require(fs.rename(retired, live),
-          s"ensureGeneration: could not restore $retired")
-      }
-    }
-    // purge stale non-installed generation artifacts (the mode-switch
-    // story on [[commitGeneration]]), then retire/regen/marker cleanup
-    GenerationArtifacts.filterNot(artifacts.contains).foreach { a =>
-      fs.delete(p(s"$indexPath/$a"), true); ()
-    }
-    (artifacts.map(a => s"$indexPath/_retired_$a") :+ regen)
-      .foreach { d => fs.delete(p(d), true); () }
-    fs.delete(marker, true)
-    ()
-  }
 
   /** Incremental index maintenance: fold NEW vectors into a built index
     * without re-clustering. Each new vector is assigned to its nearest
@@ -436,7 +297,7 @@ object IvfIndex extends IvfLayout {
       idCol: String,
       embCol: String,
       newRows: DataFrame): Unit = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     // a tombstoned id must be physically purged (compactTombstones)
     // before it can be re-inserted — see [[Tombstones.requireNoOverlap]]
     Tombstones.requireNoOverlap(spark, indexPath, idCol, newRows,
@@ -645,7 +506,7 @@ object IvfIndex extends IvfLayout {
     * first.
     */
   def compactIndex(spark: SparkSession, indexPath: String): Seq[graft.util.Compaction.Report] = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     ("cells" +: (if (IvfPq.isComposed(spark, indexPath)) Seq("cell_codes") else Nil))
       .map(t => graft.util.Compaction.compact(spark, s"$indexPath/$t", Seq("centroid_id")))
   }
@@ -671,7 +532,7 @@ object IvfIndex extends IvfLayout {
       indexPath: String,
       idCol: String,
       ids: DataFrame): Unit = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     Tombstones.append(spark, indexPath, idCol, ids)
   }
 
@@ -714,7 +575,7 @@ object IvfIndex extends IvfLayout {
       indexPath: String,
       idCol: String,
       embCol: String): DeleteCompactionReport = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     // a crashed composed split may have left code directories
     // inconsistent with cells — reconcile before rewriting either
     repairPendingCodes(spark, indexPath, idCol)
@@ -863,7 +724,7 @@ object IvfIndex extends IvfLayout {
       .agg(count(lit(1)).as("occupancy"))
 
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     import spark.implicits._
     val occ = cellOccupancy(spark, indexPath)
     val files = graft.util.PartitionFiles
@@ -1138,7 +999,7 @@ object IvfIndex extends IvfLayout {
       idCol: String,
       embCol: String,
       occupancyCap: Long): SplitReport = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     val Micro = 1e6
     // a COMPOSED index ([[IvfPq]]) keeps a cell_codes table keyed by
     // the same cell ids: its code rows move WITH their cells below
@@ -1412,7 +1273,7 @@ object IvfIndex extends IvfLayout {
       embCol: String,
       labels: DataFrame,
       labelCol: String): Unit = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     import spark.implicits._
     val base = labelMetaPath(indexPath, labelCol)
     // snapshot FIRST (see the staleness note above)
@@ -1665,9 +1526,9 @@ object IvfIndex extends IvfLayout {
       queries: DataFrame,
       k: Int,
       scope: Option[IvfLayout.LabelScope]): IvfLayout.Retrieval = {
-    // one fs.exists when healthy: completes a crashed recluster swap
+    // one fs.exists when healthy: completes a torn generation swap
     // so no reader ever sees a torn generation pair
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     // (centroid_id, center, radius) — only populated cells have a row,
     // and only populated cells can produce candidates
     val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
@@ -1838,7 +1699,7 @@ object IvfIndex extends IvfLayout {
       idCol: String,
       embCol: String,
       k: Int): DataFrame = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     // deleted rows leave the graph as nodes AND as neighbors
     val assigned = Tombstones.liveOnly(
@@ -1970,7 +1831,7 @@ object IvfIndex extends IvfLayout {
       embCol: String,
       labels: DataFrame,
       labelCol: String): (DataFrame, DataFrame, DataFrame) = {
-    ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     // deleted rows mine no pair and serve as no positive/negative
     val assigned = Tombstones.liveOnly(

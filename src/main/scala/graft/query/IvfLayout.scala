@@ -149,7 +149,7 @@ trait IvfLayout {
       probeWidth: Int = 1,
       maxLabelFanout: Long = 1000000L,
       refillCap: Long = IvfIndex.RefillCap): (DataFrame, Boolean) = {
-    IvfIndex.ensureGeneration(spark, indexPath)
+    graft.util.Generation.recover(spark, indexPath)
     val body = retrieve(spark, indexPath, idCol, embCol, queryIdCol,
       queryVecCol, threshold, probeWidth) _
     // branch on the size of the radii frame this call would otherwise

@@ -2,6 +2,7 @@ package graft.query
 
 import graft.Tables
 import graft.functions.cosine_sim
+import graft.util.Generation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -278,19 +279,18 @@ object IvfPq extends IvfLayout {
     * extended to the whole composed artifact set: a fresh
     * [[build]] (cells, metadata, codebooks, codes, and in residual
     * mode the encoding-generation tables) runs from the live corpus
-    * into `_regen/` while readers keep serving the old generation,
-    * then every artifact swaps behind the shared
-    * `recluster_pending` marker fence. The marker carries the
-    * artifact LIST (written atomically), so a crashed swap replays
-    * the same plan through [[IvfIndex.ensureGeneration]] — and the
-    * commit purges generation artifacts the NEW layout does not use,
-    * which is what makes re-clustering across encodings safe: a
-    * residual→global re-cluster removes the old enc tables (else
-    * [[isResidual]] would misread the fresh global codes — wrong LUT
-    * pricing), and global→residual mints them fresh. Label metadata
-    * invalidates first, as in the plain face. Result-invisible by
-    * the stacked bounds' contracts (exact for any centroid set and
-    * any codebook).
+    * into the staging directory while readers keep serving the old
+    * generation, then every artifact is published by one
+    * [[graft.util.Generation.commit]], whose marker carries the plan,
+    * so a crashed swap replays it at the next reader's
+    * [[graft.util.Generation.recover]]. The commit purges generation
+    * artifacts the NEW layout does not use, which is what makes
+    * re-clustering across encodings safe: a residual→global
+    * re-cluster removes the old enc tables (else [[isResidual]] would
+    * misread the fresh global codes — wrong LUT pricing), and
+    * global→residual mints them fresh. Label metadata invalidates
+    * first, as in the plain face. Result-invisible by the stacked
+    * bounds' contracts (exact for any centroid set and any codebook).
     */
   def recluster(
       spark: SparkSession,
@@ -298,7 +298,7 @@ object IvfPq extends IvfLayout {
       idCol: String,
       embCol: String,
       params: Params = Params()): Unit = {
-    IvfIndex.ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     require(isComposed(spark, indexPath),
       "IvfPq.recluster: no cell_codes table — a plain IVF index " +
         "re-clusters through IvfIndex.recluster")
@@ -333,7 +333,7 @@ object IvfPq extends IvfLayout {
     * off the query path.
     */
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
-    IvfIndex.ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     import spark.implicits._
     val codeOcc = Tables.read(spark, s"$indexPath/cell_codes")
       .groupBy(col("centroid_id").cast("long").as("centroid_id"))
@@ -405,7 +405,7 @@ object IvfPq extends IvfLayout {
       idCol: String,
       embCol: String,
       cells: Option[Seq[Long]] = None): Unit = {
-    IvfIndex.ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     require(isResidual(spark, indexPath),
       "IvfPq.reencodeCells: a global-codebook index has no generations to " +
         "re-encode — rebuild to refit its codebooks")
@@ -474,7 +474,7 @@ object IvfPq extends IvfLayout {
       idCol: String,
       embCol: String,
       cap: Double = 0.0): Seq[Long] = {
-    IvfIndex.ensureGeneration(spark, indexPath)
+    Generation.recover(spark, indexPath)
     if (!isResidual(spark, indexPath)) return Nil
     val meta = Tables.read(spark, s"$indexPath/cells_meta")
       .select(col("centroid_id").cast("long").as("centroid_id"),
@@ -518,8 +518,8 @@ object IvfPq extends IvfLayout {
       queries: DataFrame,
       k: Int,
       scope: Option[IvfLayout.LabelScope]): IvfLayout.Retrieval = {
-    // one fs.exists when healthy: completes a crashed recluster swap
-    IvfIndex.ensureGeneration(spark, indexPath)
+    // one fs.exists when healthy: completes a torn generation swap
+    Generation.recover(spark, indexPath)
     val pad = lit(IvfIndex.RadiusPad)
     val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     val residualMode = isResidual(spark, indexPath)
@@ -626,7 +626,7 @@ object IvfPq extends IvfLayout {
     // exchange for a correct result shape. Floor inflation from the
     // duplicate's lb rows remains the documented transient weakening
     // until repair.
-    val mp = new org.apache.hadoop.fs.Path(s"$indexPath/split_pending")
+    val mp = new org.apache.hadoop.fs.Path(IvfIndex.splitPendingPath(indexPath))
     val inSplitWindow = mp.getFileSystem(spark.sessionState.newHadoopConf())
       .exists(mp)
     val candM = cand.localCheckpoint()

@@ -1,6 +1,7 @@
 package graft.query
 
 import graft.Tables
+import graft.util.Generation
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -215,7 +216,7 @@ object LexicalSearch {
       idCol: String,
       textCol: String,
       newDocs: DataFrame): Unit = {
-    IvfIndex.ensureGeneration(spark, workDir)
+    Generation.recover(spark, workDir)
     // a tombstoned id must be physically purged (compactTombstones)
     // before re-insert: clearing its mask here would resurface the old
     // postings alongside the new ones AND double the doc in the stats
@@ -288,7 +289,7 @@ object LexicalSearch {
       workDir: String,
       idCol: String,
       ids: DataFrame): Unit = {
-    IvfIndex.ensureGeneration(spark, workDir)
+    Generation.recover(spark, workDir)
     Tables.read(spark, s"$workDir/postings")
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
       // __len is constant within a doc; min() is its order-independent
@@ -328,10 +329,11 @@ object LexicalSearch {
     * unlike the vector side's cell-pruned rewrite — the honest
     * physical removal is a REBUILD of the postings table (bucket
     * layout preserved) with the stats recomputed from the survivors,
-    * committed with the atomic generation swap
-    * ([[IvfIndex.commitGeneration]]): fresh postings + fresh stats +
-    * no tombstones become visible as ONE transition behind the marker
-    * fence, and a crash at any point either leaves the old generation
+    * committed with one staged-generation swap
+    * ([[graft.util.Generation.commit]], purging the tombstone table):
+    * fresh postings + fresh stats + no tombstones become visible as ONE
+    * transition behind the marker fence, and a crash at any point
+    * either leaves the old generation
     * fully live (still masked, still corrected) or rolls forward
     * deterministically at the next entry point. There is no
     * crash window in which stats and mask disagree — the exact
@@ -341,12 +343,9 @@ object LexicalSearch {
       spark: org.apache.spark.sql.SparkSession,
       workDir: String,
       idCol: String): Unit = {
-    IvfIndex.ensureGeneration(spark, workDir)
+    Generation.recover(spark, workDir)
     if (!Tombstones.exists(spark, workDir)) return
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val regen = s"$workDir/_regen"
-    fs.delete(new org.apache.hadoop.fs.Path(regen), true)
+    val regen = Generation.stage(spark, workDir)
     val survivors = Tombstones.liveOnly(
         Tables.read(spark, s"$workDir/postings"), spark, workDir, idCol)
       .localCheckpoint()
@@ -361,7 +360,7 @@ object LexicalSearch {
       .agg(count(lit(1)).as("__n_docs"),
         coalesce(sum(col("__l")), lit(0L)).as("__total_len"))
       .write.mode("overwrite").parquet(s"$regen/stats")
-    IvfIndex.commitGeneration(spark, workDir, Seq("postings", "stats"))
+    Generation.commit(spark, workDir, Seq("postings", "stats"), Seq(Tombstones.TableName))
   }
 
   /** Maintenance diagnostics for the postings index — the lexical twin
@@ -377,6 +376,7 @@ object LexicalSearch {
   def stats(
       spark: org.apache.spark.sql.SparkSession,
       workDir: String): DataFrame = {
+    Generation.recover(spark, workDir)
     import spark.implicits._
     val occ = Tables.read(spark, s"$workDir/postings")
       .groupBy(col("__bucket").cast("long").as("bucket"))
@@ -409,9 +409,9 @@ object LexicalSearch {
       queryIdCol: String,
       termCol: String,
       k: Int): DataFrame = {
-    // completes a crashed compactTombstones swap (one fs.exists when
-    // healthy)
-    IvfIndex.ensureGeneration(spark, workDir)
+    // completes a torn compactTombstones or compactIndex swap (one
+    // fs.exists when healthy)
+    Generation.recover(spark, workDir)
     // stats corrected for pending deletes ([[liveStats]]); postings
     // masked after the bucket pruning and BEFORE the df window in
     // [[scoreCandidates]] — df must count live posting-list docs only

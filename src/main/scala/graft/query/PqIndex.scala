@@ -2,6 +2,7 @@ package graft.query
 
 import graft.Tables
 import graft.functions.{cosine_sim, l2_dist_sq}
+import graft.util.Generation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -257,8 +258,10 @@ object PqIndex {
       indexPath: String,
       idCol: String,
       embCol: String,
-      newRows: DataFrame): Unit =
+      newRows: DataFrame): Unit = {
+    Generation.recover(spark, indexPath)
     writeRows(spark, indexPath, idCol, embCol, newRows, "append")
+  }
 
   /** Compact the append-maintained tables off the query path
     * ([[graft.util.Compaction]] — partition layout preserved).
@@ -280,6 +283,7 @@ object PqIndex {
     * IndexBuckets directories; run off the query path.
     */
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
+    Generation.recover(spark, indexPath)
     import spark.implicits._
     def side(table: String, bucketCol: String): DataFrame = {
       val occ = Tables.read(spark, s"$indexPath/$table")
@@ -384,6 +388,8 @@ object PqIndex {
       queryVecCol: String,
       k: Int,
       threshold: Double): (DataFrame, DataFrame) = {
+    // one fs.exists when healthy: completes a torn compactIndex swap
+    Generation.recover(spark, indexPath)
     val lutq = queryLut(spark, indexPath, queries, queryIdCol, queryVecCol)
 
     // code scan: d̂² = Σ_sub lut[sub·K + codes[sub]] via the codegen

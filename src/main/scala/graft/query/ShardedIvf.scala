@@ -307,7 +307,7 @@ object ShardedIvf {
     require(shard >= 0 && shard < n,
       s"ShardedIvf.reclusterShard: shard $shard outside [0, $n)")
     val p = shardPath(root, shard)
-    IvfIndex.ensureGeneration(spark, p)
+    graft.util.Generation.recover(spark, p)
     if (IvfPq.isComposed(spark, p))
       IvfPq.recluster(spark, p, idCol, embCol,
         IvfPq.Params(ivf = params, pq = pqParams))

@@ -180,7 +180,7 @@ object IndexMaintenance {
       // keeps its PQ geometry and encoding mode — then a marker-fenced
       // atomic swap). Result-invisible, so replay semantics stay the
       // fence's: a crash mid-swap is completed by the next reader's
-      // ensureGeneration, and a replayed batch is fenced before any of
+      // Generation.recover, and a replayed batch is fenced before any of
       // this re-runs. Cadence (every Nth applied batch), not drift-
       // triggered: the trigger input a drift rule would want (probe
       // counts) lives in query sessions, not here.

@@ -16,20 +16,13 @@ import org.apache.spark.sql.functions.col
   * partition-pruned probes keep pruning exactly as before) and bounds
   * output file granularity with `maxRecordsPerFile`.
   *
-  * Swap discipline: the rewrite lands in a sibling generation
-  * directory, is row-count-verified against the source, and only then
-  * swapped in (old dir moved aside, new dir renamed over, old dir
-  * deleted). On a POSIX filesystem/HDFS the rename pair is two atomic
-  * metadata ops with a crash window BETWEEN them, which [[recover]]
-  * closes (the moved-aside dir is the complete prior state). `compact`
-  * recovers at its head, and so does every [[graft.pipeline.NearDupIndex]]
-  * and [[graft.pipeline.CurationStore]] entry point before it reads or
-  * appends a table; IVF and lexical tables do not recover yet. Such an
-  * entry point must not race a compaction of the same table, the rule
-  * appends already follow. On object stores rename is copy+delete and a
-  * table format (or the fence discipline of
-  * [[graft.streaming.IndexMaintenance]]) should own the swap instead —
-  * documented, not hidden.
+  * Swap discipline: the rewrite is staged under the table's parent
+  * directory ([[Generation.stage]]), row-count-verified against the
+  * source, and only then committed through [[Generation.commit]], the
+  * one staged-generation swap. A crash at any point either leaves the
+  * old table live or is rolled forward by the next
+  * [[Generation.recover]], which `compact` and every entry point of
+  * the compacted index families run at their head.
   *
   * Readers racing the swap see either generation, never a mix —
   * EXCEPT a reader that resolved file paths before the swap and reads
@@ -43,34 +36,13 @@ object Compaction {
       rows: Long, filesBefore: Long, filesAfter: Long,
       bytesBefore: Long, bytesAfter: Long)
 
-  private def moved(path: String) = new Path(path + ".__compact_old")
-
-  /** Complete a swap torn between its two renames. With `path` missing,
-    * the moved-aside prior generation is the whole table and is renamed
-    * back; with `path` present, a moved-aside generation is stale and is
-    * deleted. A no-op when no swap was torn.
-    */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val old = moved(path)
-    if (fs.exists(old)) {
-      if (fs.exists(p)) fs.delete(old, true)
-      else {
-        require(fs.rename(old, p), s"recovery failed: could not restore $p from $old")
-        org.slf4j.LoggerFactory.getLogger("graft.Compaction")
-          .warn(s"restored $path from a compaction swap torn before its promote")
-      }
-    }
-  }
-
   /** [[compact]] each `(path, partitionCols)` table that exists after
-    * [[recover]], in order.
+    * [[Generation.recover]], in order.
     */
   def compactExisting(
       spark: SparkSession, tables: Seq[(String, Seq[String])]): Seq[Report] =
     tables.flatMap { case (path, partitionCols) =>
-      recover(spark, path)
+      Generation.recover(spark, new Path(path).getParent.toString)
       Option.when(Tables.exists(spark, path))(compact(spark, path, partitionCols))
     }
 
@@ -96,18 +68,15 @@ object Compaction {
       path: String,
       partitionCols: Seq[String] = Seq.empty,
       maxRecordsPerFile: Long = 5000000L): Report = {
-    recover(spark, path)
     val p = new Path(path)
+    val root = p.getParent.toString
+    val staged = new Path(Generation.stage(spark, root), p.getName)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"compaction target does not exist: $path")
 
     val before = parquetFiles(fs, p)
     val src = Tables.read(spark, path)
     val srcRows = src.count()
-
-    val tmp = new Path(path + ".__compact_next")
-    val old = moved(path)
-    fs.delete(tmp, true)
 
     // one output task per partition directory (or per shuffle
     // partition on flat layouts), maxRecordsPerFile re-splitting any
@@ -120,17 +89,13 @@ object Compaction {
     val writer =
       if (partitionCols.nonEmpty) writer0.partitionBy(partitionCols: _*)
       else writer0
-    writer.parquet(tmp.toString)
+    writer.parquet(staged.toString)
 
-    val gotRows = Tables.read(spark, tmp.toString).count()
+    val gotRows = Tables.read(spark, staged.toString).count()
     require(gotRows == srcRows,
       s"compaction row-count mismatch: src=$srcRows rewritten=$gotRows — " +
-        s"generation left at $tmp, source untouched")
-
-    require(fs.rename(p, old), s"swap failed: could not move $p aside")
-    require(fs.rename(tmp, p), s"swap failed: could not promote $tmp " +
-      s"(prior state intact at $old)")
-    fs.delete(old, true)
+        s"generation left at $staged, source untouched")
+    Generation.commit(spark, root, Seq(p.getName), Nil)
 
     val after = parquetFiles(fs, p)
     Report(

@@ -1,8 +1,10 @@
 package graft
 
+import graft.query.{IvfIndex, LexicalSearch, PqIndex}
 import graft.streaming.StreamingNearDup
-import graft.util.Compaction
-import org.apache.hadoop.fs.{FileUtil, Path}
+import graft.util.{Compaction, Generation}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,27 +80,78 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
     assert(admit(1L -> a, 2L -> c) == Set((1L, true, null), (2L, true, null)))
 
     // the crash window of a bands/ compaction, staged by hand: the
-    // rewrite is complete and the source moved aside, but the promote
-    // never ran
+    // rewrite is complete and committed (marker published) and the live
+    // table retired, but the install never ran
     val bands = new Path(s"$dir/bands")
-    val old = new Path(s"$dir/bands.__compact_old")
-    val next = new Path(s"$dir/bands.__compact_next")
+    val staged = new Path(s"$dir/_regen/bands")
+    val retired = new Path(s"$dir/_retired_bands")
     val fs = bands.getFileSystem(spark.sessionState.newHadoopConf())
     val storedRows = spark.read.parquet(bands.toString).count()
-    assert(FileUtil.copy(fs, bands, fs, next, false, fs.getConf))
-    assert(fs.rename(bands, old))
+    assert(FileUtil.copy(fs, bands, fs, staged, false, fs.getConf))
+    publishMarker(fs, dir, "bands")
+    assert(fs.rename(bands, retired))
 
     // a near-duplicate of doc 1 still meets the stored corpus
     assert(admit(3L -> (a + " today")) == Set((3L, false, 1L)))
     // and a later compaction keeps every stored row
     StreamingNearDup.compactIndex(spark, dir)
     assert(spark.read.parquet(bands.toString).count() == storedRows)
-    assert(!fs.exists(old) && !fs.exists(next))
+    assert(!fs.exists(retired) && !fs.exists(staged))
 
-    // a moved-aside generation next to a promoted table is stale
-    assert(FileUtil.copy(fs, bands, fs, old, false, fs.getConf))
-    Compaction.recover(spark, bands.toString)
-    assert(!fs.exists(old))
+    // a retired generation next to an installed table is stale
+    assert(FileUtil.copy(fs, bands, fs, retired, false, fs.getConf))
+    publishMarker(fs, dir, "bands")
+    Generation.recover(spark, dir)
+    assert(!fs.exists(retired))
     assert(spark.read.parquet(bands.toString).count() == storedRows)
+  }
+
+  /** The swap marker a commit publishes for installing `table`. */
+  private def publishMarker(fs: FileSystem, root: String, table: String): Unit = {
+    val m = fs.create(new Path(s"$root/recluster_pending"), true)
+    m.write(table.getBytes("UTF-8"))
+    m.close()
+  }
+
+  test("a torn compaction heals on the read path: IVF cells, lexical postings, PQ codes") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val e = (0L until 200L).map(i => (i, Array.fill(8)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val q = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+    val docs = (0L until 40L)
+      .map(i => (i, s"doc $i on topic${i % 5} with word${i % 7} and more text"))
+      .toDF("doc_id", "text")
+    val terms = Seq((0L, "topic3"), (0L, "word2"), (1L, "word4")).toDF("query_id", "term")
+    val families = Seq[(String, String, String => Unit, String => DataFrame)](
+      ("ivf", "cells",
+        IvfIndex.build(e, "vec_id", "embedding", _, IvfIndex.Params(nCentroids = 4)),
+        IvfIndex.queryTopK(spark, _, "vec_id", "embedding", q, "query_id", "qvec",
+          k = 3, threshold = 0.0)),
+      ("lexical", "postings",
+        LexicalSearch.buildIndex(docs, "doc_id", "text", _),
+        LexicalSearch.queryIndex(spark, _, "doc_id", terms, "query_id", "term", k = 3)),
+      ("pq", "codes",
+        PqIndex.build(e, "vec_id", "embedding", _, PqIndex.Params(dim = 8, numSub = 4)),
+        PqIndex.queryTopK(spark, _, "vec_id", "embedding", q, "query_id", "qvec",
+          k = 3, threshold = 0.0)))
+    for ((family, table, build, query) <- families) {
+      val dir = java.nio.file.Files.createTempDirectory(s"compact-heal-$family").toString
+      build(dir)
+      val before = query(dir).collect().toSet
+      assert(before.nonEmpty)
+      // the window after the marker is published: the live table
+      // retired, the fresh one staged and not installed
+      val live = new Path(s"$dir/$table")
+      val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+      assert(FileUtil.copy(fs, live, fs, new Path(s"$dir/_regen/$table"), false, fs.getConf))
+      publishMarker(fs, dir, table)
+      assert(fs.rename(live, new Path(s"$dir/_retired_$table")))
+      assert(query(dir).collect().toSet == before, s"$family answered differently")
+      Seq("_regen", s"_retired_$table", "recluster_pending").foreach { d =>
+        assert(!fs.exists(new Path(s"$dir/$d")), s"$family left $d behind")
+      }
+    }
   }
 }
