@@ -4,8 +4,9 @@ import graft.answer.{AnswerModel, EchoAnswerModel}
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.ingest.{IngestJob, MdxSplitter}
 import graft.query.{ContextAssembler, SimilaritySearch}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** The drop-in façade for a user of the reference library: the
   * reference's one exported class (`VectorClient`,
@@ -40,6 +41,14 @@ object GraftClient {
     * payload fetch.
     */
   private[graft] val PayloadBuckets = 64
+
+  /** The payload bucket rule, as a column and on the driver (Spark's
+    * `hash` is Murmur3 with seed 42).
+    */
+  private[graft] def payloadBucketCol(rowId: Column): Column =
+    pmod(hash(rowId), lit(PayloadBuckets))
+  private[graft] def payloadBucket(rowId: Long): Int =
+    Math.floorMod(Murmur3_x86_32.hashLong(rowId, 42), PayloadBuckets)
 }
 
 final class GraftClient(
@@ -155,8 +164,7 @@ final class GraftClient(
     else
       graft.query.IvfIndex.build(withId, "row_id", "embedding", s"$annPath/ivf")
     withId.select("row_id", "content", "metadata")
-      .withColumn("__rbucket",
-        pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)))
+      .withColumn("__rbucket", GraftClient.payloadBucketCol(col("row_id")))
       .transform(graft.util.PartitionedWrite.spread(
         _, GraftClient.PayloadBuckets, col("__rbucket"), col("row_id")))
       .write.mode("overwrite").partitionBy("__rbucket")
@@ -181,21 +189,17 @@ final class GraftClient(
       count, threshold)
 
   /** Attach content and metadata to answer-sized hits (any frame with a
-    * `row_id` column): the hits are checkpointed once — they feed the
-    * bucket collection AND the join — and the payload read is pruned to
-    * the hit rows' partition directories by their bucket ids (≤
-    * [[GraftClient.PayloadBuckets]] values reach the driver, never the
-    * hits themselves, whose count grows with the batch).
+    * `row_id` column): the hits are collected once (free when the layout
+    * merged them on the driver) and the payload read is pruned to their
+    * buckets' partition directories.
     */
   private def withPayload(annPath: String, hits: DataFrame): DataFrame = {
-    val hitsM = hits.localCheckpoint()
-    val buckets = hitsM
-      .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val rows = hits.collect()
+    val buckets = rows.map(r => GraftClient.payloadBucket(r.getAs[Long]("row_id"))).distinct.toSeq
     val payload = Tables.read(spark, s"$annPath/payload")
       .filter(col("__rbucket").isin(buckets: _*))
       .select(col("row_id"), col("content"), col("metadata"))
-    hitsM.join(payload, "row_id")
+    Tables.local(spark, rows.toSeq, hits.schema).join(payload, "row_id")
   }
 
   /** [[query]] routed through the [[buildQueryIndex]] artifacts: same
@@ -227,10 +231,10 @@ final class GraftClient(
     * `selfKnnGraph`-style mining instead) and rides whichever index
     * [[buildQueryIndex]] wrote — plain IVF or the composed IVF+PQ
     * scan, read from the layout ([[topKHits]]), result-identical by
-    * the families' shared exactness contract; the payload read is pruned
-    * to the hit rows' partition directories by their bucket ids (≤ 64
-    * values reach the driver — never the hits themselves, whose count
-    * grows with the batch) and then equi-joined on `row_id`.
+    * the families' shared exactness contract; the answer-sized hits
+    * are held on the driver, the payload read is pruned to their
+    * partition directories by bucket id and then equi-joined on
+    * `row_id`.
     *
     * @param queries one row per query: (queryIdCol, vecCol)
     * @return (queryIdCol, content, metadata, sim, rn), rn 1..count by
@@ -399,7 +403,7 @@ final class GraftClient(
       val tombIds = t.select(
         col(graft.query.Tombstones.IdColumn).as("row_id")).distinct()
       val buckets = tombIds
-        .select(pmod(hash(col("row_id")), lit(GraftClient.PayloadBuckets)).as("b"))
+        .select(GraftClient.payloadBucketCol(col("row_id")).as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq
       if (buckets.nonEmpty) {
         // survivors SPILL to a _tmp parquet table under annPath (the
@@ -510,14 +514,16 @@ final class GraftClient(
       count: Int,
       channelK: Int = 20,
       threshold: Double = 0.0): DataFrame = {
-    val vec = topKHits(annPath, queries.select(col(queryIdCol), col(vecCol)),
-        queryIdCol, vecCol, threshold, channelK)
-      .select(col(queryIdCol), col("row_id"), col("rn").as("rank"))
-    val qTerms = queries.select(col(queryIdCol),
-      explode(graft.query.LexicalSearch.tokens(col(textCol))).as("__term"))
-    val lex = graft.query.LexicalSearch.queryIndex(spark, s"$annPath/lex",
-        "row_id", qTerms, queryIdCol, "__term", k = channelK)
-      .select(col(queryIdCol), col("row_id"), col("rank"))
+    // the vector probe's passes overlap the lexical bucket probe
+    val (vec, lex) = graft.util.Par.both(spark, "hybrid")(
+      topKHits(annPath, queries.select(col(queryIdCol), col(vecCol)),
+          queryIdCol, vecCol, threshold, channelK)
+        .select(col(queryIdCol), col("row_id"), col("rn").as("rank")),
+      graft.query.LexicalSearch.queryIndex(spark, s"$annPath/lex", "row_id",
+          queries.select(col(queryIdCol),
+            explode(graft.query.LexicalSearch.tokens(col(textCol))).as("__term")),
+          queryIdCol, "__term", k = channelK)
+        .select(col(queryIdCol), col("row_id"), col("rank")))
     withPayload(annPath, graft.query.LexicalSearch.rrfFuse(vec, lex,
         queryIdCol, "row_id", "rank", k = count))
       .select(col(queryIdCol), col("rank"), col("content"), col("metadata"),

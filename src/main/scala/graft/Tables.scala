@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -125,6 +125,10 @@ object Tables {
       } catch { case _: Exception => target.toLong } // unknown -> assume enough
     if (estimatedSplits < target) df.repartition(target) else df
   }
+
+  /** Driver-held rows as a local relation: an action reads it with no job. */
+  def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Per-process warehouse for managed tables (bucketed-join layouts):
     * tmp-dir so `saveAsTable` never litters the repo working directory,

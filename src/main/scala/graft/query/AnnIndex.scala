@@ -200,8 +200,7 @@ object AnnIndex {
     def fieldsOf(names: Seq[String]) =
       StructType(names.map(n => qSchema(qSchema.fieldIndex(n))))
     def literalDf(rows: Seq[Row], names: Seq[String]) =
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), fieldsOf(names))
+      Tables.local(spark, rows, fieldsOf(names))
     val probeBuckets = qRows.map(_.getAs[Int]("__bucket")).distinct.toSeq
     val qbDf = literalDf(
       qRows.toSeq.map(r => Row(r.getAs[Any](queryIdCol),
@@ -223,11 +222,10 @@ object AnnIndex {
     val candSchema = candPlan.schema
     val candRows = collectBounded(candPlan, "the candidate (query, id) pairs")
     val vBuckets = candRows.map(_.getAs[Int]("__vb")).distinct.toSeq
-    val candDf = spark.createDataFrame(
-      java.util.Arrays.asList(
-        candRows.toSeq
-          .map(r => r.getAs[Any](queryIdCol) -> r.getAs[Any](idCol)).distinct
-          .map { case (q, i) => Row(q, i) }: _*),
+    val candDf = Tables.local(spark,
+      candRows.toSeq
+        .map(r => r.getAs[Any](queryIdCol) -> r.getAs[Any](idCol)).distinct
+        .map { case (q, i) => Row(q, i) },
       StructType(Seq(candSchema(candSchema.fieldIndex(queryIdCol)),
         candSchema(candSchema.fieldIndex(idCol)))))
     // job 3: exact verification against the pruned vector partitions

@@ -3,9 +3,10 @@ package graft.query
 import graft.Tables
 import graft.functions.cosine_sim
 import graft.util.Generation
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** IVF (inverted-file) ANN index — the second scale path for similarity
   * search next to [[AnnIndex]]'s LSH: k-means coarse centroids over
@@ -54,12 +55,6 @@ object IvfIndex extends IvfLayout {
     * alternative stays one flat labels pass.
     */
   private[query] val RefillCap = 65536L
-
-  /** Conservative serialized bytes per refill-loop hit row (query id +
-    * id + sim + rn, all 8-byte, plus row overhead) — the a-priori size
-    * estimate behind [[filteredViaOverfetch]]'s forced-broadcast gate.
-    */
-  private val HitRowBytes = 48L
 
   /** Fit centroids ([[Lloyd]]), assign every vector, persist cells
     * (partitioned by centroid_id) + per-cell radii (the bound's data).
@@ -1353,8 +1348,11 @@ object IvfIndex extends IvfLayout {
     *
     * Cost shape: each round is one unscoped retrieval over only the still-
     * deficient queries at 4× the previous overfetch — ≤ log₄(cap/k)
-    * rounds, each answer-sized on the wire; the only driver-side
-    * values are per-round COUNTS (no row collects). With a sane
+    * rounds. The driver holds each round's hit count and label-matched
+    * hits per pending query (≈ 90 B per match collected, as much again
+    * in the local relation) and, on the plain layout, the merged top-kk
+    * itself (≈ 140 B per hit, ≤ pending × refillCap; SizeEstimator,
+    * JDK 17). With a sane
     * overfetch the first round finishes the typical query: on a
     * near-unique label most queries have < k label-mates TOTAL and
     * finish via the untruncated/exhausted rule. The overfetch never
@@ -1398,10 +1396,11 @@ object IvfIndex extends IvfLayout {
     // toward corpus size, while one labels-scan equijoin is flat
     val hardCap = math.max(math.min(corpusN, math.max(refillCap, k.toLong)), 1L)
     val corpLab = labels.select(col(idCol), col(labelCol).as("__clabel"))
-    var pending = queries
-      .select(col(queryIdCol), col(queryVecCol), col(labelCol))
-      .localCheckpoint()
-    var nPending = pending.count()
+    // the still-deficient queries, held on the driver (the batch is
+    // broadcast-sized by the point-lookup contract)
+    val qs = queries.select(col(queryIdCol), col(queryVecCol), col(labelCol))
+    var pendingRows = qs.collect()
+    var pending = Tables.local(spark, pendingRows.toSeq, qs.schema)
     // first overfetch: 4k (floored at k+8 so tiny k still overfetches).
     // When the refill cap sits within one growth step of that start,
     // jump straight to the cap: the intermediate round costs a full
@@ -1415,97 +1414,60 @@ object IvfIndex extends IvfLayout {
       val kk0 = math.min(math.max(4L * k, k + 8L), hardCap)
       if (kk0 * 4 >= hardCap) hardCap else kk0
     }
-    val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    while (nPending > 0) {
+    val partSchema = StructType(Seq(
+      queries.schema(queryIdCol), StructField(idCol, LongType), StructField("sim", DoubleType)))
+    // an empty batch answers in the contract shape
+    val parts = scala.collection.mutable.ArrayBuffer(Tables.local(spark, Nil, partSchema))
+    while (pendingRows.nonEmpty) {
       val exhausted = kk >= corpusN
       val atCap = kk >= hardCap
-      // materialized once: the hit list feeds the label join AND the
-      // truncation tally below
-      val hits = body(pending, kk.toInt, None).topK.localCheckpoint()
-      // label every hit and compare against the query's wanted label;
-      // LEFT join — an id the labels frame does not cover can never
-      // match (same as the radii path's inner label join) but must
-      // still COUNT toward the truncation test below, or a top-kk
-      // padded with unlabeled rows would read as un-truncated and
-      // finish a query whose label-mates hide below the cut. The hits
-      // side is answer-sized (≤ pending × kk rows of a fixed narrow
-      // shape — query id, id, sim, rn ≈ 48 B serialized each): hint it
-      // broadcast while that a-priori byte bound fits the broadcast
-      // budget the DEPLOYMENT configured (spark.sql.
-      // autoBroadcastJoinThreshold — config-derived, not a hardcoded
-      // row count blind to driver memory), and let the planner choose
-      // from the checkpointed frame's real stats once the refill has
-      // grown it past that (forcing a broadcast there is the
-      // driver-OOM shape). Threshold −1 (auto-broadcast disabled)
-      // disables the forced hint the same way.
-      val bcBytes = spark.sessionState.conf.autoBroadcastJoinThreshold
-      val hitsJ =
-        if (bcBytes > 0 && nPending * kk * HitRowBytes <= bcBytes) broadcast(hits)
-        else hits
-      val labeled = hitsJ
+      // per pending query: its RAW hit count — distinct ids, unlabeled
+      // ones included (LEFT join), never labeled rows, which a
+      // multi-label corpus would inflate past kk — and its label-mates
+      val tally = body(pending, kk.toInt, None).topK
         .join(corpLab, Seq(idCol), "left")
-        .join(broadcast(pending.select(col(queryIdCol), col(labelCol))),
-          Seq(queryIdCol))
-        .withColumn("__is_match", col("__clabel") === col(labelCol))
-        .localCheckpoint()
-      val matched = labeled.filter(col("__is_match"))
-        .select(col(queryIdCol), col(idCol), col("sim"))
+        .join(broadcast(pending.select(col(queryIdCol), col(labelCol))), Seq(queryIdCol))
+        .groupBy(col(queryIdCol))
+        .agg(count_distinct(col(idCol)).as("__tot"),
+          collect_list(when(col("__clabel") === col(labelCol),
+            struct(col(idCol), col("sim")))).as("__m"))
+        .collect()
       // a query refills iff its matches came up short AND its hit list
       // was truncated at kk (more corpus rows may hide below) AND the
-      // overfetch can still grow. The truncation tally counts the RAW
-      // hits — one row per (query, id) by the topKExplode contract —
-      // not the labeled rows, which a multi-label corpus would inflate
-      // past kk and so misread truncation as completion
-      val deficient =
-        if (exhausted) pending.select(col(queryIdCol)).limit(0)
-        else hits.groupBy(col(queryIdCol)).agg(count(lit(1)).as("__tot"))
-          .join(
-            matched.groupBy(col(queryIdCol)).agg(count(lit(1)).as("__m")),
-            Seq(queryIdCol), "left")
-          .filter(coalesce(col("__m"), lit(0L)) < k && col("__tot") === kk)
-          .select(col(queryIdCol))
-          .localCheckpoint()
-      parts += matched.join(deficient, Seq(queryIdCol), "left_anti")
-      if (atCap && !exhausted) {
+      // overfetch can still grow
+      val deficient = if (exhausted) Set.empty[Any] else tally.collect {
+        case r if r.getLong(1) == kk && r.getSeq[Row](2).length < k => r.get(0)
+      }.toSet
+      parts += Tables.local(spark,
+        tally.toSeq.filterNot(r => deficient(r.get(0))).flatMap(r =>
+          r.getSeq[Row](2).map(m => Row(r.get(0), m.get(0), m.get(1)))),
+        partSchema)
+      pendingRows = pendingRows.filter(r => deficient(r.get(0)))
+      pending = Tables.local(spark, pendingRows.toSeq, pending.schema)
+      if (atCap && !exhausted && pendingRows.nonEmpty) {
         // escalation: queries still deficient at the refill cap take
         // the direct label-equijoin ranking — every mate of the
         // query's label found by the equijoin, exact-ranked; their
-        // overfetch rows above are superseded wholesale (left_anti
-        // already excluded them from parts)
-        val stubborn = pending.join(deficient, Seq(queryIdCol), "left_semi")
-        val mates = corpLab.join(
-            broadcast(stubborn
-              .select(col(queryIdCol), col(queryVecCol), col(labelCol))),
-            col("__clabel") === col(labelCol))
+        // overfetch rows above are superseded wholesale (already
+        // excluded from parts)
+        val mates = corpLab.join(broadcast(pending), col("__clabel") === col(labelCol))
           .select(col(queryIdCol), col(idCol), col(queryVecCol))
         // mates vs the payload table: sized by label density — leave
         // the join strategy to the planner (broadcast when sparse).
         // Tombstones mask here too — the equijoin bypasses the
         // (already-masked) probe machinery entirely
         parts += Tombstones.liveOnly(
-            Tables.read(spark, s"$indexPath/cells"),
-            spark, indexPath, idCol)
+            Tables.read(spark, s"$indexPath/cells"), spark, indexPath, idCol)
           .select(col(idCol), col(embCol))
           .join(mates, Seq(idCol))
           .withColumn("sim", cosine_sim(col(embCol), col(queryVecCol)))
           .filter(col("sim") > threshold)
           .select(col(queryIdCol), col(idCol), col("sim"))
-        nPending = 0
-      } else {
-        pending = pending.join(deficient, Seq(queryIdCol), "left_semi")
-          .localCheckpoint()
-        nPending = deficient.count()
-        kk = math.min(kk * 4, hardCap)
-      }
+        pendingRows = Array.empty
+      } else kk = math.min(kk * 4, hardCap)
     }
-    parts.reduceOption(_ unionByName _)
-      .map(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
-      .getOrElse(
-        // empty query batch: an empty frame in the contract shape
-        queries.select(col(queryIdCol)).limit(0)
-          .withColumn(idCol, lit(null).cast("long"))
-          .withColumn("sim", lit(null).cast("double"))
-          .withColumn("rn", lit(null).cast("long")))
+    parts.reduce(_ unionByName _)
+      .transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k))
   }
 
   /** The plain layout's one exact retrieval body ([[IvfLayout
@@ -1529,44 +1491,14 @@ object IvfIndex extends IvfLayout {
     // one fs.exists when healthy: completes a torn generation swap
     // so no reader ever sees a torn generation pair
     Generation.recover(spark, indexPath)
-    // (centroid_id, center, radius) — only populated cells have a row,
-    // and only populated cells can produce candidates
-    val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
-    val labelCols = scope.map(s => col(s.labelCol)).toSeq
-
-    val qNorm = IvfLayout.withQueryLabel(AnnIndex.prepared(
-        queries.select(col(queryIdCol), col(queryVecCol).as("__qv")), queryIdCol, "__qv"),
-        queries, queryIdCol, scope)
-      .select((Seq(col(queryIdCol), col("__qv").as(queryVecCol)) ++ labelCols :+
-        col("features").cast("array<float>").as("__qnorm")): _*)
-
-    // per (query, cell): probe-order distance + completeness bound
-    val wCent = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val (inScope, radius) = IvfLayout.cellsInScope(qNorm, cellMeta, scope)
-    val qCells = inScope
-      .withColumn("cdist",
-        sqrt(graft.functions.l2_dist_sq(col("__qnorm"), col("center"))))
-      .withColumn("ub_sim",
-        lit(1.0) - pow(
-          greatest(lit(0.0), col("cdist") - radius - lit(RadiusPad)), 2) / 2)
-      .withColumn("crank", row_number().over(wCent))
-      .select((Seq(col(queryIdCol), col(queryVecCol)) ++ labelCols ++
-        Seq(col("centroid_id"), col("ub_sim"), col("crank"))): _*)
-
+    val plan = new IvfLayout.ProbePlan(spark, indexPath, queries, queryIdCol, queryVecCol, scope)
     val cells = Tables.read(spark, s"$indexPath/cells")
     val live = Tombstones.mask(Tombstones.df(spark, indexPath), idCol) _
-    // probe: candidates of the selected (query, cell) rows, exact-ranked.
-    // The selection is collected once into a driver-local relation
-    // ([[localizedSelection]] — one job instead of the old checkpoint +
-    // id-collect + broadcast-build three); its distinct cell ids are
-    // pushed as a STATIC `isin` partition filter — the cells scan
-    // prunes to the probed `centroid_id=` directories at planning time
-    // instead of reading the whole index and relying on DPP to fire.
-    def probe(sel: DataFrame): DataFrame = {
-      val (selM, probed) = localizedSelection(spark,
-        sel.select((Seq(col(queryIdCol), col(queryVecCol)) ++ labelCols :+
-          col("centroid_id")): _*))
+    // probe: candidates of the selected (query, cell) rows, exact-ranked;
+    // the probed cell ids are a STATIC `isin` partition filter, so the
+    // cells scan prunes to their directories at planning time
+    def probe(sel: Seq[IvfLayout.Probe]): DataFrame = {
+      val (selM, probed) = plan.selection(sel)
       // deleted rows mask out HERE — before the floor this pass seeds:
       // a tombstoned candidate allowed into the k-th-best floor could
       // certify a cutoff above a live row's true rank (Tombstones doc)
@@ -1578,33 +1510,20 @@ object IvfIndex extends IvfLayout {
         .select(col(queryIdCol), col(idCol), col("sim"))
     }
 
-    // materialized once: the pass-1 candidates feed the floor AND the
-    // final union — without this the probed cells are re-scanned and
-    // re-ranked per consumer (2-3x the first-pass cost)
-    val pass1 = probe(qCells.filter(col("crank") <= probeWidth)).localCheckpoint()
-    // per-query floor: the k-th best pass-1 similarity (absent when the
-    // nearest cells held fewer than k candidates -> floor = threshold).
-    // topk_by, not a window: the map-side partial caps the shuffle at k
-    // entries per query per task instead of every probed candidate
-    val floor = SimilaritySearch.kthBestScore(
-      pass1, queryIdCol, idCol, "sim", k, "floor_sim")
-    // second pass: exactly the cells whose bound can still matter. >= on
-    // the floor (not >): a bound-equal cell can hold a tie that wins the
-    // ascending-id tie-break.
-    val sel2 = qCells.filter(col("crank") > probeWidth)
-      .join(floor, Seq(queryIdCol), "left")
-      .filter(col("ub_sim") > threshold &&
-        col("ub_sim") >= coalesce(col("floor_sim"), lit(threshold)))
+    // pass 1's merged top-k is pass 2's floor and part of the answer
+    val top = new IvfLayout.DriverTopK(k)
+    val sel1 = plan.first(probeWidth)
+    val pass1 = probe(sel1)
+    if (sel1.nonEmpty) top.add(pass1, queryIdCol, idCol, "sim")
+    // second pass: exactly the cells whose bound can still matter
+    val sel2 = plan.second(probeWidth, threshold, top.floor)
     val pass2 = probe(sel2)
+    if (sel2.nonEmpty) top.add(pass2, queryIdCol, idCol, "sim")
 
-    val cand = pass1.unionByName(pass2)
     IvfLayout.Retrieval(
-      cand.transform(SimilaritySearch.topKExplode(_, queryIdCol, idCol, "sim", k)),
-      qCells.filter(col("crank") <= probeWidth)
-        .select(col(queryIdCol), col("centroid_id"))
-        .unionByName(sel2.select(col(queryIdCol), col("centroid_id")))
-        .distinct(),
-      cand.select(col(queryIdCol), col(idCol)))
+      top.result(spark, queries.schema(queryIdCol), idCol),
+      plan.probed(sel1 ++ sel2),
+      pass1.unionByName(pass2).select(col(queryIdCol), col(idCol)))
   }
 
   /** Corpus-side salted equi-join of a cell-pruned scan with a
@@ -1637,29 +1556,6 @@ object IvfIndex extends IvfLayout {
           explode(sequence(lit(0), lit(salt - 1)))),
         Seq("centroid_id", "__salt"))
       .drop("__salt")
-  }
-
-  /** Materialize an answer-sized probe-selection frame as a DRIVER-LOCAL
-    * relation in ONE job (guide §1.2: the selection frames used to be
-    * localCheckpoint'd, then collected for the distinct probed cell ids,
-    * then collected AGAIN inside the BroadcastExchange the probe join
-    * builds — three driver-blocking jobs per probe pass for a frame the
-    * broadcast was going to pull to the driver anyway). The returned
-    * frame is a LocalRelation, so the broadcast join builds its relation
-    * driver-side with no job at all, and the probed ids fall out of the
-    * same collected rows. Scale-neutral: callers only pass frames
-    * already bounded by the broadcast contract (query batch × probed
-    * cells) — the driver held these bytes before, just one collection
-    * later.
-    */
-  private[query] def localizedSelection(
-      spark: SparkSession,
-      sel: DataFrame): (DataFrame, Seq[Any]) = {
-    val rows = sel.collect()
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), sel.schema)
-    val ci = sel.schema.fieldIndex("centroid_id")
-    (local, rows.iterator.map(_.get(ci)).toSeq.distinct)
   }
 
   /** Exact k-NN GRAPH over the indexed corpus: every vector's k nearest

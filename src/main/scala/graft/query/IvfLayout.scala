@@ -1,7 +1,11 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Tables
+import graft.functions.{TopKByScore, VectorOps, topk_by}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The serve faces both IVF layouts share — plain [[IvfIndex]] and
   * composed [[IvfPq]]. A layout supplies exactly ONE exact retrieval
@@ -31,6 +35,8 @@ trait IvfLayout {
     * (`queries` then carries `scope.labelCol`), bounded by the
     * per-(cell, label) radius, and scores only label-mates. The
     * unscoped plan is the serve hot path: the scope adds nothing to it.
+    * Both passes are planned on the driver ([[IvfLayout.ProbePlan]],
+    * O(queries × cells)); a pass with no pair to probe never runs.
     */
   private[graft] def retrieve(
       spark: SparkSession,
@@ -52,6 +58,9 @@ trait IvfLayout {
     * the centroid): centroids are means of unit vectors with varying
     * norms, so cosine ranking would probe different cells than
     * assignment used.
+    *
+    * The plain layout merges its top-k on the driver into a local
+    * relation ([[IvfLayout.DriverTopK]]); the composed one re-ranks lazily.
     *
     * @return (queryIdCol, idCol, sim, rn) — rn 1..k by descending exact
     *         sim, ties broken by ascending id
@@ -169,7 +178,7 @@ trait IvfLayout {
       // call — a cost fallback, never a correctness one (a stale
       // artifact is detected, not served)
       val radii = cached.getOrElse(IvfIndex.labelRadii(spark, indexPath,
-        idCol, embCol, labels, labelCol).localCheckpoint())
+        idCol, embCol, labels, labelCol))
       (body(queries, k, Some(LabelScope(labels, labelCol, radii))).topK, false)
     }
   }
@@ -244,39 +253,149 @@ object IvfLayout {
   private[graft] case class LabelScope(labels: DataFrame, labelCol: String, radii: DataFrame)
 
   /** One [[IvfLayout.retrieve]] result: the top-k (queryIdCol, idCol,
-    * sim, rn) plus two LAZY diagnostic frames — the (queryIdCol,
-    * centroid_id) pairs probed across both passes and the (queryIdCol,
-    * idCol) candidates that reached exact scoring. The serve path never
+    * sim, rn) plus two diagnostic frames — the (queryIdCol, centroid_id)
+    * pairs probed across both passes and the (queryIdCol, idCol)
+    * candidates that reached exact scoring (lazy). The serve path never
     * evaluates the diagnostics; specs and the scaling-curve report read
     * them.
     */
   private[graft] case class Retrieval(topK: DataFrame, probed: DataFrame, candidates: DataFrame)
 
-  /** The prepared query frame with the scope's label column joined back
-    * on ([[AnnIndex.prepared]] keeps only the id and the vector).
+  /** A (query, cell) pair: selection row, cell id and bound `ub_sim`. */
+  private[query] final case class Probe(row: Row, cell: Any, ub: Double)
+
+  /** The probe planner of both layouts, on the driver: the query batch
+    * (id, vector, scope label) and `cells_meta` — scoped, the
+    * broadcast-sized per-(cell, label) radii too — are collected once,
+    * and every (query, cell) pair in scope is bounded and
+    * ranked by `(cdist, centroid_id)` with the executors' arithmetic (the
+    * query by [[VectorOps.l2Normalize]] cast to float, `cdist =
+    * sqrt(l2Sq)`, `ub_sim = 1 − max(0, cdist − radius − pad)²/2`) and
+    * Spark's double order. Driver memory is O(queries × cells).
     */
-  private[query] def withQueryLabel(
-      prepared: DataFrame,
+  private[query] final class ProbePlan(
+      spark: SparkSession,
+      indexPath: String,
       queries: DataFrame,
       queryIdCol: String,
-      scope: Option[LabelScope]): DataFrame =
-    scope.fold(prepared)(s =>
-      prepared.join(queries.select(col(queryIdCol), col(s.labelCol)), Seq(queryIdCol)))
+      queryVecCol: String,
+      scope: Option[LabelScope]) {
+    private val qs = queries.select(
+      (queryIdCol +: queryVecCol +: scope.map(_.labelCol).toSeq).map(col): _*)
+    private val meta = Tables.read(spark, s"$indexPath/cells_meta")
+      .select("centroid_id", "center", "radius")
+    private val cells = meta.collect().toSeq.map(r =>
+      (r.get(0), doubles(r.get(1)).map(_.toFloat), r.getAs[Number](2).doubleValue))
+    // scoped: only cells holding the query's label, each bounded by
+    // that label's radius (sim(q, x∈c with label L) ≤
+    // 1 − max(0, d(q,c) − r(c,L))²/2); a null label joins nothing
+    private val inScope: Row => Seq[(Any, Array[Float], Double)] = scope match {
+      case None => _ => cells
+      case Some(s) =>
+        val centers = cells.map(c => key(c._1) -> c).toMap
+        val byLabel = s.radii.select(col("centroid_id"), col(s.labelCol), col("__rl"))
+          .collect().toSeq
+          .filter(r => !r.isNullAt(1) && centers.contains(key(r.get(0))))
+          .groupMap(_.get(1))(r => centers(key(r.get(0))).copy(_3 = r.getAs[Number](2).doubleValue))
+        q => if (q.isNullAt(2)) Nil else byLabel.getOrElse(q.get(2), Nil)
+    }
+    // a null query vector scores nothing: it has no pair to probe
+    private val normed = qs.collect().toSeq.map(q =>
+      q -> Option(q.get(1)).map(v => VectorOps.l2Normalize(doubles(v)).map(_.toFloat)))
+    private val byQuery = normed.groupBy(_._1.get(0)).toSeq.map { case (qid, group) =>
+      qid -> group.flatMap { case (q, qn) =>
+        qn.toSeq.flatMap(n => inScope(q).map { case (c, center, radius) =>
+          val cdist = math.sqrt(VectorOps.l2Sq(n, center))
+          val ub = 1.0 - StrictMath.pow(math.max(0.0, cdist - radius - IvfIndex.RadiusPad), 2) / 2
+          (cdist, Probe(Row.fromSeq(q.toSeq :+ c), c, ub))
+        })
+      }.sortWith { case ((da, a), (db, b)) =>
+        cmp(da, db) < 0 || (cmp(da, db) == 0 && key(a.cell) < key(b.cell))
+      }.map(_._2)
+    }
+    private val selSchema = StructType(qs.schema.fields :+ meta.schema("centroid_id"))
 
-  /** The (query, cell) pairs a probe may rank, with the radius that
-    * bounds each: unscoped, every populated cell by its own radius;
-    * scoped, only the cells holding the query's label, by that label's
-    * radius (`sim(q, x∈c with label L) ≤ 1 − max(0, d(q,c) − r(c,L))²/2`).
+    /** The batch as a local (queryIdCol, __qv, scope label, __qnorm). */
+    val prepared: DataFrame = Tables.local(spark,
+      normed.map { case (q, qn) => Row.fromSeq(q.toSeq :+ qn.map(_.toSeq).orNull) },
+      StructType(qs.schema.fields.updated(1, qs.schema(1).copy(name = "__qv")) :+
+        StructField("__qnorm", ArrayType(FloatType, containsNull = false))))
+
+    /** The `probeWidth` nearest pairs of every query: pass 1. */
+    def first(probeWidth: Int): Seq[Probe] = byQuery.flatMap(_._2.take(probeWidth))
+
+    /** The farther pairs whose bound still reaches the query's pass-1
+      * floor (absent: the threshold). `>=` on the floor, not `>`: a
+      * bound-equal cell can hold a tie that wins the ascending-id
+      * tie-break.
+      */
+    def second(probeWidth: Int, threshold: Double, floor: Any => Option[Double]): Seq[Probe] =
+      byQuery.flatMap { case (q, ps) =>
+        val f = floor(q).getOrElse(threshold)
+        ps.drop(probeWidth).filter(p => cmp(p.ub, threshold) > 0 && cmp(p.ub, f) >= 0)
+      }
+
+    /** A pass's selection as a local relation, and its distinct cells. */
+    def selection(ps: Seq[Probe]): (DataFrame, Seq[Any]) =
+      (Tables.local(spark, ps.map(_.row), selSchema), ps.map(_.cell).distinct)
+
+    /** The distinct (queryIdCol, centroid_id) pairs of `ps`. */
+    def probed(ps: Seq[Probe]): DataFrame = Tables.local(spark,
+      ps.map(p => Row(p.row.get(0), p.cell)).distinct,
+      StructType(Seq(qs.schema(0), selSchema.last)))
+
+    private def key(cell: Any): Long = cell.asInstanceOf[Number].longValue
+
+    /** Array elements as Spark's array casts read them (null reads 0). */
+    private def doubles(v: Any): Array[Double] =
+      v.asInstanceOf[scala.collection.Seq[Any]].iterator
+        .map { case null => 0.0; case n: Number => n.doubleValue }.toArray
+  }
+
+  /** Spark's double order: NaN greatest and equal to itself, −0.0 = 0.0. */
+  private def cmp(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
+
+  /** Per-query top-k merged on the driver: each [[add]] collects a
+    * pass's `topk_by(id, score, k)` per query and keeps the first k of
+    * its union with the query's list in the aggregate's order (score
+    * desc, id asc, NaN greatest). A list is a long id array and a
+    * sortable long score array sized by its hits, never by k.
     */
-  private[query] def cellsInScope(
-      qNorm: DataFrame,
-      cellMeta: DataFrame,
-      scope: Option[LabelScope]): (DataFrame, Column) = scope match {
-    case None => (qNorm.crossJoin(cellMeta), col("radius"))
-    case Some(s) =>
-      (qNorm.join(broadcast(s.radii), Seq(s.labelCol))
-        .join(cellMeta.select(col("centroid_id"), col("center")), Seq("centroid_id")),
-        col("__rl"))
+  private[query] final class DriverTopK(k: Int) {
+    private val cap = math.max(k, 0)
+    private val best = scala.collection.mutable.LinkedHashMap[Any, (Array[Long], Array[Long])]()
+
+    def add(scored: DataFrame, queryIdCol: String, idCol: String, scoreCol: String): Unit =
+      scored.groupBy(col(queryIdCol))
+        .agg(topk_by(col(idCol), col(scoreCol), lit(cap)))
+        .collect().foreach { r =>
+          val es = r.getSeq[Row](1)
+          val in = (es.map(_.getLong(0)).toArray,
+            es.map(e => TopKByScore.toSortable(e.getDouble(1))).toArray)
+          best(r.get(0)) = best.get(r.get(0)).fold(in)(merge(_, in))
+        }
+
+    private def merge(a: (Array[Long], Array[Long]), b: (Array[Long], Array[Long])) = {
+      val (ids, ss) = (a._1 ++ b._1, a._2 ++ b._2)
+      val order = ids.indices.sortWith((i, j) => ss(i) > ss(j) || ss(i) == ss(j) && ids(i) < ids(j))
+      (order.take(cap).map(ids).toArray, order.take(cap).map(ss).toArray)
+    }
+
+    /** The query's k-th best score so far; None below k entries. */
+    def floor(q: Any): Option[Double] = best.get(q)
+      .collect { case (_, ss) if cap > 0 && ss.length == cap => TopKByScore.fromSortable(ss(cap - 1)) }
+
+    /** (queryIdCol, idCol, sim, rn) as a local relation, rn 1..k by sim
+      * desc, ties ascending id: [[SimilaritySearch.topKExplode]]'s shape.
+      */
+    def result(spark: SparkSession, queryIdField: StructField, idCol: String): DataFrame =
+      Tables.local(spark,
+        best.toSeq.flatMap { case (q, (ids, ss)) =>
+          ids.indices.map(i => Row(q, ids(i), TopKByScore.fromSortable(ss(i)), i + 1L))
+        },
+        StructType(Seq(queryIdField, StructField(idCol, LongType, nullable = false),
+          StructField("sim", DoubleType, nullable = false),
+          StructField("rn", LongType, nullable = false))))
   }
 
   /** Probed corpus rows joined to their (query, cell) selection; scoped,

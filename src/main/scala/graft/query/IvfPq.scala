@@ -4,7 +4,6 @@ import graft.Tables
 import graft.functions.cosine_sim
 import graft.util.Generation
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF + PQ composed index — the canonical two-level ANN layout
@@ -521,14 +520,11 @@ object IvfPq extends IvfLayout {
     // one fs.exists when healthy: completes a torn generation swap
     Generation.recover(spark, indexPath)
     val pad = lit(IvfIndex.RadiusPad)
-    val cellMeta = broadcast(Tables.read(spark, s"$indexPath/cells_meta"))
     val residualMode = isResidual(spark, indexPath)
     val labelCols = scope.map(s => col(s.labelCol)).toSeq
-    val qNorm = IvfLayout.withQueryLabel(AnnIndex.prepared(
-        queries.select(col(queryIdCol), col(queryVecCol).as("__qv")),
-        queryIdCol, "__qv"), queries, queryIdCol, scope)
-      .select((Seq(col(queryIdCol), col("__qv")) ++ labelCols :+
-        col("features").cast("array<float>").as("__qnorm")): _*)
+    // per (query, cell): probe order + the cell-level bound
+    val plan = new IvfLayout.ProbePlan(spark, indexPath, queries, queryIdCol, queryVecCol, scope)
+    val qNorm = plan.prepared
     // the ADC lookup tables: global mode prices every code against one
     // LUT per query; residual mode prices a code against the LUT of
     // ITS encoding generation — one LUT per (query, enc_id), built
@@ -537,7 +533,7 @@ object IvfPq extends IvfLayout {
     // contract). The PQ geometry comes from the stored codebooks.
     val lutq =
       if (!residualMode)
-        PqIndex.queryLut(spark, indexPath, queries, queryIdCol, queryVecCol)
+        PqIndex.queryLut(spark, indexPath, qNorm, queryIdCol, "__qv")
       else
         PqIndex.lutOf(
           qNorm.crossJoin(broadcast(Tables.read(spark, s"$indexPath/enc_centers")))
@@ -548,37 +544,21 @@ object IvfPq extends IvfLayout {
           PqIndex.codebooksDf(spark, indexPath))
     val lutKeys = if (!residualMode) Seq(queryIdCol) else Seq(queryIdCol, "enc_id")
 
-    // per (query, cell): probe order + the cell-level bound
-    val wCent = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val (inScope, radius) = IvfLayout.cellsInScope(qNorm, cellMeta, scope)
-    val qCells = inScope
-      .withColumn("cdist",
-        sqrt(graft.functions.l2_dist_sq(col("__qnorm"), col("center"))))
-      .withColumn("cell_ub",
-        lit(1.0) - pow(
-          greatest(lit(0.0), col("cdist") - radius - pad), 2) / 2)
-      .withColumn("crank", row_number().over(wCent))
-      .select((col(queryIdCol) +: labelCols) ++
-        Seq(col("centroid_id"), col("cell_ub"), col("crank")): _*)
-
     val codes = Tables.read(spark, s"$indexPath/cell_codes")
     val live = Tombstones.mask(Tombstones.df(spark, indexPath), idCol) _
     // ADC-scan the codes of the selected (query, cell) pairs — the
-    // IvfIndex static-pruning discipline: probed cell ids (≤ nCells,
-    // driver-bounded) become a planning-time partition filter; the
-    // selection lands as a driver-local relation in one job
-    // ([[IvfIndex.localizedSelection]])
-    def scan(sel: DataFrame): DataFrame = {
-      val (selM, probed) = IvfIndex.localizedSelection(spark,
-        sel.select((col(queryIdCol) +: labelCols) :+ col("centroid_id"): _*))
+    // IvfIndex static-pruning discipline: probed cell ids (≤ nCells)
+    // become a planning-time partition filter
+    def scan(sel: Seq[IvfLayout.Probe]): DataFrame = {
+      val (selM, probed) = plan.selection(sel)
       // tombstones mask at the CODE scan — before the lb floors this
       // pass seeds (a deleted row's lb could certify a cutoff above a
       // live row's true rank; see [[Tombstones]]), and before any LUT
       // work is spent on a row that cannot be served
       IvfLayout.rowsInScope(
           live(codes.filter(col("centroid_id").isin(probed: _*))),
-          broadcast(selM), idCol, scope)
+          broadcast(selM.select((col(queryIdCol) +: labelCols) :+ col("centroid_id"): _*)),
+          idCol, scope)
         .join(broadcast(lutq), lutKeys)
         .withColumn("__adc", sqrt(graft.functions.pq_adc(col("codes"), col("__lut"))))
         .withColumn("__lb",
@@ -590,17 +570,14 @@ object IvfPq extends IvfLayout {
           col("__lb"), col("__ub"))
     }
 
-    // pass 1: nearest probeWidth cells seed the floor
-    val pass1 = scan(qCells.filter(col("crank") <= probeWidth)).localCheckpoint()
-    val floor1 = SimilaritySearch.kthBestScore(
-      pass1.select(col(queryIdCol), col(idCol), col("__lb").as("s")),
-      queryIdCol, idCol, "s", k, "floor1")
+    // pass 1: nearest probeWidth cells seed the floor, collected
+    val pass1 = scan(plan.first(probeWidth)).localCheckpoint()
+    val floor1 = new IvfLayout.DriverTopK(k)
+    floor1.add(pass1, queryIdCol, idCol, "__lb")
     // pass 2: only cells whose CELL bound reaches the certified floor
-    val sel2 = qCells.filter(col("crank") > probeWidth)
-      .join(floor1, Seq(queryIdCol), "left")
-      .filter(col("cell_ub") > threshold &&
-        col("cell_ub") >= coalesce(col("floor1"), lit(threshold)))
-    val scanned = pass1.unionByName(scan(sel2)).localCheckpoint()
+    val sel2 = plan.second(probeWidth, threshold, floor1.floor)
+    val scanned =
+      if (sel2.isEmpty) pass1 else pass1.unionByName(scan(sel2)).localCheckpoint()
 
     // final floor over everything scanned; fetch only code-bound
     // survivors

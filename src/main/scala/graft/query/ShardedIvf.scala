@@ -165,9 +165,9 @@ object ShardedIvf {
         .select(col(queryIdCol), col(idCol), col("sim"))
     }
     // shards probe CONCURRENTLY: the per-shard machinery runs its jobs
-    // at construction (selection checkpoints, probed-id collects,
-    // pass-1 materialization), so a sequential loop would serialize n
-    // independent probe pipelines behind one driver thread. Determinism
+    // at construction (the probe plan's and each pass's collects), so a
+    // sequential loop would serialize n independent probe pipelines
+    // behind one driver thread. Determinism
     // is untouched — results are ordered by the final global re-rank,
     // and per-shard answers are exact regardless of completion order.
     graft.util.Par.all(spark, "ShardedIvf.queryTopK")(

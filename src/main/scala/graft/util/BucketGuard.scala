@@ -73,9 +73,8 @@ object BucketGuard {
       val spark = rows.sparkSession
       val keySchema = org.apache.spark.sql.types.StructType(
         over.schema.fields.filter(f => keyCols.contains(f.name)))
-      val overDf = spark.createDataFrame(
-        java.util.Arrays.asList(overRows.map(r =>
-          org.apache.spark.sql.Row(keyCols.map(c => r.getAs[Any](c)): _*)): _*),
+      val overDf = graft.Tables.local(spark,
+        overRows.toSeq.map(r => org.apache.spark.sql.Row(keyCols.map(c => r.getAs[Any](c)): _*)),
         keySchema)
       (rows.join(broadcast(overDf), keyCols, "left_anti"), Some(overDf))
     }
