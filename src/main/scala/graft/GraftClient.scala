@@ -194,6 +194,7 @@ final class GraftClient(
     * buckets' partition directories.
     */
   private def withPayload(annPath: String, hits: DataFrame): DataFrame = {
+    graft.util.Generation.recover(spark, annPath)
     val rows = hits.collect()
     val buckets = rows.map(r => GraftClient.payloadBucket(r.getAs[Long]("row_id"))).distinct.toSeq
     val payload = Tables.read(spark, s"$annPath/payload")
@@ -263,9 +264,11 @@ final class GraftClient(
     */
   def payloadLabels(
       annPath: String,
-      label: org.apache.spark.sql.Column): DataFrame =
+      label: org.apache.spark.sql.Column): DataFrame = {
+    graft.util.Generation.recover(spark, annPath)
     Tables.read(spark, s"$annPath/payload")
       .select(col("row_id"), label.as("label"))
+  }
 
   /** Persist the per-(cell, label) radius artifact over the query
     * index ([[graft.query.IvfIndex.buildLabelMeta]] — shared by both
@@ -341,7 +344,8 @@ final class GraftClient(
     * the client's own obligation, and keying it off a table another
     * lifecycle may retire first would leave deleted rows' content
     * physically retained (unreachable, but a takedown means REMOVED).
-    * [[compactDeletes]] consumes this table and clears it last.
+    * [[compactDeletes]] consumes this table and purges it in the
+    * same commit that swaps the purged payload buckets in.
     */
   def deleteRows(annPath: String, rowIds: DataFrame): Unit = {
     // index/lex masks FIRST, the client pending table LAST: a crash in
@@ -369,22 +373,24 @@ final class GraftClient(
     * [[deleteRows]] masks them everywhere. One payload scan to
     * resolve the predicate; the delete itself stays O(matches).
     */
-  def deleteWhere(annPath: String, predicate: org.apache.spark.sql.Column): Unit =
+  def deleteWhere(annPath: String, predicate: org.apache.spark.sql.Column): Unit = {
+    graft.util.Generation.recover(spark, annPath)
     deleteRows(annPath,
       Tables.read(spark, s"$annPath/payload").filter(predicate)
         .select(col("row_id")))
+  }
 
   /** Fold pending deletes into every physical artifact at `annPath`,
     * off the query path: the payload partitions holding deleted rows
-    * are rewritten FIRST (pruned to their ≤ [[GraftClient
-    * .PayloadBuckets]] hash buckets, while the tombstone table still
-    * masks everything — a crash leaves only unreachable payload
-    * garbage, never a wrong answer), then the vector index compacts
+    * are rewritten first (pruned to their ≤ [[GraftClient
+    * .PayloadBuckets]] hash buckets), then the vector index compacts
     * ([[graft.query.IvfIndex.compactTombstones]] — cell-pruned
-    * rewrite, code rows move with their cells on a composed layout,
-    * spent tombstones retired last), then the lexical channel
-    * rebuilds behind its atomic generation swap. Idempotent at every
-    * crash point by the tombstones-are-the-marker discipline.
+    * rewrite, code rows move with their cells on a composed layout),
+    * then the lexical channel rebuilds. Each of the three publishes
+    * through its own [[graft.util.Generation.commit]], purging the
+    * pending-delete table it consumed in the same marker, so a crash
+    * anywhere leaves every channel either masked or compacted, and a
+    * rerun finishes the channels still holding their table.
     */
   def compactDeletes(annPath: String): Unit = {
     val ivfPath = s"$annPath/ivf"
@@ -397,6 +403,7 @@ final class GraftClient(
     // physically removed (r21, ADVICE item 1: the unconditional
     // index compaction below retires the only other record of those
     // ids while their payload would have stayed retained forever).
+    graft.util.Generation.recover(spark, annPath)
     val pendingTables = Seq(annPath, ivfPath, s"$annPath/lex")
       .flatMap(p => graft.query.Tombstones.df(spark, p))
     pendingTables.reduceOption(_ unionByName _).foreach { t =>
@@ -405,45 +412,20 @@ final class GraftClient(
       val buckets = tombIds
         .select(GraftClient.payloadBucketCol(col("row_id")).as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq
-      if (buckets.nonEmpty) {
-        // survivors SPILL to a _tmp parquet table under annPath (the
-        // residual-build discipline, r21 — VERDICT ask 4) instead of
-        // localCheckpoint: a worst-case delete touches every bucket,
-        // and checkpoint blocks are executor-resident with truncated
-        // lineage — one lost executor would kill the purge, and the
-        // near-whole payload table would sit in executor memory. The
-        // underscore prefix keeps table readers from listing it; the
-        // finally removes it win or lose.
-        val tmpPurge = s"$annPath/_tmp_payload_purge"
+      // the surviving rows of the touched buckets are staged, then
+      // swapped in with the emptied buckets and the client table purged
+      val regen = graft.util.Generation.stage(spark, annPath)
+      if (buckets.nonEmpty)
         Tables.read(spark, s"$annPath/payload")
           .filter(col("__rbucket").isin(buckets: _*))
           .join(tombIds, Seq("row_id"), "left_anti")
-          .write.mode("overwrite").parquet(tmpPurge)
-        try {
-          val survivors = Tables.read(spark, tmpPurge)
-          survivors
-            .transform(graft.util.PartitionedWrite.spread(
-              _, buckets.size, col("__rbucket"), col("row_id")))
-            .write.mode("overwrite").partitionBy("__rbucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$annPath/payload")
-          // dynamic overwrite cannot empty a partition — drop buckets
-          // whose every payload row was deleted
-          val kept = survivors.select(col("__rbucket").cast("long"))
-            .distinct().collect().map(_.getLong(0)).toSet
-          val fs = new org.apache.hadoop.fs.Path(s"$annPath/payload")
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          buckets.filterNot(b => kept(b.toLong)).foreach { b =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$annPath/payload/__rbucket=$b"), true)
-            ()
-          }
-        } finally {
-          val p = new org.apache.hadoop.fs.Path(tmpPurge)
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-          ()
-        }
-      }
+          .transform(graft.util.PartitionedWrite.spread(
+            _, buckets.size, col("__rbucket"), col("row_id")))
+          .write.partitionBy("__rbucket").parquet(s"$regen/payload")
+      val (installs, purge) = graft.util.Generation.partitions(
+        spark, annPath, "payload", "__rbucket", buckets)
+      graft.util.Generation.commit(spark, annPath, installs,
+        purge :+ graft.query.Tombstones.TableName)
     }
     // index-level fold-ins run off their OWN tables (each a cheap no-op
     // when an earlier maintenance pass — e.g. a re-cluster's generation
@@ -454,10 +436,6 @@ final class GraftClient(
     if (lex.getFileSystem(spark.sessionState.newHadoopConf()).exists(lex))
       graft.query.LexicalSearch.compactTombstones(spark, s"$annPath/lex",
         "row_id")
-    // the client pending table clears LAST — the crash-marker
-    // discipline: while any physical work remains, a rerun still sees
-    // every pending id
-    graft.query.Tombstones.clear(spark, annPath)
   }
 
   /** Build the LEXICAL channel of the hybrid serve face over a written

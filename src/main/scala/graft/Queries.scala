@@ -316,8 +316,8 @@ object Queries {
     * PQ code rows with their cells (global codebooks make codes
     * cell-independent — only the partition key changes), and the
     * standard batch queries the split index against the same
-    * full-corpus exact oracle. Green only if the four-write marker-
-    * fenced commit leaves cells, metadata and codes agreeing — which
+    * full-corpus exact oracle. Green only if the one-generation-swap
+    * commit leaves cells, metadata and codes agreeing — which
     * closes the composed family's log-structured lifecycle: append
     * (q109) → split (here) → compact, no re-cluster anywhere.
     */

@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   *    under-covering radius silently drops true neighbors.
   *  - `meta_matches_dirs`: `cells_meta` rows ↔ `centroid_id=` dirs
   *    agree (orphan dirs are invisible rows; stale meta rows are
-  *    empty probes). Disagreement outside a pending-marker window
-  *    means a crashed maintenance pass needs its repair entry point.
+  *    empty probes). Every maintenance pass commits both in one
+  *    generation swap, so disagreement means damage — or a split that
+  *    code older than that swap left torn — and a re-cluster, which
+  *    rebuilds from the `cells` rows, is the repair.
   *  - `unique_ids`: no id occurs twice in `cells` (an append-contract
   *    violation — duplicate ranks in any top-k it reaches).
   *  - `codes_align` (composed only): `cell_codes` holds EXACTLY one
@@ -38,9 +40,10 @@ import org.apache.spark.sql.functions._
   *    fresh by its fingerprint, or correctly detected stale (stale is
   *    SAFE — queries re-derive — so `ok` is about detectability: a
   *    torn snapshot that still parses as fresh would be served).
-  *  - `pending_markers` / `pending_tombstones`: repairable in-flight
-  *    state, reported with ok=true (they are contracts, not
-  *    corruption) so the operator knows a repair/compaction is owed.
+  *  - `pending_markers` / `pending_tombstones`: in-flight state,
+  *    reported with ok=true (they are contracts, not corruption): an
+  *    uncommitted stage the next maintenance pass deletes, and masked
+  *    rows a compaction is owed.
   *
   * Scale shape: every check is one partial-aggregated pass over the
   * table it audits (the radius check re-derives normalized distances
@@ -155,9 +158,10 @@ object IndexCheck {
     })
 
     // -------------------------------------------------- pending state
-    // a generation swap's marker cannot be pending: recovered above
+    // a published marker cannot be pending (recovered above); a stage
+    // without one is a maintenance pass that crashed before its commit
     val markers =
-      if (fs.exists(new org.apache.hadoop.fs.Path(IvfIndex.splitPendingPath(indexPath)))) 1L
+      if (fs.exists(new org.apache.hadoop.fs.Path(Generation.stagePath(indexPath)))) 1L
       else 0L
     val rows = graft.util.Par.all(spark, "IndexCheck.checkIvf")(checks.toSeq: _*) ++
       Seq(("pending_markers", true, markers),

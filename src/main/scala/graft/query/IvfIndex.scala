@@ -239,14 +239,13 @@ object IvfIndex extends IvfLayout {
     * not. A residual→global composed re-cluster must remove the old
     * enc tables, or [[IvfPq.isResidual]] would misread the fresh global
     * codes as residual (wrong LUT pricing, silently wrong answers). A
-    * fresh generation has no in-flight split and, built from LIVE rows
-    * only, no pending delete: purging `split_pending` and the
-    * tombstones inside the marker-fenced swap makes "new tables, no
-    * stale masks" atomic for readers.
+    * fresh generation, built from LIVE rows only, has no pending
+    * delete: purging the tombstones inside the marker-fenced swap
+    * makes "new tables, no stale masks" atomic for readers.
     */
   private val GenerationArtifacts = Seq(
     "cells", "cells_meta", "cell_codes", "codebooks",
-    "enc_centers", "enc_current", "split_pending", "_tmp_residuals",
+    "enc_centers", "enc_current", "_tmp_residuals",
     Tombstones.TableName)
 
   /** Incremental index maintenance: fold NEW vectors into a built index
@@ -502,7 +501,7 @@ object IvfIndex extends IvfLayout {
     */
   def compactIndex(spark: SparkSession, indexPath: String): Seq[graft.util.Compaction.Report] = {
     Generation.recover(spark, indexPath)
-    ("cells" +: (if (IvfPq.isComposed(spark, indexPath)) Seq("cell_codes") else Nil))
+    cellTables(IvfPq.isComposed(spark, indexPath))
       .map(t => graft.util.Compaction.compact(spark, s"$indexPath/$t", Seq("centroid_id")))
   }
 
@@ -547,23 +546,22 @@ object IvfIndex extends IvfLayout {
     * re-tightens the rewritten cells' radii from their surviving
     * members (centers unchanged — survivors were assigned against
     * them; a radius over fewer members can only shrink, and a tighter
-    * radius only removes probes), drops cells emptied entirely, and
-    * clears the tombstone table LAST.
+    * radius only removes probes), and drops cells emptied entirely.
     *
-    * Crash story — no marker needed: the tombstone table IS the
-    * marker. Every rewrite strictly removes rows that every read is
-    * already masking, so a crash at ANY point leaves reads exact and
-    * the rerun idempotent (cells already rewritten simply match no
-    * tombstone the second time). Only after all physical work commits
-    * is the table dropped. The mid-write kill window of the dynamic
-    * partition overwrite is the same accepted residual as
-    * [[splitHotCells]]'s, with a strictly better failure mode: the
-    * masking table outlives it.
+    * Commit: the surviving cell (and code) directories and the new
+    * `cells_meta` are staged and published by one
+    * [[graft.util.Generation.commit]] that also purges the emptied
+    * directories and the spent tombstone table, so readers see either
+    * the masked old generation or the compacted new one. Dirty cells
+    * are found on the codes side too: an index whose cells and codes
+    * an older, non-atomic compaction left out of step still gets its
+    * code rows purged.
     *
-    * Scale shape: one partition-pruned semi-join finds the affected
-    * cells (≤ nCentroids ids reach the driver — the probe-pruning
-    * collect pattern), and every subsequent scan is pruned to those
-    * directories; untouched cells are never read.
+    * Scale shape: one partition-pruned semi-join per table finds the
+    * affected cells and the removed-row count (≤ nCentroids rows reach
+    * the driver — the probe-pruning collect pattern), and every
+    * subsequent scan is pruned to those directories; untouched cells
+    * are never read.
     */
   def compactTombstones(
       spark: SparkSession,
@@ -571,29 +569,23 @@ object IvfIndex extends IvfLayout {
       idCol: String,
       embCol: String): DeleteCompactionReport = {
     Generation.recover(spark, indexPath)
-    // a crashed composed split may have left code directories
-    // inconsistent with cells — reconcile before rewriting either
-    repairPendingCodes(spark, indexPath, idCol)
     val tombs = Tombstones.df(spark, indexPath) match {
       case None => return DeleteCompactionReport(Nil, 0L, Nil)
+      // one id set for every read below and for the purge that retires it
       case Some(t) => t.distinct().localCheckpoint()
     }
     val hasCodes = IvfPq.isComposed(spark, indexPath)
     val tombIds = tombs.select(col(Tombstones.IdColumn).as(idCol))
     val cells = Tables.read(spark, s"$indexPath/cells")
-    // which cells hold a tombstoned row: one semi-join per table, ≤
-    // nCentroids ids to the driver. The CODES side is checked too —
-    // a rerun after a crash between the cells rewrite and the codes
-    // rewrite sees clean cells but still-dirty codes, and deciding
-    // from cells alone would clear the table with deleted code rows
-    // left to poison composed floors
-    def dirtyCells(t: DataFrame): Seq[Long] =
+    // tombstoned rows per cell: one semi-join per table
+    def dirtyCells(t: DataFrame): Map[Long, Long] =
       t.join(tombIds, Seq(idCol), "left_semi")
-        .select(col("centroid_id").cast("long"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-    val affected = (dirtyCells(cells) ++ (if (!hasCodes) Nil
-      else dirtyCells(Tables.read(spark, s"$indexPath/cell_codes"))))
-      .distinct.sorted
+        .groupBy(col("centroid_id").cast("long")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val removed = dirtyCells(cells)
+    val affected = (removed.keys ++ (if (!hasCodes) Nil
+      else dirtyCells(Tables.read(spark, s"$indexPath/cell_codes")).keys))
+      .toSeq.distinct.sorted
     if (affected.isEmpty) {
       // every tombstoned id is absent from the index (double-delete
       // after a compaction, or a delete of unknown ids): nothing to
@@ -601,85 +593,73 @@ object IvfIndex extends IvfLayout {
       Tombstones.clear(spark, indexPath)
       return DeleteCompactionReport(Nil, 0L, Nil)
     }
-    // survivors of the affected cells — checkpointed once: this frame
-    // feeds the rewrite, the radius recompute AND the removed-row
-    // tally, and the rewrite overwrites the directories it was read
-    // from (the splitHotCells discipline)
-    val survivors = cells
-      .filter(col("centroid_id").isin(affected: _*))
-      .join(tombIds, Seq(idCol), "left_anti")
-      .select(col(idCol), col(embCol), col("centroid_id"))
-      .localCheckpoint()
-    val before = cells.filter(col("centroid_id").isin(affected: _*)).count()
-    val after = survivors.count()
-
-    // composed index: the affected cells' surviving CODE rows,
-    // checkpointed before their source directories are overwritten
-    val codeSurvivors = if (!hasCodes) None else Some {
-      Tables.read(spark, s"$indexPath/cell_codes")
+    val regen = Generation.stage(spark, indexPath)
+    def survivors(table: String): DataFrame =
+      Tables.read(spark, s"$indexPath/$table")
         .filter(col("centroid_id").isin(affected: _*))
         .join(tombIds, Seq(idCol), "left_anti")
-        .localCheckpoint()
-    }
-
-    // rewrite the affected cell directories to their survivors
-    survivors
-      .transform(graft.util.PartitionedWrite.spread(
-        _, affected.size, col("centroid_id"), col(idCol)))
-      .write.partitionBy("centroid_id").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$indexPath/cells")
-    codeSurvivors.foreach { cs =>
-      val dataCols = cs.columns.filterNot(_ == "centroid_id").map(col).toSeq
-      cs.select(dataCols :+ col("centroid_id"): _*)
-        .transform(graft.util.PartitionedWrite.spread(
-          _, affected.size, col("centroid_id"), col(idCol)))
-        .write.partitionBy("centroid_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$indexPath/cell_codes")
-    }
-    // dynamic overwrite cannot EMPTY a partition — cells whose every
-    // member was deleted keep their stale directory unless dropped
-    // explicitly (≤ affected ids at the driver). Their meta rows (and
-    // a composed index's code directories) go with them.
-    val keptIds = survivors.select(col("centroid_id").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val emptied = affected.filterNot(keptIds)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    emptied.foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$indexPath/cells/centroid_id=$c"), true)
-      if (hasCodes)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$indexPath/cell_codes/centroid_id=$c"), true)
-      ()
-    }
-    // re-tighten the rewritten cells' radii from their survivors:
-    // centers unchanged, max distance over a subset only shrinks —
-    // deletes are the one lifecycle event where bounds IMPROVE
+    writeCells(survivors("cells").select(col(idCol), col(embCol), col("centroid_id")),
+      idCol, affected.size, s"$regen/cells")
+    if (hasCodes) writeCells(survivors("cell_codes"), idCol, affected.size, s"$regen/cell_codes")
+    val kept = cellDirIds(spark, regen)
+    val emptied = affected.filterNot(kept.toSet)
+    // re-tighten the rewritten cells' radii from their staged
+    // survivors: centers unchanged, max distance over a subset only
+    // shrinks — deletes are the one lifecycle event where bounds IMPROVE
     val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
-    val normalized = survivors
-      .select(col("centroid_id"),
-        graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
-    val tightened = normalized
-      .join(broadcast(cellMeta.select(col("centroid_id"), col("center"))),
-        "centroid_id")
-      .withColumn("d", sqrt(graft.functions.l2_dist_sq(col("__norm"), col("center"))))
-      .groupBy("centroid_id")
-      .agg(max(col("d")).as("__r"))
-    val updatedMeta = cellMeta
-      .filter(!col("centroid_id").isin(emptied: _*))
-      .join(tightened, Seq("centroid_id"), "left")
-      .select(col("centroid_id"), col("center"),
-        coalesce(col("__r"), col("radius")).as("radius"))
-      .localCheckpoint()
-    updatedMeta.write.mode("overwrite").parquet(s"$indexPath/cells_meta")
-    // the table is the crash marker — dropped LAST, when every rewrite
-    // above is committed. (Persisted label metadata self-stales via
-    // its row-count fingerprint now that the counts changed.)
-    Tombstones.clear(spark, indexPath)
-    DeleteCompactionReport(affected, before - after, emptied)
+    val liveMeta = cellMeta.filter(!col("centroid_id").isin(emptied: _*))
+    val updatedMeta = if (kept.isEmpty) liveMeta else {
+      val tightened = normalizedAssigned(spark, regen, idCol, embCol)
+        .join(broadcast(cellMeta.select(col("centroid_id"), col("center"))),
+          "centroid_id")
+        .withColumn("d", sqrt(graft.functions.l2_dist_sq(col("__norm"), col("center"))))
+        .groupBy("centroid_id")
+        .agg(max(col("d")).as("__r"))
+      liveMeta
+        .join(tightened, Seq("centroid_id"), "left")
+        .select(col("centroid_id"), col("center"),
+          coalesce(col("__r"), col("radius")).as("radius"))
+    }
+    updatedMeta.write.mode("overwrite").parquet(s"$regen/cells_meta")
+    // (persisted label metadata self-stales via its row-count
+    // fingerprint now that the counts changed)
+    commitCells(spark, indexPath, cellTables(hasCodes), affected, Seq("cells_meta"),
+      Seq(Tombstones.TableName))
+    DeleteCompactionReport(affected, removed.values.sum, emptied)
+  }
+
+  /** The cell-partitioned tables of an index: `cells`, and
+    * `cell_codes` on a composed one.
+    */
+  private def cellTables(hasCodes: Boolean): Seq[String] =
+    "cells" +: (if (hasCodes) Seq("cell_codes") else Nil)
+
+  /** Write rows carrying `centroid_id` to a cell-partitioned table at
+    * `path`, spread over `nCells` cell directories.
+    */
+  private[query] def writeCells(rows: DataFrame, idCol: String, nCells: Int, path: String): Unit =
+    rows
+      .transform(graft.util.PartitionedWrite.spread(
+        _, nCells, col("centroid_id"), col(idCol)))
+      .write.partitionBy("centroid_id").mode("overwrite")
+      .parquet(path)
+
+  /** Publish a partial rewrite staged by [[Generation.stage]] in one
+    * marker: every staged cell directory of the `cellTables` replaces
+    * its live twin, every `touched` cell the stage holds no rows for
+    * is purged, the whole `tables` staged beside them install, and the
+    * live tables `purge` go.
+    */
+  private[query] def commitCells(
+      spark: SparkSession,
+      indexPath: String,
+      cellTables: Seq[String],
+      touched: Seq[Long],
+      tables: Seq[String],
+      purge: Seq[String] = Nil): Unit = {
+    val (installs, purged) = cellTables
+      .map(Generation.partitions(spark, indexPath, _, "centroid_id", touched)).unzip
+    Generation.commit(spark, indexPath, installs.flatten ++ tables, purged.flatten ++ purge)
   }
 
   /** [[splitHotCells]] looped to convergence: a mean-threshold split
@@ -751,17 +731,11 @@ object IvfIndex extends IvfLayout {
 
   /** Cell ids present as `centroid_id=` directories under `dir` —
     * the FILESYSTEM's view of a cell-partitioned table, as opposed to
-    * `cells_meta`'s. The two disagree only inside a crashed-split
-    * window — see [[repairOrphanCells]] / [[repairPendingCodes]].
+    * `cells_meta`'s. The two agree on every index the committed
+    * maintenance passes wrote; [[IndexCheck]] reports a disagreement.
     */
-  private def partitionDirIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .map(_.getPath.getName.stripPrefix("centroid_id=").toLong)
-  }
+  private def partitionDirIds(spark: SparkSession, dir: String): Seq[Long] =
+    Generation.partitionValues(spark, dir, "centroid_id").map(_.toLong)
 
   private[query] def cellDirIds(spark: SparkSession, indexPath: String): Seq[Long] =
     partitionDirIds(spark, s"$indexPath/cells")
@@ -769,21 +743,11 @@ object IvfIndex extends IvfLayout {
   private[query] def codesDirIds(spark: SparkSession, indexPath: String): Seq[Long] =
     partitionDirIds(spark, s"$indexPath/cell_codes")
 
-  /** A composed ([[IvfPq]]) split's in-progress marker: the (old id,
-    * fresh id) pairs of the cells being moved, written BEFORE any
-    * `cell_codes` mutation and deleted after the last one, so a crash
-    * anywhere between leaves [[repairPendingCodes]] enough to
-    * reconcile. Lives beside `cells/` — never read as part of any
-    * table.
-    */
-  private[query] def splitPendingPath(indexPath: String): String =
-    s"$indexPath/split_pending"
-
   /** Exact per-cell centers + radii from (__cid, __norm) member rows —
     * micro-quantized component means (order-independent, the q44
     * discipline) and max member distance: the metadata a cell needs for
-    * the query-time bound. Shared by [[splitHotCells]]'s sub-cell
-    * metadata and [[repairOrphanCells]]'s adoption.
+    * the query-time bound, written by [[splitHotCells]] for its
+    * sub-cells.
     */
   private def centersAndRadii(sides: DataFrame, micro: Double): DataFrame = {
     val centers = sides
@@ -803,123 +767,6 @@ object IvfIndex extends IvfLayout {
       .groupBy(col("__cid"), col("center"))
       .agg(max(col("__d")).as("radius"))
       .select(col("__cid").as("centroid_id"), col("center"), col("radius"))
-  }
-
-  /** Adopt ORPHAN cell directories — `centroid_id=` directories under
-    * `cells/` with no `cells_meta` row. [[splitHotCells]] commits in
-    * two writes (cells dynamic-overwrite, then the meta swap); a crash
-    * between them leaves the fresh side-1 directory meta-less, and
-    * since queries probe only meta-listed cells, its vectors are
-    * INVISIBLE until repaired. This pass computes the orphan's exact
-    * center + radius from its members (the same kernel the split
-    * would have written) and appends the meta row — after which the
-    * index is exactly the state the crashed split was committing.
-    * Runs at the head of every [[splitHotCells]] pass: a driver-side
-    * directory listing when healthy (no jobs), a pruned one-cell scan
-    * per orphan when not. @return the adopted ids.
-    */
-  def repairOrphanCells(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      embCol: String): Seq[Long] = {
-    val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
-    val metaIds = cellMeta.select(col("centroid_id").cast("long"))
-      .collect().map(_.getLong(0)).toSet
-    val orphans = cellDirIds(spark, indexPath).filterNot(metaIds).sorted
-    if (orphans.isEmpty) return Nil
-    val members = Tables.read(spark, s"$indexPath/cells")
-      .filter(col("centroid_id").isin(orphans: _*))
-      .select(col("centroid_id").as("__cid"),
-        graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
-    val updated = cellMeta
-      .unionByName(centersAndRadii(members, 1e6).select(
-        col("centroid_id").cast(cellMeta.schema("centroid_id").dataType),
-        col("center"), col("radius")))
-      .localCheckpoint()
-    updated.write.mode("overwrite").parquet(s"$indexPath/cells_meta")
-    orphans
-  }
-
-  /** Reconcile a composed index's `cell_codes` table with its `cells`
-    * table after a crashed composed split ([[splitHotCells]] on an
-    * index carrying codes). The split commits in four writes — side-1
-    * codes into fresh directories, the cells dynamic-overwrite, the
-    * meta swap, the old-code-directory shrink — under a
-    * [[splitPendingPath]] marker naming the (old, fresh) cell pairs.
-    * A crash between any two of them leaves codes that disagree with
-    * cells only INSIDE the marked cells, in one of two benign shapes:
-    * fresh code directories whose cells never committed (invisible —
-    * no meta row probes them), or stale copies of moved rows still in
-    * the old directory (a probed duplicate's candidate row carries the
-    * old cell id, and the exact fetch reads the payload from `cells`,
-    * where the row no longer lives under that id — so it drops out;
-    * duplicate code rows can at worst transiently INFLATE the k-th
-    * best certified floor, the same transiently-weaker-answers class
-    * as the plain split's orphan-invisibility window).
-    *
-    * Repair is a reconciliation against the committed ground truth:
-    * the union of code rows under every marked directory (stale copies
-    * are value-identical — the codes are functions of the vector and
-    * the frozen global codebooks, not of the cell) is deduplicated by
-    * id, re-keyed by the cells table's committed assignment, and
-    * dynamic-overwritten back; fresh code directories with no cells
-    * directory are deleted. Runs at the head of every [[splitHotCells]]
-    * pass; a marker-less index returns immediately (one existence
-    * check, no jobs). @return the marker's pairs (empty = no repair).
-    */
-  def repairPendingCodes(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String): Seq[(Long, Long)] = {
-    val mp = new org.apache.hadoop.fs.Path(splitPendingPath(indexPath))
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) return Nil
-    val pairs = Tables.read(spark, mp.toString)
-      .select(col("old_id").cast("long"), col("new_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val cellDirs = cellDirIds(spark, indexPath).toSet
-    val codeDirs = codesDirIds(spark, indexPath).toSet
-    val affected = (pairs.map(_._1) ++ pairs.map(_._2)).distinct
-    val present = affected.filter(cellDirs)
-    val affectedCodes = affected.filter(codeDirs)
-    if (affectedCodes.nonEmpty && present.nonEmpty) {
-      // committed assignment of every member of the marked cells
-      val assign = Tables.read(spark, s"$indexPath/cells")
-        .filter(col("centroid_id").isin(present: _*))
-        .select(col(idCol), col("centroid_id"))
-      val codes = Tables.read(spark, s"$indexPath/cell_codes")
-        .filter(col("centroid_id").isin(affectedCodes: _*))
-        .drop("centroid_id")
-        .dropDuplicates(Seq(idCol)) // stale copies are value-identical
-      val fixed = codes.join(assign, idCol).localCheckpoint()
-      fixed
-        .transform(graft.util.PartitionedWrite.spread(
-          _, present.size, col("centroid_id"), col(idCol)))
-        .write.partitionBy("centroid_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$indexPath/cell_codes")
-      // an affected code directory whose reconciled row set is EMPTY
-      // is untouchable by the dynamic overwrite (it never writes an
-      // empty partition) — delete it explicitly so stale copies
-      // cannot outlive the repair; ≤ affected ids reach the driver
-      val kept = fixed.select(col("centroid_id").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      affectedCodes.filterNot(kept).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$indexPath/cell_codes/centroid_id=$c"), true)
-        ()
-      }
-    }
-    // a fresh-side codes directory whose cells directory never
-    // committed is a remnant of the crashed first write — delete it
-    pairs.map(_._2).filter(n => codeDirs(n) && !cellDirs(n)).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$indexPath/cell_codes/centroid_id=$n"), true)
-      ()
-    }
-    fs.delete(mp, true)
-    pairs
   }
 
   /** Hot-cell SPLIT maintenance — the missing half of the
@@ -952,41 +799,26 @@ object IvfIndex extends IvfLayout {
     * micro-quantized component means; radii are exact maxima over
     * the same normalized-vector kernel the build used.
     *
-    * 100 TB shape: one pruned scan of the hot cells (static `isin`
-    * partition filter), one 64×-explode aggregation over ONLY those
-    * members for the statistics, one dynamic-partition overwrite
-    * that rewrites ONLY the split directories, and an
-    * nCells-row metadata swap. Cold cells are never read. The
-    * rewritten rows are localCheckpoint'd before the overwrite of
-    * the directories they were read from (the [[upsert]] metadata
-    * discipline, here sized hot-cells-only).
-    *
-    * Crash window: the commit is two writes (cells dynamic-overwrite,
-    * then the meta swap) and not atomic. A crash between them leaves
-    * the fresh side-1 directory meta-less — its vectors are
-    * TEMPORARILY INVISIBLE to queries (which probe meta-listed cells
-    * only) until the next pass's head-of-call [[repairOrphanCells]]
-    * adopts it; nothing is ever lost or clobbered, because fresh ids
-    * allocate above the max of meta ids AND filesystem directory ids.
-    * A fully atomic commit needs a generation-directory rename, which
-    * is filesystem-dependent and deliberately out of scope.
-    *
     * COMPOSED indexes ([[IvfPq]]): an index carrying a `cell_codes`
     * table has its code rows moved WITH their cells — codes are
-    * encoded against global codebooks, so a split changes only their
-    * partition key, never a code value. The commit grows to four
-    * writes ordered so the moved rows' codes are durable somewhere at
-    * every crash point (side-1 codes into the fresh directories FIRST,
-    * then cells, then meta, then the old code directories shrunk to
-    * side 0), all under a `split_pending` marker that the next pass's
-    * head-of-call [[repairPendingCodes]] uses to reconcile codes with
-    * the committed cells. Until repair, a crashed composed split can
-    * leave stale side-1 code copies in the old directory: a probed
-    * stale copy's candidate carries the old cell id and drops out at
-    * the exact payload fetch, and a doubly-probed vector can at worst
-    * transiently inflate the k-th-best certified floor — the same
-    * transiently-weaker-answers class as the orphan-invisibility
-    * window above, repaired at the next maintenance pass.
+    * encoded against global codebooks (or carry their residual
+    * generation), so a split changes only their partition key, never
+    * a code value.
+    *
+    * Commit: both sides' cell (and code) directories and the new
+    * `cells_meta` are staged and published by one
+    * [[graft.util.Generation.commit]], so a reader sees the index
+    * before the split or after it, never a moved row in two cells or
+    * a cell without its metadata. Fresh ids allocate above the max of
+    * the meta ids AND of every cell and code directory on disk, so an
+    * install never lands on a directory some earlier writer left
+    * behind.
+    *
+    * 100 TB shape: one pruned scan of the hot cells (static `isin`
+    * partition filter), one 64×-explode aggregation over ONLY those
+    * members for the statistics, a staged write of ONLY the split
+    * directories, and an nCells-row metadata rewrite. Cold cells are
+    * never read.
     */
   def splitHotCells(
       spark: SparkSession,
@@ -996,18 +828,7 @@ object IvfIndex extends IvfLayout {
       occupancyCap: Long): SplitReport = {
     Generation.recover(spark, indexPath)
     val Micro = 1e6
-    // a COMPOSED index ([[IvfPq]]) keeps a cell_codes table keyed by
-    // the same cell ids: its code rows move WITH their cells below
-    // (codes are encoded against global codebooks, so a split changes
-    // only the partition key, never a code), under the
-    // [[splitPendingPath]] marker + [[repairPendingCodes]] crash story
     val hasCodes = IvfPq.isComposed(spark, indexPath)
-    // crash hygiene FIRST: reconcile a crashed composed split's codes
-    // with the committed cells, then adopt any meta-less directory a
-    // crashed split left behind, so every vector is visible (and every
-    // code agrees with its cell) before this pass decides anything
-    repairPendingCodes(spark, indexPath, idCol)
-    repairOrphanCells(spark, indexPath, idCol, embCol)
     // one partial-aggregating scan of (partition col) to find hot
     // cells; ≤ nCentroids ids reach the driver (the probe-pruning
     // collect pattern)
@@ -1019,16 +840,8 @@ object IvfIndex extends IvfLayout {
     if (hot.isEmpty) return SplitReport(Nil, Nil)
 
     val cellMeta = Tables.read(spark, s"$indexPath/cells_meta")
-    // fresh ids allocate above BOTH the meta's max and the filesystem's
-    // max directory id: even if a concurrent/crashed writer left a
-    // directory the meta (re-read above) does not list, a fresh id can
-    // never collide with it — a dynamic overwrite under a collided id
-    // would silently DELETE the other writer's rows
     val maxId = math.max(
       cellMeta.agg(max(col("centroid_id").cast("long"))).head.getLong(0),
-      // codes directories count too: a crashed composed split can leave
-      // a fresh-side codes directory the meta never saw, and a colliding
-      // fresh id would dynamic-overwrite it with another cell's codes
       (cellDirIds(spark, indexPath) ++ codesDirIds(spark, indexPath))
         .foldLeft(Long.MinValue)(math.max))
 
@@ -1038,8 +851,7 @@ object IvfIndex extends IvfLayout {
       .filter(col("centroid_id").isin(hot: _*))
       .select(col(idCol), col(embCol), col("centroid_id"),
         graft.functions.l2_normalize(col(embCol)).cast("array<float>").as("__norm"))
-      .localCheckpoint() // feeds stats, sides, rewrite AND is the
-    // frame whose source directories the rewrite overwrites
+      .localCheckpoint() // feeds the statistics AND the side assignment
 
     // exact per-(cell, dim) variance metric on micro-quantized longs
     val dec = "decimal(38,0)"
@@ -1078,95 +890,33 @@ object IvfIndex extends IvfLayout {
       .withColumn("__q",
         floor(element_at(col("__norm"), col("__sdim") + 1).cast("double") * Micro)
           .cast("long"))
-      .withColumn("__cid",
+      .select(col(idCol), col(embCol),
         when(col("__q") <= col("__mean_q"), col("centroid_id").cast("long"))
-          .otherwise(col("__new_cid")))
-      .select(col(idCol), col(embCol), col("__norm"),
-        col("centroid_id").as("__oldcid"),
-        col("__cid").cast(members.schema("centroid_id").dataType).as("__cid"))
-      .localCheckpoint()
+          .otherwise(col("__new_cid"))
+          .cast(members.schema("centroid_id").dataType).as("centroid_id"))
 
-    // COMPOSED index: the affected code rows, re-keyed by their new
-    // side. Checkpointed once — it feeds the fresh-directory write
-    // below AND the old-directory shrink after the meta swap, and the
-    // latter overwrites the directories this frame was read from.
-    val codesAssigned = if (!hasCodes) None else Some {
-      // marker FIRST: from here until the last codes write, a crash at
-      // any point is reconcilable by [[repairPendingCodes]]
-      idPairs.toDF("old_id", "new_id").repartition(1)
-        .write.mode("overwrite").parquet(splitPendingPath(indexPath))
-      Tables.read(spark, s"$indexPath/cell_codes")
-        .filter(col("centroid_id").isin(splittable: _*))
-        .withColumnRenamed("centroid_id", "__oldpart")
-        .join(sides.select(col(idCol), col("__cid"), col("__oldcid")), idCol)
-        .localCheckpoint()
-    }
-    def writeCodes(part: DataFrame, nDirs: Int): Unit = {
-      val dataCols = part.columns
-        .filterNot(Set("__cid", "__oldcid", "__oldpart")).map(col).toSeq
-      part.select(dataCols :+ col("__cid").as("centroid_id"): _*)
-        .transform(graft.util.PartitionedWrite.spread(
-          _, nDirs, col("centroid_id"), col(idCol)))
-        .write.partitionBy("centroid_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$indexPath/cell_codes")
-    }
-    // side-1 codes land in the FRESH directories before anything
-    // existing moves: every later crash point leaves the moved rows'
-    // codes durable somewhere (at worst duplicated, never lost)
-    codesAssigned.foreach(ca =>
-      writeCodes(ca.filter(col("__cid").cast("long") =!= col("__oldcid").cast("long")),
-        splittable.size))
-
+    // stage both sides of every split cell; the staged table is the
+    // one materialization the codes, the metadata and the commit read
+    val regen = Generation.stage(spark, indexPath)
+    writeCells(sides, idCol, splittable.size * 2, s"$regen/cells")
+    val staged = Tables.read(spark, s"$regen/cells")
+    if (hasCodes)
+      writeCells(Tables.read(spark, s"$indexPath/cell_codes")
+          .filter(col("centroid_id").isin(splittable: _*))
+          .drop("centroid_id")
+          .join(staged.select(col(idCol), col("centroid_id")), idCol),
+        idCol, splittable.size * 2, s"$regen/cell_codes")
     // sub-centroids (micro-quantized component means, order-independent)
     // + exact radii — the shared [[centersAndRadii]] kernel
-    val newMeta = centersAndRadii(sides.drop("__oldcid"), Micro)
-
-    // rewrite ONLY the split directories (side-0 rows land back in the
-    // old ones, side-1 rows create the fresh ones)
-    sides
-      .select(col(idCol), col(embCol), col("__cid").as("centroid_id"))
-      .transform(graft.util.PartitionedWrite.spread(
-        _, splittable.size * 2, col("centroid_id"), col(idCol)))
-      .write.partitionBy("centroid_id").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$indexPath/cells")
-    val updated = cellMeta
+    val newMeta = centersAndRadii(normalizedAssigned(spark, regen, idCol, embCol)
+      .select(col("centroid_id").as("__cid"), col("__norm")), Micro)
+    cellMeta
       .filter(!col("centroid_id").isin(splittable: _*))
       .unionByName(newMeta.select(
         col("centroid_id").cast(cellMeta.schema("centroid_id").dataType),
         col("center"), col("radius")))
-      .localCheckpoint()
-    updated.write.mode("overwrite").parquet(s"$indexPath/cells_meta")
-    // shrink the old code directories to their side-0 rows LAST: until
-    // here the stale side-1 copies in them are what keeps a crash
-    // lossless, and from here cells/meta/fresh-codes are all committed.
-    // The mid-write kill window of this dynamic overwrite is the same
-    // accepted residual as the cells overwrite above (a fully atomic
-    // commit needs a generation-directory rename — out of scope);
-    // every BETWEEN-write crash point reconciles via the marker.
-    codesAssigned.foreach { ca =>
-      val side0 = ca.filter(
-        col("__cid").cast("long") === col("__oldcid").cast("long"))
-      writeCodes(side0, splittable.size)
-      // dynamic overwrite cannot EMPTY a partition — a split cell
-      // whose surviving code rows all moved to side 1 (possible only
-      // after a torn upsert left codes < occupancy) would keep its
-      // stale copies forever. Delete such directories explicitly;
-      // ≤ splittable ids reach the driver.
-      val kept = side0.select(col("__cid").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val fs = new org.apache.hadoop.fs.Path(s"$indexPath/cell_codes")
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      splittable.filterNot(kept).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$indexPath/cell_codes/centroid_id=$c"), true)
-        ()
-      }
-      val mp = new org.apache.hadoop.fs.Path(splitPendingPath(indexPath))
-      fs.delete(mp, true)
-      ()
-    }
+      .write.mode("overwrite").parquet(s"$regen/cells_meta")
+    commitCells(spark, indexPath, cellTables(hasCodes), splittable, Seq("cells_meta"))
     SplitReport(splittable, degenerate, idPairs)
   }
 

@@ -207,8 +207,17 @@ object IvfPq extends IvfLayout {
         .select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSet
       val missing = (targets -- have).toSeq.sorted
-      if (missing.nonEmpty) mintGenerations(spark, indexPath,
-        Tables.read(spark, s"$indexPath/cells_meta"), missing)
+      if (missing.nonEmpty) {
+        val (minted, current) = mintGenerations(spark, indexPath,
+          Tables.read(spark, s"$indexPath/cells_meta"), missing)
+        // both enc tables before any code row can reference a minted
+        // id: a crash before the codes leaves at worst unreferenced
+        // generations, never a dangling enc_id
+        minted.select(col("__enc").as("enc_id"), col("center"))
+          .repartition(1).write.mode("append").parquet(s"$indexPath/enc_centers")
+        current.localCheckpoint() // materialized BEFORE overwriting its source
+          .repartition(1).write.mode("overwrite").parquet(s"$indexPath/enc_current")
+      }
       val encCur = broadcast(Tables.read(spark, s"$indexPath/enc_current")
         .select(col("centroid_id").cast("long").as("__ecell"), col("enc_id")))
       val encCenters = broadcast(
@@ -237,19 +246,16 @@ object IvfPq extends IvfLayout {
 
   /** Mint one fresh encoding generation per cell of `cells` from the
     * cell's current centroid in `meta` (cells_meta): enc_ids continue
-    * past the largest in `enc_centers`, in ascending cell order; the
-    * generations append to `enc_centers` and replace those cells'
-    * entries in `enc_current`. Both enc tables are written before this
-    * returns, so before any code row can reference a minted id — a
-    * crash between these writes and the codes leaves at worst
-    * unreferenced generations, never a dangling enc_id.
-    * @return the minted (centroid_id, center, __enc) rows, materialized
+    * past the largest in `enc_centers`, in ascending cell order.
+    * Writes nothing. @return the minted (centroid_id, center, __enc)
+    * rows, materialized, and the `enc_current` table with those cells
+    * remapped to them
     */
   private def mintGenerations(
       spark: SparkSession,
       indexPath: String,
       meta: DataFrame,
-      cells: Seq[Long]): DataFrame = {
+      cells: Seq[Long]): (DataFrame, DataFrame) = {
     import spark.implicits._
     val maxEnc = Tables.read(spark, s"$indexPath/enc_centers")
       .agg(max(col("enc_id"))).head.getLong(0)
@@ -259,18 +265,13 @@ object IvfPq extends IvfLayout {
     val minted = meta
       .join(broadcast(mintMap), col("centroid_id").cast("long") === col("__cid"))
       .localCheckpoint()
-    minted.select(col("__enc").as("enc_id"), col("center"))
-      .repartition(1).write.mode("append").parquet(s"$indexPath/enc_centers")
-    val updatedCur = Tables.read(spark, s"$indexPath/enc_current")
+    val current = Tables.read(spark, s"$indexPath/enc_current")
       .select(col("centroid_id").cast("long").as("centroid_id"), col("enc_id"))
       .filter(!col("centroid_id").isin(cells: _*))
       .unionByName(minted.select(
         col("centroid_id").cast("long").as("centroid_id"),
         col("__enc").as("enc_id")))
-      .localCheckpoint()
-    updatedCur.repartition(1).write.mode("overwrite")
-      .parquet(s"$indexPath/enc_current")
-    minted
+    (minted, current)
   }
 
   /** Full RE-CLUSTER of the COMPOSED index with an atomic generation
@@ -324,10 +325,10 @@ object IvfPq extends IvfLayout {
   /** Maintenance diagnostics for the composed index —
     * [[IvfIndex.stats]] widened with the codes side: one row per cell,
     * (centroid_id, occupancy, radius, n_files, codes, code_files).
-    * `codes != occupancy` is the operational desync signal: a crashed
-    * split awaiting [[IvfIndex.repairPendingCodes]] (codes > occupancy
-    * — stale duplicates) or a torn [[IvfIndex.upsert]] (codes <
-    * occupancy — cells appended, codes not; replay the batch). Two
+    * `codes != occupancy` is the operational desync signal: a torn
+    * [[IvfIndex.upsert]] (codes < occupancy — cells appended, codes
+    * not; replay the batch), or an index torn by a pre-`Generation`
+    * split or compaction, which [[IndexCheck]] flags too. Two
     * partition-column scans + two ≤ nCells directory listings; run
     * off the query path.
     */
@@ -340,11 +341,10 @@ object IvfPq extends IvfLayout {
     val codeFiles = graft.util.PartitionFiles
       .counts(spark, s"$indexPath/cell_codes", "centroid_id")
       .toDF("centroid_id", "code_files")
-    // FULL joins on the codes side: a crashed-early composed split
-    // leaves fresh code directories with no cells_meta row, and a
-    // meta-driven left join would drop exactly the rows that carry
-    // the desync this report exists to surface (codes > 0 with
-    // occupancy 0)
+    // FULL joins on the codes side: a code directory with no
+    // cells_meta row is exactly the desync this report exists to
+    // surface (codes > 0 with occupancy 0), and a meta-driven left
+    // join would drop it
     val base = IvfIndex.stats(spark, indexPath)
       .join(codeOcc, Seq("centroid_id"), "full")
       .join(codeFiles, Seq("centroid_id"), "full")
@@ -389,14 +389,19 @@ object IvfPq extends IvfLayout {
     * the tightness-restore op residual mode needs once generation
     * drift accumulates (splits re-center cells; moved rows keep
     * pricing against the center they were encoded with). Off the
-    * query path, result-invisible at every point: until a partition's
-    * overwrite commits its rows price against their old generations,
-    * after it against the new one, and the per-(query, generation)
-    * LUT covers both. Cost: one pruned scan of the selected cells'
-    * payloads + encode + a dynamic overwrite of only their code
-    * directories. The mid-write kill window of the dynamic overwrite
-    * is the family's accepted residual (as for compaction and the
-    * split); enc appends before any code references them.
+    * query path. Cost: one pruned scan of the selected cells'
+    * payloads + encode + a staged write of only their code
+    * directories and the two tiny enc tables.
+    *
+    * Commit: the re-encoded code directories, `enc_current` with the
+    * cells remapped to their fresh generations, and `enc_centers`
+    * with the fresh generations added and every superseded one
+    * dropped are staged and published by one
+    * [[graft.util.Generation.commit]]: a reader prices every code row
+    * against the generation table it was committed with. Dropping the
+    * superseded generations keeps `enc_centers` (and with it the
+    * per-query LUT work of EVERY future query) from growing with each
+    * re-encode.
     */
   def reencodeCells(
       spark: SparkSession,
@@ -413,10 +418,10 @@ object IvfPq extends IvfLayout {
       meta.select(col("centroid_id").cast("long"))
         .collect().map(_.getLong(0)).toSeq).sorted
     if (targets.isEmpty) return
-    val minted = mintGenerations(spark, indexPath, meta, targets)
+    val (minted, current) = mintGenerations(spark, indexPath, meta, targets)
+    val regen = Generation.stage(spark, indexPath)
     // pruned payload scan of the target cells, residual vs the CURRENT
-    // centroid, frozen-codebook encode, dynamic overwrite of only the
-    // target code directories
+    // centroid, frozen-codebook encode
     val members = IvfIndex.normalizedAssigned(spark, indexPath, idCol, embCol)
       .filter(col("centroid_id").isin(targets: _*))
     val residuals = members
@@ -427,30 +432,25 @@ object IvfPq extends IvfLayout {
         zip_with(col("__norm"), col("center"), (a, b) => (a - b).cast("float")))
       .select(col(idCol), col("centroid_id"), col("enc_id"), col("__res"))
       .localCheckpoint()
-    PqIndex.encodePrepared(residuals, idCol, "__res",
+    IvfIndex.writeCells(PqIndex.encodePrepared(residuals, idCol, "__res",
         PqIndex.codebooksDf(spark, indexPath))
-      .join(residuals.select(col(idCol), col("centroid_id"), col("enc_id")), idCol)
-      .transform(graft.util.PartitionedWrite.spread(
-        _, targets.size, col("centroid_id"), col(idCol)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$indexPath/cell_codes")
-    // retire superseded generations: without this every re-encode
-    // grows enc_centers (and with it the per-query LUT work of EVERY
-    // future query) without bound. Referenced = generations a code
-    // row still prices against ∪ each cell's current generation
-    // (tomorrow's upsert targets); the rewrite runs AFTER the code
-    // overwrite commits, so a crash in between strands extra
-    // generations (harmless), never a dangling reference.
+      .join(residuals.select(col(idCol), col("centroid_id"), col("enc_id")), idCol),
+      idCol, targets.size, s"$regen/cell_codes")
+    current.repartition(1).write.parquet(s"$regen/enc_current")
+    // referenced = generations the untouched cells' code rows price
+    // against ∪ each cell's current generation (the re-encoded rows'
+    // and tomorrow's upsert targets)
     val referenced = Tables.read(spark, s"$indexPath/cell_codes")
-      .select(col("enc_id")).distinct()
-      .unionByName(
-        Tables.read(spark, s"$indexPath/enc_current").select(col("enc_id")))
+      .filter(!col("centroid_id").isin(targets: _*))
+      .select(col("enc_id"))
+      .unionByName(current.select(col("enc_id")))
       .distinct()
-    val prunedEnc = Tables.read(spark, s"$indexPath/enc_centers")
-      .join(referenced, "enc_id").localCheckpoint()
-    prunedEnc.repartition(1).write.mode("overwrite")
-      .parquet(s"$indexPath/enc_centers")
+    Tables.read(spark, s"$indexPath/enc_centers")
+      .unionByName(minted.select(col("__enc").as("enc_id"), col("center")))
+      .join(referenced, "enc_id")
+      .repartition(1).write.parquet(s"$regen/enc_centers")
+    IvfIndex.commitCells(spark, indexPath, Seq("cell_codes"), targets,
+      Seq("enc_centers", "enc_current"))
   }
 
   /** The observe→repair loop of residual mode, CLOSED: re-encode
@@ -590,30 +590,14 @@ object IvfPq extends IvfLayout {
         col("__ub") >= coalesce(col("floor_lb"), lit(threshold)))
       .select(col(queryIdCol), col(idCol), col("centroid_id"))
 
-    // exact re-rank: payloads read pruned to the candidates' cells.
-    // Inside a split's commit window (and in a crashed split's state
-    // until repair) a stale code copy can surface the same vector
-    // from two cells — old and new directory both probed — and a
-    // duplicate candidate would occupy two ranks of the final top-k,
-    // displacing a true neighbor. The split_pending marker EXACTLY
-    // brackets that window (written before any code moves, cleared
-    // after the shrink / by repair), so the (query, id) dedup is
-    // applied only while it exists: a healthy index pays nothing, a
-    // racing or crashed-state query pays one candidate-sized
-    // exchange for a correct result shape. Floor inflation from the
-    // duplicate's lb rows remains the documented transient weakening
-    // until repair.
-    val mp = new org.apache.hadoop.fs.Path(IvfIndex.splitPendingPath(indexPath))
-    val inSplitWindow = mp.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(mp)
+    // exact re-rank: payloads read pruned to the candidates' cells
     val candM = cand.localCheckpoint()
     val fetchCells = candM.select("centroid_id").distinct()
       .collect().map(_.get(0)).toSeq
-    val candPairs = candM.select(col(queryIdCol), col(idCol))
     val result = Tables.read(spark, s"$indexPath/cells")
       .filter(col("centroid_id").isin(fetchCells: _*))
       .select(col(idCol), col(embCol))
-      .join(if (inSplitWindow) candPairs.distinct() else candPairs, idCol)
+      .join(candM.select(col(queryIdCol), col(idCol)), idCol)
       .join(broadcast(qNorm.select(col(queryIdCol), col("__qv"))), queryIdCol)
       .withColumn("sim", cosine_sim(col("__qv"), col(embCol)))
       .filter(col("sim") > threshold)

@@ -128,8 +128,8 @@ object ShardedIvf {
     }
 
   /** Physical deletion fold-in, one shard at a time — the rolling-
-    * maintenance shape: each shard's pass is independently crash-safe
-    * (its own tombstone table is its marker), so a window can compact
+    * maintenance shape: each shard's pass commits through its own
+    * generation swap, so a window can compact
     * shard 3 today and shard 4 tomorrow with queries exact throughout.
     */
   def compactTombstones(
@@ -271,8 +271,8 @@ object ShardedIvf {
   /** Hot-cell occupancy repair across the shard set, one shard at a
     * time ([[IvfIndex.splitToConvergence]] — composed shards move
     * their code rows with their cells inside the same pass): each
-    * shard's pass is independently crash-safe under the split_pending
-    * marker, so this is rolling maintenance like [[compactTombstones]]
+    * shard's pass commits through its own generation swap, so this is
+    * rolling maintenance like [[compactTombstones]]
     * — queries exact throughout, and a window can repair a subset of
     * shards and stop.
     */

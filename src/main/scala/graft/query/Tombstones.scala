@@ -35,11 +35,10 @@ import org.apache.spark.sql.functions._
   *  - physical removal happens later, batched, via the index family's
   *    compaction entry point (`IvfIndex.compactTombstones` rewrites
   *    ONLY the cell directories holding deleted rows; the flat
-  *    families rebuild). The tombstone table itself is the crash
-  *    marker: compaction deletes it LAST, so a crash anywhere
-  *    mid-rewrite leaves the table in place, every read stays masked,
-  *    and the rerun is idempotent — no pending-marker machinery
-  *    needed.
+  *    families rebuild). Compaction purges the table in the same
+  *    generation swap ([[graft.util.Generation.commit]]) that installs
+  *    the rewritten directories, so a reader sees masked old rows or
+  *    compacted new ones, never a mix.
   *
   * Scale shape: the table between compactions is bounded by the
   * deletion cadence (operationally: compact when `stats` shows the
@@ -142,9 +141,8 @@ object Tombstones {
   def pendingCount(spark: SparkSession, indexPath: String): Long =
     df(spark, indexPath).map(_.distinct().count()).getOrElse(0L)
 
-  /** Drop the table — the LAST step of a physical compaction (the
-    * crash-marker discipline: while any rewrite work remains, the
-    * table remains, and every read stays masked).
+  /** Drop the table outright: a fresh build, or a compaction that
+    * found nothing left to rewrite.
     */
   def clear(spark: SparkSession, indexPath: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path(indexPath))

@@ -131,8 +131,8 @@ object IndexMaintenance {
         // overlaps pending tombstones, the physical fold-in runs
         // FIRST, so the upsert lands on an index whose old rows are
         // gone — replace semantics, idempotent under replay (a
-        // replayed compaction is a clean rerun by the
-        // tombstones-are-the-marker discipline). Costs one semi-join
+        // compaction commits through one generation swap, so a
+        // replayed one is a clean rerun). Costs one semi-join
         // against the cadence-bounded tombstone table only when one
         // exists, and only in CDC mode (the plain path keeps the loud
         // guard: there deletes happen out of band, and silently
@@ -145,14 +145,9 @@ object IndexMaintenance {
       }
       // optional in-line occupancy repair before the fence is written:
       // result-invisible (the radius-coverage contract; a composed
-      // split moves code rows with their cells). Replay semantics
-      // differ from the upsert's benign-duplication window: a split
-      // that crashes between its cells rewrite and its meta swap
-      // leaves the fresh directory meta-less (INVISIBLE to queries,
-      // not lost) — the next split pass's head-of-call repair adopts
-      // it (and reconciles a composed split's code rows), and fresh
-      // ids allocate above filesystem directory ids so a replayed
-      // split can never overwrite the orphan
+      // split moves code rows with their cells). Each split pass
+      // commits through one generation swap, so a crash leaves the
+      // index before or after that pass and a replay splits again
       splitCap.foreach(cap =>
         IvfIndex.splitToConvergence(spark, indexPath, idCol, embCol, cap))
       // optional in-line residual-drift repair AFTER the split (splits
@@ -166,9 +161,9 @@ object IndexMaintenance {
         graft.query.IvfPq.reencodeDrifted(spark, indexPath, idCol, embCol, cap))
       // optional physical fold-in of accumulated tombstones at a batch
       // cadence (the deletion twin of reclusterEvery): cell-pruned
-      // rewrite, radii re-tightened, spent tombstones retired — the
-      // tombstones-are-the-marker discipline makes a crashed pass a
-      // clean rerun, so it composes with the replay fence for free
+      // rewrite, radii re-tightened, spent tombstones retired in one
+      // generation swap — a crashed pass is a clean rerun, so it
+      // composes with the replay fence for free
       compactDeletesEvery.foreach { n =>
         if (n > 0 && batchId % n == 0)
           IvfIndex.compactTombstones(spark, indexPath, idCol, embCol)

@@ -256,8 +256,8 @@ object TrainingFeed {
         // physical deletion fold-in at a batch cadence (the
         // [[IndexMaintenance.applyBatch]] compactDeletesEvery story):
         // cell-pruned rewrite, radii re-tightened, spent tombstones
-        // retired — the tombstones-are-the-marker discipline makes a
-        // crashed pass a clean rerun inside the same fence. Runs even on
+        // retired in one generation swap — a crashed pass is a clean
+        // rerun inside the same fence. Runs even on
         // admission-empty batches: a takedown-only feed window still
         // owes its compaction cadence.
         cfg.compactDeletesEvery.foreach { cn =>

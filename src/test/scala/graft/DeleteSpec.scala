@@ -170,48 +170,6 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     assert(compacted == exact)
   }
 
-  test("crash between the cells rewrite and the codes rewrite: the rerun " +
-      "still finds the dirty code rows and finishes the job") {
-    val e = clustered()
-    val dir = tmp("ivfpq-crash")
-    IvfPq.build(e, "vec_id", "embedding", dir,
-      delParams)
-    // HALF of cluster 2: the affected cell keeps survivors, so the
-    // simulated partial rewrite below actually rewrites its directory
-    // (a fully-emptied cell is exercised by the compact test above)
-    val dead = e.filter(pmod(col("vec_id"), lit(8)) === 2).select("vec_id")
-    IvfIndex.delete(spark, dir, "vec_id", dead)
-    // simulate the crash point: rewrite the CELLS side only, exactly as
-    // compactTombstones would, and leave tombstones + codes untouched
-    val tombIds = spark.read.parquet(Tombstones.path(dir))
-      .select(col(Tombstones.IdColumn).as("vec_id"))
-    spark.read.parquet(s"$dir/cells")
-      .join(tombIds, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
-      .localCheckpoint() // materialize before overwriting the source dirs
-      .write.partitionBy("centroid_id").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$dir/cells")
-    assert(spark.read.parquet(s"$dir/cells").count() == 175L)
-    assert(spark.read.parquet(s"$dir/cell_codes").count() == 200L)
-    // masked reads remain exact through the torn state (the table IS
-    // the marker)
-    val queries = e.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val live = e.filter(pmod(col("vec_id"), lit(8)) =!= 2)
-    val exact = topkSet(SimilaritySearch.topKBatch(
-      live, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
-    assert(topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
-    // the rerun must notice the codes side is still dirty
-    IvfIndex.compactTombstones(spark, dir, "vec_id", "embedding")
-    assert(spark.read.parquet(s"$dir/cells").count() == 175L)
-    assert(spark.read.parquet(s"$dir/cell_codes").count() == 175L)
-    assert(!Tombstones.exists(spark, dir))
-    assert(topkSet(IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
-  }
-
   test("selfKnnGraph and contrastivePairs drop deleted rows as nodes AND " +
       "as neighbors") {
     val e = clustered(100L)

@@ -280,43 +280,4 @@ class IvfPqResidualSpec extends AnyFunSuite with SharedSpark {
       s"wrong failure: ${messages(err).take(3)}")
   }
 
-  test("residual codes move through a crashed split's repair with generations intact") {
-    import spark.implicits._
-    val e = clustered(200L)
-    val dir = tmp("crash")
-    IvfPq.build(e, "vec_id", "embedding", dir,
-      params.copy(ivf = IvfIndex.Params(nCentroids = 2)))
-    val snap = tmp("crash-snap")
-    def cp(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs(); src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
-      } else {
-        java.nio.file.Files.copy(src.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING); ()
-      }
-    }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    cp(new java.io.File(dir), new java.io.File(snap))
-    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
-    assert(report.newIds.nonEmpty)
-    // reconstruct the stale-duplicates crash state (kill before the
-    // old-directory shrink), then repair
-    report.newIds.foreach { case (old, _) =>
-      rm(new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
-      cp(new java.io.File(s"$snap/cell_codes/centroid_id=$old"),
-        new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
-    }
-    report.newIds.toDF("old_id", "new_id").repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/split_pending")
-    IvfIndex.repairPendingCodes(spark, dir, "vec_id")
-    // repair moved rows with their enc_id — nothing dangles, counts match
-    assert(spark.read.parquet(s"$dir/cell_codes").count() == 200L)
-    val dangling = spark.read.parquet(s"$dir/cell_codes")
-      .join(spark.read.parquet(s"$dir/enc_centers"), Seq("enc_id"), "left_anti")
-    assert(dangling.isEmpty)
-    val (got, exact) = queryBoth(e, dir)
-    assert(got == exact)
-  }
 }

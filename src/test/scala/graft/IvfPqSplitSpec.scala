@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Hot-cell split maintenance for the COMPOSED IVF+PQ index: the codes
   * move with their cells (global codebooks make codes cell-independent),
-  * under the split_pending marker + repairPendingCodes crash story.
-  * Result-invisibility at fixture scale is gated end-to-end by q111;
-  * these pin what the oracle can't isolate — codes/cells agreement,
-  * both crash windows reconciling, and the maintenance-face loop.
+  * committed with them in one generation swap. Result-invisibility at
+  * fixture scale is gated end-to-end by q111; these pin what the
+  * oracle can't isolate — codes/cells agreement and the
+  * maintenance-face loop (PartialRewriteCrashSpec kills the commit).
   */
 class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
 
@@ -37,21 +37,6 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
       base((i % 4).toInt * 2) = 1.0f
       (i, base.map(x => x + (rnd.nextFloat() - 0.5f) * 0.08f))
     }.toDF("vec_id", "embedding")
-  }
-
-  private def cp(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
   }
 
   private def perCellCounts(table: String, dir: String): Map[Long, Long] =
@@ -91,8 +76,8 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     assert(report.split.nonEmpty)
     assert(report.newIds.map(_._1).sorted == report.split.sorted,
       "newIds must pair every split cell with its fresh id")
-    assert(!new java.io.File(s"$dir/split_pending").exists(),
-      "a completed split must clear its marker")
+    assert(!new java.io.File(s"$dir/_regen").exists(),
+      "a completed split must leave no stage behind")
     assertInSync(dir, 200L)
     assert(perCellCounts("cells", dir).values.forall(_ <= 60L))
     val (got, exact) = queryBoth(e, dir)
@@ -109,110 +94,6 @@ class IvfPqSplitSpec extends AnyFunSuite with SharedSpark {
     IvfIndex.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
     assertInSync(dir, 200L)
     assert(perCellCounts("cells", dir).values.forall(_ <= 60L))
-    val (got, exact) = queryBoth(e, dir)
-    assert(got == exact)
-  }
-
-  test("crash before the cells commit: repair drops the fresh codes, stays exact") {
-    import spark.implicits._
-    val e = clustered(200L)
-    val dir = tmp("crash-early")
-    IvfPq.build(e, "vec_id", "embedding", dir, params)
-    val snap = tmp("crash-early-snap")
-    cp(new java.io.File(dir), new java.io.File(snap))
-
-    // real split, then reconstruct the state a kill after the fresh-
-    // codes write but BEFORE the cells overwrite leaves: cells, meta
-    // and the old code directories as before the split, the fresh code
-    // directories present, the marker present
-    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
-    assert(report.newIds.nonEmpty)
-    Seq("cells", "cells_meta").foreach { t =>
-      rm(new java.io.File(s"$dir/$t")); cp(new java.io.File(s"$snap/$t"), new java.io.File(s"$dir/$t"))
-    }
-    report.newIds.foreach { case (old, _) =>
-      rm(new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
-      cp(new java.io.File(s"$snap/cell_codes/centroid_id=$old"),
-        new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
-    }
-    report.newIds.toDF("old_id", "new_id").repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/split_pending")
-
-    // even crashed, the pre-split view is complete: queries stay exact
-    val (gotCrashed, exactCrashed) = queryBoth(e, dir)
-    assert(gotCrashed == exactCrashed, "the crashed-early state lost answers")
-
-    // and the stats report SHOWS the crashed state: the fresh code
-    // directories have no cells row, so they surface as codes > 0
-    // with occupancy 0 (a meta-driven join would hide exactly these)
-    val orphanRows = IvfPq.stats(spark, dir)
-      .filter(col("occupancy") === 0 && col("codes") > 0)
-      .select(col("centroid_id")).collect().map(_.getLong(0)).toSet
-    assert(report.newIds.map(_._2).toSet.subsetOf(orphanRows),
-      s"stats hid the orphan code directories: $orphanRows")
-
-    // next maintenance pass: repair reconciles (fresh code directories
-    // whose cells never committed are deleted), then the split re-runs
-    IvfIndex.splitToConvergence(spark, dir, "vec_id", "embedding", occupancyCap = 60L)
-    assert(!new java.io.File(s"$dir/split_pending").exists())
-    assertInSync(dir, 200L)
-    val (got, exact) = queryBoth(e, dir)
-    assert(got == exact)
-  }
-
-  test("crash before the code shrink: repair removes stale duplicates, stays exact") {
-    import spark.implicits._
-    val e = clustered(200L)
-    val dir = tmp("crash-late")
-    IvfPq.build(e, "vec_id", "embedding", dir, params)
-    val snap = tmp("crash-late-snap")
-    cp(new java.io.File(dir), new java.io.File(snap))
-
-    // real split, then reconstruct the state a kill after the meta
-    // swap but BEFORE the old-directory shrink leaves: everything
-    // committed except the old code directories, which still hold
-    // stale copies of the moved side-1 rows; marker present
-    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L)
-    assert(report.newIds.nonEmpty)
-    report.newIds.foreach { case (old, _) =>
-      rm(new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
-      cp(new java.io.File(s"$snap/cell_codes/centroid_id=$old"),
-        new java.io.File(s"$dir/cell_codes/centroid_id=$old"))
-    }
-    report.newIds.toDF("old_id", "new_id").repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/split_pending")
-    assert(spark.read.parquet(s"$dir/cell_codes").count() > 200L,
-      "the reconstructed state should carry duplicate code rows")
-    // the stats report surfaces the desync operationally:
-    // codes > occupancy in the stale old cells
-    val statsBroken = IvfPq.stats(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getAs[Long]("codes")))).toMap
-    assert(report.newIds.map(_._1).exists(c =>
-        statsBroken(c)._2 > statsBroken(c)._1),
-      s"stats did not flag the duplicate codes: $statsBroken")
-    // queries racing the crashed state must never return the same
-    // vector at two ranks (the fetch dedups duplicate candidates) —
-    // the floor inflation may transiently weaken answers, duplicates
-    // in the OUTPUT would be a wrong shape
-    val queriesB = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val broken = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
-      queriesB, "query_id", "qvec", k = 3, threshold = 0.0)
-    val pairs = broken.select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.length == pairs.distinct.length,
-      "a stale duplicate occupied two ranks in the crashed state")
-
-    // repair directly (what the next pass runs at its head): the old
-    // directories shrink to the committed cells assignment
-    val repaired = IvfIndex.repairPendingCodes(spark, dir, "vec_id")
-    assert(repaired.toSet == report.newIds.toSet)
-    assert(!new java.io.File(s"$dir/split_pending").exists())
-    assertInSync(dir, 200L)
-    // and the report reads healthy again: codes == occupancy per cell
-    val statsFixed = IvfPq.stats(spark, dir).collect()
-    assert(statsFixed.forall(r => r.getAs[Long]("codes") == r.getLong(1)),
-      "stats still reports a desync after repair")
     val (got, exact) = queryBoth(e, dir)
     assert(got == exact)
   }

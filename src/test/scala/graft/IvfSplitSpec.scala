@@ -201,55 +201,6 @@ class IvfSplitSpec extends AnyFunSuite with SharedSpark {
       "compaction did not shrink the per-cell file counts")
   }
 
-  test("a crashed split (cells rewritten, meta not) is repaired, never clobbered") {
-    val e = clustered(200L)
-    val dir = tmp("crash")
-    IvfIndex.build(e, "vec_id", "embedding", dir, IvfIndex.Params(nCentroids = 2))
-    val metaBefore = spark.read.parquet(s"$dir/cells_meta").localCheckpoint()
-    val maxBefore = metaBefore.agg(max(col("centroid_id").cast("long")))
-      .head.getLong(0)
-
-    // a real split, then the meta swap "crashes": restore the pre-split
-    // metadata — exactly the state a kill between the two writes leaves
-    val report = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding",
-      occupancyCap = 60L)
-    assert(report.split.nonEmpty)
-    metaBefore.write.mode("overwrite").parquet(s"$dir/cells_meta")
-
-    // the fresh side-1 directories are now meta-less: their vectors are
-    // invisible — a moved vector cannot even retrieve ITSELF
-    val moved = spark.read.parquet(s"$dir/cells")
-      .filter(col("centroid_id").cast("long") > maxBefore)
-      .select(col("vec_id").cast("long")).limit(4)
-      .collect().map(_.getLong(0)).toSeq
-    assert(moved.nonEmpty)
-    val queries = e.filter(col("vec_id").isin(moved: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val crashed = IvfIndex.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 1, threshold = 0.0)
-    assert(crashed.filter(col("query_id") === col("vec_id")).count() == 0,
-      "orphan rows should be invisible in the crashed state")
-
-    // the next maintenance pass adopts the orphans at its head (and a
-    // fresh-id allocation above the fs max means a replayed split could
-    // never have clobbered them); the index is whole and exact again
-    val r2 = IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding",
-      occupancyCap = 60L)
-    assert(r2.degenerate.isEmpty)
-    assert(spark.read.parquet(s"$dir/cells").count() == 200L)
-    val metaIds = spark.read.parquet(s"$dir/cells_meta")
-      .select(col("centroid_id").cast("long")).collect().map(_.getLong(0)).toSet
-    val dirIds = new java.io.File(s"$dir/cells").listFiles()
-      .filter(_.getName.startsWith("centroid_id="))
-      .map(_.getName.stripPrefix("centroid_id=").toLong).toSet
-    assert(metaIds == dirIds, s"meta/filesystem disagree: $metaIds vs $dirIds")
-    val ivf = IvfIndex.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0)
-    val exact = SimilaritySearch.topKBatch(
-      e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
-    assert(topkSet(ivf) == topkSet(exact))
-  }
-
   test("a no-hot-cells pass is a cheap no-op") {
     val e = clustered(80L)
     val dir = tmp("noop")
