@@ -2,7 +2,7 @@ package graft
 
 import graft.ingest.IngestJob
 import graft.pipeline.{Decontamination, Dedup, Events, Multimodal, RangeJoin, Relational, Sampling, SequencePacker, TextAnalysis}
-import graft.query.{AnnIndex, ContextAssembler, IvfIndex, IvfPq, LexicalSearch, PqIndex, QuantizedSearch, RetrievalEval, SimilaritySearch}
+import graft.query.{AnnIndex, ContextAssembler, IvfIndex, IvfPq, LexicalSearch, QuantizedSearch, RetrievalEval, SimilaritySearch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -99,12 +99,13 @@ object Queries {
       .orderBy("query_id", "rn")
   }
 
-  /** Q105: batch top-k against the PRODUCT-QUANTIZATION index (the
-    * memory-bound scale path — [[graft.query.PqIndex]]: per-subspace
+  /** Q105: batch top-k against the PRODUCT-QUANTIZATION codes alone —
+    * a ONE-CELL [[graft.query.IvfPq]] index, so no cell bound prunes
+    * anything and every vector's codes are scanned: per-subspace
     * codebooks, ~12-40 B of codes+residual scanned per vector instead
     * of the 256 B payload, certified similarity bounds from the ADC
     * lookup-table scan, exact cosine re-rank of only the
-    * bound-surviving candidates). Same batch and EXACT oracle as
+    * bound-surviving candidates. Same batch and EXACT oracle as
     * q9/q38/q39: green at any corpus shape because the residual bound
     * widens (fetches more) rather than misses — on this isotropic
     * fixture it fetches most rows; on a clustered corpus
@@ -113,8 +114,9 @@ object Queries {
   def q105PqTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val work = indexWorkDir("pq", dir)
-    buildOnce(work)(PqIndex.build(e, "vec_id", "embedding", work))
-    PqIndex.queryTopK(spark, work, "vec_id", "embedding",
+    buildOnce(work)(IvfPq.build(e, "vec_id", "embedding", work,
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 1))))
+    IvfPq.queryTopK(spark, work, "vec_id", "embedding",
         queryBatch(e), "query_id", "qvec", k = 5, threshold = 0.0)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"), col("rn"))
       .orderBy("query_id", "rn")
@@ -156,9 +158,10 @@ object Queries {
     * bound, the PQ code scan inside the probed cells prunes individual
     * payload fetches via the residual bound, and only the double
     * survivors are exact-ranked. Same batch and EXACT oracle as
-    * q9/q38/q39/q105 — the fifth index family under one exactness
-    * gate, and the shape a 100 TB deployment actually runs (read a
-    * few cells' few-byte codes, fetch an answer-sized payload set).
+    * q9/q38/q39/q105 — q105's one-cell layout with the cell bound in
+    * front, under one exactness gate, and the shape a 100 TB deployment
+    * actually runs (read a few cells' few-byte codes, fetch an
+    * answer-sized payload set).
     */
   def q107IvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")

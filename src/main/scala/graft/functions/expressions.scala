@@ -221,7 +221,7 @@ case class RpProject(child: Expression, mExpr: Expression)
 /** Product-quantization ADC distance sum: `pq_adc(codes, lut)` =
   * Σ_m lut[m·K + codes[m]] over a flat per-query lookup table of
   * K = lut.length / codes.length entries per subspace — the inner
-  * kernel of [[graft.query.PqIndex]]'s compressed code scan, native
+  * kernel of [[graft.query.IvfPq]]'s compressed code scan, native
   * (with codegen) because it runs once per (corpus vector × query)
   * on the hot path where an interpreted higher-order fold pays
   * per-element lambda dispatch.

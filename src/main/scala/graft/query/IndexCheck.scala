@@ -33,9 +33,11 @@ import org.apache.spark.sql.functions._
   *    vector from the composed scan; a stale one resurrects a moved
   *    or deleted vector into floors).
   *  - `enc_refs` (residual mode only): every code row's enc
-  *    generation exists in `enc_centers`, and `enc_current` maps
-  *    every code-holding cell (a dangling enc_id prices codes against
-  *    a missing LUT center — silently wrong bounds).
+  *    generation and every `enc_current` row's exists in
+  *    `enc_centers` (a dangling enc_id prices codes against a missing
+  *    LUT center — silently wrong bounds). A cell without an
+  *    `enc_current` row is healthy: a split mints it none, and the
+  *    next upsert into it mints one on demand.
   *  - `label_meta_fresh`: each persisted label-radius artifact is
   *    fresh by its fingerprint, or correctly detected stale (stale is
   *    SAFE — queries re-derive — so `ok` is about detectability: a
@@ -134,15 +136,12 @@ object IndexCheck {
     if (hasCodes && IvfPq.isResidual(spark, indexPath)) checks += (() => {
       val encIds = Tables.read(spark, s"$indexPath/enc_centers")
         .select(col("enc_id"))
-      val dangling = Tables.read(spark, s"$indexPath/cell_codes")
+      def dangling(table: String): Long = Tables.read(spark, s"$indexPath/$table")
         .select(col("enc_id"))
         .join(broadcast(encIds), Seq("enc_id"), "left_anti")
         .count()
-      val currentCells = Tables.read(spark, s"$indexPath/enc_current")
-        .select(col("centroid_id").cast("long")).collect().map(_.getLong(0)).toSet
-      val unmapped = IvfIndex.codesDirIds(spark, indexPath)
-        .count(!currentCells(_)).toLong
-      ("enc_refs", dangling == 0L && unmapped == 0L, dangling + unmapped)
+      val n = dangling("cell_codes") + dangling("enc_current")
+      ("enc_refs", n == 0L, n)
     })
 
     // -------------------------------------------------- label_meta_fresh

@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   *    `sim(q,x) ≤ 1 − max(0, d(q,centroid_c) − radius_c)²/2` — cells
   *    whose bound cannot reach the floor are never read at all
   *    (static partition pruning on `centroid_id=`);
-  *  - code level ([[PqIndex]]): within a probed cell, the ADC distance
-  *    to the reconstructed vector ± the stored residual certifies
-  *    `sim ∈ [lb, ub]` per vector — only bound-survivors fetch their
-  *    full payload for the exact cosine re-rank.
+  *  - code level (the [[PqIndex]] codec): within a probed cell, the
+  *    ADC distance to the reconstructed vector ± the stored residual
+  *    certifies `sim ∈ [lb, ub]` per vector — only bound-survivors
+  *    fetch their full payload for the exact cosine re-rank.
+  *
+  * With one cell (`IvfIndex.Params(nCentroids = 1)`) the cell level
+  * prunes nothing and this is the flat PQ layout (q105).
   *
   * Retrieval is EXACT at any corpus shape, the family contract: the
   * floor is a k-th best certified LOWER bound, so nothing the bounds
@@ -519,7 +522,7 @@ object IvfPq extends IvfLayout {
       scope: Option[IvfLayout.LabelScope]): IvfLayout.Retrieval = {
     // one fs.exists when healthy: completes a torn generation swap
     Generation.recover(spark, indexPath)
-    val pad = lit(IvfIndex.RadiusPad)
+    val pad = lit(PqIndex.BoundPad)
     val residualMode = isResidual(spark, indexPath)
     val labelCols = scope.map(s => col(s.labelCol)).toSeq
     // per (query, cell): probe order + the cell-level bound

@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   *    (the same monotonicity the upsert fold relies on in reverse);
   *  - physical removal happens later, batched, via the index family's
   *    compaction entry point (`IvfIndex.compactTombstones` rewrites
-  *    ONLY the cell directories holding deleted rows; the flat
-  *    families rebuild). Compaction purges the table in the same
+  *    ONLY the cell directories holding deleted rows; the flat LSH
+  *    family rebuilds). Compaction purges the table in the same
   *    generation swap ([[graft.util.Generation.commit]]) that installs
   *    the rewritten directories, so a reader sees masked old rows or
   *    compacted new ones, never a mix.

@@ -15,7 +15,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * radius-coverage invariant is maintained per batch — q85's
   * oracle-gated property, q109's for the composed layout). One face
   * serves both IVF layouts: every step reads the layout from the
-  * index, so a caller never states it.
+  * index, so a caller never states it. The streaming faces cover every
+  * index family: [[maintainIvf]] the plain and composed IVF layouts
+  * (a one-cell composed index is the flat PQ layout),
+  * [[maintainLexical]] the BM25 postings index, and
+  * [[StreamingNearDup]] the near-dup LSH probe index.
   *
   * `foreachBatch` is the right sink shape: an upsert touches two
   * paths (cells append + cells_meta overwrite) and must see each
@@ -217,46 +221,6 @@ object IndexMaintenance {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(indexPath, idCol, embCol, batch, batchId, splitCap,
           reencodeDriftCap, reclusterEvery, opCol, compactDeletesEvery); ()
-      }
-      .start()
-
-  /** The product-quantization twin of [[applyBatch]]: encode one
-    * micro-batch against the index's FROZEN codebooks and append to
-    * the codes + vectors tables ([[graft.query.PqIndex.upsert]]),
-    * behind the same replay fence. Query results after N batches
-    * equal a from-scratch rebuild over the union — not bit-identical
-    * codes (a rebuild refits codebooks), but identical ANSWERS, which
-    * is the contract PQ retrieval actually makes (exact for any
-    * codebook). @return true iff the batch was applied.
-    */
-  def applyPqBatch(
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      batch: DataFrame,
-      batchId: Long): Boolean =
-    fenced(batch.sparkSession, indexPath, batch, batchId)(
-      graft.query.PqIndex.upsert(batch.sparkSession, indexPath, idCol, embCol, batch))
-
-  /** Continuous PQ-index maintenance — every index family
-    * (near-dup LSH, IVF and composed IVF+PQ, lexical, PQ) has the
-    * symmetric build/upsert/stream/compact story. Same at-least-once
-    * caveat as [[applyBatch]]; run
-    * [[graft.query.PqIndex.compactIndex]] off the query path at
-    * compaction cadence.
-    */
-  def maintainPq(
-      vectors: DataFrame,
-      indexPath: String,
-      idCol: String,
-      embCol: String,
-      checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyPqBatch(indexPath, idCol, embCol, batch, batchId); ()
       }
       .start()
 

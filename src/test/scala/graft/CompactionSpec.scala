@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.{IvfIndex, LexicalSearch, PqIndex}
+import graft.query.{IvfIndex, IvfPq, LexicalSearch, PqIndex}
 import graft.streaming.StreamingNearDup
 import graft.util.{Compaction, Generation}
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
@@ -132,9 +132,10 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
       ("lexical", "postings",
         LexicalSearch.buildIndex(docs, "doc_id", "text", _),
         LexicalSearch.queryIndex(spark, _, "doc_id", terms, "query_id", "term", k = 3)),
-      ("pq", "codes",
-        PqIndex.build(e, "vec_id", "embedding", _, PqIndex.Params(dim = 8, numSub = 4)),
-        PqIndex.queryTopK(spark, _, "vec_id", "embedding", q, "query_id", "qvec",
+      ("pq", "cell_codes",
+        IvfPq.build(e, "vec_id", "embedding", _, IvfPq.Params(
+          ivf = IvfIndex.Params(nCentroids = 1), pq = PqIndex.Params(dim = 8, numSub = 4))),
+        IvfPq.queryTopK(spark, _, "vec_id", "embedding", q, "query_id", "qvec",
           k = 3, threshold = 0.0)))
     for ((family, table, build, query) <- families) {
       val dir = java.nio.file.Files.createTempDirectory(s"compact-heal-$family").toString

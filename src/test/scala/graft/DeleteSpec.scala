@@ -212,21 +212,13 @@ class DeleteSpec extends AnyFunSuite with SharedSpark {
     assert(topkSet(got) == topkSet(exact))
   }
 
-  test("flat families: PQ code scan and LSH fetch both mask tombstones " +
-      "(rebuild-to-compact layouts)") {
+  test("flat LSH family: the fetch masks tombstones (a rebuild-to-compact layout)") {
     val e = clustered()
     val queries = e.filter(col("vec_id") < 6)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val live = e.filter(pmod(col("vec_id"), lit(4)) =!= 0)
     val exact = topkSet(SimilaritySearch.topKBatch(
       live, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
-
-    val pqDir = tmp("pq")
-    PqIndex.build(e, "vec_id", "embedding", pqDir, PqIndex.Params(dim = 8, numSub = 4))
-    Tombstones.append(spark, pqDir, "vec_id",
-      e.filter(pmod(col("vec_id"), lit(4)) === 0).select("vec_id"))
-    assert(topkSet(PqIndex.queryTopK(spark, pqDir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0)) == exact)
 
     val lshDir = tmp("lsh")
     AnnIndex.buildIndex(e, "vec_id", "embedding", lshDir)

@@ -95,6 +95,38 @@ class IndexCheckSpec extends AnyFunSuite with SharedSpark {
     assert(c("radius_coverage")._1 && c("unique_ids")._1)
   }
 
+  test("a residual split's fresh cell needs no enc_current row; a dangling " +
+      "enc_current row flags enc_refs") {
+    import spark.implicits._
+    // 4 tight clusters on orthogonal axes in one 200-row cell: over a
+    // 60-row cap, so one split pass mints a fresh cell
+    val rnd = new scala.util.Random(13)
+    val e = (0L until 200L).map { i =>
+      val base = Array.fill(8)(0.0f)
+      base((i % 4).toInt * 2) = 1.0f
+      (i, base.map(x => x + (rnd.nextFloat() - 0.5f) * 0.08f))
+    }.toDF("vec_id", "embedding")
+    val dir = tmp("res-split")
+    IvfPq.build(e, "vec_id", "embedding", dir, IvfPq.Params(
+      ivf = IvfIndex.Params(nCentroids = 1),
+      pq = graft.query.PqIndex.Params(dim = 8, numSub = 4, codebookSize = 8),
+      residual = true))
+    assert(IvfIndex.splitHotCells(spark, dir, "vec_id", "embedding", 60L).split.nonEmpty)
+    // the moved rows keep their valid generation; the fresh cell gets
+    // its enc_current row from the next upsert into it, not the split
+    val split = checks(IndexCheck.checkIvf(spark, dir, "vec_id", "embedding"))
+    assert(split.contains("enc_refs"))
+    assert(split.values.forall(_._1), s"healthy split residual index flagged: $split")
+
+    val current = spark.read.parquet(s"$dir/enc_current").localCheckpoint()
+    current.unionByName(Seq((99, 999L)).toDF("centroid_id", "enc_id")
+        .select(col("centroid_id").cast(current.schema("centroid_id").dataType),
+          col("enc_id")))
+      .write.mode("overwrite").parquet(s"$dir/enc_current")
+    val dangling = checks(IndexCheck.checkIvf(spark, dir, "vec_id", "embedding"))
+    assert(!dangling("enc_refs")._1 && dangling("enc_refs")._2 == 1L)
+  }
+
   test("lexical fsck: healthy passes; a drifted stats row and a " +
       "mis-bucketed posting each flag their check") {
     import spark.implicits._

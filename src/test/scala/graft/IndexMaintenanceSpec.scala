@@ -111,54 +111,6 @@ class IndexMaintenanceSpec extends AnyFunSuite with SharedSpark {
     assert(spark.read.parquet(s"$dir/postings").count() == before)
   }
 
-  test("streamed PQ upserts answer like a from-scratch rebuild; replays fenced") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-pq-ckpt").toString
-    graft.query.PqIndex.build(e.filter(pmod(col("vec_id"), lit(10)) < 7),
-      "vec_id", "embedding", dir)
-    val arrivals = e.filter(pmod(col("vec_id"), lit(10)) >= 7)
-      .as[(Long, Array[Float])].collect().toSeq
-
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.IndexMaintenance.maintainPq(
-      input.toDS().toDF("vec_id", "embedding"), dir, "vec_id", "embedding", ckpt)
-    try {
-      val (b1, b2) = arrivals.splitAt(arrivals.size / 2)
-      input.addData(b1); q.processAllAvailable()
-      input.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-
-    assert(spark.read.parquet(s"$dir/codes").count() == e.count())
-    assert(IndexMaintenance.lastApplied(spark, dir) >= 1L)
-
-    // answers (not code words — a rebuild refits codebooks) must equal
-    // a from-scratch build over the union, and both equal brute force:
-    // the contract PQ retrieval makes is exactness for ANY codebook
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    def answer(path: String) = topkSet(graft.query.PqIndex.queryTopK(
-      spark, path, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 5, threshold = 0.0))
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft-pq-rebuild").toString
-    graft.query.PqIndex.build(e, "vec_id", "embedding", rebuilt)
-    val exact = topkSet(SimilaritySearch.topKBatch(
-      e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0))
-    assert(answer(dir) === exact)
-    assert(answer(rebuilt) === exact)
-
-    // crash-replay of an applied batch id must be a fenced no-op
-    val before = spark.read.parquet(s"$dir/codes").count()
-    val lastId = IndexMaintenance.lastApplied(spark, dir)
-    assert(!IndexMaintenance.applyPqBatch(
-      dir, "vec_id", "embedding", arrivals.toDF("vec_id", "embedding"), lastId))
-    assert(spark.read.parquet(s"$dir/codes").count() == before)
-  }
-
   test("streamed composed IVF+PQ upserts stay exact; replays fenced") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -54,6 +54,25 @@ class JobBudgetSpec extends AnyFunSuite with SharedSpark {
     assert(counts == Seq(12, 12, 12), s"warm request job counts $counts")
   }
 
+  test("a warm one-cell IvfPq top-k batch (q105's layout) runs 18 jobs") {
+    import graft.query.{IvfIndex, IvfPq}
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs-pq").toString
+    val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
+    IvfPq.build(e, "vec_id", "embedding", dir,
+      IvfPq.Params(ivf = IvfIndex.Params(nCentroids = 1)))
+    val queries = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+    def request(): Unit = {
+      IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
+        queries, "query_id", "qvec", k = 5, threshold = 0.0).collect()
+      ()
+    }
+    request()
+    val counts = Seq.fill(3)(jobs(request()))
+    assert(counts == Seq(18, 18, 18), s"warm one-cell request job counts $counts")
+  }
+
   /** 4 tight clusters on orthogonal axes: with 2 cells each built cell
     * holds two clusters, so every cell is over a 60-row cap.
     */

@@ -215,26 +215,23 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("PQ query broadcasts the LUT batch and never windows the scan") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-plan").toString
-    val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
-    graft.query.PqIndex.build(e, "vec_id", "embedding", dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val plan = graft.query.PqIndex.queryTopK(spark, dir, "vec_id", "embedding",
-        queries, "query_id", "qvec", k = 5, threshold = 0.0)
-      .queryExecution.executedPlan.toString
+    // q105's one-cell composed plan: the code scan runs inside the
+    // probe passes' eager cuts, the re-rank in the returned frame
+    val plans = cutPlans(graft.Queries.q105PqTopK(spark, Sf0001).collect())
     // the corpus-side codes scan must meet the per-query lookup tables
     // through a BROADCAST of the (point-lookup-sized) query batch —
     // the codes table itself never shuffles pre-ranking
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      "query LUT batch not broadcast onto the codes scan:\n" + plan.take(2000))
+    val codeScans = plans.filter(_.contains("cell_codes"))
+    assert(codeScans.nonEmpty, "no cut plan scanned the codes:\n" + plans.mkString("\n").take(2000))
+    assert(codeScans.forall(p => p.contains("BroadcastHashJoin") &&
+        p.contains("BroadcastExchange") && !p.contains("SortMergeJoin")),
+      "query LUT batch not broadcast onto the codes scan:\n" + codeScans.mkString("\n").take(2000))
     // both ranking stages (floor + final top-k) are map-side-capped
     // typed aggregates, never a corpus-shuffling window
-    assert(plan.contains("partial_topk_by"),
-      "map-side partial top-k missing:\n" + plan.take(2000))
-    assert(!plan.contains("Window"),
-      "ranking fell back to a corpus-shuffling window:\n" + plan.take(2000))
+    assert(plans.exists(_.contains("partial_topk_by")),
+      "map-side partial top-k missing:\n" + plans.mkString("\n").take(2000))
+    assert(!plans.exists(_.contains("Window")),
+      "ranking fell back to a corpus-shuffling window:\n" + plans.mkString("\n").take(2000))
   }
 
   test("IVF probes stay statically pruned after a hot-cell split") {

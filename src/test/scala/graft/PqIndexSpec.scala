@@ -1,9 +1,13 @@
 package graft
 
-import graft.query.{PqIndex, SimilaritySearch}
+import graft.query.{IvfIndex, IvfPq, PqIndex, SimilaritySearch}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The [[PqIndex]] codec through the index that serves it: a ONE-CELL
+  * [[IvfPq]] (q105's layout), where no cell bound prunes and the code
+  * bound alone decides the fetch.
+  */
 class PqIndexSpec extends AnyFunSuite with SharedSpark {
 
   private def topkSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
@@ -14,16 +18,22 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-pq-$tag").toString
 
+  private val OneCell = IvfIndex.Params(nCentroids = 1)
+
+  private def build(e: org.apache.spark.sql.DataFrame, dir: String,
+      pq: PqIndex.Params = PqIndex.Params()): Unit =
+    IvfPq.build(e, "vec_id", "embedding", dir, IvfPq.Params(ivf = OneCell, pq = pq))
+
   test("isotropic fixture: residual-bounded top-k EQUALS the exact top-k") {
     val e = Tables(spark, Sf0001, "embeddings").select("vec_id", "embedding")
     val dir = tmp("fixture")
-    PqIndex.build(e, "vec_id", "embedding", dir)
+    build(e, dir)
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     // near-uniform vectors are the worst case for the bound: residuals
     // are large, the fetch degrades toward a full scan — and the answer
     // must still be exactly the brute-force ranking
-    val pq = PqIndex.queryTopK(spark, dir, "vec_id", "embedding",
+    val pq = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", k = 5, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 5, threshold = 0.0)
@@ -52,9 +62,9 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     // bound indexed past the centers array on exactly this shape)
     val e = clustered(5L)
     val dir = tmp("cold")
-    PqIndex.build(e, "vec_id", "embedding", dir, SmallParams)
+    build(e, dir, SmallParams)
     val queries = e.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val pq = PqIndex.queryTopK(spark, dir, "vec_id", "embedding",
+    val pq = IvfPq.queryTopK(spark, dir, "vec_id", "embedding",
       queries, "query_id", "qvec", k = 3, threshold = 0.0)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
@@ -64,78 +74,34 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
   test("clustered corpus: exact answer AND the fetch is bound-pruned") {
     val e = clustered(200L)
     val dir = tmp("clustered")
-    PqIndex.build(e, "vec_id", "embedding", dir, SmallParams)
+    build(e, dir, SmallParams)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val (pq, cands) = PqIndex.queryTopKWithCands(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0)
+    val r = IvfPq.retrieve(spark, dir, "vec_id", "embedding",
+      "query_id", "qvec", threshold = 0.0, probeWidth = 1)(queries, 3, None)
     val exact = SimilaritySearch.topKBatch(
       e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
-    assert(topkSet(pq) == topkSet(exact))
-    // the exact-verify fetch touched a small fraction of the
+    assert(topkSet(r.topK) == topkSet(exact))
+    // one cell: every query scanned the whole corpus's codes, and the
+    // exact-verify fetch still touched a small fraction of the
     // (query × corpus) frame — the compressed scan did the discarding
-    val fetched = cands.count()
+    assert(r.probed.count() == 8L)
+    val fetched = r.candidates.count()
     assert(fetched < 8L * 200L / 2,
       s"bound pruned nothing: fetched $fetched of ${8L * 200L} pairs")
-  }
-
-  test("upsert: encode-against-frozen-codebooks append stays exact") {
-    val e = clustered(200L)
-    val dir = tmp("upsert")
-    PqIndex.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
-      "vec_id", "embedding", dir, SmallParams)
-    PqIndex.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0))
-    assert(spark.read.parquet(s"$dir/codes").count() == 200L)
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val pq = PqIndex.queryTopK(spark, dir, "vec_id", "embedding",
-      queries, "query_id", "qvec", k = 3, threshold = 0.0)
-    val exact = SimilaritySearch.topKBatch(
-      e, "embedding", "vec_id", queries, "query_id", "qvec", k = 3, threshold = 0.0)
-    assert(topkSet(pq) == topkSet(exact))
-  }
-
-  test("stats reports rows/files for both tables through the maintenance cycle") {
-    val e = clustered(200L)
-    val dir = tmp("stats")
-    PqIndex.build(e.filter(pmod(col("vec_id"), lit(10)) =!= 0),
-      "vec_id", "embedding", dir, SmallParams)
-    def snap(): Map[String, (Long, Long)] = PqIndex.stats(spark, dir)
-      .groupBy("table")
-      .agg(sum(col("rows")).as("r"), sum(col("n_files")).as("f"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val s0 = snap()
-    assert(s0("codes")._1 == 180L && s0("vectors")._1 == 180L,
-      s"build totals wrong: $s0")
-
-    PqIndex.upsert(spark, dir, "vec_id", "embedding",
-      e.filter(pmod(col("vec_id"), lit(10)) === 0))
-    val s1 = snap()
-    assert(s1("codes")._1 == 200L && s1("vectors")._1 == 200L,
-      s"post-upsert totals wrong: $s1 — a codes/vectors mismatch is the " +
-        "torn-upsert signal this report exists to surface")
-    assert(s1("codes")._2 > s0("codes")._2 || s1("vectors")._2 > s0("vectors")._2,
-      "appends should fragment some bucket")
-
-    PqIndex.compactIndex(spark, dir)
-    val s2 = snap()
-    assert(s2("codes")._1 == 200L && s2("vectors")._1 == 200L)
-    assert(s2("codes")._2 + s2("vectors")._2 < s1("codes")._2 + s1("vectors")._2,
-      "compaction did not shrink file counts")
   }
 
   test("a conflicting duplicate id fails the job naming the id") {
     import spark.implicits._
     val e = clustered(50L)
     val dir = tmp("dup")
-    PqIndex.build(e, "vec_id", "embedding", dir, SmallParams)
+    build(e, dir, SmallParams)
     val conflicting = Seq(
       (1000L, Array(1.0f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)),
       (1000L, Array(0f, 1.0f, 0f, 0f, 0f, 0f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val err = intercept[Exception] {
-      PqIndex.upsert(spark, dir, "vec_id", "embedding", conflicting)
+      IvfIndex.upsert(spark, dir, "vec_id", "embedding", conflicting)
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
@@ -147,16 +113,16 @@ class PqIndexSpec extends AnyFunSuite with SharedSpark {
     val e = clustered(120L)
     val d1 = tmp("det1")
     val d2 = tmp("det2")
-    PqIndex.build(e.repartition(2), "vec_id", "embedding", d1, SmallParams)
+    build(e.repartition(2), d1, SmallParams)
     // a different input partitioning AND a different shuffle width: the
     // driver-side fit and the subspace-ordered residual fold must not
     // see either
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "11")
-      PqIndex.build(e.repartition(7), "vec_id", "embedding", d2, SmallParams)
+      build(e.repartition(7), d2, SmallParams)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    def codes(d: String) = spark.read.parquet(s"$d/codes")
+    def codes(d: String) = spark.read.parquet(s"$d/cell_codes")
       .select("vec_id", "codes", "resid")
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getDouble(2)))
       .sortBy(_._1).toSeq
