@@ -152,10 +152,7 @@ final class GraftClient(
       indexPath: String,
       annPath: String,
       composed: Boolean = false): Unit = {
-    val idx = Tables.read(spark, indexPath)
-    val withId = graft.pipeline.ScalableWindow.globalRunningSum(
-        idx.withColumn("__one", lit(1L)), "__one", "row_id",
-        col("doc_id").asc, col("chunk_id").asc, col("piece_id").asc)
+    val withId = withRowIds(indexPath)
       .select(col("row_id"), col("content"), col("metadata"), col("embedding"))
     if (composed)
       graft.query.IvfPq.build(
@@ -170,6 +167,16 @@ final class GraftClient(
       .write.mode("overwrite").partitionBy("__rbucket")
       .parquet(s"$annPath/payload")
   }
+
+  /** The written document index with its `row_id`: the distributed
+    * prefix-sum over the deterministic (doc_id, chunk_id, piece_id)
+    * export order. Both channels' builds key by it — the one id space
+    * [[graft.query.LexicalSearch.rrfFuse]] needs.
+    */
+  private def withRowIds(indexPath: String): DataFrame =
+    graft.pipeline.ScalableWindow.globalRunningSum(
+      Tables.read(spark, indexPath).withColumn("__one", lit(1L)), "__one", "row_id",
+      col("doc_id").asc, col("chunk_id").asc, col("piece_id").asc)
 
   /** Route batch retrieval by the index's own layout
     * ([[graft.query.IvfLayout.of]]): the composed ([[graft.query.IvfPq]])
@@ -451,11 +458,7 @@ final class GraftClient(
     * fused retrieval without scanning either corpus.
     */
   def buildLexicalIndex(indexPath: String, annPath: String): Unit = {
-    val idx = Tables.read(spark, indexPath)
-    val withId = graft.pipeline.ScalableWindow.globalRunningSum(
-        idx.withColumn("__one", lit(1L)), "__one", "row_id",
-        col("doc_id").asc, col("chunk_id").asc, col("piece_id").asc)
-      .select(col("row_id"), col("content"))
+    val withId = withRowIds(indexPath).select(col("row_id"), col("content"))
     graft.query.LexicalSearch.buildIndex(withId, "row_id", "content",
       s"$annPath/lex")
   }

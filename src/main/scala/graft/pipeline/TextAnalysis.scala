@@ -97,6 +97,13 @@ object TextAnalysis {
     LangMarkers.head._2 ++ Seq(
       "a", "an", "for", "on", "as", "are", "was", "be", "by", "at", "it", "this")
 
+  /** k / n rounded half-up to 6 decimals in integer arithmetic (see
+    * [[qualityRatios]]), 0.0 when n = 0.
+    */
+  private def ratio6(k: String, n: String): Column =
+    when(col(n) === 0L, lit(0.0)).otherwise(
+      expr(s"cast(($k * 2000000 + $n) div ($n * 2) as double)") / 1000000.0)
+
   /** Q36: heuristic quality ratios per document — punctuation density,
     * uppercase-letter density, stopword fraction of tokens, and
     * whitespace fraction. The standard cheap filters a training-data
@@ -337,9 +344,6 @@ object TextAnalysis {
     val docs = Tables.parallelize(Tables(spark, dir, "documents"))
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .localCheckpoint() // feeds the row-local pass AND the top-word agg
-    def ratio6(k: String, n: String): Column =
-      when(col(n) === 0L, lit(0.0)).otherwise(
-        expr(s"cast(($k * 2000000 + $n) div ($n * 2) as double)") / 1000000.0)
     val rowLocal = docs
       .withColumn("g2", wordGrams(col("toks"), 2))
       .withColumn("g3", wordGrams(col("toks"), 3))
@@ -476,9 +480,6 @@ object TextAnalysis {
   def gramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallelize(Tables(spark, dir, "documents"))
       .select(col("doc_id"), tokens(col("text")).as("__toks"))
-    def ratio6(k: String, n: String): Column =
-      when(col(n) === 0L, lit(0.0)).otherwise(
-        expr(s"cast(($k * 2000000 + $n) div ($n * 2) as double)") / 1000000.0)
     val grams = docs
       .select(col("doc_id"),
         explode(array_distinct(wordGrams(col("__toks"), 3))).as("gram"))
@@ -533,9 +534,6 @@ object TextAnalysis {
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallelize(Tables(spark, dir, "documents"))
       .select(col("source"), tokens(col("text")).as("__toks"))
-    def ratio6(k: String, n: String): Column =
-      when(col(n) === 0L, lit(0.0)).otherwise(
-        expr(s"cast(($k * 2000000 + $n) div ($n * 2) as double)") / 1000000.0)
     // sort_array's string ordering is the same binary UTF8 comparison
     // as the `<` the pair filter below applies, so position order in
     // the set IS src_a < src_b order

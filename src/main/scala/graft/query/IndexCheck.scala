@@ -146,13 +146,9 @@ object IndexCheck {
 
     // -------------------------------------------------- label_meta_fresh
     checks += (() => {
-      val arts = IvfIndex.labelMetaArtifacts(spark, indexPath)
-      val rawRows = if (arts.isEmpty) 0L
-        else Tables.read(spark, s"$indexPath/cells").count()
-      val stale = arts.count { case (_, _, snapRows, snapCells) =>
-        snapRows != rawRows ||
-          snapCells != IvfIndex.cellDirIds(spark, indexPath).sorted
-      }
+      lazy val print = IvfIndex.labelMetaPrint(spark, indexPath)
+      val stale = IvfIndex.labelMetaArtifacts(spark, indexPath)
+        .count { case (_, _, snap) => snap != print }
       ("label_meta_fresh", true, stale.toLong) // stale is safe; count reported
     })
 

@@ -306,12 +306,9 @@ object IvfIndex extends IvfLayout {
     // already staled cannot be "caught up" by a batch-sized merge,
     // because the rows that staled it are unknown here)
     val batchCols = newRows.columns.toSet
+    lazy val print = labelMetaPrint(spark, indexPath)
     val foldable = labelMetaArtifacts(spark, indexPath)
-      .filter { case (lc, _, snapRows, snapCells) =>
-        batchCols(lc) &&
-          snapRows == Tables.read(spark, s"$indexPath/cells").count() &&
-          snapCells == cellDirIds(spark, indexPath).sorted
-      }
+      .filter { case (lc, _, snap) => batchCols(lc) && snap == print }
     val assigned = assignNew(cellMeta, idCol, embCol, newRows)
       .persist()
     try {
@@ -351,8 +348,25 @@ object IvfIndex extends IvfLayout {
     } finally assigned.unpersist()
   }
 
+  /** The label-meta freshness fingerprint: the raw `cells` row count
+    * and the sorted cell directory ids. An artifact is fresh iff its
+    * snapshot equals the index's current print (the soundness argument
+    * is at [[buildLabelMeta]]). The count is parquet metadata and the
+    * ids a driver-side listing: no payload read.
+    */
+  private[query] final case class LabelMetaPrint(rows: Long, cells: Seq[Long])
+
+  private[query] def labelMetaPrint(spark: SparkSession, indexPath: String): LabelMetaPrint =
+    LabelMetaPrint(Tables.read(spark, s"$indexPath/cells").count(),
+      cellDirIds(spark, indexPath).sorted)
+
+  // getSeq, not getAs[Seq]: Spark hands back a mutable ArraySeq that a
+  // cast to immutable Seq would CCE on
+  private def snapshotPrint(r: Row): LabelMetaPrint =
+    LabelMetaPrint(r.getAs[Long]("rows"), r.getSeq[Long](r.fieldIndex("cells")).toSeq)
+
   /** The persisted [[buildLabelMeta]] artifacts under `indexPath`:
-    * (labelCol, basePath, snapshot rows, snapshot cell ids). One tiny
+    * (labelCol, basePath, snapshot print). One tiny
     * snapshot read per artifact; artifacts written before the
     * snapshot carried its label column are skipped (they can only be
     * rebuilt, never folded). An UNREADABLE snapshot (a crash
@@ -364,7 +378,7 @@ object IvfIndex extends IvfLayout {
     */
   private[query] def labelMetaArtifacts(
       spark: SparkSession,
-      indexPath: String): Seq[(String, String, Long, Seq[Long])] = {
+      indexPath: String): Seq[(String, String, LabelMetaPrint)] = {
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Nil
@@ -379,11 +393,7 @@ object IvfIndex extends IvfLayout {
           if (!snap.columns.contains("label_col")) None
           else {
             val r = snap.head
-            // getSeq, not getAs[Seq]: Spark hands back a mutable
-            // ArraySeq that a cast to immutable Seq would CCE on
-            Some((r.getAs[String]("label_col"), base,
-              r.getAs[Long]("rows"),
-              r.getSeq[Long](r.fieldIndex("cells")).toSeq))
+            Some((r.getAs[String]("label_col"), base, snapshotPrint(r)))
           }
         }.toOption.flatten
       }
@@ -414,13 +424,13 @@ object IvfIndex extends IvfLayout {
       idCol: String,
       assigned: DataFrame,
       newRows: DataFrame,
-      artifacts: Seq[(String, String, Long, Seq[Long])]): Unit = {
+      artifacts: Seq[(String, String, LabelMetaPrint)]): Unit = {
     import spark.implicits._
     val batchN = assigned.count()
     // ≤ nCells ids (the probe-pruning collect bound)
     val batchCells = assigned.select(col("centroid_id").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    artifacts.foreach { case (lc, base, snapRows, snapCells) =>
+    artifacts.foreach { case (lc, base, snap) =>
       val old = Tables.read(spark, s"$base/radii")
       val cidT = old.schema("centroid_id").dataType
       // assignNew's `d` IS the member→centroid distance the radii
@@ -444,7 +454,7 @@ object IvfIndex extends IvfLayout {
             coalesce(col("__new_rl"), lit(0.0))).as("__rl"))
         .localCheckpoint() // materialized BEFORE overwriting its source
       merged.write.mode("overwrite").parquet(s"$base/radii")
-      Seq((snapRows + batchN, (snapCells ++ batchCells).distinct.sorted, lc))
+      Seq((snap.rows + batchN, (snap.cells ++ batchCells).distinct.sorted, lc))
         .toDF("rows", "cells", "label_col")
         .repartition(1).write.mode("overwrite").parquet(s"$base/snapshot")
     }
@@ -1022,8 +1032,7 @@ object IvfIndex extends IvfLayout {
     import spark.implicits._
     val base = labelMetaPath(indexPath, labelCol)
     // snapshot FIRST (see the staleness note above)
-    val snap = (Tables.read(spark, s"$indexPath/cells").count(),
-      cellDirIds(spark, indexPath).sorted)
+    val snap = labelMetaPrint(spark, indexPath)
     // live rows only (see [[labelRadii]]); the freshness fingerprint
     // above still counts RAW rows, so a later compaction (which changes
     // that count) stales it automatically
@@ -1032,7 +1041,7 @@ object IvfIndex extends IvfLayout {
     // label_col rides the snapshot so [[upsert]] can fold a
     // label-carrying batch into this artifact without guessing the
     // column back out of the sanitized directory name
-    Seq((snap._1, snap._2, labelCol)).toDF("rows", "cells", "label_col")
+    Seq((snap.rows, snap.cells, labelCol)).toDF("rows", "cells", "label_col")
       .repartition(1).write.mode("overwrite").parquet(s"$base/snapshot")
   }
 
@@ -1057,11 +1066,8 @@ object IvfIndex extends IvfLayout {
     // absent — the documented fail-safe. Answers then come from the
     // per-call derivation; only the cost reverts, never correctness.
     scala.util.Try {
-      val snap = Tables.read(spark, s"$base/snapshot").head
-      val fresh =
-        snap.getAs[Long]("rows") == Tables.read(spark, s"$indexPath/cells").count() &&
-          snap.getSeq[Long](snap.fieldIndex("cells")).toSeq ==
-            cellDirIds(spark, indexPath).sorted
+      val fresh = snapshotPrint(Tables.read(spark, s"$base/snapshot").head) ==
+        labelMetaPrint(spark, indexPath)
       if (fresh) Some(Tables.read(spark, s"$base/radii")) else None
     }.toOption.flatten
   }
